@@ -826,7 +826,7 @@ FROM k GROUP BY 1 ORDER BY 1"""
     // Fewer than 100 docs ⇒ the threshold is the order-maximum row ⇒ all
     // kept, as rank <= 100 marked them. The scored subtree feeds both the
     // threshold and the output, so its exchange is built once and reused
-    // (no grouping-key filter to split it — ProbeReuse-verified).
+    // (no grouping-key filter to split it — verified with `graft.Tool reuse`).
     graft.functions.GraftFunctions.register(s)
     val thr = scored
       .agg(call_function("topk_min",

@@ -20,11 +20,4 @@ object Ngrams {
       i => concat_ws(" ", (0 until n).map(k =>
         element_at(ws, (i + k).cast("int"))): _*))
   }
-
-  /** The matching DuckDB fragment (expects `text` in scope). */
-  def wordNgramsSql(n: Int): String = {
-    val parts = (0 until n).map(k => if (k == 0) "ws[i]" else s"ws[i+$k]")
-      .mkString(" || ' ' || ")
-    s"list_transform(generate_series(1, len(ws) - ${n - 1}), i -> $parts)"
-  }
 }

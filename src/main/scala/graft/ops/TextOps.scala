@@ -389,16 +389,18 @@ FROM sc GROUP BY 1 ORDER BY score_q DESC, doc_id LIMIT 20"""
   // sparse_retrieval and rrf_fusion both consume it, so the memo halves
   // their combined cost (measured 2.8 s each per pass rebuilding it)
   private val weightCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("text.sparseWeights")
+    graft.util.SessionCaches.memo[(SparkSession, String, String)]("text.sparseWeights")
 
-  private[graft] def sparseWeights(s: SparkSession, d: String): DataFrame =
-    weightCache.getOrElseUpdate((s, d), {
+  private def documentsFingerprint(d: String): String =
+    graft.util.SilverArtifact.sourceFingerprint(s"$d/documents.parquet", "sparsew-v1-min3-idf1000")
+
+  private[graft] def sparseWeights(s: SparkSession, d: String): DataFrame = {
+    val fp = documentsFingerprint(d)
+    weightCache.getOrElseUpdate((s, d, fp), {
       // stored through SilverArtifact like the MinHash band index: the
       // tokenize + tf/df passes run once per corpus version, and a cold
       // session's sparse_retrieval / rrf_fusion start from a parquet read
       val base = graft.util.SilverArtifact.pathFor(d, "sparse_weights")
-      val fp = graft.util.SilverArtifact.sourceFingerprint(
-        s"$d/documents.parquet", "sparsew-v1-min3-idf1000")
       graft.util.SilverArtifact.getOrBuild(s, base, fp) {
         val toks = Tables.fanout(s, Tables.documents(s, d))
           .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
@@ -418,6 +420,7 @@ FROM sc GROUP BY 1 ORDER BY score_q DESC, doc_id LIMIT 20"""
       }
         .persistOnce()
     })
+  }
 
   /** Query budget: exhaustive per-query scoring is O(Σ shared-term df)
     * ≈ O(corpus) per query on this vocabulary, so running EVERY %100 doc
@@ -430,22 +433,20 @@ FROM sc GROUP BY 1 ORDER BY score_q DESC, doc_id LIMIT 20"""
     * set and the results are unchanged. */
   val SparseQueryBudget = 64
 
-  // r18 (r17 verdict #3): rrf_fusion re-ran this ENTIRE probe — the three
-  // sequential broadcast builds plus the posting-list join — to get the
-  // sparse ranking it fuses (~1.7 s of its 1.95 s was duplicated work, and
-  // at cluster RTTs the duplicated job chain is worse). The ranked top-k
-  // is the serving-layer artifact a RAG stack computes once per (corpus
-  // version, query set) and every fusion consumes — the exact shape of the
-  // memoized knnGraph edge set rrf_fusion's DENSE side already reads. Memo
-  // per (session, dataset, k) like knnCache: rows are query-budget × k
-  // (~320), no disk artifact (unlike the weights INDEX this is derived
-  // per-query-set output, so it stays session-lifetime only), cleared by
+  // The ranked top-k is the serving-layer artifact a RAG stack computes
+  // once per (corpus version, query set) and every fusion consumes — the
+  // shape of the memoized knnGraph edge set rrf_fusion's dense side reads;
+  // without it rrf_fusion re-ran this whole probe. Rows are query budget
+  // × k (~320). No disk artifact (unlike the weights INDEX this is derived
+  // per-query-set output), so it is session-lifetime only, cleared by
   // SessionCaches.clear so the bench's cold pass pays the full probe.
+  // Keyed by the documents fingerprint, so a rewritten corpus re-ranks,
+  // and by k: each k persists its own copy.
   private val sparseTopKCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, Int)]("text.sparseTopK")
+    graft.util.SessionCaches.memo[(SparkSession, String, String, Int)]("text.sparseTopK")
 
   def sparseRetrieval(s: SparkSession, d: String, k: Int = 5): DataFrame =
-    sparseTopKCache.getOrElseUpdate((s, d, k),
+    sparseTopKCache.getOrElseUpdate((s, d, documentsFingerprint(d), k),
       sparseRetrievalUncached(s, d, k).persistOnce())
 
   private def sparseRetrievalUncached(s: SparkSession, d: String, k: Int): DataFrame = {

@@ -40,20 +40,19 @@ object BehaviorOps {
   // basket rows and the fact scan + order-key shuffle + set aggregation
   // run once per corpus version, not three times per query execution.
   private val basketCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("behavior.baskets")
+    graft.util.SessionCaches.memo[(SparkSession, String, String)]("behavior.baskets")
 
-  private[graft] def baskets(s: SparkSession, d: String): DataFrame =
-    basketCache.getOrElseUpdate((s, d), {
-      val base = graft.util.SilverArtifact.pathFor(d, "baskets")
-      val fp = graft.util.SilverArtifact.sourceFingerprint(
-        s"$d/lineitem.parquet", "baskets-v1-distinct-sorted")
-      graft.util.SilverArtifact.getOrBuild(s, base, fp) {
+  private[graft] def baskets(s: SparkSession, d: String): DataFrame = {
+    val fp = graft.util.SilverArtifact.sourceFingerprint(
+      s"$d/lineitem.parquet", "baskets-v1-distinct-sorted")
+    basketCache.getOrElseUpdate((s, d, fp),
+      graft.util.SilverArtifact.getOrBuild(s, graft.util.SilverArtifact.pathFor(d, "baskets"), fp) {
         Tables.lineitem(s, d)
           .groupBy("l_orderkey")
           .agg(sort_array(collect_set("l_partkey")).as("parts"))
       }
-        .persistOnce()
-    })
+        .persistOnce())
+  }
 
   /** Part pairs co-occurring in an order, top-100 by support. Scale shape:
     * ONE shuffle (groupBy orderkey with map-side partial sets), then the

@@ -81,20 +81,4 @@ object Connectors {
     s.read.schema(schema).json(path)
 
   def orc(s: SparkSession, path: String): DataFrame = s.read.orc(path)
-
-  /** Structural Kafka stream source (no broker in this environment — same
-    * status as the JDBC paths). The options encode the deployment
-    * essentials: explicit starting offsets (never default-latest for a
-    * pipeline that must not drop data), a per-trigger cap so a backlogged
-    * topic can't produce an unboundedly large first micro-batch, and
-    * failOnDataLoss left ON so retention-expired offsets surface as errors
-    * instead of silent gaps. */
-  def kafkaStream(s: SparkSession, bootstrap: String, topic: String,
-    maxOffsetsPerTrigger: Long = 1000000L): DataFrame =
-    s.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .option("maxOffsetsPerTrigger", maxOffsetsPerTrigger)
-      .load()
 }

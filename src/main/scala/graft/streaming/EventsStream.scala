@@ -83,21 +83,6 @@ object EventsStream {
   private def streamSession(s: SparkSession, d: String): SparkSession =
     streamSessionN(s, statePartitionsFor(d), largeStateFor(d))
 
-  /** Loud PRE-START guard for a REUSED checkpoint against the
-    * dataset-sized state partitioning (r14 verdict #7). The partition
-    * count is a deterministic function of the dataset's events file
-    * size — correct for immutable fixtures, but a dataset grown or
-    * shrunk IN PLACE changes the computed count while the checkpoint's
-    * state layout stays pinned at whatever the first run recorded, and
-    * Spark then fails opaquely deep inside the state store (or, worse
-    * on old versions, silently misroutes keys). Call this before
-    * `.start()` on any query that reuses a checkpoint with a
-    * dataset-sized session; a fresh checkpoint passes vacuously. */
-  def assertCheckpointPartitions(ckpt: String, d: String): Unit = {
-    assertCheckpointPartitionsN(ckpt, statePartitionsFor(d))
-    assertCheckpointProviderN(ckpt, largeStateFor(d))
-  }
-
   /** Latest offsets-log entry of a checkpoint: (batchId, file text).
     * None for a fresh checkpoint (nothing pinned yet). The offset log's
     * metadata line records the run's effective conf — including

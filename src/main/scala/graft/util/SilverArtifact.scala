@@ -39,7 +39,9 @@ object SilverArtifact {
 
   /** Fingerprint of a parquet source — a single file, or the regular
     * files directly inside a table directory — plus the caller's
-    * logic-version tag. */
+    * logic-version tag. Stored artifacts key on it, and so do the session
+    * memos over a source (`Tables`, baskets, sparse weights and top-k).
+    * Throws `IOException` when the path does not exist. */
   def sourceFingerprint(srcDir: String, logicVersion: String): String = {
     val p = Paths.get(srcDir)
     val files =

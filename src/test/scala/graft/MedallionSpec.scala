@@ -8,6 +8,7 @@ import graft.pipeline.Medallion
 import graft.ops.SurrogateKeys
 
 object TestSpark {
+  // not GraftSession: an extension-injected PushAggThroughUniqueJoin would stay on in PushAggRuleSpec's rule-off case
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
