@@ -19,27 +19,14 @@ object Tables {
     * over a catalog does in production: only the analyzed PLAN (schema +
     * file index metadata) is reused — execution still scans the parquet
     * files on every action, so no result or data caching is introduced.
-    * Keyed by session instance and registered in
-    * [[graft.util.SessionCaches]], so the bench's cold pass still measures
-    * a cold session's first resolution. The key also carries the path's
-    * [[graft.util.SilverArtifact.sourceFingerprint]] — the freshness key
-    * the stored artifacts use — so a table rewritten in place resolves
-    * afresh instead of serving the first resolution's stale file listing;
-    * the superseded entry is a plain unpersisted plan object. A path that
-    * cannot be fingerprinted resolves without a memo entry, so Spark
-    * raises its own error on every call. */
-  private val resolvedCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, String)]("tables.resolved")
+    * Registered in [[graft.util.SessionCaches]], so the bench's cold pass
+    * still measures a cold session's first resolution, and a table
+    * rewritten in place resolves afresh instead of serving a stale file
+    * listing. */
+  private val resolvedCache = graft.util.SessionCaches.memo[String]("tables.resolved")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val fp = try Some(graft.util.SilverArtifact.sourceFingerprint(path, "source"))
-      catch { case _: java.io.IOException => None }
-    fp match {
-      case Some(k) => resolvedCache.getOrElseUpdate((spark, path, k), spark.read.parquet(path))
-      case None => spark.read.parquet(path)
-    }
-  }
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    resolvedCache(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.Tables
-import graft.util.{AtomicTable, PathKeys, SessionCaches}
+import graft.util.{AtomicTable, PathKeys}
 
 /** File-level data skipping over plain parquet — the scale feature a
   * transactional table format (Delta/Iceberg) would provide and this
@@ -224,45 +224,38 @@ object DataSkipping {
 
   // --------------------------------------------------------- staged tables
 
-  private val stagedMemo =
-    SessionCaches.memo[(SparkSession, String, String)]("data_skipping.staged")
-
   /** lineitem z-ordered by (l_partkey, l_suppkey) with zone maps on both —
-    * staged once per (session, sf) the way a 100 TB pipeline runs OPTIMIZE
-    * once per table version. */
-  def zorderedLineitem(s: SparkSession, d: String): String =
-    stagedMemo.getOrElseUpdate((s, d, "lineitem_z"), {
-      val base = s"/tmp/graft_skip/${PathKeys.safe(d)}/lineitem_z"
-      // OPTIMIZE runs once per table version, not once per session — the
-      // staged-once stamp (source part-file fingerprint) is the metadata
-      // a table format would carry for its clustering state
-      val fp = graft.util.SilverArtifact.sourceFingerprint(
-        s"$d/lineitem.parquet", "zorder-v2-fname-pk-sk-32f")
-      graft.util.SilverArtifact.stagedOnce(base, fp) {
-        optimizedWrite(s, Tables.lineitem(s, d), base,
-          clusterCols = Seq("l_partkey", "l_suppkey"),
-          statsCols = Seq("l_partkey", "l_suppkey"),
-          bloomCol = None, nFiles = 32)
-      }
-      base
-    })
+    * staged once per table version, the way a 100 TB pipeline runs
+    * OPTIMIZE: the staged-once stamp (source part-file fingerprint) is
+    * the metadata a table format would carry for its clustering state. */
+  def zorderedLineitem(s: SparkSession, d: String): String = {
+    val base = s"/tmp/graft_skip/${PathKeys.safe(d)}/lineitem_z"
+    val fp = graft.util.SilverArtifact.sourceFingerprint(
+      s"$d/lineitem.parquet", "zorder-v2-fname-pk-sk-32f")
+    graft.util.SilverArtifact.stagedOnce(base, fp) {
+      optimizedWrite(s, Tables.lineitem(s, d), base,
+        clusterCols = Seq("l_partkey", "l_suppkey"),
+        statsCols = Seq("l_partkey", "l_suppkey"),
+        bloomCol = None, nFiles = 32)
+    }
+    base
+  }
 
   /** orders range-clustered by o_orderdate, zone maps on the date, Bloom
     * on the scattered o_orderkey (the key zone maps CANNOT serve). */
-  def dateClusteredOrders(s: SparkSession, d: String): String =
-    stagedMemo.getOrElseUpdate((s, d, "orders_bydate"), {
-      val base = s"/tmp/graft_skip/${PathKeys.safe(d)}/orders_bydate"
-      val fp = graft.util.SilverArtifact.sourceFingerprint(
-        s"$d/orders.parquet", "bydate-v2-fname-bloom-32f")
-      graft.util.SilverArtifact.stagedOnce(base, fp) {
-        optimizedWrite(s, Tables.orders(s, d)
-          .withColumn("o_datekey",
-            unix_date(col("o_orderdate").cast("date")).cast("long")), base,
-          clusterCols = Seq("o_datekey"), statsCols = Seq("o_orderdate"),
-          bloomCol = Some("o_orderkey"), nFiles = 32)
-      }
-      base
-    })
+  def dateClusteredOrders(s: SparkSession, d: String): String = {
+    val base = s"/tmp/graft_skip/${PathKeys.safe(d)}/orders_bydate"
+    val fp = graft.util.SilverArtifact.sourceFingerprint(
+      s"$d/orders.parquet", "bydate-v2-fname-bloom-32f")
+    graft.util.SilverArtifact.stagedOnce(base, fp) {
+      optimizedWrite(s, Tables.orders(s, d)
+        .withColumn("o_datekey",
+          unix_date(col("o_orderdate").cast("date")).cast("long")), base,
+        clusterCols = Seq("o_datekey"), statsCols = Seq("o_orderdate"),
+        bloomCol = Some("o_orderkey"), nFiles = 32)
+    }
+    base
+  }
 
   private def dropDatekey(df: DataFrame): DataFrame = df.drop("o_datekey")
 

@@ -17,12 +17,12 @@ import graft.util.SessionCaches.PersistOnce
   *                      shuffling a 16-byte hash + ids instead of the text
   *                      itself is the whole trick.
   *  - [[ngramJaccard]]— exact threshold-Jaccard, threshold-adaptive
-  *                      physical shape (r17): PREFIX-FILTERED candidates
+  *                      physical shape: PREFIX-FILTERED candidates
   *                      (SSJoin/AllPairs/PPJoin over the rarest-first
   *                      stored arrays) + array verify at t ≥ 0.7 where
   *                      candidates are rare; the count-aggregate gram
   *                      join — run as sequential disjoint gram SHARDS at
-  *                      corpus scale, bounding the r16 45 GB middle to
+  *                      corpus scale, bounding the sf100 45 GB middle to
   *                      ~1/K per shard — below. Output identical to brute
   *                      force either way.
   *  - [[minhashLsh]]  — MinHash signatures (64 perms via xxhash64) banded
@@ -65,8 +65,7 @@ object Dedup {
     * (each would otherwise recompute the shingle pass for every join
     * branch). At 100 TB this table is what you'd write to storage once and
     * reuse across dedup runs. */
-  private val shingleCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("dedup.shingles")
+  private val shingleCache = graft.util.SessionCaches.memo[Unit]("dedup.shingles")
 
   /** Hot-shingle document-frequency cap: shingles present in more than
     * max(5, 1% of the corpus) documents are dropped from every shingle
@@ -79,9 +78,8 @@ object Dedup {
   val MaxShingleDfFrac = 0.01
   val MinShingleDfCap = 5L
 
-  // session-instance key, same rationale as Medallion.goldCache
   private[graft] def shingleTable(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d), {
+    shingleCache(s, d) {
       // the shingle table persists to DISK through SilverArtifact like a
       // real silver-zone table (the 100-TB design: the dominant shingle
       // pass is a batch artifact written once and reused across dedup runs
@@ -91,7 +89,7 @@ object Dedup {
       // the directory entry is untouched, and the logic tag orphans stored
       // shingles if this derivation ever changes.
       val base = graft.util.SilverArtifact.pathFor(d, "shingles")
-      // v3 (r17): arrays stored RAREST-FIRST — sorted by (global document
+      // v3: arrays stored RAREST-FIRST — sorted by (global document
       // frequency, hash) instead of by hash — so the Jaccard prefix
       // filter ([[ngramJaccard]]) is a zero-cost `slice` of the stored
       // array at query time. Every other consumer treats sh as a SET
@@ -139,7 +137,7 @@ object Dedup {
       read
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .persistOnce()
-    })
+    }
 
   /** Shared oracle CTE: per-doc distinct shingles, hot-shingle-capped
     * exactly like [[shingleTable]], exploded. */
@@ -184,18 +182,18 @@ FROM documents GROUP BY md5(text) ORDER BY keep_id"""
     * candidate through an exchange. At t ≥ 0.7 real near-dup candidates
     * are a sliver of all pairs and the array verify is the 100 TB shape
     * (it is exactly what the MinHash-LSH paths do at t = 0.9); at
-    * t = 0.5 on a self-similar corpus the r17 sf100 probe measured
+    * t = 0.5 on a self-similar sf100 corpus there are
     * ~80 candidates PER DOC (409M pairs from 5M docs, 99.94% of them
-    * failing verification) — the array-carrying verify exchange became
-    * the new scratch hog and the COUNT shape below wins instead. */
+    * failing verification) — the array-carrying verify exchange becomes
+    * the scratch hog and the COUNT shape below wins instead. */
   val PrefixVerifyThreshold = 0.7
 
   /** Sequential gram shards for the count path, sized to the corpus:
     * 1 below 512 MB of documents parquet (driver-scale plans and the
     * bench at small SF stay single-pass, plan shape unchanged), then
     * one shard per 128 MB, capped at 8 (sf100's 623 MB → 4). Shards
-    * bound the SCRATCH PEAK, not total work — the r16 sf100 peak was
-    * the whole 1.27B-row pair middle in flight at once. */
+    * bound the SCRATCH PEAK, not total work — unsharded, the sf100
+    * peak is the whole 1.27B-row pair middle in flight at once. */
   private[graft] def gramShardsFor(d: String): Int = {
     val p = java.nio.file.Paths.get(s"$d/documents.parquet")
     val bytes = if (java.nio.file.Files.exists(p)) java.nio.file.Files.size(p) else 0L
@@ -229,7 +227,7 @@ FROM documents GROUP BY md5(text) ORDER BY keep_id"""
     *    pmod(g, K) = i, per-shard partial pair counts land in scratch
     *    parquet, and the final pass sums counts per pair (disjoint
     *    shards ⇒ counts add ⇒ hash-identical output). Each shard's
-    *    join middle — THE r16 sf100 scratch peak — is ~1/K of the
+    *    join middle — the sf100 scratch peak — is ~1/K of the
     *    whole, and shards run one at a time. */
   def ngramJaccard(s: SparkSession, d: String, threshold: Double = 0.5): DataFrame = {
     val docs = shingleTable(s, d)
@@ -252,8 +250,8 @@ FROM documents GROUP BY md5(text) ORDER BY keep_id"""
     * disjoint gram shard's partial pair counts sequentially so only
     * one shard's join middle is ever in flight.
     *
-    * Two scratch levers beyond sharding (r17 sf100 probes — the middle
-    * exchange, not the join itself, is where the bytes live):
+    * Two scratch levers beyond sharding (at sf100 the middle exchange,
+    * not the join itself, is where the bytes live):
     *  - the middle carries ONLY (doc_a, doc_b): the set sizes ma/mb
     *    (2 of the 4 longs in the old pair row) ride a billion-row
     *    exchange for nothing, because they are only needed for the
@@ -293,9 +291,9 @@ FROM documents GROUP BY md5(text) ORDER BY keep_id"""
           // files free before the next shard's middle builds — this is
           // the whole point of running shards sequentially. The cleaner
           // is ASYNC (it drains a weak-ref queue on its own thread), so
-          // give it a bounded beat after the GC; without the pause the
-          // r17 sf100 probe measured ~2 shards of dead shuffle files
-          // still on disk when the next middle peaked.
+          // give it a bounded beat after the GC; without the pause ~2
+          // shards of dead shuffle files are still on disk at sf100 when
+          // the next middle peaks.
           System.gc()
           Thread.sleep(3000)
         }
@@ -382,19 +380,18 @@ ORDER BY doc_a, doc_b"""
     docs.select(col("doc_id"),
       posexplode(bandedOfShingles(col("sh"))).as(Seq("band_idx", "band_val")))
 
-  private val bandedCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("dedup.bands")
+  private val bandedCache = graft.util.SessionCaches.memo[Unit]("dedup.bands")
 
   /** The STORED LSH index: (doc_id, band_idx, band_val) persisted through
     * SilverArtifact next to the shingle table. The class doc above calls
     * this table the stored dedup index — so it is stored: a cold session's
     * `dedup_minhash_lsh` is a parquet read + candidate equi-join, not 64
-    * min-aggregates over the exploded shingle table (the r10 verdict's
-    * open cold-cost item). 16 rows/doc, far smaller than the shingles;
-    * invalidated by the same part-file fingerprint plus a logic tag
-    * carrying the permutation seed and banding shape. */
+    * min-aggregates over the exploded shingle table. 16 rows/doc, far
+    * smaller than the shingles; invalidated by the same part-file
+    * fingerprint plus a logic tag carrying the permutation seed and
+    * banding shape. */
   private[graft] def bandedTable(s: SparkSession, d: String): DataFrame =
-    bandedCache.getOrElseUpdate((s, d), {
+    bandedCache(s, d) {
       val base = graft.util.SilverArtifact.pathFor(d, "minhash_bands")
       val fp = graft.util.SilverArtifact.sourceFingerprint(
         s"$d/documents.parquet",
@@ -408,7 +405,7 @@ ORDER BY doc_a, doc_b"""
         .repartition(s.sparkContext.defaultParallelism,
           col("band_idx"), col("band_val"))
         .persistOnce()
-    })
+    }
 
   /** Exact-Jaccard verification of candidate pairs against the shingle
     * sets — shared by every LSH path; the approximation only ever prunes
@@ -452,8 +449,8 @@ ORDER BY doc_a, doc_b"""
     verifyJaccard(docs, cands, threshold)
   }
 
-  /** Oracle caveat (same accepted assumption as [[minhashLshOracle]], r6
-    * ADVICE): the SQL side computes EXACT all-pairs Jaccard restricted to
+  /** Oracle caveat (same accepted assumption as [[minhashLshOracle]]):
+    * the SQL side computes EXACT all-pairs Jaccard restricted to
     * index×batch, so gate-green additionally asserts that 16-band/4-row
     * banding recalls EVERY ≥0.9 pair at this SF and perm seed (expected
     * misses ≈ Σ 1−(1−s⁴)¹⁶ < 10⁻⁶ per pair at s ≥ 0.9 — recall-1 is the
@@ -473,14 +470,14 @@ ORDER BY doc_a, doc_b"""
 
   // ---- SimHash ----
 
-  // 120-bit fingerprint, v2 (r17; 60-bit v1 from r13, 32-bit from r3):
+  // 120-bit fingerprint (v2; v1 was 60-bit):
   // banding exactness for Hamming ≤ h forces bands = h+1, so the BAND
   // WIDTH — and with it the bucket count 2^width that divides the
   // quadratic random-collision term n²·bands/2^width — scales only with
   // the fingerprint size. The v1 4 × 15-bit split (the Manku-et-al
   // production shape for h ≤ 3) carries an n²/2^15 collision floor that
-  // the r16 sf100 probe measured starting to bind at 5M docs (4.9× step
-  // on 3.33× data); 4 × 30-bit bands push the floor to n²/2^30 —
+  // starts to bind at 5M docs (sf100 measured a 4.9× step on 3.33×
+  // data); 4 × 30-bit bands push the floor to n²/2^30 —
   // negligible to ~1B docs (collisions ≈ n²·4/2^30: ~4M pairs at 33M
   // docs, trivially verified). Results are EXACT at any banding
   // (candidates are Hamming-verified), so v2 changes the FINGERPRINT
@@ -500,7 +497,7 @@ ORDER BY doc_a, doc_b"""
   /** 120-bit ([[SimhashBits]]) SimHash per document from md5-derived
     * word hashes, as two 60-bit longs: `simhash_lo` from the first 16
     * md5 hex chars (bits 0-31 sign-sum chars 1-8, bits 32-59 chars
-    * 9-16 — bit-identical to the r13 60-bit fingerprint), `simhash_hi`
+    * 9-16 — bit-identical to the v1 60-bit fingerprint), `simhash_hi`
     * the same construction over chars 17-24/25-32. md5 is available and
     * byte-identical in both engines, so the fingerprints are
     * oracle-reproducible — unlike murmur/xxhash which are
@@ -508,11 +505,11 @@ ORDER BY doc_a, doc_b"""
     * signed bit sums per doc → reassemble. */
   def simhash(s: SparkSession, d: String): DataFrame = {
     // Fingerprint aggregation via the single-buffer `simhash_sums`
-    // TypedImperativeAggregate (optimization r17). The previous form was
-    // 120 separate `sum(CASE WHEN (hv >> b) & 1 = 1 THEN 1 ELSE -1 END)`
-    // aggregates — a 120-slot HashAggregate that exceeds
-    // `spark.sql.codegen.maxFields` (100), so the whole aggregate ran
-    // INTERPRETED: every word row paid 120 boxed expression evaluations
+    // TypedImperativeAggregate, not 120 separate
+    // `sum(CASE WHEN (hv >> b) & 1 = 1 THEN 1 ELSE -1 END)` aggregates —
+    // a 120-slot HashAggregate exceeds `spark.sql.codegen.maxFields`
+    // (100), so the whole aggregate would run INTERPRETED: every word
+    // row paying 120 boxed expression evaluations
     // twice (partial + final). `simhash_sums` keeps one Array[Int](120)
     // per doc and updates it with a shift/mask loop; partial/merge
     // mergeability is unchanged (counter arrays add), and eval assembles
@@ -633,11 +630,11 @@ ORDER BY doc_a, doc_b"""
     * et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
     * rounds are O(log n) and DIAMETER-INDEPENDENT, unlike plain min-label
     * propagation whose round count tracks the longest chain in the graph
-    * (the round-4 implementation capped out at diameter 50). Each round is
+    * (a fixed round cap would cut long chains). Each round is
     * two groupBy-join passes over the shrinking edge list, reliably
     * `checkpoint()`ed (HDFS-durable in production — a lost executor replays
-    * from the checkpoint file, not from a 2k-round lineage; r4 used
-    * executor-local localCheckpoint, which dies with the executor). Docs
+    * from the checkpoint file, not from a 2k-round lineage; an
+    * executor-local localCheckpoint would die with the executor). Docs
     * not in any pair are their own cluster and are omitted, matching the
     * oracle's recursive closure over the pair list. */
   // cluster assignment is a corpus ARTIFACT like the k-NN edge set or
@@ -648,11 +645,10 @@ ORDER BY doc_a, doc_b"""
   // (cold sessions read the label parquet), memoized per
   // (session, dataset, threshold) on top; evicted via
   // SessionCaches.clear.
-  private val clusterCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, Double)]("dedup.clusters")
+  private val clusterCache = graft.util.SessionCaches.memo[Double]("dedup.clusters")
 
   def clusters(s: SparkSession, d: String, threshold: Double = 0.9): DataFrame =
-    clusterCache.getOrElseUpdate((s, d, threshold), {
+    clusterCache(s, d, threshold) {
       val base = graft.util.SilverArtifact.pathFor(d, s"cc_labels_$threshold")
       val fp = graft.util.SilverArtifact.sourceFingerprint(
         s"$d/documents.parquet",
@@ -662,7 +658,7 @@ ORDER BY doc_a, doc_b"""
       }
         .orderBy("doc_id")
         .persistOnce()
-    })
+    }
 
   /** Large-star: for every node u, hang each strictly-larger neighbor off
     * m = min(N(u) ∪ {u}). Connectivity-preserving; output edges are
@@ -703,8 +699,8 @@ ORDER BY doc_a, doc_b"""
     * executor replays from the file, not a 2k-round lineage) with
     * MANAGED lifetime: round k−1's files are deleted the moment round k
     * is durable, and the final round's dir is reaped at JVM exit
-    * ([[graft.util.TempDirs]]) — the r5 advisor flagged the old
-    * checkpoint dir as an unbounded per-call disk leak. A production job
+    * ([[graft.util.TempDirs]]) — an unmanaged checkpoint dir would be
+    * an unbounded per-call disk leak. A production job
     * passes `workDir` on durable lake storage. */
   def clustersFromPairs(pairs: DataFrame, workDir: Option[String] = None): DataFrame = {
     val s = pairs.sparkSession
@@ -813,10 +809,10 @@ FROM reach GROUP BY n ORDER BY doc_id"""
     * Double math is the same sequence as the oracle's (ascending-index dot,
     * sqrt norms, divide, round 6), so results stay bitwise identical.
     *
-    * Corpus budget (r15): the block product bounds MEMORY, but the O(n²)
+    * Corpus budget: the block product bounds MEMORY, but the O(n²)
     * compute is inherent — the cold gate measured 443 s at sf10 (200k
-    * vectors) and grows quadratically, the exact class the r14 ANN
-    * anchors were in. Once the corpus exceeds [[CosineSampleCap]] the
+    * vectors) and grows quadratically, like an unsampled exact ANN
+    * anchor. Once the corpus exceeds [[CosineSampleCap]] the
     * gate pairs only a seeded md5-ordered sample of that size: exact
     * within the sample (sample-then-pair ≡ pair-then-filter-both-ends,
     * so the oracle states the identical sample), O(n log cap) selection
@@ -849,14 +845,12 @@ FROM reach GROUP BY n ORDER BY doc_id"""
   }
 
   // memoized per (session, dataset, params): repeat invocations (bench
-  // passes, specs, clusters) must not stack fresh persist() entries —
-  // the round-2 style per-call cache leak, now shared like shingleCache
-  private val cosineCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, Double, Int)]("dedup.cosine")
+  // passes, specs, clusters) must not stack fresh persist() entries
+  private val cosineCache = graft.util.SessionCaches.memo[(Double, Int)]("dedup.cosine")
 
   def cosinePairs(s: SparkSession, d: String, threshold: Double = 0.4,
       blockRows: Int = 1 << 16): DataFrame =
-    cosineCache.getOrElseUpdate((s, d, threshold, blockRows),
+    cosineCache(s, d, (threshold, blockRows))(
       cosinePairsUncached(s, d, threshold, blockRows))
 
   /** Above this corpus size the exact gate pairs a seeded sample (see the
@@ -974,13 +968,13 @@ FROM reach GROUP BY n ORDER BY doc_id"""
     }
     val bucketArr = array((0 until NumTables).map(t => col(s"b$t")): _*)
     // Score INSIDE the bucket join and project the vectors away in the
-    // same operator — the r13 sf10 probe caught the old shape (distinct
-    // the candidate ids first, re-join both 512-byte vectors after)
-    // materializing ~1 KB per CANDIDATE row: at 200k vectors that was a
-    // >70 GB spill before any filtering. Here every post-join row is 24
-    // bytes (ids + cosine), the threshold filter runs before the
-    // distinct, and a multi-table duplicate collision merely recomputes
-    // one 64-mult dot — the right trade at any scale.
+    // same operator — distinct-ing the candidate ids first and re-joining
+    // both 512-byte vectors after materializes ~1 KB per CANDIDATE row:
+    // at 200k vectors (sf10) that is a >70 GB spill before any filtering.
+    // Here every post-join row is 24 bytes (ids + cosine), the threshold
+    // filter runs before the distinct, and a multi-table duplicate
+    // collision merely recomputes one 64-mult dot — the right trade at
+    // any scale.
     val side = emb.select(col("vec_id"), col("v"), col("nrm"),
       posexplode(bucketArr).as(Seq("tbl", "bucket")))
     val probes = array((lit(0) +: (0 until effBits).map(b => lit(1 << b))): _*)
@@ -1072,11 +1066,10 @@ ORDER BY vec_a, vec_b"""
   // the semantic cluster labels are the same session-artifact shape as
   // [[clusters]]': computed once per (corpus, threshold), read by every
   // downstream consumer
-  private val semanticLabelCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, Double)]("dedup.semanticLabels")
+  private val semanticLabelCache = graft.util.SessionCaches.memo[Double]("dedup.semanticLabels")
 
   def semanticDedup(s: SparkSession, d: String, threshold: Double = 0.5): DataFrame = {
-    val labels = semanticLabelCache.getOrElseUpdate((s, d, threshold), {
+    val labels = semanticLabelCache(s, d, threshold) {
       // stored like [[clusters]]': the LSH pair scan + CC loop run once
       // per corpus version; cold sessions read the label parquet
       val base = graft.util.SilverArtifact.pathFor(d, s"semantic_labels_$threshold")
@@ -1089,7 +1082,7 @@ ORDER BY vec_a, vec_b"""
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       }
         .persistOnce()
-    })
+    }
     val allIds = Tables.embeddings(s, d).select(col("vec_id").as("doc_id"))
     val labeled = allIds.join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_root"), col("doc_id")).as("cluster_root"))

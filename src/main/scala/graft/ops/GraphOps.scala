@@ -35,13 +35,12 @@ object GraphOps {
   // memoized per (session, dataset) exactly like Similarity.knnCache one
   // level below it, so repeated graph queries in a session (the bench's
   // three passes) pay the distinct once; k·n rows, trivially cache-sized
-  private val undCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("graph.undirected")
+  private val undCache = graft.util.SessionCaches.memo[Unit]("graph.undirected")
 
   /** Symmetrized, deduplicated k-NN edge set: every edge once as (u, v),
     * u < v, persisted for the session. */
   def undirectedEdges(s: SparkSession, d: String): DataFrame =
-    undCache.getOrElseUpdate((s, d),
+    undCache(s, d)(
       Similarity.knnGraph(s, d, 3)
         .select(least(col("vec_a"), col("vec_b")).as("u"),
           greatest(col("vec_a"), col("vec_b")).as("v"))
@@ -194,12 +193,11 @@ FROM tri, w"""
   // only the FINAL union keeps the giant logical plan attached, and
   // every consumer pays ~3 s of driver-side analysis despite the
   // execution-side cache hit.
-  private val bfsCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("graph.bfs")
+  private val bfsCache = graft.util.SessionCaches.memo[Unit]("graph.bfs")
 
   def bfsDistances(s: SparkSession, d: String): DataFrame = {
     val nodes = Tables.embeddings(s, d).select(col("vec_id"))
-    val reachedAll = bfsCache.getOrElseUpdate((s, d), {
+    val reachedAll = bfsCache(s, d) {
       val und = undirectedEdges(s, d)
       val bi = und.select(col("u"), col("v"))
         .unionAll(und.select(col("v").as("u"), col("u").as("v")))
@@ -227,7 +225,7 @@ FROM tri, w"""
       // truncates the lineage to a LogicalRDD, making the memoized
       // artifact cheap to plan against (~0.3 s) as well as to execute.
       reached.localCheckpoint(true)
-    })
+    }
     nodes.join(reachedAll, nodes("vec_id") === reachedAll("node"), "left")
       .select(col("vec_id"), coalesce(col("dist"), lit(-1)).as("dist"))
       .orderBy("vec_id")

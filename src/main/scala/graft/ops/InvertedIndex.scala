@@ -47,8 +47,7 @@ object InvertedIndex {
   private def postings(s: SparkSession, d: String): DataFrame =
     postingsOf(s, Tables.documents(s, d))
 
-  private val indexMemo =
-    SessionCaches.memo[(SparkSession, String)]("inverted_index.postings")
+  private val indexMemo = SessionCaches.memo[Unit]("inverted_index.postings")
 
   /** The stored index: `(term, doc_id, pos)` term-range-partitioned and
     * sorted within partitions, so every parquet footer carries a tight
@@ -56,7 +55,7 @@ object InvertedIndex {
     * Built once per SOURCE VERSION (fingerprint-stamped); later sessions
     * read the artifact. */
   def indexTable(s: SparkSession, d: String): DataFrame =
-    indexMemo.getOrElseUpdate((s, d), {
+    indexMemo(s, d) {
       val base = SilverArtifact.pathFor(d, "inverted_index")
       val fp = SilverArtifact.sourceFingerprint(
         s"$d/documents.parquet", "invidx-v1-pos1")
@@ -65,7 +64,7 @@ object InvertedIndex {
           .repartitionByRange(col("term"))
           .sortWithinPartitions("term", "doc_id", "pos")
       }
-    })
+    }
 
   /** Docs containing the exact phrase, with occurrence counts: the
     * first-term postings anchor, each later term joins on `(doc_id,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.{AtomicTable, PathKeys, SessionCaches}
+import graft.util.{AtomicTable, PathKeys}
 
 /** Merge-on-read MERGE (upsert) — the full Delta-DV / Iceberg-v2 write
   * shape on top of [[DeletionVectors]]: a MERGE batch neither rewrites nor
@@ -156,7 +156,7 @@ object MergeOnRead {
     * read the old files once, rewrite one prefixed file per commit, drop
     * the old files. Cost is O(feed) — kilobyte-to-megabyte sidecar data —
     * never a re-merge or table rebuild: the upgrade path format evolution
-    * should take (vs the r12 fingerprint bump, which rebuilt every store).
+    * should take (a fingerprint bump would rebuild every store).
     * Idempotent and crash-safe: old files are deleted only after every
     * commit's new file landed, and a re-run after a mid-migration crash
     * first DELETES any `c<v>-*` files a previous attempt already landed
@@ -505,9 +505,6 @@ object MergeOnRead {
 
   // --------------------------------------------------------------- queries
 
-  private val morMemo =
-    SessionCaches.memo[(SparkSession, String)]("merge_on_read.orders")
-
   /** First CDC batch: an update (every key ≡ 0 mod 7 gets +10.00 and a
     * marker priority) plus inserts (keys ≡ 0 mod 13 re-enter offset by
     * 10^8 with status 'N'). Arithmetic is exact in doubles — no rounding
@@ -536,35 +533,34 @@ object MergeOnRead {
   /** orders staged once per SOURCE VERSION with both merges committed —
     * the stamped fingerprint is the table's post-MERGE metadata state; a
     * fresh session re-reads the committed sidecars instead of re-merging. */
-  private[graft] def morOrders(s: SparkSession, d: String): String =
-    morMemo.getOrElseUpdate((s, d), {
-      val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders"
-      val fp = graft.util.SilverArtifact.sourceFingerprint(
-        s"$d/orders.parquet", "mor-v4-fname")
-      graft.util.SilverArtifact.stagedOnce(base, fp) {
-        // restage = reload from scratch: the root-level change feed
-        // deliberately outlives version publishes, so a full rebuild
-        // must reset it or the replayed merges would double every row
-        AtomicTable.deleteRecursively(
-          java.nio.file.Paths.get(changesPath(base)))
-        AtomicTable.publish(base) { dir =>
-          Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(dir)
-        }
-        mergeUpsert(s, base, batch1(s, d), "o_orderkey", cdfVersion = Some(1L))
-        mergeUpsert(s, base, batch2(s, d), "o_orderkey", cdfVersion = Some(2L))
-        // retention runs in the gated path every round (keep=2 retains
-        // both commits here — the stream oracles replay both); CdfRetention
-        // Spec proves the sweeping + refusing behavior with keep=1
-        vacuumChanges(base, keepCommits = 2)
+  private[graft] def morOrders(s: SparkSession, d: String): String = {
+    val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders"
+    val fp = graft.util.SilverArtifact.sourceFingerprint(
+      s"$d/orders.parquet", "mor-v4-fname")
+    graft.util.SilverArtifact.stagedOnce(base, fp) {
+      // restage = reload from scratch: the root-level change feed
+      // deliberately outlives version publishes, so a full rebuild
+      // must reset it or the replayed merges would double every row
+      AtomicTable.deleteRecursively(
+        java.nio.file.Paths.get(changesPath(base)))
+      AtomicTable.publish(base) { dir =>
+        Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(dir)
       }
-      base
-    })
+      mergeUpsert(s, base, batch1(s, d), "o_orderkey", cdfVersion = Some(1L))
+      mergeUpsert(s, base, batch2(s, d), "o_orderkey", cdfVersion = Some(2L))
+      // retention runs in the gated path on every staging (keep=2 retains
+      // both commits here — the stream oracles replay both); CdfRetention
+      // Spec proves the sweeping + refusing behavior with keep=1
+      vacuumChanges(base, keepCommits = 2)
+    }
+    base
+  }
 
   /** Aggregate over the twice-merged table — must equal the oracle's
     * direct simulation of both merges over the source, proving positional
     * replace semantics across data AND merge-inserted files. Prices sum
     * as exact integer cents (group totals ~10^9 overflow the 4-dp compare
-    * grid when summed as doubles — the r9 hash flake); per-row
+    * grid when summed as doubles); per-row
     * `round(x*100)` after the exact +10/+5 deltas is IEEE-identical
     * across engines and the long sum is exact. */
   def mergeUpsertMor(s: SparkSession, d: String): DataFrame =
@@ -575,9 +571,6 @@ object MergeOnRead {
       .orderBy("o_orderstatus")
 
   // ----------------------------------------------------- full-matrix query
-
-  private val fullMemo =
-    SessionCaches.memo[(SparkSession, String)]("merge_on_read.orders_full")
 
   /** Source batch for the full-matrix MERGE: every key ≡ 0 mod 5 arrives
     * re-priced (+7.00, exact in doubles); keys ≡ 0 mod 19 arrive as NEW
@@ -599,32 +592,29 @@ object MergeOnRead {
     *   NOT MATCHED                 → INSERT
     *   NOT MATCHED BY SOURCE AND key%3=0 → DELETE
     * Matched 'O' rows hit no clause and survive untouched. */
-  private[graft] def fullOrders(s: SparkSession, d: String): String =
-    fullMemo.getOrElseUpdate((s, d), {
-      val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders_full"
-      val fp = graft.util.SilverArtifact.sourceFingerprint(
-        s"$d/orders.parquet", "morfull-v4-fname")
-      graft.util.SilverArtifact.stagedOnce(base, fp) {
-        // restage = reload from scratch: the root-level change feed
-        // deliberately outlives version publishes, so a full rebuild
-        // must reset it or the replayed merges would double every row
-        AtomicTable.deleteRecursively(
-          java.nio.file.Paths.get(changesPath(base)))
-        AtomicTable.publish(base) { dir =>
-          Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(dir)
-        }
-        mergeFull(s, base, fullBatch(s, d), "o_orderkey",
-          matchedUpdateCond = col("o_orderstatus") === "F",
-          updateSet = Map(
-            "o_totalprice" -> col("__src_o_totalprice"),
-            "o_orderpriority" -> lit("1-UPDATED")),
-          matchedDeleteCond = col("o_orderstatus") === "P",
-          insertNotMatched = true,
-          notMatchedBySourceDeleteCond = col("o_orderkey") % 3 === 0,
-          cdfVersion = Some(1L))
+  private[graft] def fullOrders(s: SparkSession, d: String): String = {
+    val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders_full"
+    val fp = graft.util.SilverArtifact.sourceFingerprint(
+      s"$d/orders.parquet", "morfull-v4-fname")
+    graft.util.SilverArtifact.stagedOnce(base, fp) {
+      // restage = reload from scratch (see [[morOrders]])
+      AtomicTable.deleteRecursively(
+        java.nio.file.Paths.get(changesPath(base)))
+      AtomicTable.publish(base) { dir =>
+        Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(dir)
       }
-      base
-    })
+      mergeFull(s, base, fullBatch(s, d), "o_orderkey",
+        matchedUpdateCond = col("o_orderstatus") === "F",
+        updateSet = Map(
+          "o_totalprice" -> col("__src_o_totalprice"),
+          "o_orderpriority" -> lit("1-UPDATED")),
+        matchedDeleteCond = col("o_orderstatus") === "P",
+        insertNotMatched = true,
+        notMatchedBySourceDeleteCond = col("o_orderkey") % 3 === 0,
+        cdfVersion = Some(1L))
+    }
+    base
+  }
 
   /** Aggregate over the full-matrix-merged table; `n_updated` counts the
     * marker priority, proving UPDATE SET applied (and only under its
@@ -640,32 +630,28 @@ object MergeOnRead {
 
   // ------------------------------------------------ schema-evolution query
 
-  private val evoMemo =
-    SessionCaches.memo[(SparkSession, String)]("merge_on_read.orders_evo")
-
   /** orders with one schema-EVOLVING merge committed: every key ≡ 0 mod 4
     * arrives re-priced (+1.00, exact) and carrying a column the table
     * never had (`o_channel`, keyed deterministically off the order key). */
-  private[graft] def evoOrders(s: SparkSession, d: String): String =
-    evoMemo.getOrElseUpdate((s, d), {
-      val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders_evo"
-      val fp = graft.util.SilverArtifact.sourceFingerprint(
-        s"$d/orders.parquet", "morevo-v2-fname")
-      graft.util.SilverArtifact.stagedOnce(base, fp) {
-        AtomicTable.deleteRecursively(
-          java.nio.file.Paths.get(changesPath(base)))
-        AtomicTable.publish(base) { dir =>
-          Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(dir)
-        }
-        val o = Tables.orders(s, d)
-        val batch = o.where(col("o_orderkey") % 4 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") + lit(1.0))
-          .withColumn("o_channel",
-            when(col("o_orderkey") % 8 === 0, "web").otherwise("store"))
-        mergeUpsert(s, base, batch, "o_orderkey")
+  private[graft] def evoOrders(s: SparkSession, d: String): String = {
+    val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders_evo"
+    val fp = graft.util.SilverArtifact.sourceFingerprint(
+      s"$d/orders.parquet", "morevo-v2-fname")
+    graft.util.SilverArtifact.stagedOnce(base, fp) {
+      AtomicTable.deleteRecursively(
+        java.nio.file.Paths.get(changesPath(base)))
+      AtomicTable.publish(base) { dir =>
+        Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(dir)
       }
-      base
-    })
+      val o = Tables.orders(s, d)
+      val batch = o.where(col("o_orderkey") % 4 === 0)
+        .withColumn("o_totalprice", col("o_totalprice") + lit(1.0))
+        .withColumn("o_channel",
+          when(col("o_orderkey") % 8 === 0, "web").otherwise("store"))
+      mergeUpsert(s, base, batch, "o_orderkey")
+    }
+    base
+  }
 
   /** Aggregate over the union schema: merged rows carry their channel,
     * pre-evolution rows read NULL (rendered 'none' so both engines order

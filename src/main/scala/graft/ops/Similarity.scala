@@ -41,11 +41,10 @@ object Similarity {
   // memoized per (session, dataset): every ANN path and each Lloyd action
   // re-reads this narrow projection; one shared persisted copy replaces
   // ~5 parquet rescans per annIvfTopK call and survives bench passes
-  private val embCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("similarity.emb")
+  private val embCache = graft.util.SessionCaches.memo[Unit]("similarity.emb")
 
   private def withNorm(s: SparkSession, d: String): DataFrame =
-    embCache.getOrElseUpdate((s, d),
+    embCache(s, d)(
       Tables.fanout(s, Tables.embeddings(s, d))
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .withColumn("nrm", sqrt(dot(s, col("v"), col("v"))))
@@ -96,7 +95,7 @@ SELECT query_id, vec_id, cosine, rnk FROM ranked
 WHERE rnk <= $K ORDER BY query_id, rnk"""
 
   /** The GATE variant of [[annTopK]]: exact ground truth restricted to
-    * the seeded [[recallQuerySample]] (r14 verdict #3 — the full anchor
+    * the seeded [[recallQuerySample]] (the full anchor
     * is O(n·q) = O(n²/100) by construction, quadratic at scale; the
     * sampled anchor is exact PER SAMPLED QUERY and O(corpus × budget)
     * total). Per-query results are independent, so restricting the query
@@ -174,10 +173,10 @@ ORDER BY query_id, rnk"""
   // function of count(*) — no float log2 whose rounding could diverge
   // between engines — and the oracle computes the same thresholds in SQL.
   // MaxBits caps the pinned-plane set (and the oracle's literal text).
-  // 20 bits keeps occupancy ≤ TargetBucket up to ~33M vectors (r16: the
-  // sf100 probe measured 2M vectors sitting exactly at the old 16-bit
-  // cap — occupancy 30.5 vs sf30's 18.3, the top of the adaptive
-  // window, and ANY further growth would have been quadratic). Because
+  // 20 bits keeps occupancy ≤ TargetBucket up to ~33M vectors (sf100's
+  // 2M vectors sit exactly at a 16-bit cap — occupancy 30.5 vs sf30's
+  // 18.3, the top of the adaptive window — where ANY further growth
+  // would be quadratic). Because
   // the per-(table, bit) plane streams are PREFIX-STABLE (planesFor),
   // raising the cap is byte-identical for every corpus below the old
   // cap — the low effBits planes are the same planes.
@@ -269,8 +268,8 @@ ORDER BY query_id, rnk"""
         corpus("tbl") === q("tbl") && col("bucket") === col("probe_bucket") &&
           col("vec_id") =!= col("query_id"))
       // score IN the join and project both vectors away immediately: the
-      // dedup below then shuffles 24-byte rows, not vector pairs (the
-      // r13 sf10 probe's finding — see cosinePairsLsh). A vector
+      // dedup below then shuffles 24-byte rows, not vector pairs (see
+      // cosinePairsLsh). A vector
       // colliding in several tables is still ONE candidate, with an
       // identical cosine on every collision.
       .select(col("query_id"), col("vec_id"),
@@ -371,11 +370,10 @@ WHERE rnk <= $K ORDER BY query_id, rnk"""
   // (kilobyte-sized) refined centroids per (session, dataset) exactly like
   // a vector store persists its index; both Lloyd assignment passes rerun
   // only when the corpus changes
-  private val centroidCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("similarity.centroids")
+  private val centroidCache = graft.util.SessionCaches.memo[Unit]("similarity.centroids")
 
   private[graft] def lloydCentroidsCached(s: SparkSession, d: String, emb: DataFrame): Seq[(Int, Array[Double])] =
-    centroidCache.getOrElseUpdate((s, d), lloydCentroids(s, emb))
+    centroidCache(s, d)(lloydCentroids(s, emb))
 
   private[graft] def lloydCentroids(s: SparkSession, emb: DataFrame): Seq[(Int, Array[Double])] = {
     val seeds = emb.orderBy("vec_id").limit(NumCentroids)
@@ -508,7 +506,7 @@ WHERE rnk <= $K ORDER BY query_id, rnk"""
     * (nprobe/NumCentroids of the corpus), but with FIXED centroids the
     * cells grow with n, so the full 1%-of-corpus query set made the gate
     * O(n²·nprobe/C/100): 12.8 s at sf10 → 134.9 s at sf30 (10.6× for 3×
-    * data, the r15 decade probe's largest step). The budget makes it
+    * data). The budget makes it
     * O(corpus × budget · nprobe/C); [[annIvfTopK]] stays full for the
     * planted recall contracts and the nprobe sweep. */
   def annIvfTopKSampled(s: SparkSession, d: String): DataFrame = {
@@ -540,13 +538,12 @@ ORDER BY query_id, rnk"""
   // graph_triangles) — memoize the ranked edges per (session, dataset, k)
   // like the IVF index above; the graph is k·n rows, far smaller than the
   // candidate join that produces it
-  private val knnCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, Int)]("similarity.knn")
+  private val knnCache = graft.util.SessionCaches.memo[Int]("similarity.knn")
 
   def knnGraph(s: SparkSession, d: String, k: Int = 3): DataFrame =
-    knnCache.getOrElseUpdate((s, d, k), {
+    knnCache(s, d, k) {
       // the edge set is a stored corpus artifact like the MinHash band
-      // index (r10 verdict #2): the LSH candidate join + ranking window
+      // index: the LSH candidate join + ranking window
       // run once per corpus version and land on disk via SilverArtifact;
       // a cold session's graph queries (link_prediction, pagerank,
       // triangles, bfs) start from a k·n-row parquet read instead of
@@ -563,7 +560,7 @@ ORDER BY query_id, rnk"""
         // drops — the knn_graph gate hashes this frame directly
         .orderBy("vec_a", "rnk")
         .persistOnce()
-    })
+    }
 
   private def knnGraphUncached(s: SparkSession, d: String, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -576,7 +573,7 @@ ORDER BY query_id, rnk"""
     // EXACT only because the source embeddings are float32, so
     // double→float→double round-trips bit-identically. A future dataset
     // with genuine float64 embeddings would silently perturb cosines and
-    // surface only as an opaque gate-hash mismatch (r15 ADVICE): fail
+    // surface only as an opaque gate-hash mismatch: fail
     // loudly at plan time instead.
     Tables.embeddings(s, d).schema("embedding").dataType match {
       case org.apache.spark.sql.types.ArrayType(
@@ -598,10 +595,10 @@ ORDER BY query_id, rnk"""
     }
     val bucketArr = array((0 until NumTables).map(t => col(s"b$t")): _*)
     // score inside the bucket join, vectors projected away in the same
-    // operator — see cosinePairsLsh's in-body note: the old
-    // distinct-ids-then-rejoin-vectors shape materialized ~1 KB per
-    // candidate row and killed the sf10 build (the r13 probe's finding);
-    // post-join rows here are 24 bytes
+    // operator — see cosinePairsLsh's in-body note: a
+    // distinct-ids-then-rejoin-vectors shape materializes ~1 KB per
+    // candidate row and kills the sf10 build; post-join rows here are
+    // 24 bytes
     val side = emb.select(col("vec_id"), col("v"), col("nrm"),
       posexplode(bucketArr).as(Seq("tbl", "bucket")))
     val allFlips: Seq[Int] = 0 +: (0 until effBits).map(b => 1 << b)
@@ -619,8 +616,8 @@ ORDER BY query_id, rnk"""
     // payload dominates the sub-build's shuffle — and the source
     // embeddings ARE float32, so double→float→double round-trips exactly:
     // ship the float array (260 B/row instead of 520 B) and cast back at
-    // score time for a bit-identical cosine. (The r15 sf100 probe
-    // measured the double-payload probe shuffle alone at ~37 GB.)
+    // score time for a bit-identical cosine. (At sf100 the
+    // double-payload probe shuffle alone is ~37 GB.)
     def partialTopK(tables: Seq[Int], flips: Seq[Int]): DataFrame = {
       val sideT = side.filter(col("tbl").isin(tables: _*))
       val probed = sideT.select(col("vec_id"),
@@ -647,7 +644,7 @@ ORDER BY query_id, rnk"""
     // task the partial aggregate exceeds ObjectHashAggregate's hash
     // budget and falls back to sorting its whole input — one job then
     // holds the full candidate sort spill PLUS the probe shuffle on disk
-    // simultaneously (the r15 sf100 ENOSPC, ~60 GB transient). One
+    // simultaneously (~60 GB transient at sf100, enough to fill a disk). One
     // sub-job per (table, probe half) caps the live spill at a quarter;
     // each sub-job lands only n·k partial rows, and bounded top-k is a
     // semilattice (global top-k = top-k of the union of slice top-k's;
@@ -745,7 +742,7 @@ ORDER BY vec_a, rnk"""
       // 2⁵³), so the double dot EQUALS the integer dot bit for bit — and
       // the interpreted aggregate(zip_with(...)) lambda this replaces
       // cost 3× the double-bruteforce query per candidate pair at sf10
-      // (181.8 s vs 59.5 s, r14 16 GB probe)
+      // (181.8 s vs 59.5 s on a 16 GB heap)
       .withColumn("qd", col("q").cast("array<double>"))
       .withColumn("qn", sqrt(dot(s, col("qd"), col("qd"))))
       .select("vec_id", "qd", "qn")
@@ -787,7 +784,7 @@ SELECT query_id, vec_id, qcos, rnk FROM ranked
 WHERE rnk <= $K ORDER BY query_id, rnk"""
 
   /** The GATE variant of [[annInt8TopK]] — seeded query budget, same
-    * shape as [[annTopKSampled]] (r14 verdict #3). */
+    * shape as [[annTopKSampled]]. */
   def annInt8TopKSampled(s: SparkSession, d: String): DataFrame = {
     val qs = recallQuerySample(withNorm(s, d))
     annInt8TopKFor(s, d, Some(qs))
@@ -810,12 +807,10 @@ ORDER BY query_id, rnk"""
   val PqSub = Dim / PqM
   val PqC = 16   // centroids per subspace codebook
 
-  private val pqCodesCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("similarity.pqcodes")
+  private val pqCodesCache = graft.util.SessionCaches.memo[Unit]("similarity.pqcodes")
   // non-DataFrame values are legal memo entries (evict just drops them);
   // registering here keeps the codebook evictable with everything else
-  private val pqCbCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("similarity.pqcodebook")
+  private val pqCbCache = graft.util.SessionCaches.memo[Unit]("similarity.pqcodebook")
 
   /** Micro-unit integer quantization of the UNIT-NORMALIZED embedding
     * (floor(vᵢ/‖v‖·10⁶)) — normalizing first is how PQ serves cosine
@@ -835,13 +830,13 @@ ORDER BY query_id, rnk"""
     * (8 KB), the same documented kilobyte-metadata collect as the IVF
     * centroids. */
   private def pqCodebook(s: SparkSession, d: String): Array[Array[Array[Long]]] =
-    pqCbCache.getOrElseUpdate((s, d), {
+    pqCbCache(s, d) {
       val seeds = pqQuantized(s, d).filter(col("vec_id") % 31 === 0)
         .orderBy("vec_id").limit(PqC)
         .collect().map(_.getSeq[Long](1).toArray)
       require(seeds.length == PqC, s"need $PqC seed vectors, got ${seeds.length}")
       Array.tabulate(PqM, PqC, PqSub)((m, c, j) => seeds(c)(m * PqSub + j))
-    })
+    }
 
   /** PRODUCT-QUANTIZATION ANN — the missing member of the ANN family
     * (brute force / LSH / IVF / int8): compress each vector to PqM=8
@@ -879,7 +874,7 @@ ORDER BY query_id, rnk"""
     // assignment alone at sf0.1). The pq_* kernels (functions/
     // PqExpressions) are fused codegen loops — same semantics, small
     // bytecode, whole stage stays compiled.
-    pqCodesCache.getOrElseUpdate((s, d),
+    pqCodesCache(s, d)(
       pqQuantized(s, d).select(col("vec_id"),
         call_function("pq_encode", col("q"), pqCbLit(s, d),
           lit(PqM), lit(PqC), lit(PqSub)).as("codes"))
@@ -892,9 +887,9 @@ ORDER BY query_id, rnk"""
   /** [[annPqTopK]] restricted to an optional broadcast query-id sample
     * (per-query independence — same argument as [[annTopKFor]]). PQ ADC
     * scans ALL corpus codes per query, so with the query set at n/100 of
-    * the corpus the full run is O(n²/100) BY CONSTRUCTION — the r15 sf10
-    * curve flagged it at 15× for a 10× data step, the exact class the
-    * anchors were in. The gate therefore runs the seeded budget; the
+    * the corpus the full run is O(n²/100) BY CONSTRUCTION — 15× time
+    * for the 10× data step to sf10, the same class as the exact
+    * anchors. The gate therefore runs the seeded budget; the
     * full variant remains the batch twin of the streaming serve path. */
   private def annPqTopKFor(s: SparkSession, d: String,
       querySample: Option[DataFrame]): DataFrame = {
@@ -920,11 +915,11 @@ ORDER BY query_id, rnk"""
     // >128 groups ObjectHashAggregate falls back to SORT-based
     // aggregation, which sorts its CHILD's rows — and a child row that
     // still carries the 2 KB qtab lookup table (plus codes) turns the
-    // n·q candidate set into a terabyte-scale spill at sf10 (the r14
-    // 16 GB probe OOM'd exactly here, in the spill read-ahead). Scored
-    // first, the aggregation input is a 24-byte (query_id, dist,
-    // vec_id) row — the same ship-scalars-not-payloads rule as the r13
-    // LSH candidate fix (Dedup.scala).
+    // n·q candidate set into a terabyte-scale spill at sf10 (a 16 GB
+    // heap OOMs exactly here, in the spill read-ahead). Scored first,
+    // the aggregation input is a 24-byte (query_id, dist, vec_id) row —
+    // the same ship-scalars-not-payloads rule as the LSH candidate
+    // join (Dedup.cosinePairsLsh).
     codes.join(broadcast(qs), col("vec_id") =!= col("query_id"))
       .select(col("query_id"),
         call_function("pq_adc", col("qtab"), col("codes"),
@@ -1001,8 +996,7 @@ ORDER BY query_id, rnk"""
 
   // ---- IVF-PQ: the composed industrial index --------------------------
 
-  private val ivfpqIndexCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("similarity.ivfpq")
+  private val ivfpqIndexCache = graft.util.SessionCaches.memo[Unit]("similarity.ivfpq")
 
   /** IVF-PQ ANN — the two scale levers COMPOSED, which is the shape
     * every production vector store (faiss IVFPQ, ScaNN, Milvus) actually
@@ -1034,7 +1028,7 @@ ORDER BY query_id, rnk"""
     val quant = transform(col("v"), x => floor(x / col("nrm") * lit(1e6)).cast("long"))
     // the stored index: (vec_id, cell, codes) — built once per corpus
     // version, memoized like the centroid table and the PQ codes
-    val indexed = ivfpqIndexCache.getOrElseUpdate((s, d),
+    val indexed = ivfpqIndexCache(s, d)(
       emb.withColumn("cell",
           array_max(cellScores(s, col("v"), cents)).getField("cid"))
         .withColumn("q", quant)
@@ -1067,8 +1061,8 @@ ORDER BY query_id, rnk"""
       .orderBy("query_id", "rnk")
   }
 
-  /** The GATE variant of [[annIvfPqTopK]] — seeded query budget (the r15
-    * decade probe measured the full gate at 8.0× for a 3× data step,
+  /** The GATE variant of [[annIvfPqTopK]] — seeded query budget (the
+    * full gate measured 8.0× for the 3× data step from sf10 to sf30,
     * the same fixed-centroid O(n²·nprobe/C/100) class as
     * [[annIvfTopKSampled]]'s). */
   def annIvfPqTopKSampled(s: SparkSession, d: String): DataFrame = {
@@ -1256,7 +1250,7 @@ WHERE rnk <= 5 ORDER BY query_id, rnk"""
 
   /** Query budget of the recall evaluation: exact ground truth is
     * O(corpus) PER QUERY, so evaluating every query made the gate
-    * O(n·q) = O(n²/100) — quadratic at sf10 (r13 verdict #4). A fixed
+    * O(n·q) = O(n²/100) — quadratic at sf10. A fixed
     * seeded sample keeps it O(corpus × budget) at any scale; 64 queries
     * bound the recall estimate's standard error at ~ sqrt(r(1-r)/64)
     * ≤ 0.063, plenty for a ≥0.9 contract. */

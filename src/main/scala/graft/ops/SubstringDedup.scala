@@ -49,13 +49,12 @@ object SubstringDedup {
   // Dedup.shingleTable, so one materialization serves up to 4 plan
   // references (and repeat bench passes). At 100 TB this table is the
   // stored artifact a real pipeline writes once per corpus version.
-  private val gramCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, Int)]("substring.grams")
+  private val gramCache = graft.util.SessionCaches.memo[Int]("substring.grams")
 
   /** Document pairs sharing a verbatim run of ≥ `L` words, with the exact
     * longest shared run length and the supporting anchor-match count. */
   def substringPairs(s: SparkSession, d: String, L: Int = 12): DataFrame = {
-    val grams = gramCache.getOrElseUpdate((s, d, L), {
+    val grams = gramCache(s, d, L) {
       // the shingleTable build discipline (Dedup.scala): persist the raw
       // generate (it feeds the hot-list aggregate AND the anti-join),
       // materialize the capped table, release the intermediate — one
@@ -69,7 +68,7 @@ object SubstringDedup {
       capped.count()
       raw.unpersist()
       capped
-    })
+    }
     pairsFromGrams(grams, L)
   }
 

@@ -41,12 +41,12 @@ object TokenOps {
     * driver state. Mean token frequency is reported as an exact integer sum
     * plus a ppm rate — both engines do the same BIGINT arithmetic. */
   def tokenRarity(s: SparkSession, d: String): DataFrame = {
-    // r17 (guide §2.3/§2.4): the frequency aggregate and the join probe
-    // consumed the raw (doc_id, tok) instance stream through two
-    // differently-shaped exchanges — column pruning drops doc_id below
-    // any shared exchange on the frequency branch (a bare repartition
-    // reuse point does NOT survive it; measured liveGenerates=2) — so
-    // the corpus explode ran twice. Pre-aggregating ONCE to
+    // fed the raw (doc_id, tok) instance stream, the frequency aggregate
+    // and the join probe would read it through two differently-shaped
+    // exchanges — column pruning drops doc_id below any shared exchange
+    // on the frequency branch (a bare repartition reuse point does NOT
+    // survive it; measured liveGenerates=2) — so the corpus explode
+    // would run twice. Pre-aggregating ONCE to
     // (doc_id, tok, cnt) makes doc_id a GROUPING key, which pruning
     // cannot remove: both branches share the identical exchange subtree
     // (explode once) and everything downstream moves aggregated rows.
@@ -266,11 +266,10 @@ GROUP BY content_hash ORDER BY doc_id"""
     * encode - persisted per (session, dataset) like the embedding cache in
     * [[Similarity]]: the char-split regex is the dominant cost and every
     * merge round re-reads this frame. */
-  private val reprCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("token.repr")
+  private val reprCache = graft.util.SessionCaches.memo[Unit]("token.repr")
 
   private def wordRepr(s: SparkSession, d: String): DataFrame =
-    reprCache.getOrElseUpdate((s, d),
+    reprCache(s, d)(
       Tables.fanout(s, Tables.documents(s, d))
         .select(col("doc_id"),
           explode(split(regexp_replace(lower(col("text")), "[^a-z ]", ""), " ")).as("w"))
@@ -306,16 +305,15 @@ GROUP BY content_hash ORDER BY doc_id"""
   /** The two learned merges, derived once per (session, dataset) - a
     * trained tokenizer is a reusable artifact; [[bpeEncode]] must not pay
     * for training again. */
-  private val mergeCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("token.merges")
+  private val mergeCache = graft.util.SessionCaches.memo[Unit]("token.merges")
 
   private def merges(s: SparkSession, d: String): ((String, String), (String, String)) =
-    mergeCache.getOrElseUpdate((s, d), {
+    mergeCache(s, d) {
       val r0 = wordRepr(s, d)
       val m1 = bestMerge(r0)
       val m2 = bestMerge(applyMerge(r0, m1))
       (m1, m2)
-    })
+    }
 
   def bpeTrain(s: SparkSession, d: String): DataFrame = {
     val (m1, m2) = merges(s, d)
@@ -435,8 +433,7 @@ FROM enc GROUP BY doc_id ORDER BY doc_id"""
     // so the unigram table folds out of the bigram counts instead of a
     // third full pass + exchange over the raw bigram stream — the
     // generator runs once for the model (ReusedExchange) and the unigram
-    // exchange carries aggregated counts, not instances (opt r17,
-    // guide §2.3/§2.4).
+    // exchange carries aggregated counts, not instances.
     val unigram = bigram.groupBy("w1").agg(sum("c2").as("c1"))
     val lm = bigram.join(unigram, "w1")
       .select(col("w1"), col("w2"), expr("c2 * 1000000L div c1").as("p_ppm"))
@@ -482,12 +479,12 @@ GROUP BY doc_id ORDER BY doc_id"""
       .select(col("doc_id"),
         md5(concat_ws(" ",
           expr("slice(ws, CAST(c * 16 + 1 AS INT), 16)"))).as("h"))
-    // Optimization r17 (guide §2.4): `spans` feeds two consumers — the
-    // document-frequency aggregate and the join probe — whose exchange
-    // subtrees DIFFER (one carries the countDistinct partial), so the
-    // span generator (split + slice + md5 over every span) executed
-    // twice. One explicit hash exchange on the join/grouping key makes
-    // both consumers start from the identical subtree: the generator
+    // `spans` feeds two consumers — the document-frequency aggregate
+    // and the join probe — whose exchange subtrees DIFFER (one carries
+    // the countDistinct partial), so on its own the span generator
+    // (split + slice + md5 over every span) would execute twice. One
+    // explicit hash exchange on the join/grouping key makes both
+    // consumers start from the identical subtree: the generator
     // runs once, the df aggregate and the join both read the one
     // materialized exchange (and are already partitioned on h, so
     // neither pays a further data exchange).

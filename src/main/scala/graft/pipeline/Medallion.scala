@@ -49,18 +49,16 @@ object Medallion {
     * ally persist()ed: dims are small at any scale; at 100 TB you would
     * drop the fact's persist and lean on the columnar scan (partition-
     * pruned, column-pruned) — the artifact IS the written gold zone. */
-  private val goldCache =
-    graft.util.SessionCaches.memo[(SparkSession, String, String)]("medallion.gold")
+  private val goldCache = graft.util.SessionCaches.memo[String]("medallion.gold")
 
   /** The logic-version component of a gold artifact's fingerprint is a
     * DIGEST OF THE DERIVATION ITSELF ([[graft.util.SilverArtifact
     * .planFingerprint]] — the canonicalized analyzed plan of the builder
     * DataFrame): any code change that alters the silver/gold derivation
-    * changes the plan and auto-orphans stored artifacts. The hand-bumped
-    * "gold-v1" constant this replaces was the one staleness hole left in
-    * the artifact tier — an edit that forgot the bump would silently
-    * serve stale gold to every later session (r11 verdict #2). Because
-    * the digest covers the builder's INPUT FILE LIST alongside the plan
+    * changes the plan and auto-orphans stored artifacts, where a
+    * hand-bumped constant would let an edit that forgot the bump serve
+    * stale gold to every later session. Because the digest covers the
+    * builder's INPUT FILE LIST alongside the plan
     * (plan text alone renders file relations path-less), the fact's
     * fingerprint names the dim artifacts' version directories — a dim
     * rebuild cascades to the fact. Over-invalidation, never staleness. */
@@ -69,12 +67,8 @@ object Medallion {
       graft.util.SilverArtifact.sourceFingerprint(s"$d/$n.parquet", logic))
       .mkString("|")
 
-  // keyed by the session INSTANCE (reference equality) — an identity
-  // hashCode is a hash, not an identity, and a collision would hand a new
-  // session a DataFrame bound to a stopped one. Entries live for the JVM;
-  // a long-lived service evicts via SessionCaches.clear(session).
   private def cached(s: SparkSession, d: String, name: String)(build: => DataFrame): DataFrame =
-    goldCache.getOrElseUpdate((s, d, name), {
+    goldCache(s, d, name) {
       // constructing the builder frame is lazy (no action) — its plan
       // digest is the fingerprint's logic component, computed per session
       val built = build
@@ -86,7 +80,7 @@ object Medallion {
       // cluster — dims stay as-read (they broadcast into joins anyway)
       val df = if (name == "fact_sales") Tables.fanout(s, stored) else stored
       df.persistOnce()
-    })
+    }
 
   // ---- Silver (cleaned/conformed wide tables; etl_lakehouse.py:47-74) ----
 

@@ -74,7 +74,7 @@ FROM pii ORDER BY c_custkey"""
     * re-scan). Conditional min/max stay float-hazard-free (no arithmetic);
     * the conditional sum runs on exact integer cents — its group totals
     * pass 10^8 where a double sum's order error exceeds the 4-dp compare
-    * grid (the r9 flake class). */
+    * grid. */
   def conditionalAgg(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d).groupBy("o_orderpriority").agg(
       count(lit(1)).as("n_total"),
@@ -844,29 +844,28 @@ FROM seg GROUP BY n_name ORDER BY n_name"""
   /** The recursion row limit is a RUNAWAY-QUERY safety valve, not a
     * result cap — but its default (1M rows) is sized for toy tables: the
     * closure legitimately materializes ~n·log10(n) rows, so at sf10
-    * (1.5M customers) a correct query trips it (r14 sf10 probe). These
+    * (1.5M customers) a correct query trips it. These
     * recursions are PROVABLY depth-bounded (parent = key DIV 10 strictly
     * shrinks the key, ≤ log10(maxkey) levels), so the valve scales with
     * the input: 16 levels of headroom per row, floored at the default. */
   /** The raised valve lives on a DEDICATED session clone, never on the
-    * caller's conf (r14 ADVICE: a `conf.set` on the shared batch session
-    * leaked the raised limit to every later recursive query — and a
+    * caller's conf (a `conf.set` on the shared batch session would leak
+    * the raised limit to every later recursive query — and a
     * save/restore around the sql() call would be wrong the other way,
     * because the limit is consumed lazily at EXECUTION, after any eager
     * restore had already reverted it). One clone per (session, dataset),
     * memoized like the streaming clones; the clone inherits the builder
     * confs (shuffle partitions, timezone) from the shared SparkConf. */
-  private val recMemo =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("extraops.recursion.session")
+  private val recMemo = graft.util.SessionCaches.memo[Unit]("extraops.recursion.session")
 
   private def recursionSession(s: SparkSession, d: String): SparkSession =
-    recMemo.getOrElseUpdate((s, d), {
+    recMemo(s, d) {
       val n = Tables.customer(s, d).count()
       val lim = math.min(Int.MaxValue.toLong, math.max(1000000L, 16L * n))
       val ss = s.newSession()
       ss.conf.set("spark.sql.cteRecursionRowLimit", lim.toString)
       ss
-    })
+    }
 
   def recursiveHierarchy(s0: SparkSession, d: String): DataFrame = {
     val s = recursionSession(s0, d)

@@ -31,7 +31,7 @@ object PipelineOps {
   def writeRoundtrip(s: SparkSession, d: String): DataFrame = {
     val lake = s"/tmp/graft_lake/${graft.util.PathKeys.safe(d)}"
     Medallion.writeAll(s, d, lake)
-    // retention maintenance as part of the reload (r11 verdict #7): VACUUM
+    // retention maintenance as part of the reload: VACUUM
     // every zone table with keep=1 — deliberately more aggressive than the
     // commit's own keep=2, so the read below exercises the snapshot PIN:
     // the versions named by the retained `_SNAPSHOT` manifests survive the
@@ -81,8 +81,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
   // one tiny two-commit lake per (session, dataset), shared by the
   // time-travel and CDF queries; rebuilt fresh per session so the
   // snapshot ids are deterministic
-  private val ttLakeCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("pipeline.ttlake")
+  private val ttLakeCache = graft.util.SessionCaches.memo[Unit]("pipeline.ttlake")
 
   /** Build a two-snapshot demo lake over the nation dim and return
     * (root, firstSnapshotId). Snapshot 1 is the full dim; snapshot 2 a
@@ -95,7 +94,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * manifest-aware retention the historical read would throw on a
     * deleted directory. */
   private def ttLake(s: SparkSession, d: String): (String, Long) =
-    ttLakeCache.getOrElseUpdate((s, d), {
+    ttLakeCache(s, d) {
       import graft.util.AtomicTable
       val root = s"/tmp/graft_snap_tt/${graft.util.PathKeys.safe(d)}"
       AtomicTable.deleteRecursively(java.nio.file.Paths.get(root))
@@ -116,7 +115,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
       // is the only thing keeping the old snapshot resolvable
       AtomicTable.vacuum(s"$root/dim/nation", keep = 1)
       (root, sn1)
-    })
+    }
 
   /** TRANSACTION-level time travel ([[graft.util.AtomicTable
     * .readSnapshotTablesAt]] — the `VERSION AS OF` analog at snapshot
@@ -195,8 +194,7 @@ FROM j
 WHERE o_key IS NULL OR n_key IS NULL OR old_region <> new_region
 ORDER BY n_nationkey, change_type"""
 
-  private val restoreLakeCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("pipeline.restorelake")
+  private val restoreLakeCache = graft.util.SessionCaches.memo[Unit]("pipeline.restorelake")
 
   /** TRANSACTION-level RESTORE ([[graft.util.AtomicTable
     * .restoreSnapshot]] — the snapshot twin of the table-level
@@ -212,7 +210,7 @@ ORDER BY n_nationkey, change_type"""
     * history rather than being the read path. */
   def snapshotRestore(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val root = restoreLakeCache.getOrElseUpdate((s, d), {
+    val root = restoreLakeCache(s, d) {
       val r = s"/tmp/graft_snap_restore/${graft.util.PathKeys.safe(d)}"
       AtomicTable.deleteRecursively(java.nio.file.Paths.get(r))
       val nation = Tables.nation(s, d)
@@ -230,7 +228,7 @@ ORDER BY n_nationkey, change_type"""
       AtomicTable.vacuum(s"$r/dim/region", keep = 1)
       AtomicTable.restoreSnapshot(r, sn1)
       r
-    })
+    }
     val t = AtomicTable.readSnapshotTables(s, root,
       Seq("dim/nation", "dim/region"))
     t("dim/nation")
@@ -430,27 +428,23 @@ FROM docs GROUP BY tag ORDER BY tag"""
 
   // ----------------------------------------------- dynamic partition pruning
 
-  // one materialized lake per (session, dataset): dpp_star_scan reads the
+  // one materialized lake per source version: dpp_star_scan reads the
   // PUBLISHED fact (partition pruning only exists against storage), and
   // re-running the whole ETL per query would time the write, not the scan
-  private val lakeCache =
-    graft.util.SessionCaches.memo[(SparkSession, String)]("pipeline.lake")
-
-  private def ensureLake(s: SparkSession, d: String): String =
-    lakeCache.getOrElseUpdate((s, d), {
-      val lake = s"/tmp/graft_lake/${graft.util.PathKeys.safe(d)}"
-      // the consumer queries need the lake to EXIST and be current — the
-      // staged-once stamp skips the 15-table reload when the committed
-      // snapshot already matches the source (writeRoundtrip, whose gated
-      // VALUE is the write path itself, always runs writeAll regardless)
-      val fp = graft.Tables.sourceNames.map(t =>
-        graft.util.SilverArtifact.sourceFingerprint(s"$d/$t.parquet", "lake-v1"))
-        .mkString("|")
-      graft.util.SilverArtifact.stagedOnce(s"$lake/gold/fact_sales", fp) {
-        Medallion.writeAll(s, d, lake)
-      }
-      lake
-    })
+  private def ensureLake(s: SparkSession, d: String): String = {
+    val lake = s"/tmp/graft_lake/${graft.util.PathKeys.safe(d)}"
+    // the consumer queries need the lake to EXIST and be current — the
+    // staged-once stamp skips the 15-table reload when the committed
+    // snapshot already matches the source (writeRoundtrip, whose gated
+    // VALUE is the write path itself, always runs writeAll regardless)
+    val fp = graft.Tables.sourceNames.map(t =>
+      graft.util.SilverArtifact.sourceFingerprint(s"$d/$t.parquet", "lake-v1"))
+      .mkString("|")
+    graft.util.SilverArtifact.stagedOnce(s"$lake/gold/fact_sales", fp) {
+      Medallion.writeAll(s, d, lake)
+    }
+    lake
+  }
 
   /** Dynamic partition pruning against the year-partitioned gold fact: the
     * date-dim filter (a calendar range) is only known to restrict

@@ -48,8 +48,8 @@ object EventsStream {
 
   /** State-store partitions sized to the DATASET, with the events file
     * size as the scale proxy: 4 at toy SF (the per-micro-batch
-    * state-store fixed cost dominates there — the measured r8 win:
-    * stream_stream_join 6.0 → 2.3 s at sf0.1), growing one partition
+    * state-store fixed cost dominates there — stream_stream_join
+    * measured 6.0 → 2.3 s at sf0.1), growing one partition
     * per 8 MB toward the core count as the data does (sf10's 211 MB →
     * 27). The count is a DETERMINISTIC function of the dataset, so a
     * reused checkpoint can never see a partition-count change (Spark
@@ -70,7 +70,7 @@ object EventsStream {
     * sized partition count: the default HDFS-backed provider keeps every
     * partition's full state map (×2 retained versions) ON-HEAP, which is
     * the right low-overhead choice at driver scale but becomes the heap
-    * itself at corpus scale — the r15 sf100 probe OOM'd inside the
+    * itself at corpus scale — sf100 OOMs inside the
     * session-window state merge with ~15 M Complete-mode session rows
     * (~9 GB with retained versions) in one 16 GB JVM. Past 512 MB of
     * events the shared clone flips to RocksDB, whose state lives
@@ -119,7 +119,7 @@ object EventsStream {
         }
     }
 
-  /** Sibling guard for the dataset-sized state store BACKEND (r15 ADVICE):
+  /** Sibling guard for the dataset-sized state store BACKEND:
     * `largeStateFor` flips the provider to RocksDB past 512 MB of events,
     * but Spark pins the providerClass in OffsetSeqMetadata at the first
     * checkpoint and keeps it on restart — so a dataset grown in place
@@ -137,7 +137,7 @@ object EventsStream {
       val re = """"spark\.sql\.streaming\.stateStore\.providerClass"\s*:\s*"([^"]+)"""".r
       re.findFirstMatchIn(text).map(_.group(1)).foreach { recorded =>
         // state the mismatch FACTS first and the threshold crossing as the
-        // most likely cause, not the asserted one (r16 ADVICE: the same
+        // most likely cause, not the asserted one (the same
         // exception fires if the threshold constant was retuned or the
         // checkpoint was created under a manually-set providerClass — a
         // message that asserts one cause would misdirect the remediation)
@@ -146,7 +146,7 @@ object EventsStream {
             s"$recorded but this run computes $computed. Spark keeps the " +
             "checkpoint's pinned provider on restart, so the dataset-sized " +
             "on-heap/RocksDB choice would silently NOT apply (an on-heap " +
-            "store at corpus scale is the r15 sf100 OOM). Most likely cause: " +
+            "store at corpus scale runs out of heap). Most likely cause: " +
             "the events file grew or shrank across the 512 MB RocksDB " +
             "threshold under a reused checkpoint; also possible: the " +
             "threshold constant changed between runs, or the checkpoint was " +
@@ -162,6 +162,12 @@ object EventsStream {
   private def streamSession(s: SparkSession): SparkSession =
     streamSessionN(s, 4, rocks = false)
 
+  /** The streaming clone with `n` state partitions. `rocks` selects the
+    * RocksDB state store: dataset-sized above [[largeStateFor]]'s
+    * threshold, and always for `transformWithState`, which requires it —
+    * the provider is a clone property, because flipping it on a shared
+    * clone would silently re-provider every other stream query's
+    * checkpoints. */
   private def streamSessionN(s: SparkSession, n: Int, rocks: Boolean): SparkSession =
     streamSessions.getOrElseUpdate((s, n, rocks), {
       val ss = s.newSession()
@@ -170,10 +176,9 @@ object EventsStream {
       // retain only the restart-essential state versions: the default
       // (100) keeps EVERY committed version's files, which single-trigger
       // replays never notice (1 version) but a multi-trigger run over
-      // corpus-sized Complete-mode state multiplies — the r16 sf100
-      // session-window probe held 20 full RocksDB snapshots of ~15M
-      // sessions and ENOSPC'd the host. Two versions is what restart
-      // semantics actually need (latest + in-flight).
+      // corpus-sized Complete-mode state multiplies — at sf100, 20 full
+      // RocksDB snapshots of ~15M sessions filled the disk. Two versions
+      // is what restart semantics need (latest + in-flight).
       ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
       if (rocks) {
         ss.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -181,8 +186,7 @@ object EventsStream {
         // upload per-version CHANGELOGS instead of full snapshots — the
         // production setting for frequent triggers: commit cost scales
         // with the batch's state delta, not the store size (snapshots
-        // still happen in maintenance). Same r16 probe: per-trigger
-        // full-snapshot sync was most of the 60 s commit time.
+        // still happen in maintenance)
         ss.conf.set(
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
           "true")
@@ -194,9 +198,9 @@ object EventsStream {
     * atomic move. The streaming file source wants a DIRECTORY; the
     * testdata is a single file — in production the upstream writer would
     * already be dropping files into the watched dir. Freshness is same
-    * size AND staged mtime >= source mtime: a size-only check (the r8
-    * ADVICE finding) would silently serve stale staged data whenever the
-    * source is regenerated at an identical byte size, and a bare
+    * size AND staged mtime >= source mtime: a size-only check would
+    * silently serve stale staged data whenever the source is
+    * regenerated at an identical byte size, and a bare
     * exists() check would read a stale or half-copied file forever. */
   private def stageInto(srcPath: String, stageDir: java.nio.file.Path,
       name: String): Unit = {
@@ -217,74 +221,23 @@ object EventsStream {
     }
   }
 
-  private def eventsStream(batchSession: SparkSession, d: String,
-      splitAware: Boolean = true): DataFrame = {
+  private def eventsStream(batchSession: SparkSession, d: String): DataFrame = {
     val s = streamSession(batchSession, d)
-    val split =
-      if (splitAware) sys.env.get("SPARK_GRAFT_STREAM_SPLIT").map(_.toInt).getOrElse(1)
-      else 1
-    if (split > 1) {
-      // MULTI-TRIGGER arrival (builder probe, r15 verdict #4): the
-      // single-file staging below delivers the whole corpus in ONE
-      // micro-batch, so every watermark-bounded operator holds the whole
-      // corpus's state inside that one trigger — the attributed cause of
-      // the >10× sf100 stream steps. With SPARK_GRAFT_STREAM_SPLIT=N the
-      // events are staged once as N event-time-range chunk files with
-      // strictly increasing mtimes and the source takes ONE file per
-      // trigger — a time-ordered arrival, the production shape — so the
-      // watermark advances between triggers and expiry actually bounds
-      // state. Results are UNCHANGED: chunks are contiguous ts ranges
-      // (batch i+1's min ts >= batch i's max), so nothing arrives behind
-      // the watermark, and the gates' Complete-mode aggregates never drop
-      // rows. Probe-only: gates run split=1 unless the env var is set.
-      val stageDir = java.nio.file.Paths.get(
-        s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_split$split")
-      stageSplitInto(s, d, stageDir, split)
-      // schema of the REWRITTEN chunks (normalized micros, not the raw
-      // vintage); normalizeTs is then an identity, shared all the same
-      val schema = s.read.parquet(stageDir.toString).schema
-      Tables.normalizeTs(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stageDir.toString))
-    } else {
-      val stageDir = java.nio.file.Paths.get(
-        s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}")
-      stageInto(s"$d/events.parquet", stageDir, "events.parquet")
-      // schema of the RAW file (whatever vintage the driver wrote; see
-      // Tables.eventsRaw), then the SAME ts normalization the batch reader
-      // applies — shared code so the two paths cannot drift
-      val schema = Tables.eventsRaw(s, d).schema
-      Tables.normalizeTs(s.readStream.schema(schema).parquet(stageDir.toString))
-    }
-  }
-
-  /** Stage the events table as `n` event-time-range chunk files for the
-    * multi-trigger probe: repartitionByRange on ts (chunk i = i-th ts
-    * range), then the part files move into the stage dir in partition
-    * order with strictly increasing mtimes, so the file source's
-    * (mtime, path) ordering delivers them oldest-range-first. Stamped on
-    * (source size, source mtime, n) — rebuilt only when the source or the
-    * chunk count changes. */
-  private def stageSplitInto(s: SparkSession, d: String,
-      stageDir: java.nio.file.Path, n: Int): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(s"$d/events.parquet")
-    val marker = stageDir.resolve("_SPLIT_STAMP")
-    val stamp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}:$n"
-    if (Files.exists(marker) && Files.readString(marker) == stamp) return
-    val tmp = Files.createTempDirectory("graft_split_build")
-    Tables.events(s, d)
-      .repartitionByRange(n, col("ts"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val (count, _) = installChunks(tmp, stageDir)
-    Files.writeString(marker, stamp)
-    System.err.println(s"[stream-split] staged $count ts-range chunks -> $stageDir")
+    val stageDir = java.nio.file.Paths.get(
+      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}")
+    stageInto(s"$d/events.parquet", stageDir, "events.parquet")
+    // schema of the RAW file (whatever vintage the driver wrote; see
+    // Tables.eventsRaw), then the SAME ts normalization the batch reader
+    // applies — shared code so the two paths cannot drift
+    val schema = Tables.eventsRaw(s, d).schema
+    Tables.normalizeTs(s.readStream.schema(schema).parquet(stageDir.toString))
   }
 
   /** Wipe `stageDir` and move `tmp`'s part files in as chunkNNN.parquet
-    * with strictly increasing mtimes (partition order == ts-range order,
-    * so the file source's (mtime, path) ordering delivers them
-    * oldest-range-first). Returns (chunk count, base mtime millis) so a
-    * caller can append further files AFTER the chunks in mtime order. */
+    * with strictly increasing mtimes, so the file source's (mtime, path)
+    * ordering delivers them in partition order. Returns (chunk count,
+    * base mtime millis) so a caller can append further files AFTER the
+    * chunks in mtime order. */
   private def installChunks(tmp: java.nio.file.Path,
       stageDir: java.nio.file.Path): (Int, Long) = {
     import java.nio.file.{Files, StandardCopyOption}
@@ -309,9 +262,9 @@ object EventsStream {
     (parts.size, base)
   }
 
-  /** Stage events as ts-range chunks PLUS two terminal watermark
-    * SENTINEL files — the Append-mode flush shape (r16 verdict #5). A
-    * production Append-mode session sink always holds back the sessions
+  /** Stage events as one chunk PLUS two terminal watermark SENTINEL
+    * files — the Append-mode flush shape. A production Append-mode
+    * session sink always holds back the sessions
     * the final watermark never passes; the standard fix is terminal
     * punctuation: after end of input, inject heartbeat events far past
     * max(ts) so the watermark advances over every real session's end and
@@ -322,20 +275,19 @@ object EventsStream {
     * the tail. The sentinels use user_id −1 and ts > max + a year; their
     * own session is never closed by a later watermark, so they CANNOT
     * appear in the output (the gate filters user_id ≥ 0 anyway, as the
-    * explicit contract). Chunk count follows SPARK_GRAFT_STREAM_SPLIT,
-    * so the gate is arrival-shape-checkable like every other stream. */
+    * explicit contract). */
   private def stageTerminalInto(s: SparkSession, d: String,
-      stageDir: java.nio.file.Path, n: Int): Unit = {
+      stageDir: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = Paths.get(s"$d/events.parquet")
     val marker = stageDir.resolve("_TERM_STAMP")
-    val stamp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}:$n:term-v1"
+    val stamp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}:term-v1"
     if (Files.exists(marker) && Files.readString(marker) == stamp) return
     val ev = Tables.events(s, d)
     // 1-row scalar aggregate (kilobyte-scale driver value)
     val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
     val tmp = Files.createTempDirectory("graft_term_build")
-    ev.repartitionByRange(n, col("ts")).write.mode("overwrite").parquet(tmp.toString)
+    ev.repartitionByRange(1, col("ts")).write.mode("overwrite").parquet(tmp.toString)
     val (count, base) = installChunks(tmp, stageDir)
     Seq(370L, 740L).zipWithIndex.foreach { case (days, j) =>
       val st = new Timestamp(maxTs.getTime + days * 86400000L)
@@ -369,7 +321,7 @@ object EventsStream {
   private def runToTable(s: SparkSession, df: DataFrame, mode: OutputMode, name: String): DataFrame = {
     // NOT the memory sink: format("memory") holds the ENTIRE streaming
     // result in driver memory — corpus-scale state in one JVM, the exact
-    // scale-killer class. The r14 sf10 probe at a 16 GB heap measured it:
+    // scale-killer class. At sf10 on a 16 GB heap
     // stream_session_window's Complete-mode result alone blew
     // spark.driver.maxResultSize (>1 GiB of task results) and the heap
     // pressure OOM'd the context. A foreachBatch PARQUET spill reproduces
@@ -380,7 +332,7 @@ object EventsStream {
     val dir = graft.util.TempDirs.scratch(s"graft_stream_sink_$name").toString
     // foreachBatch is AT-LEAST-ONCE (unlike MemorySink, which dedupes via
     // latestBatchId): a re-executed micro-batch must REPLACE its previous
-    // attempt's rows, never re-append them (r14 ADVICE). Complete mode is
+    // attempt's rows, never re-append them. Complete mode is
     // idempotent already (each batch truncates-and-rewrites the dir);
     // Append/Update get a batchId-named subdir written with overwrite, so
     // a replayed batch overwrites exactly its own output and the union of
@@ -392,18 +344,6 @@ object EventsStream {
         (batch, id) => batch.write.mode("overwrite").parquet(s"$dir/b$id")
     val q = df.writeStream.outputMode(mode).foreachBatch(fn).start()
     try q.processAllAvailable() finally q.stop()
-    // opt-in perf attribution (builder tooling): per-micro-batch engine
-    // timing + state-store metrics, the data behind the NOTES.md
-    // streaming floors — durationMs names the phase (addBatch vs
-    // planning vs WAL), stateOperators names the store costs
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-profile] $name batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
-          p.stateOperators.map(o => s"state(total=${o.numRowsTotal} " +
-            s"updated=${o.numRowsUpdated} removed=${o.numRowsRemoved} " +
-            s"commitMs=${o.commitTimeMs} custom=${o.customMetrics})").mkString(" "))
-      }
     // explicit schema: a query whose watermark held every row back leaves
     // no part file, and the scan must still return an EMPTY frame of the
     // right shape (as the memory sink did), not fail schema inference.
@@ -491,10 +431,11 @@ FROM d ORDER BY window_start"""
     * driving a per-user lifetime-totals tracker: each batch folds the
     * user's events into a ValueState and emits the updated running
     * totals (cents kept exact via per-event floor, matching the SQL).
-    * Requires the RocksDB state store, so this query runs on its own
-    * session clone ([[rocksSession]]) rather than the shared HDFS-backed
-    * one. Single-batch replay makes the emitted totals equal the batch
-    * aggregate the oracle states; TransformWithStateSpec replays TWO
+    * Requires the RocksDB state store, so this query runs on the RocksDB
+    * clone ([[streamSessionN]] with `rocks = true`) rather than the
+    * shared HDFS-backed one. Single-batch replay makes the emitted
+    * totals equal the batch aggregate the oracle states;
+    * TransformWithStateSpec replays TWO
     * staged batches to prove the ValueState actually carries totals
     * across micro-batches. */
   case class UserTotals(n: Long, cents: Long, maxCents: Long)
@@ -520,58 +461,12 @@ FROM d ORDER BY window_start"""
     }
   }
 
-  /** Second memoized clone with the RocksDB state store provider —
-    * `transformWithState` requires it, and flipping the provider on the
-    * SHARED clone would silently re-provider every other stream query's
-    * checkpoints. Partitions are DATASET-SIZED like [[streamSessionN]]
-    * (r15: the r14 "~6 s/micro-batch fixed cost" on
-    * `stream_timer_sessions` was not fixed at all — the profile showed
-    * the two 5M-row data batches paying 12-15 s each to shuffle, sort
-    * and state-walk 150k users inside FOUR tasks, plus 144k timer
-    * expiries in the same four; sizing to the dataset is exactly the
-    * stream_stream_join fix from r14). Toy SFs still compute 4, so
-    * every driver-scale gate is byte-identical. */
-  private val rocksSessions =
-    scala.collection.concurrent.TrieMap[(SparkSession, Int), SparkSession]()
-
-  private def rocksSession(s: SparkSession, d: String): SparkSession =
-    rocksSessionN(s, statePartitionsFor(d))
-
-  /** Dataset-independent variant (the JVM prewarm): the toy floor. */
-  private def rocksSession(s: SparkSession): SparkSession =
-    rocksSessionN(s, 4)
-
-  private def rocksSessionN(s: SparkSession, n: Int): SparkSession =
-    rocksSessions.getOrElseUpdate((s, n), {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", n)
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // The two RocksDB production settings [[streamSessionN]]'s rocks
-      // branch already applies, missing here since this clone was added
-      // (optimization r17 — the stream profile showed every
-      // transformWithState micro-batch uploading a FULL snapshot zip,
-      // rocksdbSaveZipFilesLatencyMs ≈ 180 ms/batch, where the r16 sf100
-      // probe established changelog checkpointing as the default for
-      // frequent triggers: commit cost scales with the batch's state
-      // delta, not the store size; snapshots move to maintenance).
-      // minBatchesToRetain=2 is the same r16 rule — latest + in-flight is
-      // what restart semantics need; the default 100 multiplies retained
-      // state versions under multi-trigger corpus-scale state.
-      ss.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      ss
-    })
-
   /** One-time JVM warm-up for the stateful streaming machinery — called
     * from the bench's ETL-phase warmup so the COLD pass measures what a
     * cold SESSION pays, not one-per-JVM costs no production query repays:
     * the RocksDB state store's JNI library extraction + provider class
     * init (the dominant share of the first transformWithState call's
-    * 9 s-vs-2.7 s cold multiple, r12 "wrong #2") and the watermarked
+    * 9 s-vs-2.7 s cold multiple) and the watermarked
     * stream-stream join's state-store format/codegen init. Both run over
     * 2-row MemoryStreams — milliseconds of data, the class-loading is the
     * point. Idempotent and best-effort: a prewarm failure must never fail
@@ -580,7 +475,7 @@ FROM d ORDER BY window_start"""
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     try {
       locally { // RocksDB provider + transformWithState
-        val rs = rocksSession(s)
+        val rs = streamSessionN(s, 4, rocks = true)
         import rs.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = rs.sqlContext
         val mem = MemoryStream[Ev]
@@ -621,7 +516,7 @@ FROM d ORDER BY window_start"""
   }
 
   def transformState(s: SparkSession, d: String): DataFrame = {
-    val rs = rocksSession(s, d)
+    val rs = streamSessionN(s, statePartitionsFor(d), rocks = true)
     val stageDir = java.nio.file.Paths.get(
       s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}")
     stageInto(s"$d/events.parquet", stageDir, "events.parquet")
@@ -676,7 +571,7 @@ FROM events GROUP BY 1 ORDER BY 1"""
     // the memory sink exists only to drive the stream — the result is
     // read from the state store below. Drop its temp view eagerly (like
     // runToTable) or the streaming clone's catalog accumulates one
-    // graft_state_inspect_sink_N entry per invocation (r10 ADVICE).
+    // graft_state_inspect_sink_N entry per invocation.
     ss.catalog.dropTempView(sink)
     // the state VALUE is the aggregation BUFFER (fields named after the
     // buffer slots: `count`, `sum`), not the output row — exactly what a
@@ -795,25 +690,20 @@ FROM events GROUP BY event_type ORDER BY event_type"""
       .orderBy("user_id", "session_start")
   }
 
-  /** Append-mode twin of [[sessionWindow]], now a full ORACLE GATE (r16
-    * verdict #5; probe-only in r15-r16 because Append held back the
-    * sessions the final watermark never passed). The missing tail is
-    * closed with TERMINAL PUNCTUATION ([[stageTerminalInto]]): two
-    * far-future sentinel triggers advance the watermark past every real
-    * session end, so the production eviction path — watermark expiry
-    * EVICTS and EMITS closed sessions between triggers, state bounded
-    * at ~one arrival window of open sessions, the r16 sf100
-    * demonstration — now emits the COMPLETE session set and
-    * hash-matches the batch gap-and-islands oracle. Honors
-    * `SPARK_GRAFT_STREAM_SPLIT` for multi-trigger real arrival ahead of
-    * the sentinels (run with SPARK_GRAFT_STREAM_PROFILE=1 to see
-    * per-trigger state total/removed). */
+  /** Append-mode twin of [[sessionWindow]], a full ORACLE GATE. Append
+    * holds back the sessions the final watermark never passes; that
+    * tail is closed with TERMINAL PUNCTUATION ([[stageTerminalInto]]):
+    * two far-future sentinel triggers advance the watermark past every
+    * real session end, so the production eviction path — watermark
+    * expiry EVICTS and EMITS closed sessions between triggers, state
+    * bounded at ~one arrival window of open sessions — emits the
+    * COMPLETE session set and hash-matches the batch gap-and-islands
+    * oracle. */
   def sessionWindowAppend(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s, d)
-    val split = sys.env.get("SPARK_GRAFT_STREAM_SPLIT").map(_.toInt).getOrElse(1)
     val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_term$split")
-    stageTerminalInto(ss, d, stageDir, split)
+      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_term")
+    stageTerminalInto(ss, d, stageDir)
     val schema = ss.read.parquet(stageDir.toString).schema
     val src = Tables.normalizeTs(ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir.toString))
@@ -840,7 +730,7 @@ FROM events GROUP BY event_type ORDER BY event_type"""
     * reads. The full [[Ev]] carries `props` (a JSON string, the widest
     * column) and `event_type` through the groupByKey exchange for
     * nothing — at sf10 that was a measurable share of the two 5M-row
-    * data batches (r15 timer-sessions profile). */
+    * data batches. */
   case class EvT(user_id: Long, ts: Timestamp, event_id: Long, value: Double)
   case class Session(user_id: Long, session_start: Timestamp, session_end: Timestamp,
     n_events: Long, total_value: Double)
@@ -855,17 +745,14 @@ FROM events GROUP BY event_type ORDER BY event_type"""
     * the open session across batches in a genuine multi-batch deployment. */
   def sessionize(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // splitAware = false: this gate's contract IS the single-batch replay
-    // (the end-of-input flush below closes trailing sessions exactly as
-    // the batch oracle closes them at corpus end). Under multi-trigger
-    // arrival an Append-mode flush-at-batch-end would SPLIT every session
-    // spanning a chunk boundary (the r16 SPLIT=20 differential measured
-    // it: 9554 vs 9549 sessions) — and the arrival-invariant form needs
-    // event-time timers plus watermark-advancing traffic, which is
-    // exactly what the production twin `stream_timer_sessions` gates.
-    // So the replay gate pins whole-corpus arrival; the probe knob
-    // drives the twin instead.
-    val ds: Dataset[Ev] = eventsStream(s, d, splitAware = false).as[Ev]
+    // this gate's contract IS the single-batch replay (the end-of-input
+    // flush below closes trailing sessions exactly as the batch oracle
+    // closes them at corpus end). Under multi-trigger arrival an
+    // Append-mode flush-at-batch-end would SPLIT every session spanning a
+    // chunk boundary; the arrival-invariant form needs event-time timers
+    // plus watermark-advancing traffic, which is what the production twin
+    // `stream_timer_sessions` gates.
+    val ds: Dataset[Ev] = eventsStream(s, d).as[Ev]
 
     def fn(user: Long, events: Iterator[Ev], state: GroupState[UserState]): Iterator[Session] = {
       // Timestamps carry microseconds — compare/sort at full precision
@@ -994,7 +881,8 @@ ORDER BY user_id, session_start"""
     * ride real triggers, exactly like a production topic that keeps
     * receiving unrelated traffic. */
   def timerSessions(s0: SparkSession, d: String): DataFrame = {
-    val s = rocksSession(s0, d) // transformWithState needs the RocksDB provider
+    // transformWithState needs the RocksDB provider
+    val s = streamSessionN(s0, statePartitionsFor(d), rocks = true)
     import s.implicits._
     val stageDir = java.nio.file.Paths.get(
       s"/tmp/graft_stream_src_timer/${graft.util.PathKeys.safe(d)}")
@@ -1295,7 +1183,7 @@ ORDER BY a.user_id, view_id, purchase_id"""
     // file (size + mtime, in a dot-file the source listing ignores) —
     // comparing the sentinel's pinned mtime against the data's would
     // permanently suppress a rebuild after a source regeneration inside
-    // the pin offset, serving a stale-vintage sentinel (review finding)
+    // the pin offset, serving a stale-vintage sentinel
     val stamp = s"${Files.size(dataFile)}:$dataMtime"
     val stampFile = stageDir.resolve(".zz_sentinel_src")
     val fresh = Files.exists(sentinel) && Files.exists(stampFile) &&
@@ -1439,9 +1327,9 @@ WHERE is_en AND q >= 0.5 GROUP BY lang ORDER BY lang"""
     * Scale shape: at 100 TB the index side is the big one — it stays
     * partitioned and cached (8 bytes + id per vector); each micro-batch
     * broadcasts only the arriving queries' 8×16 lookup tables. The
-    * GATE's arrival stream is the seeded 64-query budget (r15: the
-    * %100 fixture made the arrival RATE scale with the corpus, so the
-    * gate was O(n²/100) inside one micro-batch — it OOM'd the 16 GB
+    * GATE's arrival stream is the seeded 64-query budget (a %100
+    * fixture would make the arrival RATE scale with the corpus, so the
+    * gate would be O(n²/100) inside one micro-batch — it OOMs a 16 GB
     * heap at sf30; a production arrival rate is queries/sec, not a
     * corpus fraction). Output carries `sample_q`, sharing the sampled
     * batch-PQ oracle — streaming ≡ batch stays the gated claim. */
@@ -1471,7 +1359,7 @@ WHERE is_en AND q >= 0.5 GROUP BY lang ORDER BY lang"""
     val agg = qstream.join(codes, col("vec_id") =!= col("query_id"))
       // score in the join projection — the qtab lookup table must never
       // ride into the aggregation's (sort-fallback-prone) input rows;
-      // see Similarity.annPqTopK's note (the r14 sf10 OOM site)
+      // see Similarity.annPqTopK's note
       .select(col("query_id"),
         call_function("pq_adc", col("qtab"), col("codes"),
           lit(Similarity.PqM), lit(Similarity.PqC)).as("adist"),

@@ -1,6 +1,6 @@
 package graft.util
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,11 +39,27 @@ object SilverArtifact {
 
   /** Fingerprint of a parquet source — a single file, or the regular
     * files directly inside a table directory — plus the caller's
-    * logic-version tag. Stored artifacts key on it, and so do the session
-    * memos over a source (`Tables`, baskets, sparse weights and top-k).
+    * logic-version tag. Stored artifacts and staged tables key on it.
     * Throws `IOException` when the path does not exist. */
-  def sourceFingerprint(srcDir: String, logicVersion: String): String = {
-    val p = Paths.get(srcDir)
+  def sourceFingerprint(srcDir: String, logicVersion: String): String =
+    s"logic=$logicVersion;${tableStamp(Paths.get(srcDir))}"
+
+  /** Fingerprint of a whole data directory: [[sourceFingerprint]]'s file
+    * count, bytes and newest mtime for every table in `d`, named. A
+    * rewrite of any table's files changes it. [[SessionCaches]] keys
+    * every memo entry on it. Throws `IOException` when `d` does not
+    * exist. */
+  def dataFingerprint(d: String): String = {
+    val st = Files.list(Paths.get(d))
+    val tables =
+      try st.iterator().asScala.toVector.sortBy(_.getFileName.toString)
+      finally st.close()
+    tables.map(t => s"${t.getFileName}:${tableStamp(t)}").mkString("|")
+  }
+
+  /** File count, total bytes and newest mtime of one table: the file
+    * itself, or the regular files directly inside its directory. */
+  private def tableStamp(p: Path): String = {
     val files =
       if (Files.isRegularFile(p)) Vector(p)
       else {
@@ -54,7 +70,7 @@ object SilverArtifact {
     val bytes = files.map(Files.size).sum
     val maxMtime = files.map(f => Files.getLastModifiedTime(f).toMillis)
       .maxOption.getOrElse(0L)
-    s"logic=$logicVersion;files=${files.size};bytes=$bytes;mtime=$maxMtime"
+    s"files=${files.size};bytes=$bytes;mtime=$maxMtime"
   }
 
   /** Fingerprint component derived from the DERIVATION ITSELF: a SHA-256
@@ -65,7 +81,7 @@ object SilverArtifact {
     * filter) orphans the artifact instead of silently serving stale
     * semantics, with no hand-bumped logic-version constant to forget.
     *
-    * Two deliberate choices, both review findings on the first cut:
+    * Two deliberate choices:
     *  - the plan is serialized with `toJSON`, NOT `toString` — node
     *    toString goes through truncatedString and elides columns past
     *    `spark.sql.debug.maxToStringFields` (default 25; the silver
@@ -135,9 +151,8 @@ object SilverArtifact {
       Files.exists(p) && Files.readString(p).trim == fp
     }
     val first = hit()
-    // the bench-environment instrumentation the r10 verdict asked for:
     // a cold pass that logs "hit" read the store; "miss" means the store
-    // was absent/stale and the build cost was paid in this session
+    // was absent or stale and this session paid the build
     System.err.println(s"[graft] silver artifact ${if (first) "hit " else "miss"} $base")
     if (!first) {
       val lock = buildLocks.getOrElseUpdate(base, new Object)
@@ -163,15 +178,14 @@ object SilverArtifact {
     * committed state is more than one parquet table. The stamp lands only
     * after `stage` completes, so a crash mid-stage re-stages next time
     * (each inner publish is individually atomic, and the demo stagers are
-    * idempotent). */
+    * idempotent). Callers run it on every read and need no memo of their
+    * own: a hit costs a stamp read and logs nothing, a miss logs one
+    * stderr line. */
   def stagedOnce(base: String, fp: String)(stage: => Unit): Unit = {
     val fpPath = Paths.get(base, StageFp)
     def hit(): Boolean = AtomicTable.exists(base) &&
       Files.exists(fpPath) && Files.readString(fpPath).trim == fp
-    if (hit()) {
-      System.err.println(s"[graft] staged table   hit  $base")
-      return
-    }
+    if (hit()) return
     val lock = buildLocks.getOrElseUpdate(base, new Object)
     lock.synchronized {
       if (!hit()) {

@@ -4,17 +4,23 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.TextOps
-import graft.queries.BehaviorOps
+import graft.ops.{Dedup, DeletionVectors, Similarity, TextOps}
+import graft.pipeline.Medallion
+import graft.queries.{BehaviorOps, TemporalOps}
 import graft.util.{SessionCaches, SilverArtifact}
 
-/** Session memos over a source table key on its
-  * [[SilverArtifact.sourceFingerprint]]: a table rewritten in place is
-  * read afresh by the same session, with no `SessionCaches.clear`, and a
-  * path that cannot be fingerprinted is never memoized. */
+/** Session memos follow their data directory's
+  * [[SilverArtifact.dataFingerprint]]: a table rewritten in place is read
+  * afresh by the same session, with no `SessionCaches.clear`, whether the
+  * memo holds a source resolution, a stored artifact, a gold table, a
+  * staged table path or a purely in-memory index; superseded entries are
+  * unpersisted in every session; and a path that cannot be read is never
+  * memoized. */
 class FreshnessSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -45,15 +51,37 @@ class FreshnessSpec extends AnyFunSuite {
     val savedRoot = SilverArtifact.root
     SilverArtifact.root = Files.createTempDirectory("freshness-silver").toString
     val s = spark.newSession()
+    val other = spark.newSession()
+    def odd(c: String) = col(c) % 2 =!= 0
+    def pairDocs(df: DataFrame) = df.select("doc_a", "doc_b").collect()
+      .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+    def dvTotal(df: DataFrame) = df.agg(sum("n_orders")).head().getLong(0)
+    val urgent = col("o_orderpriority") === "1-URGENT" && col("o_orderkey") % 10 < 3
+    // the PQ codebook seeds on every 31st vector, so those stay
+    val droppedVec = odd("vec_id") && col("vec_id") % 31 =!= 0
     try {
       assert(Tables.lineitem(s, d).count() == 6000)
-      val baskets0 = BehaviorOps.baskets(s, d).count()
+      val basketsFrame0 = BehaviorOps.baskets(s, d)
+      val baskets0 = basketsFrame0.count()
       val ranked0 = TextOps.sparseRetrieval(s, d).collect().toSet
-      assert(ranked0.exists(_.getAs[Long]("doc_id") % 2 == 1),
-        "the fixture must rank some odd documents, or the rewrite below proves nothing")
+      val lshDocs0 = pairDocs(Dedup.minhashLsh(s, d))
+      val fact0 = Medallion.factSales(s, d).count()
+      val dv0 = dvTotal(DeletionVectors.deletionVectorRead(s, d))
+      val centroids0 = TemporalOps.embeddingCentroids(s, d).collect().toSeq
+      val ann0 = Similarity.annIvfPqTopK(s, d)
+      assert(ranked0.exists(_.getAs[Long]("doc_id") % 2 == 1) && lshDocs0.exists(_ % 2 == 1) &&
+        !ann0.where(droppedVec).isEmpty,
+        "the fixture must reach some odd documents and vectors, or the rewrite below proves nothing")
+      assert(basketsFrame0.storageLevel != StorageLevel.NONE)
 
       rewrite(d, "lineitem", col("l_orderkey") % 2 === 0)
       rewrite(d, "documents", col("doc_id") % 2 === 0)
+      rewrite(d, "orders", col("o_orderkey") % 2 === 0)
+      rewrite(d, "embeddings", !droppedVec)
+
+      // the CacheManager is shared: a session that looks first after the
+      // rewrite must not be served the rows `s` cached before it
+      val otherAnnFresh = Similarity.annIvfPqTopK(other, d).where(droppedVec).isEmpty
 
       val li = Tables.lineitem(s, d)
       val even = spark.read.parquet(s"$d/lineitem.parquet")
@@ -65,12 +93,37 @@ class FreshnessSpec extends AnyFunSuite {
       val ranked1 = TextOps.sparseRetrieval(s, d).collect().toSet
       assert(ranked1.nonEmpty && ranked1 != ranked0)
       assert(ranked1.forall(r => r.getAs[Long]("doc_id") % 2 == 0))
-      // a session that never saw the old files ranks the same
+
+      // one input per kind of memo; every check runs, so a failure names
+      // all the stale kinds at once
+      val fact1 = Medallion.factSales(s, d).count()
+      val liveOrders = spark.read.parquet(s"$d/orders.parquet").where(!urgent).count()
+      val stale = Seq(
+        "(a) dedup_minhash_lsh: stored artifact under a (session, dir) memo" ->
+          pairDocs(Dedup.minhashLsh(s, d)).forall(_ % 2 == 0),
+        "(b) Medallion.factSales: gold" -> (fact1 < fact0),
+        "(c) deletion_vector_read: staged table" ->
+          (dvTotal(DeletionVectors.deletionVectorRead(s, d)) == liveOrders && liveOrders < dv0),
+        "(d) embedding_centroids" ->
+          (TemporalOps.embeddingCentroids(s, d).collect().toSeq != centroids0),
+        "(d) ann_ivfpq: memo-only embedding, centroid, codebook and index" ->
+          Similarity.annIvfPqTopK(s, d).where(droppedVec).isEmpty,
+        "(e) superseded baskets entry unpersisted" ->
+          (basketsFrame0.storageLevel == StorageLevel.NONE),
+        "(f) ann_ivfpq in a second session: another session's superseded cache" ->
+          otherAnnFresh
+      ).collect { case (name, false) => name }
+      assert(stale.isEmpty, s"stale after the rewrite: ${stale.mkString("; ")}")
+
+      // a session that never saw the old files computes the same
       val fresh = spark.newSession()
-      try assert(TextOps.sparseRetrieval(fresh, d).collect().toSet == ranked1)
-      finally SessionCaches.clear(fresh)
+      try {
+        assert(TextOps.sparseRetrieval(fresh, d).collect().toSet == ranked1)
+        assert(Medallion.factSales(fresh, d).count() == fact1)
+      } finally SessionCaches.clear(fresh)
     } finally {
       SessionCaches.clear(s)
+      SessionCaches.clear(other)
       SilverArtifact.root = savedRoot
     }
   }

@@ -6,17 +6,19 @@ import graft.util.SessionCaches
 
 /** The session-memo contract (util/SessionCaches): hits don't rebuild,
   * clear() evicts + unpersists, and correctness never depends on a memo
-  * hit — ops recompute identically after eviction. */
+  * hit — ops recompute identically after eviction. Lookups name a real
+  * data directory, whose fingerprint every entry carries (FreshnessSpec
+  * rewrites one). */
 class SessionCachesSpec extends AnyFunSuite {
   import TestSpark._
 
   test("memo hits, clear evicts this session's entries, rebuild works") {
-    val m = SessionCaches.memo[(org.apache.spark.sql.SparkSession, String)]("spec.synthetic")
+    val m = SessionCaches.memo[String]("spec.synthetic")
     var builds = 0
-    def get() = m.getOrElseUpdate((spark, "x"), {
+    def get() = m(spark, sf, "x") {
       builds += 1
       spark.range(3).toDF().persist()
-    })
+    }
     val df = get(); get()
     assert(builds == 1, "second lookup must hit the memo")
     assert(SessionCaches.clear(spark) >= 1, "clear must report the eviction")
@@ -27,22 +29,22 @@ class SessionCachesSpec extends AnyFunSuite {
   }
 
   test("memo name reuse with a different key class fails fast at registration") {
-    SessionCaches.memo[(org.apache.spark.sql.SparkSession, String)]("spec.collide")
+    SessionCaches.memo[String]("spec.collide")
     intercept[IllegalArgumentException] {
-      SessionCaches.memo[(org.apache.spark.sql.SparkSession, String, Int)]("spec.collide")
+      SessionCaches.memo[Int]("spec.collide")
     }
   }
 
   test("concurrent first touch evaluates the builder exactly once") {
-    val m = SessionCaches.memo[(org.apache.spark.sql.SparkSession, String)]("spec.race")
+    val m = SessionCaches.memo[Unit]("spec.race")
     val builds = new java.util.concurrent.atomic.AtomicInteger
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val futs = (1 to 16).map(_ => pool.submit(new java.util.concurrent.Callable[Int] {
-        def call(): Int = m.getOrElseUpdate((spark, "race-key"), {
+        def call(): Int = m(spark, sf) {
           Thread.sleep(20) // widen the race window
           builds.incrementAndGet()
-        })
+        }
       }))
       assert(futs.map(_.get()).toSet == Set(1), "all callers must see the one built value")
       assert(builds.get == 1, "builder must run exactly once under contention")
