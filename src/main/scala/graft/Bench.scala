@@ -46,9 +46,8 @@ object Bench {
       .config("spark.memory.storageFraction", storageFraction)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // HOST-CALIBRATION ANCHOR (r16 verdict #2): the same-code A/B that
-    // attributed the r15/r16 "regressions" measured this host drifting
-    // ±25% between rounds — so every bench run now carries a fixed-work,
+    // HOST-CALIBRATION ANCHOR: the same code measured on one host drifts
+    // by up to ±25% between runs, so every bench run carries a fixed-work,
     // dataset-independent microtask (pure CPU + one 32-way shuffle +
     // hash agg over 400M deterministic rows) whose time moves ONLY with
     // the host. Cross-round comparisons divide totals by the calibration
@@ -129,12 +128,12 @@ object Bench {
         name -> (if (failed.contains(name)) Double.NaN
                  else (System.nanoTime() - t0) / 1e9)
       }
-    // COLD vs STEADY (r8 verdict #1): several operators memoize session
+    // COLD vs STEADY: several operators memoize session
     // artifacts (gold tables, shingle tables, ANN indexes, CC labels) the
     // way a 100 TB pipeline writes them once per corpus version — so a
     // median over same-session passes measures warm-cache cost and hides
     // the cold cost entirely (dedup_clusters: 0.38s warm vs 6.78s cold).
-    // The bench now reports BOTH: every session memo is dropped after the
+    // The bench reports BOTH: every session memo is dropped after the
     // warmup, pass 1 runs genuinely cold (memo builds included, in query
     // order — the pipeline-backfill shape), then three steady passes give
     // the per-query MEDIAN plus (min, max) spread. Median-of-3 because
@@ -149,14 +148,11 @@ object Bench {
       val ts = passes.map(_(k)).sorted
       k -> (ts.head, ts(ts.size / 2), ts.last)
     }.toMap
-    // r13 verdict #6 asked for MIN-of-passes (noise only ever ADDS time on
-    // a deterministic workload); r14 ADVICE then flagged that swapping the
-    // meaning of "value" under the same "metric":"total" key makes
-    // cross-round tooling silently compare min against median. Resolution:
-    // "value" stays the MEDIAN (continuous with every BENCH_r*.json since
-    // r01), and min-of-passes rides alongside as "min_total_sec" +
-    // per-query "queries_min" — both statistics always present, neither
-    // renamed mid-series.
+    // "value" is the MEDIAN of the steady passes, as in every committed
+    // BENCH_*.json, so tooling comparing runs never mixes statistics; the
+    // MIN of the passes (noise only ever ADDS time on a deterministic
+    // workload) rides alongside as "min_total_sec" + per-query
+    // "queries_min" — both statistics always present, neither renamed.
     val results = spread.map { case (k, (_, md, _)) => k -> md }
     val minsPer = spread.map { case (k, (mn, _, _)) => k -> mn }
     val cold = ok.map(k => k -> coldPass(k)).toMap

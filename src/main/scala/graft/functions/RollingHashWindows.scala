@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash, a single word-level collision would collide h1 AND h2
   * simultaneously, capping the pair at a 64-bit birthday bound on
   * VOCABULARY (~2³² distinct tokens — plausibly reached by a 100 TB web
-  * corpus of URLs, numbers, and typos; the r6 ADVICE finding). With
+  * corpus of URLs, numbers, and typos). With
   * independent word hashes a cross-gram collision needs simultaneous
   * collisions in two unrelated 64-bit rings: birthday(2¹²⁸), vanishing
   * at any corpus size, so downstream equality on (h1, h2) is equality
@@ -91,7 +91,7 @@ case class RollingHashWindows(child: Expression, lExpr: Expression)
     val raw = child.eval(input)
     if (raw == null || l <= 0) return Iterator.empty
     // limit -1 keeps trailing empty tokens, matching Spark SQL split()
-    // and DuckDB string_split (the WordNgrams lesson, ADVICE r4)
+    // and DuckDB string_split (Java's 1-arg split drops them)
     val words = raw.asInstanceOf[UTF8String].toString.split(" ", -1)
     if (words.length < l) return Iterator.empty
     val wh1 = new Array[Long](words.length)

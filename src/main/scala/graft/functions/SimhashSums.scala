@@ -9,22 +9,22 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-/** All 120 SimHash signed bit-sums in ONE aggregate buffer (optimization
-  * r17). The r16 shape expressed the fingerprint as 120 separate
-  * `sum(CASE WHEN (hv >> b) & 1 = 1 THEN 1 ELSE -1 END)` aggregates — a
+/** All 120 SimHash signed bit-sums in ONE aggregate buffer. The
+  * expression form — 120 separate
+  * `sum(CASE WHEN (hv >> b) & 1 = 1 THEN 1 ELSE -1 END)` aggregates — is a
   * HashAggregate with 120 buffer slots, which exceeds
-  * `spark.sql.codegen.maxFields` (100), so the whole aggregate fell out of
-  * WholeStageCodegen and every word row paid 120 interpreted expression
-  * evaluations (measured: the fingerprint aggregate dominated
+  * `spark.sql.codegen.maxFields` (100), so the whole aggregate falls out
+  * of WholeStageCodegen and every word row pays 120 interpreted
+  * expression evaluations (measured: that aggregate dominated
   * dedup_simhash/dedup_simhash_pairs at every SF). This
   * TypedImperativeAggregate keeps one primitive `Array[Int](120)` per
   * group and updates it with a tight shift/mask loop — same partial/merge
   * mergeability (counter arrays add), byte-serialized map-side like any
   * typed aggregate, O(120 ints) state.
   *
-  * Semantics are EXACTLY the r16 expression form, including the null
-  * corner: a NULL hash value contributed -1 to every one of its 32 bit
-  *  sums there (`when(null === 1, 1).otherwise(-1)`), so a null child
+  * Semantics are EXACTLY the expression form, including the null
+  * corner: a NULL hash value contributes -1 to every one of its 32 bit
+  * sums there (`when(null === 1, 1).otherwise(-1)`), so a null child
   * decrements its 32- or 28-bit slice here too (unreachable from [[
   * graft.ops.Dedup.simhash]], whose md5-derived hv columns are never null,
   * but pinned so the aggregate is a drop-in for the expression form on ANY

@@ -48,7 +48,7 @@ case class WordNgrams(child: Expression, nExpr: Expression)
     val raw = child.eval(input)
     if (raw == null || n <= 0) return Iterator.empty
     // limit -1 keeps trailing empty tokens, matching Spark SQL split() and
-    // DuckDB string_split (Java's 1-arg split drops them — ADVICE r4)
+    // DuckDB string_split (Java's 1-arg split drops them)
     val words = raw.asInstanceOf[UTF8String].toString.split(" ", -1)
     if (words.length < n) Iterator.empty
     else (0 to words.length - n).iterator.map { i =>

@@ -94,17 +94,17 @@ FROM g ORDER BY doc_id"""
       .distinct()
     val bench = grams.filter(col("doc_id") % 20 === 0).select("gh").distinct()
       .withColumn("__hit", lit(1L))
-    // Optimization r17 (guide §2.3/§2.4): the old shape ran THREE
-    // consumers over `grams` — perDoc (full corpus), bench (1/20, filter
-    // pushed to the scan), and the probe join (19/20) — and because the
-    // pushed %20 filters sink below the window+md5 pipeline, the
-    // consumers' exchange subtrees differ and nothing is reused: the gram
-    // pipeline executed ~2× the corpus. Marking hits with a broadcast
+    // One pipeline over `grams`: three separate consumers — perDoc (full
+    // corpus), bench (1/20, filter pushed to the scan), and the probe join
+    // (19/20) — would not share work, because the pushed %20 filters sink
+    // below the window+md5 pipeline, the consumers' exchange subtrees
+    // differ and nothing is reused: the gram pipeline would execute ~2×
+    // the corpus. Marking hits with a broadcast
     // LEFT join and aggregating count + hit-sum in ONE per-doc pass folds
     // perDoc and the probe into a single 19/20 pipeline (total gram work
-    // ≈ 1× the corpus). Exactly equal: the original inner join kept only
-    // docs with ≥ 1 hit (and perDoc's extra %20==0 rows never survived
-    // it); `sum(__hit)` over the left join counts exactly the grams with
+    // ≈ 1× the corpus). Exactly equal to the three-consumer inner join,
+    // which keeps only docs with ≥ 1 hit (perDoc's extra %20==0 rows
+    // never survive it); `sum(__hit)` over the left join counts exactly the grams with
     // a bench match (bench ghs are distinct, so the join multiplicity is
     // 1), and a doc with zero hits aggregates to NULL and is dropped by
     // the n_hit >= 1 filter — the same doc set.
@@ -780,19 +780,19 @@ FROM k GROUP BY 1 ORDER BY 1"""
     * never text. The top-100 boundary is EXACT at any scale without a
     * global sort: a bounded `topk_min` aggregate (100-pair state, partial
     * map-side merge) finds the 100th-ranked (score, doc_id) and `kept`
-    * compares against that broadcast threshold (r18). */
+    * compares against that broadcast threshold. */
   def dsirSample(s: SparkSession, d: String): DataFrame = {
-    // r17 restructure (guide §2.3/§2.4): the old shape consumed the raw
-    // token stream through THREE branches (source histogram, en-filtered
-    // target histogram, per-doc scoring), and the pushed lang filter made
-    // the branches' exchange subtrees differ — the explode + per-token
-    // md5 pipeline executed ~3× the corpus. Pre-aggregating ONCE to
+    // One pass over the raw token stream: consuming it through THREE
+    // branches (source histogram, en-filtered target histogram, per-doc
+    // scoring) would run the explode + per-token md5 pipeline ~3× the
+    // corpus, because the pushed lang filter makes the branches'
+    // exchange subtrees differ. Pre-aggregating ONCE to
     // (doc_id, lang, bucket, cnt) — docs × ≤256 buckets, far smaller
     // than token instances — gives every branch the identical exchange
     // subtree (explode runs once), the target histogram becomes a
     // CONDITIONAL sum instead of a filtered second pass + left join +
     // na.fill (exactly equal: a bucket with no en tokens sums to 0, what
-    // the fill produced), and the per-doc score re-aggregates counts
+    // the fill produces), and the per-doc score re-aggregates counts
     // (Σ lr·cnt / Σ cnt ≡ the per-instance mean).
     val docB = Tables.fanout(s, Tables.documents(s, d))
       .select(col("doc_id"), col("lang"),
@@ -811,10 +811,10 @@ FROM k GROUP BY 1 ORDER BY 1"""
       .groupBy("doc_id")
       .agg(sum("cnt").as("n_tokens"),
         expr("sum(lr_ppm * cnt) div sum(cnt)").as("dsir_ppm"))
-    // r18 (r17 verdict #1, guide §2.4): `kept` used to be a partition-less
-    // row_number over EVERY scored doc — a SinglePartition exchange + one-
-    // task sort of the corpus-sized score table, dsir's dominant at-scale
-    // cost once the histogram passes were fused. The global rank only ever
+    // `kept` must not be a partition-less row_number over EVERY scored
+    // doc — a SinglePartition exchange + one-task sort of the
+    // corpus-sized score table would be dsir's dominant at-scale cost.
+    // The global rank only ever
     // DECIDES a boundary, so compute the boundary with the repo's bounded
     // top-k aggregate instead: topk_min(-dsir_ppm, doc_id, 100) keeps the
     // 100 smallest (-dsir_ppm, doc_id) pairs — i.e. the top-100 in

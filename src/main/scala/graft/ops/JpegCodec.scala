@@ -26,8 +26,9 @@ import java.nio.ByteBuffer
   * refine with the kex EOB rule). Every arithmetic path is pinned
   * EXACTLY against the system libjpeg via entropy-level transcoding
   * in JpegArithSpec — tools/jpegarith.c regenerates the fixtures —
-  * so conformance does not rest on shared-code round-trips (the r16
-  * ADVICE lesson). For the 8-bit DCT modes,
+  * so conformance does not rest on shared-code round-trips (an encoder
+  * and decoder sharing a bug agree with each other). For the 8-bit DCT
+  * modes,
   * grayscale (one component) AND YCbCr color
   * with the full T.81 sampling-factor range 1..4 — 4:4:4, 4:2:0 (the
   * dominant real-world encoding), 4:2:2, 4:4:0 and the DV-derived
@@ -1816,8 +1817,8 @@ object JpegCodec {
       require((bytes(pos) & 0xff) == 0xff, f"expected marker at $pos")
       // T.81 B.1.1.2: any number of 0xFF fill bytes may pad before a
       // marker — the marker code is the first non-0xFF byte after the run
-      // (r14 ADVICE: without this, a conforming file with fill bytes
-      // misparses the fill byte as marker 0xFF and reads a bogus length)
+      // (without this, a conforming file with fill bytes misparses the
+      // fill byte as marker 0xFF and reads a bogus length)
       while (pos + 2 < bytes.length && (bytes(pos + 1) & 0xff) == 0xff) pos += 1
       require(pos + 2 <= bytes.length, "truncated marker stream")
       val m = bytes(pos + 1) & 0xff

@@ -92,9 +92,9 @@ object MergeOnRead {
     * still-readable commit (reads below it refuse loudly — Delta's
     * out-of-range `table_changes` error), and `_c<v>.base` records the
     * table version the commit applied to, which is what makes the sweep
-    * snapshot-pin-aware ([[vacuumChanges]]). Layout v1 (unprefixed
-    * `part-*` files) migrates in place on first maintained access —
-    * O(feed) once, never a table rebuild ([[migrateChangesLayout]]). */
+    * snapshot-pin-aware ([[vacuumChanges]]). A data file without the
+    * prefix cannot be assigned to a commit, so [[readChanges]] refuses a
+    * feed that holds one. */
   private[graft] def changesPath(base: String): String = s"$base/_changes"
 
   private[graft] def hasChanges(base: String): Boolean =
@@ -129,16 +129,19 @@ object MergeOnRead {
     } finally AtomicTable.deleteRecursively(tmp)
   }
 
-  /** Commit versions present in the feed (v2 filenames), sorted. */
-  private[graft] def changeCommits(base: String): Seq[Long] = {
+  /** File names in the feed directory (empty when there is no feed). */
+  private def feedNames(base: String): Seq[String] = {
     import java.nio.file.{Files, Paths}
     val dir = Paths.get(changesPath(base))
     if (!Files.isDirectory(dir)) return Seq.empty
     val files = Files.list(dir)
-    val names = try files.iterator().asScala.map(_.getFileName.toString).toSeq
+    try files.iterator().asScala.map(_.getFileName.toString).toSeq
     finally files.close()
-    names.collect { case CommitFileRe(n) => n.toLong }.distinct.sorted
   }
+
+  /** Commit versions present in the feed (v2 filenames), sorted. */
+  private[graft] def changeCommits(base: String): Seq[Long] =
+    feedNames(base).collect { case CommitFileRe(n) => n.toLong }.distinct.sorted
 
   private def floorPath(base: String) =
     java.nio.file.Paths.get(changesPath(base), "_FLOOR")
@@ -152,66 +155,30 @@ object MergeOnRead {
     else changeCommits(base).headOption.getOrElse(1L)
   }
 
-  /** Migrate a v1 (flat unprefixed-file) feed to the v2 layout IN PLACE:
-    * read the old files once, rewrite one prefixed file per commit, drop
-    * the old files. Cost is O(feed) — kilobyte-to-megabyte sidecar data —
-    * never a re-merge or table rebuild: the upgrade path format evolution
-    * should take (a fingerprint bump would rebuild every store).
-    * Idempotent and crash-safe: old files are deleted only after every
-    * commit's new file landed, and a re-run after a mid-migration crash
-    * first DELETES any `c<v>-*` files a previous attempt already landed
-    * for the commit it is about to rewrite (under the same commit lock),
-    * so a half-migrated feed converges to exactly one copy per commit —
-    * never duplicated rows. Readers cannot race the half-state: the
-    * migration runs under the table's commit lock, as do vacuum and
-    * maintained reads. */
-  private[graft] def migrateChangesLayout(s: SparkSession, base: String): Boolean = {
-    import java.nio.file.{Files, Paths}
-    val dir = Paths.get(changesPath(base))
-    if (!Files.isDirectory(dir)) return false
-    AtomicTable.withCommitLock(Paths.get(base)) {
-      val files = Files.list(dir)
-      val names = try files.iterator().asScala.map(_.getFileName.toString).toSeq
-      finally files.close()
-      val legacy = names.filter(n => !n.startsWith("_") && !n.startsWith(".") &&
-        !CommitFileRe.pattern.matcher(n).matches())
-      if (legacy.isEmpty) return false
-      System.err.println(s"[graft] migrating ${legacy.size} legacy change " +
-        s"file(s) at ${changesPath(base)} to the c<version>- layout (in place)")
-      val old = s.read.parquet(legacy.map(n => s"${changesPath(base)}/$n"): _*)
-      val commits = old.select("_commit_version").distinct()
-        .collect().map(_.getLong(0)).sorted // O(#commits) driver metadata
-      commits.foreach { v =>
-        // A prior crashed attempt may have landed this commit's prefixed
-        // files already; remove them so the rewrite is the only copy.
-        val prefix = s"c$v-"
-        names.filter(_.startsWith(prefix))
-          .foreach(n => Files.deleteIfExists(dir.resolve(n)))
-        writeChanges(old.filter(col("_commit_version") === v), base, v)
-      }
-      legacy.foreach(n => Files.deleteIfExists(dir.resolve(n)))
-      true
-    }
-  }
-
   /** `table_changes(startVersion, ...)`: the maintained read over the
-    * feed. Migrates a legacy layout in place, refuses a start below the
-    * vacuumed floor with a precise message (the Delta out-of-range CDF
-    * error), and scans ONLY the in-range commit files — an explicit file
-    * list, so a reader of the latest commits never pays for the history
-    * it skipped. */
+    * feed. Refuses a feed holding data files without the `c<version>-`
+    * prefix (their commit is unknowable, so any range read would be
+    * wrong), refuses a start below the vacuumed floor with a precise
+    * message (the Delta out-of-range CDF error), and scans ONLY the
+    * in-range commit files — an explicit file list, so a reader of the
+    * latest commits never pays for the history it skipped. */
   def readChanges(s: SparkSession, base: String,
       startVersion: Long = Long.MinValue): DataFrame = {
-    migrateChangesLayout(s, base)
     // Floor check + file listing run under the COMMIT LOCK — the same
     // lock vacuumChanges sweeps under — so the refuse-or-read decision
     // is atomic against a concurrent sweep: a reader can never pass the
-    // floor check and then list a half-swept feed. (Not nested inside
-    // the migrate call's lock: withCommitLock is not reentrant.) After
-    // the locked listing, the usual retention contract governs — a
-    // reader racing future sweeps needs its range within keepCommits,
-    // exactly like AtomicTable.read needs keep >= 2 across publishes.
+    // floor check and then list a half-swept feed. After the locked
+    // listing, the usual retention contract governs — a reader racing
+    // future sweeps needs its range within keepCommits, exactly like
+    // AtomicTable.read needs keep >= 2 across publishes.
     val paths = AtomicTable.withCommitLock(java.nio.file.Paths.get(base)) {
+      val names = feedNames(base)
+      val unprefixed = names.filter(n => !n.startsWith("_") && !n.startsWith(".") &&
+        !CommitFileRe.pattern.matcher(n).matches())
+      require(unprefixed.isEmpty,
+        s"change feed at ${changesPath(base)} holds data files without a " +
+          s"c<version>- commit prefix, so their commit is unknown: " +
+          unprefixed.sorted.mkString(", "))
       val floor = changesFloor(base)
       require(startVersion == Long.MinValue || startVersion >= floor,
         s"change commits below $floor have been vacuumed from " +
@@ -221,11 +188,6 @@ object MergeOnRead {
       val start = if (startVersion == Long.MinValue) floor else startVersion
       val picked = changeCommits(base).filter(_ >= start)
       require(picked.nonEmpty, s"no change commits >= $start at ${changesPath(base)}")
-      import java.nio.file.{Files, Paths}
-      val dir = Paths.get(changesPath(base))
-      val files = Files.list(dir)
-      val names = try files.iterator().asScala.map(_.getFileName.toString).toSeq
-      finally files.close()
       val wanted = picked.map(v => s"c$v-").toSet
       names.filter(n => wanted.exists(n.startsWith))
         .map(n => s"${changesPath(base)}/$n")
@@ -288,11 +250,8 @@ object MergeOnRead {
         }
       val floor = math.min(keepFloor, pinFloor)
       val dir = Paths.get(changesPath(base))
-      val files = Files.list(dir)
-      val names = try files.iterator().asScala.map(_.getFileName.toString).toSeq
-      finally files.close()
       val dead = commits.filter(_ < floor).toSet
-      names.foreach { n =>
+      feedNames(base).foreach { n =>
         val victim = n match {
           case CommitFileRe(v) => dead(v.toLong)
           case _ => n.startsWith("_c") && n.endsWith(".base") &&

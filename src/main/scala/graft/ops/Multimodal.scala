@@ -31,7 +31,7 @@ import graft.Tables
 object Multimodal {
 
   /** doc_id source for a CPU-heavy codec stage, fanned to full
-    * parallelism (r17): the corpus parquet is a single split at bench
+    * parallelism: the corpus parquet is a single split at bench
     * scale, so the whole encode+decode stage otherwise runs as ONE task;
     * only 8-byte ids cross the fanout exchange. Used by exactly the
     * gates whose per-row codec work outweighs a 32-task dispatch — the
@@ -553,9 +553,8 @@ FROM s GROUP BY doc_id, w, h, ch ORDER BY doc_id"""
     channels: Int, interlaced: Boolean, n_pixels: Int,
     sum_c0: Long, sum_c1: Long, sum_c2: Long, sum_c3: Long, peak: Int)
 
-  /** 16-bit + Adam7 PNG decode as a first-class gate (r14 verdict #5 —
-    * the largest remaining codec share of a real crawl corpus after
-    * progressive JPEG). Per row: synthesize a full-range 16-bit raster
+  /** 16-bit + Adam7 PNG decode as a first-class gate (the largest codec
+    * share of a real crawl corpus after progressive JPEG). Per row: synthesize a full-range 16-bit raster
     * (values up to 65535 — any sample-level filter shortcut or
     * high/low-byte swap corrupts them), encode it as a real PNG at
     * depth 16 — even doc_ids additionally Adam7-INTERLACED, so both
@@ -602,9 +601,8 @@ FROM s GROUP BY doc_id, w, h, ch ORDER BY doc_id"""
     sum_c0: Long, sum_c1: Long, sum_c2: Long, peak: Int)
 
   /** Sub-byte (1/2/4-bit) PNG decode as a first-class gate — the LAST
-    * codec sliver after 16-bit + Adam7 (r15 verdict "what's missing" #3:
-    * web crawls carry old 1-bit fax-style scans and tiny 2/4-bit palette
-    * icons). Per row: synthesize a native-range raster, encode at the
+    * codec sliver after 16-bit + Adam7 (web crawls carry old 1-bit
+    * fax-style scans and tiny 2/4-bit palette icons). Per row: synthesize a native-range raster, encode at the
     * row's sub-byte depth — odd widths so rows pad mid-byte (spec §7.2),
     * even doc_ids Adam7-interlaced so pass rows re-pad independently,
     * alternating grayscale / palette so both sub-byte color types hash
@@ -864,7 +862,7 @@ SELECT doc_id, w AS width, h AS height, CAST(3 AS INT) AS channels,
 FROM v GROUP BY doc_id, w, h ORDER BY doc_id"""
 
   /** 4:2:0 COLOR JPEG through the gate — the dominant real-world JPEG
-    * encoding (r12 verdict "missing #3"). Fixtures: the closed-form luma
+    * encoding. Fixtures: the closed-form luma
     * grid at full resolution plus NON-NEUTRAL chroma that is CONSTANT PER
     * MCU — a constant quarter-res chroma block upsamples to a constant
     * 16×16 field under EVERY legal upsampler, so the decode is
@@ -960,7 +958,7 @@ SELECT doc_id, w AS width, h AS height, CAST(3 AS INT) AS channels,
 FROM rgb GROUP BY doc_id, w, h ORDER BY doc_id"""
 
   /** PROGRESSIVE (SOF2) 4:2:0 color JPEG through the gate — the largest
-    * real-world JPEG share after baseline (r13 verdict "missing #3").
+    * real-world JPEG share after baseline.
     * The SAME closed-form fixtures as [[decodeJpeg420]], re-encoded as a
     * nine-scan progressive script: interleaved DC first at Al=1, luma AC
     * split into two spectral bands, whole-band chroma AC, then one-bit
@@ -1419,22 +1417,22 @@ FROM px GROUP BY doc_id, w, h, n_colors ORDER BY doc_id"""
     * 1.8M; at 100× that difference is the join. */
   def phashDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // Optimization r17, two measured fixes to the expensive stage (the
-    // JPEG arith encode → decode → dHash map), guide §2.4/§8:
+    // Two properties of the expensive stage (the JPEG arith encode →
+    // decode → dHash map):
     //  1. PARALLELISM: the doc_id source is a single parquet split at
-    //     bench scale, so the codec stage ran as ONE task; fanout spreads
-    //     it to defaultParallelism before the per-row compute (the
-    //     documented fanout use case).
+    //     bench scale, so the codec stage would run as ONE task; fanout
+    //     spreads it to defaultParallelism before the per-row compute
+    //     (the documented fanout use case).
     //  2. RUN-ONCE: `fp` is consumed by FOUR plan branches (band rows ×2
     //     via the banded self-join, fa, fb, and the final per-doc rollup).
     //     With no exchange between the codec map and its consumers, each
-    //     branch re-executed the whole encode+decode — the corpus was
+    //     branch would re-execute the whole encode+decode — the corpus
     //     decoded 4×. `fpOnce` pins one hash exchange of the 40-byte
     //     fingerprint PROXY rows (doc_id + 4 bands) directly above the
-    //     map; every consumer branch now starts from the identical
-    //     exchange subtree, which AQE's ReuseExchange materializes once —
-    //     decode exactly once, move only proxy bytes after (the §8 rule:
-    //     heavy payload work once, decisions on lightweight proxies).
+    //     map; every consumer branch starts from the identical exchange
+    //     subtree, which AQE's ReuseExchange materializes once — decode
+    //     exactly once, move only proxy bytes after (heavy payload work
+    //     once, decisions on lightweight proxies).
     val fp0 = fannedDocIds(s, d)
       .mapPartitions { batch =>
         batch.map { id =>

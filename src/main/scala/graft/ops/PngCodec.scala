@@ -15,8 +15,7 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   * table — grayscale (0) at 1/2/4/8/16, truecolor (2 = RGB) at 8/16,
   * palette (3, PLTE-expanded to RGB on decode) at 1/2/4/8, grayscale+
   * alpha (4) and truecolor+alpha (6 = RGBA) at 8/16 — with Adam7
-  * interlacing at every depth (16-bit + Adam7 were r14 verdict #5;
-  * sub-byte depths closed the last sliver in r16). Sub-byte samples
+  * interlacing at every depth. Sub-byte samples
   * pack MSB-first with byte-padded rows (spec §7.2) and filter at byte
   * distance 1 (§9); decoded samples keep their native 0..2^depth−1
   * range (`Png.depth` says which scale `pixels` is on — rescaling
@@ -412,7 +411,7 @@ object PngCodec {
         val n = infl.inflate(raw, off, expect - off)
         // FDICT streams make inflate return 0 with finished()==false AND
         // needsInput()==false — without this check the loop never
-        // advances, a hang on attacker-controlled input (r8 ADVICE)
+        // advances, a hang on attacker-controlled input
         if (infl.needsDictionary) throw new IllegalArgumentException(
           "preset-dictionary (FDICT) zlib stream not supported")
         if (n == 0 && !infl.finished()) throw new IllegalArgumentException(

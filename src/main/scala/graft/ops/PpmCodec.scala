@@ -24,7 +24,8 @@ package graft.ops
 object PpmCodec {
 
   /** Decoded image: dims + max sample value straight from the header,
-    * interleaved RGB samples (r0 g0 b0 r1 …) from the raster.
+    * interleaved RGB samples (R G B R G B …, one triple per pixel) from
+    * the raster.
     * `pixels.length` = width × height × 3; values 0..maxVal. */
   final case class Ppm(width: Int, height: Int, maxVal: Int,
       pixels: Array[Int])

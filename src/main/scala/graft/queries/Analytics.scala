@@ -102,8 +102,8 @@ fact_sales AS (
     * sorted but NOT selected — sort before the final projection. The money
     * total keeps the reference's dollar shape but is computed as an exact
     * cents sum (long) with ONE final /100.0 — group totals reach 10^8+
-    * where a double sum's order error exceeds the 4-dp compare grid (the
-    * r9 DV/MOR flake); long→double then IEEE division is deterministic. */
+    * where a double sum's order error exceeds the 4-dp compare grid;
+    * long→double then IEEE division is deterministic. */
   def q1SalesPerMonth(s: SparkSession, d: String): DataFrame =
     Medallion.factSales(s, d)
       .join(broadcast(Medallion.dimDate(s, d)), "date_sk")
@@ -169,7 +169,7 @@ fact_sales AS (
     * tax are 2-decimal, so price·(1−disc) is exact in cents·10² and
     * price·(1−disc)·(1+tax) in cents·10⁴; group totals reach 10^8+
     * dollars where a double sum's order error exceeds the 4-dp compare
-    * grid (the r9 flake), while the long sums are exact and the single
+    * grid, while the long sums are exact and the single
     * final division is deterministic on both engines. */
   def tpchPricingSummary(s: SparkSession, d: String): DataFrame = {
     val cents = round(col("l_extendedprice") * 100).cast("long")
@@ -187,8 +187,8 @@ fact_sales AS (
         // each per-row product is an exact long (≤ ~1.2e11), but the SUMS
         // accumulate in decimal(38,0), not long: a long sum of
         // cents·discC·taxC wraps silently at ~9.2e18 — reached near
-        // SF ≈ 50 — while DuckDB's BIGINT sum widens to HUGEINT (r10
-        // ADVICE). Decimal(38,0) keeps 1e38 headroom (≈ SF 10¹⁸), stays
+        // SF ≈ 50 — while DuckDB's BIGINT sum widens to HUGEINT.
+        // Decimal(38,0) keeps 1e38 headroom (≈ SF 10¹⁸), stays
         // order-independent exact integer arithmetic, and the final
         // decimal→double division is the same exact-int-to-nearest-double
         // conversion on both engines.

@@ -384,9 +384,10 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * orphans shallow clones). */
   /** `ALTER TABLE ... RENAME COLUMN` / `DROP COLUMN` as METADATA — the
     * Delta column-mapping feature ([[graft.util.AtomicTable.renameColumn]]):
-    * logical names live in `_COLMAP`, physical names in the immutable
-    * files, so the rename+drop here run no Spark job and touch no data
-    * file (ColumnMappingSpec proves files byte-identical). The gate then
+    * logical names live in the table's `_CURRENT` commit record, physical
+    * names in the immutable files, so the rename+drop here run no Spark
+    * job and touch no data file (ColumnMappingSpec proves files
+    * byte-identical). The gate then
     * APPENDS through the logical schema ([[graft.util.AtomicTable
     * .toPhysical]] translates back to physical names, so old and new
     * files stay footer-compatible) and aggregates through the mapped
@@ -397,7 +398,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     import graft.util.AtomicTable
     val base = s"/tmp/graft_colmap/${graft.util.PathKeys.safe(d)}/orders"
     val fp = graft.util.SilverArtifact.sourceFingerprint(
-      s"$d/orders.parquet", "colmap-v1")
+      s"$d/orders.parquet", "colmap-v2")
     graft.util.SilverArtifact.stagedOnce(base, fp) {
       AtomicTable.deleteRecursively(
         java.nio.file.Paths.get(base).resolveSibling("orders"))

@@ -25,16 +25,16 @@ object PipelineOps {
 
   /** Full medallion write + read-back of the gold fact from storage —
     * through the TRANSACTION manifest: writeAll commits all 15 zone
-    * tables in one `_SNAPSHOT` swap, and the read resolves that snapshot
-    * (not the per-table pointer), so the gated value is produced by the
-    * cross-table-consistent path end to end. */
+    * tables in one snapshot-manifest commit, and the read resolves that
+    * snapshot (not the per-table pointer), so the gated value is produced
+    * by the cross-table-consistent path end to end. */
   def writeRoundtrip(s: SparkSession, d: String): DataFrame = {
     val lake = s"/tmp/graft_lake/${graft.util.PathKeys.safe(d)}"
     Medallion.writeAll(s, d, lake)
     // retention maintenance as part of the reload: VACUUM
     // every zone table with keep=1 — deliberately more aggressive than the
     // commit's own keep=2, so the read below exercises the snapshot PIN:
-    // the versions named by the retained `_SNAPSHOT` manifests survive the
+    // the versions named by the retained `_snapshots/` manifests survive the
     // sweep (pruneLocked unions them into `retained`), and the snapshot
     // read stays resolvable with VACUUM in the path. Fanned out like the
     // commit's pointer refresh — each member holds its own lock, and a
@@ -51,7 +51,7 @@ object PipelineOps {
   }
 
   /** Star join resolved from ONE snapshot: the fact and both dims are
-    * opened through a single `_SNAPSHOT` resolution
+    * opened through a single snapshot resolution
     * ([[graft.util.AtomicTable.readSnapshotTables]]), so every input
     * belongs to the same committed reload — the cross-table-consistent
     * read the reference's dual-system comparison assumes, now a gated

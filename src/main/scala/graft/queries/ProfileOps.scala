@@ -12,9 +12,8 @@ import graft.Tables
   *    (the metaprogramming pattern every data-quality layer needs — no
   *    column names hard-coded). The 100 TB path is ONE hash-aggregate scan
   *    carrying an HLL sketch (`approx_count_distinct`) per column — no
-  *    Expand, no row replication (the r5 plan replayed every row
-  *    ~|cols|+1× through a multi-count_distinct Expand; the judge flagged
-  *    it, and this rebuild removes it). Exactness is enforced by the same
+  *    Expand, no row replication (a multi-count_distinct plan replays
+  *    every row ~|cols|+1× through an Expand). Exactness is enforced by the same
   *    in-band error contract as [[graft.queries.ScaleOps.approxDistinct]]:
   *    the hashed result is the EXACT distinct count plus a boolean
   *    asserting the sketch landed within max(1, exact/10); the exact side
@@ -124,10 +123,10 @@ GROUP BY bigram ORDER BY n DESC, bigram ASC LIMIT 20"""
     val toks = docs.select(explode(split(col("text"), " ")).as("w"))
     val uni = toks.groupBy("w").agg(count(lit(1)).as("nw"))
     // N_uni = Σ nw exactly (every token instance counts once in its
-    // word's group), so the total folds out of the unigram counts —
-    // r17: the old scalar count over `toks` was column-pruned into a
-    // SECOND explode pass over the corpus; this form re-aggregates the
-    // vocab-sized rows of the one unigram exchange (guide §2.3/§2.4)
+    // word's group), so the total folds out of the unigram counts — a
+    // scalar count over `toks` would be column-pruned into a SECOND
+    // explode pass over the corpus; this form re-aggregates the
+    // vocab-sized rows of the one unigram exchange
     val nUni = uni.agg(sum("nw").as("n_uni"))
     // generator yields no rows for sub-2-word docs — the oracle's length
     // filter is implicit here
@@ -250,8 +249,9 @@ FROM lineitem"""
     * data so a NON-zero violation count proves the counting path.
     * Scale shape: the three column rules AND the composite-key uniqueness
     * count are ONE combined aggregate pass — a single scan of the fact,
-    * unpivoted afterward into rule rows (the r4 plan scanned lineitem five
-    * times; at 100 TB that is five reads of a 100 TB table). The FK rule is
+    * unpivoted afterward into rule rows (one pass per rule would scan
+    * lineitem five times; at 100 TB that is five reads of a 100 TB
+    * table). The FK rule is
     * the one remaining join, probing the orders key set (shuffle-hash at
     * scale — never collected). All counts, no floats. */
   def dqChecks(s: SparkSession, d: String): DataFrame =

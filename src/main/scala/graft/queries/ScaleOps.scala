@@ -577,7 +577,7 @@ SELECT custkey,
 FROM lineitem JOIN dim ON l_orderkey = o_orderkey
 GROUP BY 1 ORDER BY 1"""
 
-  /** The MULTI-KEY naive form (r10 verdict #3): the dim is unique on the
+  /** The MULTI-KEY naive form: the dim is unique on the
     * composite (partkey, suppkey) offering key — an Aggregate grouped on
     * exactly those attributes — and the fact joins on BOTH key pairs
     * (`And(EqualTo, EqualTo)`), so the widened
@@ -630,7 +630,7 @@ JOIN nation n ON c.c_nationkey = n.n_nationkey
 GROUP BY n.n_name ORDER BY n.n_name"""
 
   /** AQE SKEW-JOIN — the AUTOMATIC runtime twin of [[saltedJoin]], and
-    * the path a 100 TB job leans on FIRST (r6 judge ask #6): when a
+    * the path a 100 TB job leans on FIRST: when a
     * shuffle join's runtime partition stats show one reducer partition
     * far above the median, AQE's OptimizeSkewedJoin splits it into
     * sub-partitions (replicating the matching build rows) with no query

@@ -123,7 +123,7 @@ FROM o GROUP BY 1, 2 ORDER BY 1, 2"""
     * tiny by construction) and re-aggregates. Nothing event-sized ever sits
     * on the driver.
     *
-    * Determinism (ADVICE r4): a naive avg()/stddev_samp() over doubles
+    * Determinism: a naive avg()/stddev_samp() over doubles
     * sums in partition order — Spark and DuckDB can disagree in the last
     * ulps, flipping events sitting ON the 2σ boundary. So values are
     * quantized to exact integer micro-units first; n, Σv, Σv² are
@@ -581,10 +581,10 @@ FROM terms, crit GROUP BY dof, crit"""
       .select(expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))").as("q"))
     // ONE reduction for ALL moments: the upper-triangle explode (j >= i)
     // already carries each dim's value on its diagonal row, so per-dim
-    // sums and n ride the Gram aggregation as conditional partials — the
-    // r9 bench showed this query's steady passes degrading under
-    // full-suite memory pressure, and halving the explode passes halves
-    // the allocation pressure that made it GC-sensitive (NOTES.md r10)
+    // sums and n ride the Gram aggregation as conditional partials — this
+    // query's steady passes degrade under full-suite memory pressure, and
+    // halving the explode passes halves the allocation pressure that
+    // makes it GC-sensitive
     val moments = q.select(posexplode(col("q")).as(Seq("i", "qi")), col("q"))
       .select(col("i"), col("qi"),
         posexplode(expr("slice(q, i + 1, size(q) - i)")).as(Seq("p", "qj")))
@@ -896,10 +896,10 @@ FROM x"""
       .withColumn("gap", col("day") - lag("day", 1).over(w))
       .filter(col("gap").isNotNull)
       .select(col("gap"), col("o_custkey"), col("o_orderkey"))
-    // r18 (guide §2.4): the old shape ranked the FULL fact-scale gap table
-    // with a partition-less row_number — a SinglePartition exchange + one-
-    // task sort of every gap row ("WindowExec: No Partition Defined", the
-    // r17 verdict's #1 at-scale defect). The exact ranks only ever READ
+    // Never rank the FULL fact-scale gap table with a partition-less
+    // row_number — a SinglePartition exchange + one-task sort of every gap
+    // row ("WindowExec: No Partition Defined", an at-scale defect that
+    // WindowAuditSpec rejects). The exact ranks only ever READ
     // `gap` at three positions, and the rank order is primarily by gap —
     // the (custkey, orderkey) tie-breakers can never change WHICH gap
     // value occupies a given global rank. So the gap value at rank k is

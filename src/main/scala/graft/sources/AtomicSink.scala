@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,33 +12,34 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.AtomicTable
+
 /** The WRITE half of the DataSource V2 surface (the read half is
   * [[GraftGen]]): a transactional batch sink implementing the task-commit
-  * protocol every exactly-once distributed writer needs — the part
-  * [[graft.util.AtomicTable]]'s directory-version swap does NOT cover,
-  * because that publishes a finished directory while THIS protocol is how
-  * the directory gets finished correctly under task retries and job
-  * failure:
+  * protocol every exactly-once distributed writer needs — how a batch's
+  * files get finished correctly under task retries and job failure —
+  * on top of [[graft.util.AtomicTable]], which makes the finished batch
+  * visible:
   *
   *  - **task isolation**: each task writes its rows to a uniquely-named
-  *    staged file (`.staging/part-<partition>-<task>.jsonl`) — speculative
-  *    or retried attempts can never collide or interleave;
+  *    staged file (`.staging/part-<query>-<partition>-<task>.jsonl`) —
+  *    speculative or retried attempts can never collide or interleave;
   *  - **commit messages**: a task reports the file it wrote (plus a row
   *    count) back to the driver ONLY on success — the Iceberg/Delta
   *    "data files are metadata-candidates, not data" principle;
-  *  - **atomic job commit**: the driver moves committed files out of
-  *    staging and publishes the file list as a `_MANIFEST` via
-  *    temp-file + atomic rename — readers either see the whole batch or
-  *    none of it, and a crash between moves leaves the manifest on the
-  *    OLD list (stray data files are invisible; see readBack);
+  *  - **atomic job commit**: the driver publishes the committed files as
+  *    one [[graft.util.AtomicTable.publishAppend]] version of the sink
+  *    directory — readers either see the whole batch or none of it, and
+  *    concurrent job commits serialize on the table's locks without
+  *    losing each other's files;
   *  - **abort**: failed jobs delete their staged files; nothing they
   *    wrote can ever be read.
   *
   * Rows are encoded as JSON lines (longs and strings — enough for the
-  * contract demo; escaping mirrors graft.Verify's). The manifest-scoped
-  * reader is what gives snapshot isolation: `readBack` lists ONLY
-  * manifest files, so uncommitted/aborted/stray part files in the
-  * directory are ignored — asserted by AtomicSinkSpec.
+  * contract demo; escaping mirrors graft.Verify's). `readBack` scans ONLY
+  * the live version directory, so staged, aborted, or stray part files
+  * elsewhere in the sink directory are ignored — asserted by
+  * AtomicSinkSpec.
   *
   * Usage: `df.write.format("graft.sources.GraftSink")
   *   .option("path", dir).mode("append").save()`.
@@ -70,16 +71,17 @@ object GraftSink {
 
   /** End-to-end write-protocol demo: push an orders projection through
     * the transactional sink (fresh directory per run), plant a STRAY
-    * part file the manifest never saw, and aggregate the manifest-scoped
-    * read-back — equal to the same aggregate over the source table iff
-    * (a) every task's rows survived the stage→commit→publish hops intact
-    * and (b) snapshot isolation really ignores non-manifest files. The
-    * oracle aggregates the source directly. */
+    * part file outside every published version, and aggregate the
+    * version-scoped read-back — equal to the same aggregate over the
+    * source table iff (a) every task's rows survived the
+    * stage→commit→publish hops intact and (b) snapshot isolation really
+    * ignores unpublished files. The oracle aggregates the source
+    * directly. */
   def sinkRoundtrip(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val dir = s"/tmp/graft_sink/${graft.util.PathKeys.safe(d)}"
     val root = Paths.get(dir)
-    // fresh run: drop any prior manifest/data so append semantics of the
+    // fresh run: drop any prior versions so append semantics of the
     // protocol don't accumulate across verify/bench invocations
     if (Files.exists(root)) {
       val it = Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
@@ -114,19 +116,15 @@ FROM orders GROUP BY 1 ORDER BY 1"""
     "dsv2_sink_roundtrip" -> sinkRoundtripOracle
   )
 
-  /** Read a sink directory with snapshot isolation: ONLY files listed in
-    * the current `_MANIFEST` are scanned, so staged, aborted, or stray
-    * part files are invisible. An absent manifest is an empty table. */
-  def readBack(s: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val mf = Paths.get(dir, "_MANIFEST")
-    if (!Files.exists(mf)) return s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val files = new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map(f => s"$dir/$f").toSeq
-    if (files.isEmpty) s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else s.read.schema(schema).json(files: _*)
-  }
+  /** Read a sink directory with snapshot isolation: ONLY the live
+    * version is scanned, so staged, aborted, or stray part files are
+    * invisible. A sink with no published version is an empty table. */
+  def readBack(s: SparkSession, dir: String, schema: StructType): DataFrame =
+    AtomicTable.resolve(dir) match {
+      case Some(live) => s.read.schema(schema).json(live)
+      case None => s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
 }
 
 private[sources] class SinkTable(path: String, writeSchema: StructType)
@@ -151,133 +149,26 @@ private[graft] class SinkBatchWrite(path: String, schema: StructType, queryId: S
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new SinkWriterFactory(path, schema, queryId)
 
+  /** Publish every committed task file as one appended version. The
+    * write function LINKS the staged files (never moves them): a lost
+    * append race re-runs it against the new base, so the staged copies
+    * must outlive every attempt and are deleted only once the publish
+    * returned. A file already in the version (a retried driver commit of
+    * this job) is kept as is. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = Paths.get(path)
-    Files.createDirectories(dir)
-    val committed = messages.collect { case m: SinkCommit if m.rows > 0 => m.file }
+    val staging = Paths.get(path, ".staging")
+    val (committed, empty) =
+      messages.collect { case m: SinkCommit => m }.partition(_.rows > 0)
     // empty tasks committed successfully (so task abort never ran) but
     // their files aren't published — reap them or .staging grows forever
-    messages.collect { case m: SinkCommit if m.rows == 0 => m.file }
-      .foreach(f => Files.deleteIfExists(dir.resolve(".staging").resolve(f)))
-    // move each committed file out of staging (same-directory rename —
-    // atomic on POSIX; an already-final file from a retried driver is fine)
-    committed.foreach { f =>
-      val staged = dir.resolve(".staging").resolve(f)
-      if (Files.exists(staged))
-        Files.move(staged, dir.resolve(f), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-    }
-    // the manifest update is a READ-MODIFY-WRITE (append mode folds the
-    // prior list in), so two concurrently-committing jobs could each
-    // read the same prior manifest and the later rename would silently
-    // drop the earlier job's files. A create-new lock file serializes
-    // committers — createFile is atomic on POSIX. A crashed committer's
-    // stale lock is broken only when the LOCK FILE's mtime is older than
-    // the stale window (the holder's liveness, not the waiter's patience
-    // — its manifest rename never happened, so breaking loses nothing),
-    // and the break itself is an ATOMIC RENAME to a breaker-unique name:
-    // of N waiters observing the same stale lock, exactly one wins the
-    // move (rename of a vanished file throws for the rest), so the old
-    // delete+create interleaving — where waiter 1's deleteIfExists could
-    // remove waiter 2's freshly created LIVE lock (r10 ADVICE) — cannot
-    // occur. While the lock is HELD, a daemon heartbeat refreshes the
-    // lock file's mtime every staleMs/6, so a LIVE holder — even one
-    // paused at a bad moment for several seconds — is never classified
-    // stale by waiters; only a holder whose JVM actually died stops
-    // refreshing (the same liveness discipline as AtomicTable's claim
-    // heartbeat). This shrinks the residual TOCTOU (r11 ADVICE: a paused
-    // holder broken mid-critical-section could rename its stale manifest
-    // over a successor's) to a holder paused for the FULL stale window —
-    // and ownership is still re-verified by token immediately before the
-    // manifest rename (a broken holder must then lose, not publish over
-    // the breaker), and unlock deletes the lock file only while it still
-    // carries our token, so a successor's live lock survives our cleanup.
-    // This is the poor man's optimistic-concurrency loop a real table
-    // format runs on its version log; AtomicSinkSpec races threads
-    // through it. Deliberately NOT an OS FileChannel.lock (which
-    // AtomicTable.withCommitLock uses and which would erase the stale
-    // protocol): this sink models the OBJECT-STORE commit discipline —
-    // create-if-absent + token + mtime heartbeat are all operations an
-    // S3-class store offers, flock is not — so the protocol stays
-    // portable to where a DSv2 sink actually runs at scale.
-    val lock = dir.resolve("_COMMIT_LOCK")
-    val token = s"$queryId/${java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getName}/${Thread.currentThread().getId}/${System.nanoTime()}"
-    val staleMs = 30000L
-    def holdsToken(): Boolean = try {
-      new String(Files.readAllBytes(lock), StandardCharsets.UTF_8) == token
-    } catch { case _: java.io.IOException => false }
-    val mf = dir.resolve("_MANIFEST")
-    var published = false
-    while (!published) {
-      var locked = false
-      while (!locked) {
-        try {
-          Files.createFile(lock)
-          Files.write(lock, token.getBytes(StandardCharsets.UTF_8))
-          locked = holdsToken()
-          if (!locked) Thread.sleep(10)
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            val stale = try {
-              Files.getLastModifiedTime(lock).toMillis <
-                System.currentTimeMillis() - staleMs
-            } catch { case _: java.io.IOException => false } // vanished = not ours to break
-            if (stale) {
-              val broken = dir.resolve(
-                s"_COMMIT_LOCK.broken.${Thread.currentThread().getId}.${System.nanoTime()}")
-              try {
-                Files.move(lock, broken, StandardCopyOption.ATOMIC_MOVE)
-                Files.deleteIfExists(broken)
-              } catch { case _: java.io.IOException => () } // another breaker won
-            }
-            Thread.sleep(10)
-        }
-      }
-      // holder-liveness heartbeat: refresh OUR lock's mtime while inside
-      // the critical section, guarded on the file still carrying our
-      // token. The guard is check-then-act, not atomic — a heartbeat
-      // paused past the full stale window could touch a successor's
-      // fresh lock once, making a then-dead successor look up to one
-      // refresh-period fresher (delaying the NEXT stale-break by at most
-      // staleMs). That is a liveness delay, never a safety loss: the
-      // manifest rename is still token-gated.
-      val heartbeat = new Thread(() =>
-        try {
-          while (!Thread.currentThread().isInterrupted) {
-            Thread.sleep(math.max(50L, staleMs / 6))
-            try { if (holdsToken()) Files.setLastModifiedTime(lock,
-              java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis())) }
-            catch { case _: java.io.IOException => () }
-          }
-        } catch { case _: InterruptedException => () },
-        "graft-sink-lock-heartbeat")
-      heartbeat.setDaemon(true)
-      heartbeat.start()
-      val tmp = dir.resolve(s"_MANIFEST.${Integer.toHexString(token.hashCode)}.tmp")
-      try {
-        val prior =
-          if (Files.exists(mf))
-            new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
-              .linesIterator.filter(_.nonEmpty).toSeq
-          else Seq.empty
-        val next = (prior ++ committed).distinct.sorted.mkString("", "\n", "\n")
-        Files.write(tmp, next.getBytes(StandardCharsets.UTF_8))
-        // last-moment ownership check: if a breaker stole the lock while
-        // we were paused, our manifest read may be stale — discard and
-        // redo the whole read-modify-write under a re-acquired lock
-        if (holdsToken()) {
-          Files.move(tmp, mf, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-          published = true
-        } else Files.deleteIfExists(tmp)
-      } finally {
-        heartbeat.interrupt()
-        heartbeat.join()
-        Files.deleteIfExists(tmp)
-        if (holdsToken()) Files.deleteIfExists(lock)
+    empty.foreach(m => Files.deleteIfExists(staging.resolve(m.file)))
+    AtomicTable.publishAppend(path, keep = 2) { dir =>
+      committed.foreach { m =>
+        val to = Paths.get(dir, m.file)
+        if (!Files.exists(to)) AtomicTable.linkOrCopy(staging.resolve(m.file), to)
       }
     }
+    committed.foreach(m => Files.deleteIfExists(staging.resolve(m.file)))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -10,11 +10,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * jars in this environment; if they appear, each `publish` becomes a
   * `MERGE`/`REPLACE TABLE` and this object retires).
   *
+  * Every table-format mutation commits through one of two records: a
+  * table's `_CURRENT`, or a snapshot root's newest `_snapshots/sn_<N>`.
   * Layout under a logical table path `base`:
   * {{{
-  *   base/_v<N>/      immutable published versions (ordinary parquet dirs)
-  *   base/_CURRENT    pointer file whose CONTENT is the live version name
+  *   base/_v<N>/         immutable published versions (ordinary parquet dirs)
+  *   base/_v<N>._claim   heartbeat marker of a version still being staged
+  *   base/_CURRENT       the commit record: live version name on line 1,
+  *                       then `txn <appId> <version>` watermarks and
+  *                       `col <physical> <logical>` column-mapping lines
+  *   base/_LOG           published-version lineage, one line per version
+  *   base/_LOCK          OS lock file serializing commits
+  *   base/_APPEND_LOCK   OS lock file serializing appends
   * }}}
+  * and under a snapshot root `root` (multi-table commits):
+  * {{{
+  *   root/_snapshots/sn_<N>   retained snapshot manifests; the highest N
+  *                            is the live snapshot
+  *   root/_LOCK               OS lock file serializing snapshot commits
+  * }}}
+  * Records are replaced by writing `<name>.tmp` and renaming it over the
+  * record, so a `.tmp` file exists only while a commit is in flight.
   *
   * `publish` writes the new version to a fresh `_v<N>` directory, then
   * replaces `_CURRENT` with an atomic rename (write a tmp file,
@@ -53,7 +69,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * commit, so directory listing, pointer parse and prune all stay O(keep). */
 object AtomicTable {
 
-  private val Pointer = "_CURRENT"
+  private val PointerFile = "_CURRENT"
   private val VersionRe = "_v(\\d+)".r
 
   /** Unpublished version dirs whose claim heartbeat is older than this are
@@ -71,9 +87,9 @@ object AtomicTable {
   // becomes "PUT the next commit object if absent" (If-None-Match: * /
   // if-generation-match: 0), the loser's 412 is the lost race, and the
   // optimistic retry loops above are unchanged — they already assume
-  // the base version can move between stage and commit. The
-  // cross-process branch is proven under real two-JVM contention in
-  // CrossProcessLockSpec (r14 verdict #1).
+  // the base version can move between stage and commit. Two JVMs
+  // contending on one table serialize only through this OS lock
+  // (CrossProcessLockSpec).
   private val jvmLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
@@ -106,32 +122,57 @@ object AtomicTable {
       finally stream.close() // directory streams hold an fd until closed
     }
 
-  /** The pointer file's lines: line 1 is the live version name; any
-    * following `txn <appId> <version>` lines are the idempotent-writer
-    * watermark map ([[publishIdempotent]]). Keeping the txn map INSIDE
-    * the pointer makes {data visible, txn recorded} a SINGLE atomic
-    * rename — the Delta-log analog, where SetTransaction actions commit
-    * in the same log entry as the files they cover; any two-file scheme
-    * has a crash window that either loses a batch or double-applies it. */
-  private def pointerLines(base: String): Seq[String] = {
-    val ptr = Paths.get(base, Pointer)
-    if (!Files.exists(ptr)) Seq.empty
-    else Files.readString(ptr).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+  /** One parse of the `_CURRENT` commit record. Keeping the txn
+    * watermarks and the column mapping INSIDE the record that names the
+    * live version makes {data visible, txn recorded, schema mapped} a
+    * SINGLE atomic rename — the Delta-log analog, where SetTransaction and
+    * metaData actions commit in the same log entry as the files they
+    * cover; any two-file scheme has a crash window that loses a batch,
+    * double-applies it, or shows a version under the wrong names. `cols`
+    * is None when no mapping was ever created (identity). */
+  private final case class PointerRecord(version: Option[String],
+      txn: Map[String, Long], cols: Option[Seq[(String, String)]]) {
+    def dir(base: String): Option[String] = version.map(base + "/" + _)
+    def liveDir(base: String): String = dir(base).getOrElse(
+      throw new IllegalStateException(s"no published version at $base"))
+  }
+
+  private def readPointer(base: String): PointerRecord = {
+    val ptr = Paths.get(base, PointerFile)
+    val lines =
+      if (!Files.exists(ptr)) Seq.empty
+      else Files.readString(ptr).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    val txn = lines.drop(1).flatMap(_.split(' ') match {
+      case Array("txn", app, v) => v.toLongOption.map(app -> _)
+      case _                    => None
+    }).toMap
+    val cols = lines.drop(1).filter(_.startsWith("col ")).map { l =>
+      val e = l.substring(4)
+      val i = e.indexOf(' ')
+      require(i > 0 && i < e.length - 1, s"torn column-mapping line in $ptr: '$l'")
+      (e.substring(0, i), e.substring(i + 1))
+    }
+    PointerRecord(lines.headOption, txn, Some(cols).filter(_.nonEmpty))
+  }
+
+  /** Replace the commit record — caller must hold the commit lock. */
+  private def writePointerLocked(base: String, rec: PointerRecord): Unit = {
+    val lines = rec.version.toSeq ++
+      rec.txn.toSeq.sortBy(_._1).map { case (app, v) => s"txn $app $v" } ++
+      rec.cols.toSeq.flatten.map { case (p, l) => s"col $p $l" }
+    val root = Paths.get(base)
+    val tmp = root.resolve(PointerFile + ".tmp")
+    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
+    Files.move(tmp, root.resolve(PointerFile),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Live version directory, or None if never published. */
-  def resolve(base: String): Option[String] =
-    pointerLines(base).headOption.map(base + "/" + _)
+  def resolve(base: String): Option[String] = readPointer(base).dir(base)
 
   /** The committed idempotent-writer watermarks: appId → highest
     * transaction version ever committed for that app. */
-  def txnVersions(base: String): Map[String, Long] =
-    pointerLines(base).drop(1).flatMap { l =>
-      l.split(' ') match {
-        case Array("txn", app, v) => v.toLongOption.map(app -> _)
-        case _                    => None
-      }
-    }.toMap
+  def txnVersions(base: String): Map[String, Long] = readPointer(base).txn
 
   /** Highest committed transaction version for `appId`, if any. */
   def txnLatest(base: String, appId: String): Option[Long] =
@@ -147,8 +188,7 @@ object AtomicTable {
     * `keep >= 2` (retention is the crash-safe answer to read/prune races,
     * exactly as in transactional table formats). */
   def read(s: SparkSession, base: String): DataFrame =
-    s.read.parquet(resolve(base).getOrElse(
-      throw new IllegalStateException(s"no published version at $base")))
+    s.read.parquet(readPointer(base).liveDir(base))
 
   private val Log = "_LOG"
 
@@ -209,8 +249,8 @@ object AtomicTable {
     // the parquet writer's overwrite): pruning judges in-flight-ness by
     // this marker's mtime, not the version dir's — a Spark job that
     // stages in _temporary for longer than OrphanTtlMs never refreshes
-    // the top-level dir mtime, and r5's mtime-based reaping could kill a
-    // live hour-long write. The daemon re-touches it every TTL/4, so the
+    // the top-level dir mtime, so dir-mtime reaping would kill a live
+    // hour-long write. The daemon re-touches it every TTL/4, so the
     // marker goes stale only when the writing JVM actually died.
     val claim = root.resolve(name + "._claim")
     Files.writeString(claim, java.lang.Long.toString(System.currentTimeMillis()))
@@ -263,54 +303,41 @@ object AtomicTable {
     }
 
   /** Body of a version commit — caller must hold the commit lock. The
-    * pointer swap CARRIES FORWARD the committed txn watermark map (and
-    * merges in `txn`, keeping the max per app), so idempotent-writer
-    * state survives ordinary publishes and commits atomically with the
-    * data it covers. */
+    * record swap CARRIES FORWARD the committed txn watermark map (merging
+    * in `txn`, keeping the max per app) and the column mapping (replaced
+    * by `cols` when given), so both survive ordinary publishes and commit
+    * atomically with the data they cover. */
   private def commitVersionLocked(base: String, name: String, keep: Int,
-      txn: Option[(String, Long)] = None): Unit = {
+      txn: Option[(String, Long)] = None,
+      cols: Option[Seq[(String, String)]] = None): Unit = {
     val root = Paths.get(base)
-    val claim = root.resolve(name + "._claim")
-    locally {
-      val prevTxn = txnVersions(base)
-      val merged = txn.fold(prevTxn) { case (app, v) =>
-        prevTxn.updated(app, math.max(v, prevTxn.getOrElse(app, Long.MinValue)))
-      }
-      val content = (name +: merged.toSeq.sortBy(_._1)
-        .map { case (app, v) => s"txn $app $v" }).mkString("", "\n", "\n")
-      val tmp = root.resolve(Pointer + ".tmp")
-      Files.writeString(tmp, content)
-      Files.move(tmp, root.resolve(Pointer),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      // lineage append — rewritten whole + atomic move under the commit
-      // lock (metadata only; a crash here costs time-travel history,
-      // never the live table). The log is the PUBLISHED SET: re-committing
-      // an already-logged version (a snapshot-refresh retry, or
-      // restoreSnapshot re-pointing members at historical versions) must
-      // not append a duplicate line — a duplicate would shrink
-      // pruneLocked's takeRight(keep) retention tail and prematurely
-      // prune the previous version out from under the keep contract.
-      val logPath = root.resolve(Log)
-      val prevLog = if (Files.exists(logPath)) Files.readString(logPath) else ""
-      if (!prevLog.linesIterator.map(_.trim).contains(name)) {
-        val logTmp = root.resolve(Log + ".tmp")
-        Files.writeString(logTmp, prevLog + name + "\n")
-        Files.move(logTmp, logPath,
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
-      // only after the new version is live: prune published versions that
-      // aged out of the retention tail (in the log — immutable, never
-      // in-flight), and unpublished dirs only once older than OrphanTtlMs
-      // (they may be a concurrent writer's claim mid-write; cf. the VACUUM
-      // retention window). Best-effort; failure strands disk, not
-      // correctness.
-      // committed: the claim marker is cleanup, not correctness — a
-      // transient IO failure here must not fail a publish whose pointer
-      // swap is already live (the orphan pruner reaps it after the TTL)
-      try Files.deleteIfExists(claim)
-      catch { case _: java.io.IOException => () }
-      pruneLocked(base, keep)
+    val prev = readPointer(base)
+    val merged = txn.fold(prev.txn) { case (app, v) =>
+      prev.txn.updated(app, math.max(v, prev.txn.getOrElse(app, Long.MinValue)))
     }
+    writePointerLocked(base, PointerRecord(Some(name), merged, cols.orElse(prev.cols)))
+    // lineage append — rewritten whole + atomic move under the commit
+    // lock (metadata only; a crash here costs time-travel history,
+    // never the live table). The log is the PUBLISHED SET: re-committing
+    // an already-logged version (a snapshot-refresh retry, or
+    // restoreSnapshot re-pointing members at historical versions) must
+    // not append a duplicate line — a duplicate would shrink
+    // pruneLocked's takeRight(keep) retention tail and prematurely
+    // prune the previous version out from under the keep contract.
+    val logPath = root.resolve(Log)
+    val prevLog = if (Files.exists(logPath)) Files.readString(logPath) else ""
+    if (!prevLog.linesIterator.map(_.trim).contains(name)) {
+      val logTmp = root.resolve(Log + ".tmp")
+      Files.writeString(logTmp, prevLog + name + "\n")
+      Files.move(logTmp, logPath,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+    // committed: the claim marker is cleanup, not correctness — a
+    // transient IO failure here must not fail a publish whose pointer
+    // swap is already live (the orphan pruner reaps it after the TTL)
+    try Files.deleteIfExists(root.resolve(name + "._claim"))
+    catch { case _: java.io.IOException => () }
+    pruneLocked(base, keep)
   }
 
   /** The retention sweep shared by [[commitVersion]] and [[vacuum]] —
@@ -318,7 +345,7 @@ object AtomicTable {
     * `keep` newest are removed immediately (immutable, never in-flight)
     * UNLESS an enclosing snapshot root's retained manifests still name
     * them ([[snapshotPinned]] — a `vacuum(member, keep=1)` must never
-    * delete a version a committed `_SNAPSHOT` resolves to, or
+    * delete a version a committed snapshot resolves to, or
     * [[readSnapshotTables]] would throw on a "committed" snapshot);
     * unpublished dirs only once their claim heartbeat (falling back to
     * dir mtime for pre-claim-era or hand-made dirs) is older than
@@ -362,7 +389,6 @@ object AtomicTable {
 
   // -------------------------------------- multi-table snapshot commits
 
-  private val Snapshot = "_SNAPSHOT"
   private val SnapshotsDir = "_snapshots"
   private val SnapRe = "sn_(\\d+)".r
 
@@ -380,7 +406,7 @@ object AtomicTable {
   }
 
   /** Manifest lines are `<table-rel-path> <version>`; malformed lines
-    * (no separator — a torn hand-edit, or a FOREIGN `_SNAPSHOT` file
+    * (no separator — a torn hand-edit, or a FOREIGN `_snapshots/` file
     * adopted by [[snapshotPinned]]'s ancestor walk) are SKIPPED, not
     * thrown on: a parse error propagating out of pruneLocked would fail
     * every publish under that subtree. */
@@ -392,10 +418,10 @@ object AtomicTable {
     }.toMap
 
   /** Member-table versions pinned by an enclosing snapshot root: walk up
-    * from the table directory to the nearest ancestor carrying snapshot
-    * state (`_SNAPSHOT` pointer or `_snapshots/` history), and collect
-    * every version that any RETAINED manifest (live + history) names for
-    * this table's relative path. These versions must survive any
+    * from the table directory to the nearest ancestor carrying a
+    * `_snapshots/` directory, and collect every version that any RETAINED
+    * manifest (the live one is the newest) names for this table's
+    * relative path. These versions must survive any
     * retention sweep — per-table `vacuum`/`commitVersion` maintenance
     * must never break a committed snapshot read. Manifest files are
     * written with atomic moves, so the lock-free reads here see only
@@ -408,8 +434,7 @@ object AtomicTable {
     var rel: String = abs.getFileName.toString
     var root: Path = null
     while (anc != null && root == null) {
-      if (Files.exists(anc.resolve(Snapshot)) ||
-          Files.isDirectory(anc.resolve(SnapshotsDir))) root = anc
+      if (Files.isDirectory(anc.resolve(SnapshotsDir))) root = anc
       else {
         val fn = anc.getFileName
         if (fn == null) anc = null
@@ -417,10 +442,9 @@ object AtomicTable {
       }
     }
     if (root == null) return Set.empty
-    val manifests = Seq(root.resolve(Snapshot)) ++
-      snapshotIds(root).map(n => root.resolve(SnapshotsDir).resolve(s"sn_$n"))
-    manifests.flatMap { m =>
-      val text = try Files.readString(m)
+    val snDir = root.resolve(SnapshotsDir)
+    snapshotIds(root).flatMap { n =>
+      val text = try Files.readString(snDir.resolve(s"sn_$n"))
         catch { case _: java.io.IOException => "" }
       parseManifest(text).get(rel)
     }.toSet
@@ -439,10 +463,11 @@ object AtomicTable {
     * sidecar retention comparing commit base versions against pins. */
   private[graft] def versionNumOf(name: String): Long = versionNum(name)
 
-  /** Commit a MULTI-TABLE transaction: one atomic pointer swap of the
-    * snapshot manifest at `root/_SNAPSHOT` — a file naming every member
-    * table's (already-staged, [[stageVersion]]) version — makes the whole
-    * set visible at once, the cross-table analog of `_CURRENT` (the
+  /** Commit a MULTI-TABLE transaction: one atomic rename of the next
+    * snapshot manifest `root/_snapshots/sn_<N>` — a file naming every
+    * member table's (already-staged, [[stageVersion]]) version — makes
+    * the whole set visible at once, because the highest retained `sn_<N>`
+    * IS the live snapshot: the cross-table analog of `_CURRENT` (the
     * Delta-log `txn` / Iceberg snapshot shape). A reader that resolves
     * the snapshot ([[resolveSnapshot]]/[[readSnapshot]]) therefore sees
     * only a complete OLD set or a complete NEW set, never a mix — the
@@ -458,8 +483,7 @@ object AtomicTable {
     * same retention answer transactional formats give the read/prune
     * race).
     *
-    * Every commit is also LOGGED as an immutable manifest under
-    * `root/_snapshots/sn_<N>` — the transaction-level lineage
+    * The older manifests are the transaction-level lineage
     * ([[snapshotHistory]] / [[readSnapshotTablesAt]] are the `DESCRIBE
     * HISTORY` / `VERSION AS OF` analogs at snapshot grain). The `keep`
     * newest manifests are retained; each retained manifest PINS its
@@ -476,16 +500,11 @@ object AtomicTable {
       val snDir = rootP.resolve(SnapshotsDir)
       Files.createDirectories(snDir)
       val next = snapshotIds(rootP).maxOption.getOrElse(0L) + 1L
-      // history manifest first (immutable once moved), then the live
-      // pointer swap — a crash between the two leaves a history entry the
-      // NEXT commit numbers past; readers of either file are never torn
-      val htmp = snDir.resolve(s"h$next.tmp")
-      Files.writeString(htmp, content)
-      Files.move(htmp, snDir.resolve(s"sn_$next"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      val tmp = rootP.resolve(Snapshot + ".tmp")
+      // this move is the commit: readers list the directory and take the
+      // highest id, and a manifest is never torn (tmp + rename)
+      val tmp = snDir.resolve(s"h$next.tmp")
       Files.writeString(tmp, content)
-      Files.move(tmp, rootP.resolve(Snapshot),
+      Files.move(tmp, snDir.resolve(s"sn_$next"),
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       // snapshot-level retention: dropping an aged-out manifest is what
       // UN-pins its member versions — the next per-table sweep reclaims
@@ -564,11 +583,19 @@ object AtomicTable {
     }.toMap
   }
 
-  /** The live snapshot's table → version map, or None if never committed. */
+  /** The live snapshot's table → version map (the highest retained
+    * manifest), or None if never committed. A manifest pruned between the
+    * listing and the read was superseded by newer commits, so the lookup
+    * lists again — it never falls back to an older id. */
   def resolveSnapshot(root: String): Option[Map[String, String]] = {
-    val p = Paths.get(root, Snapshot)
-    if (!Files.exists(p)) None
-    else Some(parseManifest(Files.readString(p)))
+    val rootP = Paths.get(root)
+    snapshotIds(rootP).maxOption.flatMap { n =>
+      val read =
+        try Some(parseManifest(Files.readString(
+          rootP.resolve(SnapshotsDir).resolve(s"sn_$n"))))
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      read.orElse(resolveSnapshot(root))
+    }
   }
 
   /** Read `table` at the version pinned by ONE resolution of the live
@@ -631,13 +658,15 @@ object AtomicTable {
       if (Files.isDirectory(p)) {
         Files.createDirectories(to)
         linkFilesInto(p, to.toString)
-      } else if (Files.isRegularFile(p)) {
-        try Files.createLink(to, p)
-        catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-          Files.copy(p, to) }
-      }
+      } else if (Files.isRegularFile(p)) linkOrCopy(p, to)
     }
   }
+
+  /** Hardlink `from` at `to`, copying where the filesystem refuses links. */
+  private[graft] def linkOrCopy(from: Path, to: Path): Unit =
+    try Files.createLink(to, from)
+    catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+      Files.copy(from, to) }
 
   /** SHALLOW CLONE: publish the LIVE version of `src` as a brand-new
     * table at `dst` — zero data copied (hardlinks, the local-FS analog of
@@ -648,16 +677,19 @@ object AtomicTable {
     * pruned source version loses only its own directory entries while the
     * clone's links keep the shared inodes alive (stronger than Delta's
     * shallow clone, which a source VACUUM can orphan). Snapshot of NOW:
-    * later source versions are invisible to the clone by construction. */
+    * later source versions are invisible to the clone by construction.
+    * The LOGICAL schema is table metadata and clones with the data: the
+    * clone's first version and the source's column mapping commit in one
+    * record swap, so the clone is never visible under physical names. */
   def cloneTable(src: String, dst: String, keep: Int = 1): Unit = {
-    val from = resolve(src).getOrElse(
+    val from = readPointer(src)
+    val fromDir = from.dir(src).getOrElse(
       throw new IllegalStateException(s"no published version at $src to clone"))
     require(!exists(dst), s"clone target $dst already has a published version")
-    publish(dst, keep)(linkFilesInto(Paths.get(from), _))
-    // the LOGICAL schema is table metadata and must clone with the data —
-    // a clone that reverted to physical names would be a silent rename
-    columnMapping(src).foreach(m =>
-      withCommitLock(Paths.get(dst))(writeColMapLocked(dst, m)))
+    val name = stageVersion(dst)(linkFilesInto(Paths.get(fromDir), _))
+    withCommitLock(Paths.get(dst)) {
+      commitVersionLocked(dst, name, keep, cols = from.cols)
+    }
   }
 
   /** A constraint-refused publish: carries per-constraint violating-row
@@ -923,55 +955,42 @@ object AtomicTable {
 
   // ------------------------------------------------ column mapping
 
-  private val ColMapFile = "_COLMAP"
-
   /** The COLUMN-MAPPING layer — Delta's `columnMapping.mode = name`
     * feature: logical column names live in table METADATA, physical
     * names live in the immutable parquet files, and `RENAME COLUMN` /
     * `DROP COLUMN` are O(1) metadata swaps — never a table rewrite. At
     * 100 TB a rename that rewrites the corpus is an outage; this is the
-    * difference. The map is lines `<physical> <logical>` in `_COLMAP`
-    * (atomic-rename swapped under the commit lock, like every pointer
-    * here); a DROPPED column keeps its line with the reserved logical
-    * name `-` (a TOMBSTONE — appends must still fill the physical slot,
-    * or old and new files would stop sharing a footer schema and the
-    * un-merged version read would silently lose columns). Absent file =
-    * identity.
+    * difference. The map is the `col <physical> <logical>` lines of the
+    * `_CURRENT` record, in column order; every version commit carries it
+    * forward, and a mapping change rewrites the record under the commit
+    * lock with the SAME version (no `_LOG` line, no prune). A DROPPED
+    * column keeps its line with the reserved logical name `-` (a
+    * TOMBSTONE — appends must still fill the physical slot, or old and
+    * new files would stop sharing a footer schema and the un-merged
+    * version read would silently lose columns). No lines = identity.
     * Mapped reads go through [[readMapped]]; appends translate logical →
     * physical via [[toPhysical]] so new files keep the PHYSICAL schema
     * and old and new files stay interchangeable. The mapping is NOT a
-    * closed column universe (r13 verdict #2): a schema-EVOLVING write
-    * passes its new columns through [[toPhysical]] untouched (identity
-    * physical name), and the next [[readMapped]] AUTO-EXTENDS the map
-    * with identity entries for any physical column the live schema
-    * carries beyond the map — the same maintained-access pattern as the
-    * change-feed layout migration, under the same commit lock — so an
-    * evolved column can never be silently invisible. Name collisions
-    * (a new column named like an existing physical slot or logical name)
-    * reject loudly rather than aliasing two columns onto one name. */
-  def columnMapping(base: String): Option[Seq[(String, String)]] = {
-    val p = Paths.get(base, ColMapFile)
-    if (!Files.exists(p)) None
-    else Some(Files.readString(p).linesIterator.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf(' ')
-      require(i > 0 && i < l.length - 1, s"torn _COLMAP line: '$l'")
-      (l.substring(0, i), l.substring(i + 1))
-    }.toSeq)
-  }
+    * closed column universe: a schema-EVOLVING write passes its new
+    * columns through [[toPhysical]] untouched (identity physical name),
+    * and the next [[readMapped]] AUTO-EXTENDS the map with identity
+    * entries for any physical column the live schema carries beyond the
+    * map, so an evolved column can never be silently invisible. Name
+    * collisions (a new column named like an existing physical slot or
+    * logical name) reject loudly rather than aliasing two columns onto
+    * one name. */
+  def columnMapping(base: String): Option[Seq[(String, String)]] =
+    readPointer(base).cols
 
-  private def writeColMapLocked(base: String, entries: Seq[(String, String)]): Unit = {
-    val root = Paths.get(base)
-    val tmp = root.resolve(ColMapFile + ".tmp")
-    Files.writeString(tmp,
-      entries.map { case (p, l) => s"$p $l" }.mkString("", "\n", "\n"))
-    Files.move(tmp, root.resolve(ColMapFile),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  /** The commit record plus its mapping, materialized from the live
+    * version's physical schema on first use (identity). Caller holds the
+    * commit lock. */
+  private def mappingLocked(s: SparkSession, base: String)
+      : (PointerRecord, Seq[(String, String)]) = {
+    val rec = readPointer(base)
+    (rec, rec.cols.getOrElse(
+      s.read.parquet(rec.liveDir(base)).columns.toSeq.map(c => (c, c))))
   }
-
-  /** Current mapping, materialized from the live version's physical
-    * schema on first use (identity). Caller holds the commit lock. */
-  private def colMapOrInit(s: SparkSession, base: String): Seq[(String, String)] =
-    columnMapping(base).getOrElse(read(s, base).columns.toSeq.map(c => (c, c)))
 
   /** `ALTER TABLE ... RENAME COLUMN from TO to` — metadata-only: no
     * version publish, no Spark job, no file touched. `from` is the
@@ -980,13 +999,13 @@ object AtomicTable {
     withCommitLock(Paths.get(base)) {
       require(to != "-" && !to.exists(_.isWhitespace),
         s"'$to' is not a legal logical column name")
-      val m = colMapOrInit(s, base)
+      val (rec, m) = mappingLocked(s, base)
       require(m.exists(_._2 == from), s"no column '$from' at $base " +
         s"(logical columns: ${m.map(_._2).filter(_ != "-").mkString(",")})")
       require(!m.exists(_._2 == to), s"column '$to' already exists at $base")
-      writeColMapLocked(base, m.map { case (p, l) =>
+      writePointerLocked(base, rec.copy(cols = Some(m.map { case (p, l) =>
         (p, if (l == from) to else l)
-      })
+      })))
     }
 
   /** `ALTER TABLE ... DROP COLUMN` — metadata-only: the physical column
@@ -994,50 +1013,50 @@ object AtomicTable {
     * stop projecting it. */
   def dropColumn(s: SparkSession, base: String, name: String): Unit =
     withCommitLock(Paths.get(base)) {
-      val m = colMapOrInit(s, base)
+      val (rec, m) = mappingLocked(s, base)
       require(m.exists(_._2 == name), s"no column '$name' at $base")
       require(m.count(_._2 != "-") > 1, s"cannot drop the last column of $base")
-      writeColMapLocked(base, m.map { case (p, l) =>
+      writePointerLocked(base, rec.copy(cols = Some(m.map { case (p, l) =>
         (p, if (l == name) "-" else l) // tombstone, not removal
-      })
+      })))
     }
 
-  /** The mapped read: live version, logical schema. Identity when no
-    * mapping was ever created. Maintained access: physical columns a
-    * schema-evolving append added AFTER the mapping was created are
-    * auto-registered with identity entries (persisted under the commit
-    * lock) before projecting — without this, the closed map would make
-    * evolved columns silently invisible, a wrong-answer class. The scan
-    * reconciles footers (`mergeSchema`) because after an evolving append
-    * old and new files legitimately disagree on schema, and which footer
-    * a plain read samples is nondeterministic. */
+  /** The mapped read: live version, logical schema, both taken from ONE
+    * read of the commit record. Identity when no mapping was ever
+    * created. Maintained access: physical columns a schema-evolving
+    * append added AFTER the mapping was created are auto-registered with
+    * identity entries (persisted under the commit lock) before
+    * projecting — without this, the closed map would make evolved columns
+    * silently invisible, a wrong-answer class. If the record moved
+    * between the read and the lock, the read starts over against the new
+    * record. The scan reconciles footers (`mergeSchema`) because after an
+    * evolving append old and new files legitimately disagree on schema,
+    * and which footer a plain read samples is nondeterministic. */
   def readMapped(s: SparkSession, base: String): DataFrame = {
-    columnMapping(base) match {
-      case None => read(s, base)
+    val rec = readPointer(base)
+    rec.cols match {
+      case None => s.read.parquet(rec.liveDir(base))
       case Some(m0) =>
-        val df = s.read.option("mergeSchema", "true").parquet(
-          resolve(base).getOrElse(throw new IllegalStateException(
-            s"no published version at $base")))
-        val evolved = df.columns.filterNot(m0.map(_._1).toSet)
-        val m = if (evolved.isEmpty) m0
-        else withCommitLock(Paths.get(base)) {
-          // re-read under the lock: a concurrent maintained read may have
-          // extended the map already (idempotent either way)
-          val cur = columnMapping(base).getOrElse(m0)
-          val curPhys = cur.map(_._1).toSet
-          val curLogical = cur.filter(_._2 != "-").map(_._2).toSet
-          val add = df.columns.filterNot(curPhys).map { c =>
-            require(!curLogical(c), s"evolved physical column '$c' at " +
-              s"$base collides with an existing logical column name — " +
-              "rename the logical column first, then re-read")
-            (c, c)
-          }.toSeq
-          if (add.nonEmpty) writeColMapLocked(base, cur ++ add)
-          cur ++ add
+        val df = s.read.option("mergeSchema", "true").parquet(rec.liveDir(base))
+        val add = df.columns.filterNot(m0.map(_._1).toSet).toSeq
+        val logical = m0.map(_._2).filter(_ != "-").toSet
+        add.foreach(c => require(!logical(c), s"evolved physical column '$c' at " +
+          s"$base collides with an existing logical column name — " +
+          "rename the logical column first, then re-read"))
+        val mapped = if (add.isEmpty) Some(m0) else withCommitLock(Paths.get(base)) {
+          if (readPointer(base) != rec) None
+          else {
+            val extended = m0 ++ add.map(c => (c, c))
+            writePointerLocked(base, rec.copy(cols = Some(extended)))
+            Some(extended)
+          }
         }
-        df.select(m.filter(_._2 != "-").map { case (p, l) =>
-          org.apache.spark.sql.functions.col(p).as(l)
-        }: _*)
+        mapped match {
+          case None => readMapped(s, base)
+          case Some(m) => df.select(m.filter(_._2 != "-").map { case (p, l) =>
+            org.apache.spark.sql.functions.col(p).as(l)
+          }: _*)
+        }
     }
   }
 
@@ -1050,15 +1069,18 @@ object AtomicTable {
     * through under their own (identity-physical) name — the next
     * [[readMapped]] registers them — unless the name collides with an
     * existing physical slot of a DIFFERENT logical column, which would
-    * silently fuse two columns and is refused loudly. */
-  def toPhysical(df: DataFrame, base: String): DataFrame =
-    columnMapping(base) match {
+    * silently fuse two columns and is refused loudly. The mapping and
+    * the version whose schema types the dropped slots come from one read
+    * of the commit record. */
+  def toPhysical(df: DataFrame, base: String): DataFrame = {
+    val rec = readPointer(base)
+    rec.cols match {
       case None => df
       case Some(m) =>
         val logical = df.columns.toSet
         // dropped slots need their PHYSICAL type (parquet refuses
         // NullType); take it from the live version's schema
-        val phys = read(df.sparkSession, base).schema
+        val phys = df.sparkSession.read.parquet(rec.liveDir(base)).schema
           .map(f => f.name -> f.dataType).toMap
         val mappedLogical = m.map(_._2).toSet
         val extras = df.columns.filterNot(mappedLogical).toSeq
@@ -1072,6 +1094,7 @@ object AtomicTable {
           else org.apache.spark.sql.functions.lit(null).cast(phys(p)).as(p)
         } ++ extras.map(org.apache.spark.sql.functions.col): _*)
     }
+  }
 
   /** Standalone retention maintenance — the `VACUUM` verb: prune
     * published versions beyond the `keep` newest plus crashed-orphan

@@ -2,16 +2,19 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.GraftSink
+import graft.util.AtomicTable
 
 /** Transactional-write-protocol contracts of [[graft.sources.GraftSink]]
   * that the differential gate's happy-path roundtrip cannot see: abort
   * leaves nothing readable, stray files are invisible, a second append
-  * lands atomically in the manifest, and staging never leaks into reads.
+  * lands atomically in the live version, and staging never leaks into
+  * reads.
   */
 class AtomicSinkSpec extends AnyFunSuite {
   import TestSpark._
@@ -24,6 +27,29 @@ class AtomicSinkSpec extends AnyFunSuite {
     }
     Files.createDirectories(p)
     p.toString
+  }
+
+  private def names(dir: Path): Seq[String] = {
+    val st = Files.list(dir)
+    try st.iterator().asScala.map(_.getFileName.toString).toSeq finally st.close()
+  }
+
+  /** The `.jsonl` files of the sink's live version (none when unpublished). */
+  private def liveFiles(dir: String): Seq[String] =
+    AtomicTable.resolve(dir).toSeq.flatMap(v => names(Paths.get(v)))
+      .filter(_.endsWith(".jsonl"))
+
+  /** Every version dir on disk is published, no claim marker is left,
+    * and the staging area is empty. */
+  private def assertNoStagedLeft(dir: String): Unit = {
+    val top = names(Paths.get(dir))
+    assert(!top.exists(_.endsWith("._claim")), s"claim marker leaked: $top")
+    val published = AtomicTable.history(dir).toSet
+    val staged = top.filter(_.matches("_v\\d+")).filterNot(published)
+    assert(staged.isEmpty, s"staged version left: $staged")
+    val staging = Paths.get(dir, ".staging")
+    assert(!Files.exists(staging) || names(staging).isEmpty,
+      s"staged task files left: ${names(staging)}")
   }
 
   private def sample = Tables.orders(spark, sf)
@@ -53,9 +79,7 @@ class AtomicSinkSpec extends AnyFunSuite {
     df.write.format("graft.sources.GraftSink").option("path", dir).mode("append").save()
     val back = GraftSink.readBack(spark, dir, df.schema)
     assert(back.count() == 2 * df.count())
-    val leftovers = Files.list(Paths.get(dir)).toArray.map(_.toString)
-      .filter(_.contains("_MANIFEST."))
-    assert(leftovers.isEmpty, s"temp manifest leaked: ${leftovers.mkString(",")}")
+    assertNoStagedLeft(dir)
   }
 
   test("two concurrent job commits both land in the manifest (no lost update)") {
@@ -74,18 +98,16 @@ class AtomicSinkSpec extends AnyFunSuite {
       }.toArray[org.apache.spark.sql.connector.write.WriterCommitMessage]
       new graft.sources.SinkBatchWrite(dir, schema, qid).commit(msgs)
     }
-    // race 8 committing jobs; without the commit lock the manifest's
-    // read-modify-write loses whole jobs (last rename wins)
+    // race 8 committing jobs; an append that staged against a superseded
+    // version and still committed would lose whole jobs (last swap wins)
     val threads = (0 until 8).map { i =>
       new Thread(() => commitOne(s"race$i", 3))
     }
     threads.foreach(_.start()); threads.foreach(_.join())
-    val mf = java.nio.file.Paths.get(dir, "_MANIFEST")
-    val files = new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).toSeq
+    val files = liveFiles(dir)
     assert(files.length == 24, s"all 8 jobs x 3 files must survive: ${files.length}")
     assert(GraftSink.readBack(spark, dir, schema).count() == 24)
-    assert(!Files.exists(java.nio.file.Paths.get(dir, "_COMMIT_LOCK")))
+    assertNoStagedLeft(dir)
   }
 
   test("aborted task leaves no staged file and nothing readable") {
@@ -114,8 +136,7 @@ class AtomicSinkSpec extends AnyFunSuite {
     val msg = w.commit() // closed with zero rows
     new graft.sources.SinkBatchWrite(dir, schema, "qempty")
       .commit(Array(msg))
-    val mf = Paths.get(dir, "_MANIFEST")
-    assert(Files.exists(mf))
-    assert(new String(Files.readAllBytes(mf), StandardCharsets.UTF_8).trim.isEmpty)
+    assert(AtomicTable.resolve(dir).isDefined, "the job commit must publish")
+    assert(liveFiles(dir).isEmpty)
   }
 }

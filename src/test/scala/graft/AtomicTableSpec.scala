@@ -407,4 +407,51 @@ class AtomicTableSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException] { AtomicTable.cloneTable(base, dst) }
   }
+
+  test("every mutation commits through _CURRENT, _LOG or a snapshot manifest: no sidecar commit files") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_tripwire")
+    val base = tmp.resolve("t").toString
+    def two(n: Int) = (1 to n).map(i => (i, i * 2)).toDF("x", "z")
+    AtomicTable.overwrite(two(3), base, keep = 2)
+    assert(AtomicTable.appendIdempotent(base, "app", 1L, keep = 2)(dir =>
+      two(2).write.mode("append").parquet(dir)))
+    AtomicTable.renameColumn(spark, base, "x", "y")
+    AtomicTable.dropColumn(spark, base, "z")
+    val clone = tmp.resolve("clone").toString
+    AtomicTable.cloneTable(base, clone)
+    assert(AtomicTable.readMapped(spark, clone).columns.toSeq == Seq("y"))
+    assert(AtomicTable.readMapped(spark, base).count() == 5)
+    assert(AtomicTable.txnLatest(base, "app").contains(1L))
+
+    val root = tmp.resolve("lake").toString
+    val members = Seq("a", "b").map { t =>
+      t -> AtomicTable.stageVersion(s"$root/$t")(dir =>
+        df(4).write.mode("overwrite").parquet(dir))
+    }
+    AtomicTable.commitSnapshot(root, members)
+    assert(AtomicTable.readSnapshotTables(spark, root, Seq("a", "b"))
+      .values.map(_.count()).sum == 8)
+
+    val sink = tmp.resolve("sink").toString
+    df(6).write.format("graft.sources.GraftSink").option("path", sink)
+      .mode("append").save()
+    assert(graft.sources.GraftSink.readBack(spark, sink, df(1).schema).count() == 6)
+
+    def topFiles(d: String): Seq[String] = {
+      val st = Files.list(Paths.get(d))
+      try st.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString).toSeq
+      finally st.close()
+    }
+    val allowed = Set("_CURRENT", "_LOG", "_LOCK", "_APPEND_LOCK")
+    Seq(base, clone, s"$root/a", s"$root/b", sink).foreach { d =>
+      val files = topFiles(d)
+      assert(!files.exists(_.endsWith("._claim")), s"claim left at $d: $files")
+      assert(files.toSet.subsetOf(allowed),
+        s"sidecar commit files at $d: ${files.filterNot(allowed).mkString(",")}")
+    }
+    assert(!topFiles(root).contains("_SNAPSHOT"),
+      "the newest _snapshots/sn_N is the live snapshot; no second pointer")
+  }
 }

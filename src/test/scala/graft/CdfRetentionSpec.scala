@@ -16,8 +16,8 @@ import graft.util.AtomicTable
   * `keepCommits` and in-window reads survive it; (2) reads below the
   * vacuumed floor refuse with a precise message; (3) snapshot pins extend
   * retention (a commit whose base version a retained manifest still names
-  * is never swept); (4) the legacy flat layout migrates IN PLACE —
-  * O(feed), no re-merge, no table rebuild. */
+  * is never swept); (4) a legacy flat layout (data files without the
+  * commit prefix) is refused loudly instead of read. */
 class CdfRetentionSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -103,30 +103,25 @@ class CdfRetentionSpec extends AnyFunSuite {
     assert(MergeOnRead.changeCommits(base) == Seq(1L, 2L, 3L))
   }
 
-  test("legacy flat layout migrates in place: no re-merge, same rows") {
+  test("a legacy flat layout is refused loudly") {
     val base = stage("migrate")
     merge(base, 5, 1L); merge(base, 7, 2L)
-    val want = MergeOnRead.readChanges(spark, base)
-      .orderBy("_commit_version", "o_orderkey").collect().toSeq
     // demote the feed to the v1 layout: strip the c<v>- prefixes and the
-    // hidden markers — exactly what an r12-era store looks like on disk
+    // hidden markers — a feed whose files name no commit
     val dir = Paths.get(MergeOnRead.changesPath(base))
     feedFiles(base).foreach { n =>
       if (n.startsWith("_")) Files.delete(dir.resolve(n))
       else Files.move(dir.resolve(n), dir.resolve(n.replaceFirst("^c\\d+-", "")))
     }
     assert(feedFiles(base).forall(n => !n.matches("c\\d+-.*")), "fixture is v1")
+    val before = feedFiles(base).sorted
 
-    val got = MergeOnRead.readChanges(spark, base) // migrate-on-first-read
-      .orderBy("_commit_version", "o_orderkey").collect().toSeq
-    assert(got == want, "migration must preserve every change row")
-    val after = feedFiles(base)
-    assert(after.filterNot(_.startsWith("_")).forall(_.matches("c\\d+-.*")),
-      s"every live file must carry the commit prefix after migration: $after")
-    // and it is idempotent: a second read migrates nothing
-    assert(!MergeOnRead.migrateChangesLayout(spark, base))
-    // the migrated feed is immediately sweepable
-    assert(MergeOnRead.vacuumChanges(base, keepCommits = 1) == 1)
-    assert(MergeOnRead.changeCommits(base) == Seq(2L))
+    val e = intercept[IllegalArgumentException] {
+      MergeOnRead.readChanges(spark, base)
+    }
+    before.filterNot(_.startsWith("_")).foreach { n =>
+      assert(e.getMessage.contains(n), s"message must name $n: ${e.getMessage}")
+    }
+    assert(feedFiles(base).sorted == before, "a refused read must not touch the feed")
   }
 }

@@ -7,12 +7,12 @@ import graft.util.AtomicTable
 /** Child-JVM driver for [[CrossProcessLockSpec]] — the SECOND PROCESS
   * the `_LOCK`/`_APPEND_LOCK` file locks exist for. Inside one JVM the
   * per-table object monitor serializes writers first and the OS
-  * `FileChannel` lock never contends (the r14 "wrong #1" finding: every
-  * prior stress test was single-JVM); this main is launched via
-  * ProcessBuilder on the test classpath so the file-lock branch finally
-  * runs under real cross-process contention. No SparkSession — the
-  * commit protocol is pure file IO, so the child stays sub-second to
-  * start and the contention window is tight.
+  * `FileChannel` lock never contends, so a single-JVM stress test never
+  * exercises it; this main is launched via ProcessBuilder on the test
+  * classpath so the file-lock branch runs under real cross-process
+  * contention. No SparkSession — the commit protocol is pure file IO, so
+  * the child stays sub-second to start and the contention window is
+  * tight.
   *
   * Modes:
   *  - `append <base> <appId> <nBatches> <keep> <expect>` — idempotent
@@ -26,6 +26,12 @@ import graft.util.AtomicTable
   *    this to force a deterministic lost-race on each lock file and
   *    prove the other side BLOCKS until release (never errors, never
   *    proceeds early).
+  *  - `sink <dir> <qid> <rows> <base>` — one GraftSink job driven through
+  *    `SinkWriterFactory`/`SinkBatchWrite` directly: four tasks write the
+  *    values `base … base+rows-1` to column `k`, the child prints
+  *    `STAGED`, then commits the job and prints `COMMITTED`. The parent
+  *    kills it at a seeded moment to inject a crash anywhere in the job
+  *    commit.
   */
 object LockChild {
 
@@ -63,6 +69,23 @@ object LockChild {
       Thread.sleep(holdMs.toLong)
       l.release(); ch.close()
       println("RELEASED")
+
+    case "sink" =>
+      val Array(_, dir, qid, rows, base) = args
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType)))
+      val factory = new graft.sources.SinkWriterFactory(dir, schema, qid)
+      val tasks = 4
+      val msgs = (0 until tasks).map { p =>
+        val w = factory.createWriter(p, p.toLong)
+        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+        var v = base.toLong + p
+        while (v < base.toLong + rows.toLong) { row.setLong(0, v); w.write(row); v += tasks }
+        w.commit()
+      }.toArray[org.apache.spark.sql.connector.write.WriterCommitMessage]
+      println("STAGED"); System.out.flush()
+      new graft.sources.SinkBatchWrite(dir, schema, qid).commit(msgs)
+      println("COMMITTED")
 
     case other =>
       System.err.println(s"unknown mode $other"); sys.exit(2)
