@@ -80,11 +80,13 @@ object Bench {
     // build on a miss and is a cheap parquet read on a hit — makes the cold
     // pass measure what a cold SESSION pays, not the once-per-corpus build.
     // The staged demo tables are skipped when their stamped source
-    // fingerprint matches. The bucketed tables live in the session CATALOG
-    // (bucket spec needs saveAsTable), so staging them keeps the catalog
-    // entry across SessionCaches.clear. The stateful-streaming prewarm
-    // loads the RocksDB JNI and state-store classes once per JVM, so the
-    // cold pass measures a cold session, not a cold JVM.
+    // fingerprint matches; all of them live under SilverArtifact.root.
+    // The bucketed tables are catalog entries (a bucket spec needs
+    // saveAsTable) stamped with their path and both sources'
+    // fingerprints, so they survive SessionCaches.clear and re-bucket
+    // only when a source or the root changes. The stateful-streaming
+    // prewarm loads the RocksDB JNI and state-store classes once per JVM,
+    // so the cold pass measures a cold session, not a cold JVM.
     // a failed step would silently move its build cost into the cold pass
     def warm(step: String)(run: => Any): Unit =
       try run catch { case e: Throwable =>

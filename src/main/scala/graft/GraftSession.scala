@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   * scaladoc: shuffle partitions sized to the cluster (NOT the 200 default —
   * match cores locally, 2-3× total cores on a cluster), AQE on (runtime
   * coalescing + skew-join splitting), UTC session time zone (oracle/date
-  * parity), and the graft optimizer extensions injected.
+  * parity), the nanos-timestamp read conf, and the graft optimizer
+  * extensions injected. Sessions cloned with `newSession()` (the
+  * streaming clones) inherit every entry.
   */
 object GraftSession {
 
@@ -43,6 +45,8 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // reads a TIMESTAMP(NANOS) events.ts as a nanos BIGINT (Tables.eventsRaw)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
   }
 

@@ -37,14 +37,12 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   /** `events.ts` has shipped as parquet TIMESTAMP(NANOS) in some testdata
     * drops (Spark 4 refuses to read that natively — [PARQUET_TYPE_ILLEGAL]
-    * — so the legacy conf reads it as a raw nanos BIGINT) and as
-    * TIMESTAMP(MICROS) (→ TIMESTAMP_NTZ) in others. Read with the legacy
-    * conf enabled (a no-op for non-nanos files) and let [[normalizeTs]]
-    * adapt on the ACTUAL schema rather than bake in either vintage. */
-  def eventsRaw(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    table(s, d, "events")
-  }
+    * — so the legacy conf `spark.sql.legacy.parquet.nanosAsLong`, set once
+    * in [[GraftSession.builder]], reads it as a raw nanos BIGINT) and as
+    * TIMESTAMP(MICROS) (→ TIMESTAMP_NTZ) in others. [[normalizeTs]] adapts
+    * on the ACTUAL schema rather than bake in either vintage. A read never
+    * writes the session conf. */
+  def eventsRaw(s: SparkSession, d: String): DataFrame = table(s, d, "events")
 
   /** Normalize whatever physical type `ts` arrived as to TimestampType:
     * raw nanos BIGINT → integer-division truncation to micros (ns-since-

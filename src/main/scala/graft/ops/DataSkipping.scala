@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.Tables
-import graft.util.{AtomicTable, PathKeys}
+import graft.util.{AtomicTable, SilverArtifact}
 
 /** File-level data skipping over plain parquet — the scale feature a
   * transactional table format (Delta/Iceberg) would provide and this
@@ -229,10 +229,10 @@ object DataSkipping {
     * OPTIMIZE: the staged-once stamp (source part-file fingerprint) is
     * the metadata a table format would carry for its clustering state. */
   def zorderedLineitem(s: SparkSession, d: String): String = {
-    val base = s"/tmp/graft_skip/${PathKeys.safe(d)}/lineitem_z"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "skip/lineitem_z")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/lineitem.parquet", "zorder-v2-fname-pk-sk-32f")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       optimizedWrite(s, Tables.lineitem(s, d), base,
         clusterCols = Seq("l_partkey", "l_suppkey"),
         statsCols = Seq("l_partkey", "l_suppkey"),
@@ -244,10 +244,10 @@ object DataSkipping {
   /** orders range-clustered by o_orderdate, zone maps on the date, Bloom
     * on the scattered o_orderkey (the key zone maps CANNOT serve). */
   def dateClusteredOrders(s: SparkSession, d: String): String = {
-    val base = s"/tmp/graft_skip/${PathKeys.safe(d)}/orders_bydate"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "skip/orders_bydate")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/orders.parquet", "bydate-v2-fname-bloom-32f")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       optimizedWrite(s, Tables.orders(s, d)
         .withColumn("o_datekey",
           unix_date(col("o_orderdate").cast("date")).cast("long")), base,

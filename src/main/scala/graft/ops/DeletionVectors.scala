@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.{AtomicTable, PathKeys}
+import graft.util.{AtomicTable, SilverArtifact}
 
 /** Merge-on-read row deletes — deletion vectors, the mechanism modern
   * table formats (Delta DVs, Iceberg position deletes) use to delete rows
@@ -248,10 +248,10 @@ object DeletionVectors {
     * version + _dv sidecar) is table metadata a real deployment carries,
     * and a fresh session re-reads it. */
   private[graft] def dvOrders(s: SparkSession, d: String): String = {
-    val base = s"/tmp/graft_dv/${PathKeys.safe(d)}/orders"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "dv/orders")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/orders.parquet", s"dv-v2-fname-urgent-mod10-thr$BitmapThresholdPositions")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       AtomicTable.publish(base) { dir =>
         Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(dir)
       }
@@ -286,11 +286,11 @@ object DeletionVectors {
     * source version. Separate base from the skipping demos and
     * [[dvOrders]] so their file counts stay untouched. */
   private[graft] def dvPrunedOrders(s: SparkSession, d: String): String = {
-    val base = s"/tmp/graft_dvp/${PathKeys.safe(d)}/orders"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "dvp/orders")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/orders.parquet",
       s"dvp-v3-fname-cut$pruneCutoff-thr$BitmapThresholdPositions")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       DataSkipping.optimizedWrite(s,
         Tables.orders(s, d).withColumn("o_datekey",
           unix_date(col("o_orderdate").cast("date")).cast("long")),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.{AtomicTable, PathKeys}
+import graft.util.{AtomicTable, SilverArtifact}
 
 /** Merge-on-read MERGE (upsert) — the full Delta-DV / Iceberg-v2 write
   * shape on top of [[DeletionVectors]]: a MERGE batch neither rewrites nor
@@ -493,10 +493,10 @@ object MergeOnRead {
     * the stamped fingerprint is the table's post-MERGE metadata state; a
     * fresh session re-reads the committed sidecars instead of re-merging. */
   private[graft] def morOrders(s: SparkSession, d: String): String = {
-    val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "mor/orders")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/orders.parquet", "mor-v4-fname")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       // restage = reload from scratch: the root-level change feed
       // deliberately outlives version publishes, so a full rebuild
       // must reset it or the replayed merges would double every row
@@ -552,10 +552,10 @@ object MergeOnRead {
     *   NOT MATCHED BY SOURCE AND key%3=0 → DELETE
     * Matched 'O' rows hit no clause and survive untouched. */
   private[graft] def fullOrders(s: SparkSession, d: String): String = {
-    val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders_full"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "mor/orders_full")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/orders.parquet", "morfull-v4-fname")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       // restage = reload from scratch (see [[morOrders]])
       AtomicTable.deleteRecursively(
         java.nio.file.Paths.get(changesPath(base)))
@@ -593,10 +593,10 @@ object MergeOnRead {
     * arrives re-priced (+1.00, exact) and carrying a column the table
     * never had (`o_channel`, keyed deterministically off the order key). */
   private[graft] def evoOrders(s: SparkSession, d: String): String = {
-    val base = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders_evo"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "mor/orders_evo")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/orders.parquet", "morevo-v2-fname")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       AtomicTable.deleteRecursively(
         java.nio.file.Paths.get(changesPath(base)))
       AtomicTable.publish(base) { dir =>
@@ -705,7 +705,7 @@ object MergeOnRead {
     * resurrected delete or lost merge batch breaks the hash. */
   def tableCloneMerged(s: SparkSession, d: String): DataFrame = {
     val src = morOrders(s, d)
-    val dst = s"/tmp/graft_mor/${PathKeys.safe(d)}/orders_clone"
+    val dst = SilverArtifact.pathFor(d, "mor/orders_clone")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(dst))
     AtomicTable.cloneTable(src, dst)
     readMerged(s, dst)

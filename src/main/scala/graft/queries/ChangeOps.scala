@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.SilverArtifact
 
 /** Change-data / sampling operators:
   *
@@ -283,7 +284,7 @@ GROUP BY h.c_mktsegment ORDER BY h.c_mktsegment"""
     * pinned-directory scans, so the pattern survives any table size. */
   def bitemporalAsof(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_bitemp/${graft.util.PathKeys.safe(d)}/customer_hist"
+    val base = SilverArtifact.pathFor(d, "bitemp/customer_hist")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(base))
     val init = lit("2024-01-01 00:00:00").cast("timestamp_ntz")
     val noDate = lit(null).cast("timestamp_ntz")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.SilverArtifact
 
 /** Round-4 coverage extensions — operator families a large-scale curation /
   * lakehouse engine needs beyond the reference's surface (reference has none
@@ -145,7 +146,7 @@ FROM orders GROUP BY 1 ORDER BY bucket"""
     * columnar-format surface next to parquet (native) and CSV
     * ([[PipelineOps.csvRoundtrip]]). */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_orc/${graft.util.PathKeys.safe(d)}/supplier"
+    val out = SilverArtifact.pathFor(d, "orc/supplier")
     Tables.supplier(s, d).write.mode("overwrite").orc(out)
     s.read.schema(Tables.supplier(s, d).schema).orc(out)
       .orderBy("s_suppkey")
@@ -332,7 +333,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * result) is identical on every run. */
   def timeTravelRead(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_tt/${graft.util.PathKeys.safe(d)}/nation"
+    val base = SilverArtifact.pathFor(d, "tt/nation")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(base))
     val nation = Tables.nation(s, d)
     AtomicTable.publish(base, keep = 2)(dir => nation.write.mode("overwrite").parquet(dir))
@@ -355,7 +356,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * stayed in history rather than being the read path. */
   def tableRestore(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_restore/${graft.util.PathKeys.safe(d)}/supplier"
+    val base = SilverArtifact.pathFor(d, "restore/supplier")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(base))
     val sup = Tables.supplier(s, d)
     AtomicTable.publish(base, keep = 3)(dir =>
@@ -396,10 +397,10 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * dropped column all break the hash. */
   def tableRenameColumn(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_colmap/${graft.util.PathKeys.safe(d)}/orders"
-    val fp = graft.util.SilverArtifact.sourceFingerprint(
+    val base = SilverArtifact.pathFor(d, "colmap/orders")
+    val fp = SilverArtifact.sourceFingerprint(
       s"$d/orders.parquet", "colmap-v2")
-    graft.util.SilverArtifact.stagedOnce(base, fp) {
+    SilverArtifact.stagedOnce(base, fp) {
       AtomicTable.deleteRecursively(
         java.nio.file.Paths.get(base).resolveSibling("orders"))
       AtomicTable.publish(base)(dir =>
@@ -434,7 +435,7 @@ GROUP BY 1 ORDER BY 1"""
 
   def tableClone(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val root = s"/tmp/graft_clone/${graft.util.PathKeys.safe(d)}"
+    val root = SilverArtifact.pathFor(d, "clone")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(root))
     val (src, dst) = (s"$root/part_src", s"$root/part_clone")
     val p = Tables.part(s, d)
@@ -462,7 +463,7 @@ GROUP BY 1 ORDER BY 1"""
     * history length proving no second version exists. */
   def constrainedWrite(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_checked/${graft.util.PathKeys.safe(d)}/orders"
+    val base = SilverArtifact.pathFor(d, "checked/orders")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(base))
     val o = Tables.orders(s, d)
     val checks = Map(
@@ -507,7 +508,7 @@ FROM orders"""
     * refusal.) */
   def generatedColumns(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_generated/${graft.util.PathKeys.safe(d)}/orders"
+    val base = SilverArtifact.pathFor(d, "generated/orders")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(base))
     AtomicTable.publishGenerated(Tables.orders(s, d), base, Map(
       "o_year"  -> year(col("o_orderdate")).cast("long"),
@@ -540,7 +541,7 @@ FROM orders GROUP BY 1 ORDER BY 1"""
   private def customerVersions(s: SparkSession, d: String,
                                tag: String): (DataFrame, DataFrame) = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_vdiff/${graft.util.PathKeys.safe(d)}/$tag"
+    val base = SilverArtifact.pathFor(d, s"vdiff/$tag")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(base))
     val cust = Tables.customer(s, d).select("c_custkey", "c_mktsegment")
     AtomicTable.publish(base, keep = 2)(dir => cust.write.mode("overwrite").parquet(dir))
@@ -643,7 +644,7 @@ FROM v2 GROUP BY 1 ORDER BY 1"""
     * check (file counts are asserted in CompactionSpec). */
   def compactSmallFiles(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val base = s"/tmp/graft_compact/${graft.util.PathKeys.safe(d)}/orders"
+    val base = SilverArtifact.pathFor(d, "compact/orders")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(base))
     val orders = Tables.orders(s, d)
     AtomicTable.publish(base, keep = 2)(dir =>
@@ -698,7 +699,7 @@ FROM range(5000, 5200) t(i) ORDER BY id"""
     * footer-planning time (per-file schemas union on the driver, data
     * never rewritten); the aggregation is an ordinary pruned-column scan. */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val base = s"/tmp/graft_evo/${graft.util.PathKeys.safe(d)}/customer"
+    val base = SilverArtifact.pathFor(d, "evo/customer")
     val c = Tables.customer(s, d)
     c.filter(col("c_custkey") % 2 === 0)
       .select("c_custkey", "c_name")
@@ -732,7 +733,7 @@ GROUP BY 1 ORDER BY v"""
     * §1.5). Doubles survive the text roundtrip exactly (Spark emits
     * shortest-round-trip literals), which the floor-cents hash proves. */
   def jsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_jsonl/${graft.util.PathKeys.safe(d)}/part"
+    val out = SilverArtifact.pathFor(d, "jsonl/part")
     val p = Tables.part(s, d)
     p.write.mode("overwrite").json(out)
     graft.sources.Connectors.json(s, out, p.schema)
@@ -763,7 +764,7 @@ FROM part GROUP BY p_brand ORDER BY p_brand"""
     * WARNs "already cached" per repeat otherwise.) */
   def jsonBadRecords(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.StringType
-    val out = s"/tmp/graft_badjson/${graft.util.PathKeys.safe(d)}/nation"
+    val out = SilverArtifact.pathFor(d, "badjson/nation")
     val n = Tables.nation(s, d)
     val good = n.select(to_json(struct(n.columns.map(col): _*)).as("line"))
     import s.implicits._

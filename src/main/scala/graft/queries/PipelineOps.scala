@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.pipeline.Medallion
+import graft.util.SilverArtifact
 
 /** Pipeline/API-surface coverage queries:
   *
@@ -29,7 +30,7 @@ object PipelineOps {
     * snapshot (not the per-table pointer), so the gated value is produced
     * by the cross-table-consistent path end to end. */
   def writeRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val lake = s"/tmp/graft_lake/${graft.util.PathKeys.safe(d)}"
+    val lake = SilverArtifact.pathFor(d, "lake")
     Medallion.writeAll(s, d, lake)
     // retention maintenance as part of the reload: VACUUM
     // every zone table with keep=1 — deliberately more aggressive than the
@@ -96,7 +97,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
   private def ttLake(s: SparkSession, d: String): (String, Long) =
     ttLakeCache(s, d) {
       import graft.util.AtomicTable
-      val root = s"/tmp/graft_snap_tt/${graft.util.PathKeys.safe(d)}"
+      val root = SilverArtifact.pathFor(d, "snap_tt")
       AtomicTable.deleteRecursively(java.nio.file.Paths.get(root))
       val nation = Tables.nation(s, d)
       def stage(df: DataFrame): Seq[(String, String)] = Seq("dim/nation" ->
@@ -211,7 +212,7 @@ ORDER BY n_nationkey, change_type"""
   def snapshotRestore(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
     val root = restoreLakeCache(s, d) {
-      val r = s"/tmp/graft_snap_restore/${graft.util.PathKeys.safe(d)}"
+      val r = SilverArtifact.pathFor(d, "snap_restore")
       AtomicTable.deleteRecursively(java.nio.file.Paths.get(r))
       val nation = Tables.nation(s, d)
       val region = Tables.region(s, d)
@@ -256,7 +257,7 @@ ORDER BY n_nationkey"""
     * evidence (violation count, snapshot count 1) in the result. */
   def snapshotCheckedCommit(s: SparkSession, d: String): DataFrame = {
     import graft.util.AtomicTable
-    val root = s"/tmp/graft_snap_checked/${graft.util.PathKeys.safe(d)}"
+    val root = SilverArtifact.pathFor(d, "snap_checked")
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(root))
     val nation = Tables.nation(s, d)
     val region = Tables.region(s, d)
@@ -417,7 +418,7 @@ FROM docs GROUP BY tag ORDER BY tag"""
   /** CSV round-trip: write nation as headered CSV, read back with an
     * explicit StructType (never schema-inference for engine contracts). */
   def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_csv/${graft.util.PathKeys.safe(d)}/nation"
+    val out = SilverArtifact.pathFor(d, "csv/nation")
     Tables.nation(s, d).write.mode("overwrite").option("header", "true").csv(out)
     s.read.schema(Tables.nation(s, d).schema).option("header", "true").csv(out)
       .orderBy("n_nationkey")
@@ -432,15 +433,15 @@ FROM docs GROUP BY tag ORDER BY tag"""
   // PUBLISHED fact (partition pruning only exists against storage), and
   // re-running the whole ETL per query would time the write, not the scan
   private def ensureLake(s: SparkSession, d: String): String = {
-    val lake = s"/tmp/graft_lake/${graft.util.PathKeys.safe(d)}"
+    val lake = SilverArtifact.pathFor(d, "lake")
     // the consumer queries need the lake to EXIST and be current — the
     // staged-once stamp skips the 15-table reload when the committed
     // snapshot already matches the source (writeRoundtrip, whose gated
     // VALUE is the write path itself, always runs writeAll regardless)
     val fp = graft.Tables.sourceNames.map(t =>
-      graft.util.SilverArtifact.sourceFingerprint(s"$d/$t.parquet", "lake-v1"))
+      SilverArtifact.sourceFingerprint(s"$d/$t.parquet", "lake-v1"))
       .mkString("|")
-    graft.util.SilverArtifact.stagedOnce(s"$lake/gold/fact_sales", fp) {
+    SilverArtifact.stagedOnce(s"$lake/gold/fact_sales", fp) {
       Medallion.writeAll(s, d, lake)
     }
     lake

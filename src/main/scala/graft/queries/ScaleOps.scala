@@ -1,9 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.SilverArtifact
 
 /** Scale-technique queries: each demonstrates — verifiably — a pattern
   * that keeps a 100 TB deployment off the shuffle floor. The correctness
@@ -32,20 +34,29 @@ object ScaleOps {
   val SaltBuckets = 16
 
   /** Write lineitem + orders bucketed by the join key, then join the two
-    * bucketed tables — no Exchange in the join (bucket-aware scan). */
+    * bucketed tables — no Exchange in the join (bucket-aware scan). A
+    * bucket spec needs saveAsTable, so the copies are catalog entries,
+    * each stamped with its path under the silver root and both sources'
+    * fingerprints: a source rewritten in place, or a root moved since the
+    * entry was written, re-buckets the pair. */
   def bucketedJoin(s: SparkSession, d: String): DataFrame = {
     val safe = graft.util.PathKeys.safe(d)
-    val base = s"/tmp/graft_buckets/$safe"
+    val base = SilverArtifact.pathFor(d, "buckets")
     val lt = s"graft_li_$safe"
     val ot = s"graft_ord_$safe"
-    // guard on BOTH tables: a failure between the two writes must not wedge
-    // the session with a half-created pair
-    if (!s.catalog.tableExists(lt) || !s.catalog.tableExists(ot)) {
+    val stamp = (base +: Seq("lineitem", "orders").map(t =>
+      SilverArtifact.sourceFingerprint(s"$d/$t.parquet", "bucketed-v1"))).mkString("|")
+    def fresh(t: String): Boolean = s.catalog.tableExists(t) &&
+      s.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+        .storage.properties.get(BucketStamp).contains(stamp)
+    // stale if EITHER is: a failure between the two writes must not wedge
+    // the session with a half-written pair
+    if (!fresh(lt) || !fresh(ot)) {
       Tables.lineitem(s, d).write
-        .bucketBy(16, "l_orderkey").sortBy("l_orderkey")
+        .bucketBy(16, "l_orderkey").sortBy("l_orderkey").option(BucketStamp, stamp)
         .option("path", s"$base/lineitem").mode("overwrite").saveAsTable(lt)
       Tables.orders(s, d).write
-        .bucketBy(16, "o_orderkey").sortBy("o_orderkey")
+        .bucketBy(16, "o_orderkey").sortBy("o_orderkey").option(BucketStamp, stamp)
         .option("path", s"$base/orders").mode("overwrite").saveAsTable(ot)
     }
     s.table(lt).join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
@@ -54,6 +65,8 @@ object ScaleOps {
         sum(round(col("l_extendedprice") * 100).cast("long")).as("revenue_cents"))
       .orderBy("o_orderpriority")
   }
+
+  private val BucketStamp = "graft.bucket.stamp"
 
   val bucketedJoinOracle: String = """
 SELECT o_orderpriority, count(*) AS n_lines,

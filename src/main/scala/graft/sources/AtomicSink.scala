@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.util.AtomicTable
+import graft.util.{AtomicTable, SilverArtifact}
 
 /** The WRITE half of the DataSource V2 surface (the read half is
   * [[GraftGen]]): a transactional batch sink implementing the task-commit
@@ -79,7 +79,7 @@ object GraftSink {
     * directly. */
   def sinkRoundtrip(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dir = s"/tmp/graft_sink/${graft.util.PathKeys.safe(d)}"
+    val dir = SilverArtifact.pathFor(d, "sink")
     val root = Paths.get(dir)
     // fresh run: drop any prior versions so append semantics of the
     // protocol don't accumulate across verify/bench invocations

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
@@ -9,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Tables
+import graft.util.{AtomicTable, SilverArtifact}
 
 /** Structured Streaming over the `events` table (SURVEY.md §2.10 — ABSENT
   * in the reference; §7.5 extension surface).
@@ -19,6 +22,14 @@ import graft.Tables
   * batch-oriented harness can verify it. Because the file source delivers
   * everything in one batch, the streaming results equal their batch SQL
   * equivalents, which is exactly what the DuckDB oracles check.
+  *
+  * Every file-source input goes through one stager ([[staged]]): a stream
+  * source is an ordered list of files, each a copy of a source table or a
+  * frame written as one file (the sentinel rows that close watermarks),
+  * published as one [[graft.util.AtomicTable]] version under
+  * `SilverArtifact.pathFor(d, "stream/<name>")` once per source
+  * fingerprint. Checkpoints and sink state live under the same root, so
+  * `SilverArtifact.root` sandboxes all of it.
   *
   * Scale notes: windowed aggregation state is bounded by the watermark
   * (10 min event-time lag → state for at most ~watermark/slide windows per
@@ -194,123 +205,70 @@ object EventsStream {
       ss
     })
 
-  /** Stage one source file into a watched directory via temp-file +
-    * atomic move. The streaming file source wants a DIRECTORY; the
-    * testdata is a single file — in production the upstream writer would
-    * already be dropping files into the watched dir. Freshness is same
-    * size AND staged mtime >= source mtime: a size-only check would
-    * silently serve stale staged data whenever the source is
-    * regenerated at an identical byte size, and a bare
-    * exists() check would read a stale or half-copied file forever. */
-  private def stageInto(srcPath: String, stageDir: java.nio.file.Path,
-      name: String): Unit = {
-    val src = java.nio.file.Paths.get(srcPath)
-    val staged = stageDir.resolve(name)
-    val fresh = java.nio.file.Files.exists(staged) &&
-      java.nio.file.Files.size(staged) == java.nio.file.Files.size(src) &&
-      java.nio.file.Files.getLastModifiedTime(staged).compareTo(
-        java.nio.file.Files.getLastModifiedTime(src)) >= 0
-    if (!fresh) {
-      java.nio.file.Files.createDirectories(stageDir)
-      val tmp = stageDir.resolve(name + ".tmp")
-      java.nio.file.Files.copy(src, tmp,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.move(tmp, staged,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  /** One file a stream source delivers, written to the path it is
+    * handed: a copy of a source file ([[copyOf]]) or a frame written as
+    * one parquet file ([[oneFile]]). */
+  private type Delivery = Path => Unit
+
+  /** The one stager of stream sources. The streaming file source wants a
+    * DIRECTORY and replays its files in modification-time order; the
+    * testdata is single files (in production the upstream writer would
+    * already be dropping files into the watched dir). `files` lands as
+    * one [[AtomicTable]] version under `SilverArtifact.pathFor(d,
+    * "stream/<name>")`, staged once per fingerprint of `<table>.parquet`
+    * ([[SilverArtifact.stagedOnce]]), with strictly increasing mtimes in
+    * list order, so `maxFilesPerTrigger = 1` delivers one file per
+    * trigger in list order. A reader never sees a half-staged directory,
+    * and `keep = 2` leaves the previous version to a reader that resolved
+    * it before a re-stage. Returns the live version directory. */
+  private def staged(d: String, table: String, name: String)(files: => Seq[Delivery]): String = {
+    val base = SilverArtifact.pathFor(d, s"stream/$name")
+    SilverArtifact.stagedOnce(base,
+        SilverArtifact.sourceFingerprint(s"$d/$table.parquet", s"stream-$name-v1")) {
+      AtomicTable.publish(base, keep = 2) { dir =>
+        val t0 = System.currentTimeMillis()
+        files.zipWithIndex.foreach { case (deliver, i) =>
+          val dst = Paths.get(dir, f"$i%02d.parquet")
+          deliver(dst)
+          Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + i * 1000L))
+        }
+      }
     }
+    AtomicTable.resolve(base).get
   }
 
-  private def eventsStream(batchSession: SparkSession, d: String): DataFrame = {
-    val s = streamSession(batchSession, d)
-    val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}")
-    stageInto(s"$d/events.parquet", stageDir, "events.parquet")
-    // schema of the RAW file (whatever vintage the driver wrote; see
-    // Tables.eventsRaw), then the SAME ts normalization the batch reader
-    // applies — shared code so the two paths cannot drift
-    val schema = Tables.eventsRaw(s, d).schema
-    Tables.normalizeTs(s.readStream.schema(schema).parquet(stageDir.toString))
+  /** A source table staged as its own plain copy, the shared stream of
+    * every query that reads `table` unchanged. */
+  private def copied(d: String, table: String): String =
+    staged(d, table, table)(Seq(copyOf(s"$d/$table.parquet")))
+
+  /** Copied, never linked: the stager sets the copy's mtime, which on a
+    * link would be the input file's. */
+  private def copyOf(src: String): Delivery = dst => Files.copy(Paths.get(src), dst)
+
+  /** `df` as the single parquet file `dst`, written through a hidden
+    * sibling directory that no file listing reads. */
+  private def oneFile(df: DataFrame): Delivery = { dst =>
+    val tmp = dst.resolveSibling("_" + dst.getFileName)
+    df.coalesce(1).write.parquet(tmp.toString)
+    val st = Files.list(tmp)
+    val part =
+      try st.iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+      finally st.close()
+    Files.move(part, dst)
+    AtomicTable.deleteRecursively(tmp)
   }
 
-  /** Wipe `stageDir` and move `tmp`'s part files in as chunkNNN.parquet
-    * with strictly increasing mtimes, so the file source's (mtime, path)
-    * ordering delivers them in partition order. Returns (chunk count,
-    * base mtime millis) so a caller can append further files AFTER the
-    * chunks in mtime order. */
-  private def installChunks(tmp: java.nio.file.Path,
-      stageDir: java.nio.file.Path): (Int, Long) = {
-    import java.nio.file.{Files, StandardCopyOption}
-    if (Files.isDirectory(stageDir)) {
-      val old = Files.list(stageDir)
-      try old.iterator().asScala.foreach(Files.delete) finally old.close()
-    }
-    Files.createDirectories(stageDir)
-    val partsStream = Files.list(tmp)
-    val parts =
-      try partsStream.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally partsStream.close()
-    val base = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val dst = stageDir.resolve(f"chunk$i%03d.parquet")
-      Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-    }
-    (parts.size, base)
-  }
+  /** The events stream on session `s`: the schema of the RAW file
+    * (whatever timestamp vintage it holds; see Tables.eventsRaw), then the
+    * SAME ts normalization the batch reader applies, so the two paths
+    * cannot drift. */
+  private def eventsOn(s: SparkSession, d: String): DataFrame =
+    Tables.normalizeTs(
+      s.readStream.schema(Tables.eventsRaw(s, d).schema).parquet(copied(d, "events")))
 
-  /** Stage events as one chunk PLUS two terminal watermark SENTINEL
-    * files — the Append-mode flush shape. A production Append-mode
-    * session sink always holds back the sessions
-    * the final watermark never passes; the standard fix is terminal
-    * punctuation: after end of input, inject heartbeat events far past
-    * max(ts) so the watermark advances over every real session's end and
-    * the tail emits. Two sentinels because the watermark computed from
-    * trigger N takes effect in trigger N+1: sentinel 1's trigger runs
-    * with the last REAL watermark, sentinel 2's trigger runs with
-    * watermark ≈ sentinel1 − delay > every real session end and flushes
-    * the tail. The sentinels use user_id −1 and ts > max + a year; their
-    * own session is never closed by a later watermark, so they CANNOT
-    * appear in the output (the gate filters user_id ≥ 0 anyway, as the
-    * explicit contract). */
-  private def stageTerminalInto(s: SparkSession, d: String,
-      stageDir: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(s"$d/events.parquet")
-    val marker = stageDir.resolve("_TERM_STAMP")
-    val stamp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}:term-v1"
-    if (Files.exists(marker) && Files.readString(marker) == stamp) return
-    val ev = Tables.events(s, d)
-    // 1-row scalar aggregate (kilobyte-scale driver value)
-    val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
-    val tmp = Files.createTempDirectory("graft_term_build")
-    ev.repartitionByRange(1, col("ts")).write.mode("overwrite").parquet(tmp.toString)
-    val (count, base) = installChunks(tmp, stageDir)
-    Seq(370L, 740L).zipWithIndex.foreach { case (days, j) =>
-      val st = new Timestamp(maxTs.getTime + days * 86400000L)
-      val one = s.range(1).select(
-        lit(-(j + 1).toLong).as("event_id"), lit(st).as("ts"),
-        lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      val t2 = Files.createTempDirectory("graft_term_sentinel")
-      one.coalesce(1).write.mode("overwrite").parquet(t2.toString)
-      val ps = Files.list(t2)
-      val part =
-        try ps.iterator().asScala
-          .find(_.getFileName.toString.startsWith("part-")).get
-        finally ps.close()
-      val dst = stageDir.resolve(s"sentinel$j.parquet")
-      Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(base + (count + 1 + j) * 1000L))
-    }
-    Files.writeString(marker, stamp)
-    System.err.println(
-      s"[stream-term] staged $count ts-range chunks + 2 sentinels -> $stageDir")
-  }
+  private def eventsStream(batchSession: SparkSession, d: String): DataFrame =
+    eventsOn(streamSession(batchSession, d), d)
 
   // memory-sink names must be unique PER INVOCATION: the streaming clone
   // is shared across datasets of a base session, so a fixed per-query name
@@ -469,62 +427,52 @@ FROM d ORDER BY window_start"""
     * 9 s-vs-2.7 s cold multiple) and the watermarked
     * stream-stream join's state-store format/codegen init. Both run over
     * 2-row MemoryStreams — milliseconds of data, the class-loading is the
-    * point. Idempotent and best-effort: a prewarm failure must never fail
-    * the bench (the real queries would just pay the cold cost). */
+    * point. Idempotent; a failure propagates, so the bench's warmup step
+    * fails loudly instead of moving this cost into the cold pass. */
   def prewarm(s: SparkSession, d: String = ""): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    try {
-      locally { // RocksDB provider + transformWithState
-        val rs = streamSessionN(s, 4, rocks = true)
-        import rs.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = rs.sqlContext
-        val mem = MemoryStream[Ev]
-        val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
-        mem.addData(Ev(1L, t0, 1L, "w", 1.0, "{}"), Ev(2L, t0, 2L, "w", 2.0, "{}"))
-        val out = mem.toDS().groupByKey(_.user_id)
-          .transformWithState(new TotalsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        val q = out.toDF().writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("graft_prewarm_tws").start()
-        try q.processAllAvailable() finally q.stop()
-        rs.catalog.dropTempView("graft_prewarm_tws")
-      }
-      locally { // watermarked stream-stream outer join on the shared clone
-        // share the DATASET's clone when the caller names one — a second
-        // (session, partitions) clone would duplicate every session-
-        // scoped persisted artifact at exactly the scale that hurts
-        val ss: SparkSession =
-          if (d.nonEmpty) streamSession(s, d) else streamSession(s)
-        import ss.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-        val a = MemoryStream[(Long, Timestamp)]
-        val b = MemoryStream[(Long, Timestamp)]
-        val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
-        a.addData((1L, t0)); b.addData((1L, t0))
-        val joined = a.toDF().toDF("au", "ats").withWatermark("ats", "0 seconds")
-          .join(b.toDF().toDF("bu", "bts").withWatermark("bts", "0 seconds"),
-            expr("au = bu AND bts >= ats AND bts <= ats + INTERVAL 1 HOUR"),
-            "fullOuter")
-        val q = joined.writeStream.outputMode(OutputMode.Append)
-          .format("memory").queryName("graft_prewarm_ssj").start()
-        try q.processAllAvailable() finally q.stop()
-        ss.catalog.dropTempView("graft_prewarm_ssj")
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[graft] streaming prewarm failed (non-fatal): ${e.getMessage}")
+    locally { // RocksDB provider + transformWithState
+      val rs = streamSessionN(s, 4, rocks = true)
+      import rs.implicits._
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = rs.sqlContext
+      val mem = MemoryStream[Ev]
+      val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+      mem.addData(Ev(1L, t0, 1L, "w", 1.0, "{}"), Ev(2L, t0, 2L, "w", 2.0, "{}"))
+      val out = mem.toDS().groupByKey(_.user_id)
+        .transformWithState(new TotalsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
+      val q = out.toDF().writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName("graft_prewarm_tws").start()
+      try q.processAllAvailable() finally q.stop()
+      rs.catalog.dropTempView("graft_prewarm_tws")
+    }
+    locally { // watermarked stream-stream outer join on the shared clone
+      // share the DATASET's clone when the caller names one — a second
+      // (session, partitions) clone would duplicate every session-
+      // scoped persisted artifact at exactly the scale that hurts
+      val ss: SparkSession =
+        if (d.nonEmpty) streamSession(s, d) else streamSession(s)
+      import ss.implicits._
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
+      val a = MemoryStream[(Long, Timestamp)]
+      val b = MemoryStream[(Long, Timestamp)]
+      val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+      a.addData((1L, t0)); b.addData((1L, t0))
+      val joined = a.toDF().toDF("au", "ats").withWatermark("ats", "0 seconds")
+        .join(b.toDF().toDF("bu", "bts").withWatermark("bts", "0 seconds"),
+          expr("au = bu AND bts >= ats AND bts <= ats + INTERVAL 1 HOUR"),
+          "fullOuter")
+      val q = joined.writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName("graft_prewarm_ssj").start()
+      try q.processAllAvailable() finally q.stop()
+      ss.catalog.dropTempView("graft_prewarm_ssj")
     }
   }
 
   def transformState(s: SparkSession, d: String): DataFrame = {
     val rs = streamSessionN(s, statePartitionsFor(d), rocks = true)
-    val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}")
-    stageInto(s"$d/events.parquet", stageDir, "events.parquet")
-    val schema = Tables.eventsRaw(rs, d).schema
-    val ev = Tables.normalizeTs(
-      rs.readStream.schema(schema).parquet(stageDir.toString))
     import rs.implicits._
-    val out = ev.as[Ev]
+    val out = eventsOn(rs, d).as[Ev]
       .groupByKey(_.user_id)
       .transformWithState(new TotalsProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
@@ -550,13 +498,8 @@ FROM events GROUP BY 1 ORDER BY 1"""
     * deterministic. */
   def stateInspect(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s, d)
-    val ckpt = s"/tmp/graft_stream_ckpt/${graft.util.PathKeys.safe(d)}_state_inspect"
-    val root = java.nio.file.Paths.get(ckpt)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      try it.forEach(p => java.nio.file.Files.deleteIfExists(p)) finally it.close()
-    }
+    val ckpt = SilverArtifact.pathFor(d, "stream_ckpt/state_inspect")
+    AtomicTable.deleteRecursively(Paths.get(ckpt))
     val agg = eventsStream(s, d)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
@@ -691,22 +634,36 @@ FROM events GROUP BY event_type ORDER BY event_type"""
   }
 
   /** Append-mode twin of [[sessionWindow]], a full ORACLE GATE. Append
-    * holds back the sessions the final watermark never passes; that
-    * tail is closed with TERMINAL PUNCTUATION ([[stageTerminalInto]]):
-    * two far-future sentinel triggers advance the watermark past every
-    * real session end, so the production eviction path — watermark
-    * expiry EVICTS and EMITS closed sessions between triggers, state
-    * bounded at ~one arrival window of open sessions — emits the
-    * COMPLETE session set and hash-matches the batch gap-and-islands
-    * oracle. */
+    * holds back the sessions the final watermark never passes; the
+    * standard fix is TERMINAL PUNCTUATION: after end of input, inject
+    * heartbeat events far past max(ts) so the watermark advances over
+    * every real session's end and the tail emits. The source is the
+    * events as one file, then two sentinel files. Two, because the
+    * watermark computed from trigger N takes effect in trigger N+1:
+    * sentinel 1's trigger runs with the last REAL watermark, sentinel 2's
+    * with watermark ≈ sentinel1 − delay > every real session end. So the
+    * production eviction path — watermark expiry EVICTS and EMITS closed
+    * sessions between triggers, state bounded at ~one arrival window of
+    * open sessions — emits the COMPLETE session set and hash-matches the
+    * batch gap-and-islands oracle. The sentinels use user_id −1 and
+    * ts > max + a year; their own session is never closed by a later
+    * watermark, so they cannot appear in the output. */
   def sessionWindowAppend(s: SparkSession, d: String): DataFrame = {
     val ss = streamSession(s, d)
-    val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_term")
-    stageTerminalInto(ss, d, stageDir)
-    val schema = ss.read.parquet(stageDir.toString).schema
+    val dir = staged(d, "events", "events_term") {
+      val ev = Tables.events(ss, d)
+      // a 1-row scalar aggregate
+      val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
+      oneFile(ev) +: Seq(370L, 740L).zipWithIndex.map { case (days, j) =>
+        oneFile(ss.range(1).select(lit(-(j + 1).toLong).as("event_id"),
+          lit(new Timestamp(maxTs.getTime + days * 86400000L)).as("ts"),
+          lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
+          lit(0.0).as("value"), lit("{}").as("props")))
+      }
+    }
+    val schema = ss.read.parquet(dir).schema
     val src = Tables.normalizeTs(ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stageDir.toString))
+      .option("maxFilesPerTrigger", "1").parquet(dir))
     val agg = src
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -884,9 +841,19 @@ ORDER BY user_id, session_start"""
     // transformWithState needs the RocksDB provider
     val s = streamSessionN(s0, statePartitionsFor(d), rocks = true)
     import s.implicits._
-    val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src_timer/${graft.util.PathKeys.safe(d)}")
-    stageTimerFiles(s, d, stageDir)
+    val dir = staged(d, "events", "events_timer") {
+      val ev = Tables.eventsRaw(s, d)
+      // the raw column is TIMESTAMP(NANOS)/NTZ — carry the split point as a
+      // string cast back to the column's own type (getTimestamp would choke
+      // on the java-8 LocalDateTime representation)
+      val median = lit(ev.selectExpr("CAST(percentile_approx(ts, 0.5) AS STRING)")
+        .head().getString(0)).cast(ev.schema("ts").dataType)
+      def sentinel(offsetMs: Long) = oneFile(ev.orderBy(col("ts").desc).limit(1)
+        .withColumn("ts", col("ts") + expr(s"INTERVAL ${offsetMs / 1000} SECOND"))
+        .withColumn("event_type", lit("sentinel")))
+      Seq(oneFile(ev.filter(col("ts") <= median)), oneFile(ev.filter(col("ts") > median)),
+        sentinel(20L * GapMs), sentinel(40L * GapMs))
+    }
     val schema = Tables.eventsRaw(s, d).schema
     // The sentinels must flow INTO the stateful operator, not be filtered
     // before it: a sentinel filter on a non-watermark column gets pushed
@@ -897,8 +864,7 @@ ORDER BY user_id, session_start"""
     // behavior). Sentinels therefore ride through under a reserved key
     // (-1) and their own sessions are dropped from the OUTPUT.
     val ev = Tables.normalizeTs(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stageDir.toString))
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir))
       .withWatermark("ts", "0 seconds")
       .withColumn("user_id",
         when(col("event_type") === "sentinel", lit(-1L)).otherwise(col("user_id")))
@@ -916,52 +882,6 @@ ORDER BY user_id, session_start"""
       .orderBy("user_id", "session_start")
   }
 
-  /** Stage the timer-session source: events split at the median ts into
-    * two files (mtime-ordered), then two sentinel rows far past the last
-    * event — see [[timerSessions]] for why two. Re-staged only when the
-    * source changes (same freshness rule as [[stageInto]]). */
-  private def stageTimerFiles(s: SparkSession, d: String,
-      stageDir: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    val src = java.nio.file.Paths.get(s"$d/events.parquet")
-    val stamp = stageDir.resolve("_STAMP")
-    val want = Files.size(src) + ":" + Files.getLastModifiedTime(src).toMillis
-    if (Files.exists(stamp) && Files.readString(stamp).trim == want) return
-    graft.util.AtomicTable.deleteRecursively(stageDir)
-    Files.createDirectories(stageDir)
-    val ev = Tables.eventsRaw(s, d)
-    // the raw column is TIMESTAMP(NANOS)/NTZ — carry the split point as a
-    // string cast back to the column's own type (getTimestamp would choke
-    // on the java-8 LocalDateTime representation)
-    val median = lit(ev.selectExpr("CAST(percentile_approx(ts, 0.5) AS STRING)")
-      .head().getString(0)).cast(ev.schema("ts").dataType)
-    def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = stageDir.resolve("_tmp")
-      graft.util.AtomicTable.deleteRecursively(tmp)
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = {
-        val st = Files.list(tmp)
-        try st.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-        finally st.close()
-      }
-      Files.move(part, stageDir.resolve(name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      graft.util.AtomicTable.deleteRecursively(tmp)
-      Files.setLastModifiedTime(stageDir.resolve(name),
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-    }
-    val base = System.currentTimeMillis()
-    writeOne(ev.filter(col("ts") <= median), "00_events.parquet", base)
-    writeOne(ev.filter(col("ts") > median), "01_events.parquet", base + 60000)
-    def sentinel(offsetMs: Long) = ev.orderBy(col("ts").desc).limit(1)
-      .withColumn("ts", col("ts") + expr(s"INTERVAL ${offsetMs / 1000} SECOND"))
-      .withColumn("event_type", lit("sentinel"))
-    writeOne(sentinel(20L * GapMs), "02_sentinel.parquet", base + 120000)
-    writeOne(sentinel(40L * GapMs), "03_sentinel.parquet", base + 180000)
-    Files.writeString(stamp, want + "\n")
-  }
-
   /** foreachBatch upsert sink: each micro-batch's per-user aggregates are
     * MERGED into a parquet state table (read-modify-overwrite — the
     * plain-parquet stand-in for a Delta MERGE sink). foreachBatch is the
@@ -971,7 +891,7 @@ ORDER BY user_id, session_start"""
     * ⇒ final state equals the batch aggregate, which the oracle checks. */
   def upsertSink(s: SparkSession, d: String): DataFrame =
     upsertSinkFrom(s, eventsStream(s, d),
-      s"/tmp/graft_stream_state/${graft.util.PathKeys.safe(d)}/user_totals",
+      SilverArtifact.pathFor(d, "stream_state/user_totals"),
       OutputMode.Complete)
 
   /** Core of the upsert sink, parameterized so tests can drive it with a
@@ -980,9 +900,8 @@ ORDER BY user_id, session_start"""
     * keys it updated, and earlier keys must survive via the state table. */
   def upsertSinkFrom(s: SparkSession, events: DataFrame, stateDir: String,
     mode: OutputMode): DataFrame = {
-    import graft.util.AtomicTable
     // truncate-and-reload semantics per run (S6): start from no state
-    AtomicTable.deleteRecursively(java.nio.file.Paths.get(stateDir))
+    AtomicTable.deleteRecursively(Paths.get(stateDir))
     val agg = events
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value"))
@@ -1035,15 +954,14 @@ FROM events GROUP BY user_id ORDER BY user_id"""
     * the files whose [min_ts, max_ts] box intersects it. */
   def skipIngest(s: SparkSession, d: String): DataFrame =
     skipIngestFrom(s, eventsStream(s, d),
-      s"/tmp/graft_stream_state/${graft.util.PathKeys.safe(d)}/events_skip")
+      SilverArtifact.pathFor(d, "stream_state/events_skip"))
 
   /** Core of the skipping ingest, parameterized so the spec can drive it
     * with a multi-batch source (maxFilesPerTrigger) and prove the sidecar
     * grows batch-by-batch. */
   def skipIngestFrom(s: SparkSession, events: DataFrame, tableDir: String): DataFrame = {
-    import graft.util.AtomicTable
     // truncate-and-reload per run (S6): a fresh ingest, no stale batches
-    AtomicTable.deleteRecursively(java.nio.file.Paths.get(tableDir))
+    AtomicTable.deleteRecursively(Paths.get(tableDir))
     val q = events.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1169,58 +1087,21 @@ ORDER BY a.user_id, view_id, purchase_id"""
     * of either boundary. The oracle restates the batch FULL OUTER join
     * under the same cutoff. */
   def streamStreamOuter(s0: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val s = streamSession(s0, d)
-    // own staging dir: the sentinel row must never pollute the shared
-    // events stage other stream queries aggregate over
-    val stageDir = Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_outer")
-    stageInto(s"$d/events.parquet", stageDir, "events.parquet")
-    val dataFile = stageDir.resolve("events.parquet")
-    val dataMtime = Files.getLastModifiedTime(dataFile).toMillis
-    val sentinel = stageDir.resolve("zz_sentinel.parquet")
-    // sentinel freshness is keyed on a CONTENT STAMP of the staged data
-    // file (size + mtime, in a dot-file the source listing ignores) —
-    // comparing the sentinel's pinned mtime against the data's would
-    // permanently suppress a rebuild after a source regeneration inside
-    // the pin offset, serving a stale-vintage sentinel
-    val stamp = s"${Files.size(dataFile)}:$dataMtime"
-    val stampFile = stageDir.resolve(".zz_sentinel_src")
-    val fresh = Files.exists(sentinel) && Files.exists(stampFile) &&
-      Files.readString(stampFile).trim == stamp
-    if (!fresh) {
-      // the max-RAW-ts row retyped: normalizeTs is monotonic in the raw
-      // encoding, so this row's event time equals the stream's max and
-      // never moves the watermark beyond what the data already set.
-      // Staged in a SIBLING dir — part files written inside the watched
-      // dir could be listed mid-write by a concurrent session's source.
-      val tmpDir = java.nio.file.Paths.get(stageDir.toString + "_stage")
-      graft.util.AtomicTable.deleteRecursively(tmpDir)
-      Tables.eventsRaw(s, d).orderBy(col("ts").desc).limit(1)
-        .withColumn("event_type", lit("sentinel"))
-        .coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-      import scala.jdk.CollectionConverters._
-      val part = {
-        val st = Files.list(tmpDir)
-        try st.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-        finally st.close()
-      }
-      Files.move(part, sentinel,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      graft.util.AtomicTable.deleteRecursively(tmpDir)
-      Files.writeString(stampFile, stamp)
-    }
-    // the file source processes files in mtime order — pin data < sentinel
-    Files.setLastModifiedTime(sentinel,
-      java.nio.file.attribute.FileTime.fromMillis(dataMtime + 60000L))
+    // own stage: the sentinel row must never pollute the shared events
+    // stage other stream queries aggregate over. The sentinel is the
+    // max-RAW-ts row retyped: normalizeTs is monotonic in the raw
+    // encoding, so its event time equals the stream's max and never moves
+    // the watermark beyond what the data already set.
+    val dir = staged(d, "events", "events_outer")(Seq(copyOf(s"$d/events.parquet"),
+      oneFile(Tables.eventsRaw(s, d).orderBy(col("ts").desc).limit(1)
+        .withColumn("event_type", lit("sentinel")))))
     val schema = Tables.eventsRaw(s, d).schema
     // watermark BEFORE the type filter: the sentinel must flow through the
     // EventTimeWatermark node (to let batch 2 exist with the data's max
     // event time intact) and only then drop out of both join sides
     def side(): DataFrame = Tables.normalizeTs(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stageDir.toString))
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir))
       .withWatermark("ts", "10 minutes")
     val views = side().filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("v_user_id"),
@@ -1275,9 +1156,6 @@ ORDER BY user_id, view_id NULLS FIRST, purchase_id NULLS FIRST"""
   def corpusFilterStream(s: SparkSession, d: String): DataFrame = {
     import graft.ops.TextOps
     val ss = streamSession(s, d)
-    val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_docs")
-    stageInto(s"$d/documents.parquet", stageDir, "documents.parquet")
     val schema = graft.Tables.documents(ss, d).schema
     val isEn = TextOps.hitCount("en") > greatest(TextOps.hitCount("es"),
       TextOps.hitCount("de"), TextOps.hitCount("fr"))
@@ -1286,7 +1164,7 @@ ORDER BY user_id, view_id NULLS FIRST, purchase_id NULLS FIRST"""
         .cast("double") / length(col("text"))) * 0.4 +
       least(TextOps.hitCount("en").cast("double") / size(TextOps.ws) * lit(5.0),
         lit(1.0)) * 0.2
-    val agg = ss.readStream.schema(schema).parquet(stageDir.toString)
+    val agg = ss.readStream.schema(schema).parquet(copied(d, "documents"))
       .filter(isEn && q >= 0.5)
       .groupBy("lang").agg(count(lit(1)).as("n_kept"))
     runToTable(s, agg, OutputMode.Complete, "graft_stream_corpus")
@@ -1337,15 +1215,12 @@ WHERE is_en AND q >= 0.5 GROUP BY lang ORDER BY lang"""
     val s = streamSession(s0, d)
     graft.functions.GraftFunctions.register(s)
     import graft.ops.Similarity
-    val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_emb/${graft.util.PathKeys.safe(d)}")
-    stageInto(s"$d/embeddings.parquet", stageDir, "embeddings.parquet")
     val schema = Tables.embeddings(s, d).schema
     val codes = Similarity.pqCodesIndex(s, d)
     val cbLit = Similarity.pqCbLit(s, d)
     val sample = Similarity.seededQuerySample(s, d)
       .withColumnRenamed("query_id", "vec_id")
-    val qstream = s.readStream.schema(schema).parquet(stageDir.toString)
+    val qstream = s.readStream.schema(schema).parquet(copied(d, "embeddings"))
       .filter(col("vec_id") % 100 === 0)
       .join(broadcast(sample), Seq("vec_id"), "left_semi")
       .select(col("vec_id").as("query_id"),
@@ -1393,16 +1268,13 @@ WHERE is_en AND q >= 0.5 GROUP BY lang ORDER BY lang"""
   def minhashDedupStream(s0: SparkSession, d: String): DataFrame = {
     import graft.ops.Dedup
     val s = streamSession(s0, d)
-    val stageDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_src/${graft.util.PathKeys.safe(d)}_docs")
-    stageInto(s"$d/documents.parquet", stageDir, "documents.parquet")
     val schema = graft.Tables.documents(s, d).schema
     val maxId = graft.Tables.documents(s, d).agg(max("doc_id")).head().getLong(0)
     val thr = 9L * maxId / 10
     val shingles = Dedup.shingleTable(s, d)
     val idx = Dedup.bandedTable(s, d).filter(col("doc_id") < thr)
       .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_val"))
-    val batch = s.readStream.schema(schema).parquet(stageDir.toString)
+    val batch = s.readStream.schema(schema).parquet(copied(d, "documents"))
       .filter(col("doc_id") >= thr)
       .select(col("doc_id").as("doc_b"))
       .join(shingles.select(col("doc_id").as("doc_b"),
@@ -1439,13 +1311,11 @@ WHERE is_en AND q >= 0.5 GROUP BY lang ORDER BY lang"""
     * shares `merge_upsert_mor`'s oracle, proving feed-maintained ≡
     * recomputed. */
   def mvFromChangesStream(s0: SparkSession, d: String): DataFrame = {
-    import graft.util.AtomicTable
     val base = graft.ops.MergeOnRead.morOrders(s0, d)
     val dir = graft.ops.MergeOnRead.changesPath(base)
     val s = streamSession(s0, d)
-    val mvDir =
-      s"/tmp/graft_stream_state/${graft.util.PathKeys.safe(d)}/mv_from_cdf"
-    AtomicTable.deleteRecursively(java.nio.file.Paths.get(mvDir))
+    val mvDir = SilverArtifact.pathFor(d, "stream_state/mv_from_cdf")
+    AtomicTable.deleteRecursively(Paths.get(mvDir))
     // seed: the MV over the table as of the initial publish (v1 data
     // files — the merges changed only sidecars, so this is the pre-merge
     // state, exactly where the change feed picks up)
@@ -1505,10 +1375,8 @@ WHERE is_en AND q >= 0.5 GROUP BY lang ORDER BY lang"""
     * write + a crash between sink write and checkpoint commit =
     * duplicated batch on recovery. */
   def exactlyOnceIngest(s0: SparkSession, d: String): DataFrame = {
-    import graft.util.AtomicTable
-    val tableDir =
-      s"/tmp/graft_stream_state/${graft.util.PathKeys.safe(d)}/events_txn"
-    AtomicTable.deleteRecursively(java.nio.file.Paths.get(tableDir))
+    val tableDir = SilverArtifact.pathFor(d, "stream_state/events_txn")
+    AtomicTable.deleteRecursively(Paths.get(tableDir))
     def runOnce(): Unit = {
       val q = eventsStream(s0, d).writeStream
         .outputMode(OutputMode.Append)

@@ -1,6 +1,6 @@
 package graft.util
 
-/** Shared path→identifier sanitizer for /tmp staging dirs and catalog table
+/** Shared path→identifier sanitizer for staging dirs and catalog table
   * names. Lossy character replacement alone can collide (sf0.01 vs sf0_01),
   * so the full path's hash is appended — two distinct input dirs can never
   * share a staging path or bucket table. */

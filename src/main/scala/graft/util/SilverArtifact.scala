@@ -30,8 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SilverArtifact {
 
-  /** Root for locally staged artifacts. On a cluster this would be a lake
-    * path next to the source tables; a var so specs can sandbox it. */
+  /** Root of every piece of staged on-disk state: stored artifacts, staged
+    * tables, bucketed copies, stream sources, checkpoints and sink state,
+    * each at [[pathFor]]. On a cluster this would be a lake path next to
+    * the source tables; a var so specs and benchmarks can sandbox it. */
   @volatile var root: String = "/tmp/graft_silver"
 
   def pathFor(sourceDir: String, name: String): String =

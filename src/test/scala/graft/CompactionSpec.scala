@@ -3,14 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.ExtraOps
-import graft.util.AtomicTable
+import graft.util.{AtomicTable, SilverArtifact}
 
 class CompactionSpec extends AnyFunSuite {
   import TestSpark._
 
   test("compaction shrinks the file count ~16x and preserves content exactly") {
     ExtraOps.compactSmallFiles(spark, sf).collect() // drives both publishes
-    val base = s"/tmp/graft_compact/${graft.util.PathKeys.safe(sf)}/orders"
+    val base = SilverArtifact.pathFor(sf, "compact/orders")
     def parquetFiles(version: String): Int =
       java.nio.file.Files.list(java.nio.file.Paths.get(base, version))
         .filter(_.toString.endsWith(".parquet")).count().toInt

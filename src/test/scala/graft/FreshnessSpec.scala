@@ -11,14 +11,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, DeletionVectors, Similarity, TextOps}
 import graft.pipeline.Medallion
-import graft.queries.{BehaviorOps, TemporalOps}
+import graft.queries.{BehaviorOps, ScaleOps, TemporalOps}
+import graft.streaming.EventsStream
 import graft.util.{SessionCaches, SilverArtifact}
 
 /** Session memos follow their data directory's
   * [[SilverArtifact.dataFingerprint]]: a table rewritten in place is read
   * afresh by the same session, with no `SessionCaches.clear`, whether the
   * memo holds a source resolution, a stored artifact, a gold table, a
-  * staged table path or a purely in-memory index; superseded entries are
+  * staged table path, a bucketed catalog table, a staged stream source
+  * or a purely in-memory index; superseded entries are
   * unpersisted in every session; and a path that cannot be read is never
   * memoized. */
 class FreshnessSpec extends AnyFunSuite {
@@ -46,6 +48,11 @@ class FreshnessSpec extends AnyFunSuite {
     Files.write(java.nio.file.Paths.get(s"$d/$name.parquet"), Files.readAllBytes(part))
   }
 
+  private def bucketFiles(d: String): Set[String] = {
+    val st = Files.list(java.nio.file.Paths.get(SilverArtifact.pathFor(d, "buckets/lineitem")))
+    try st.iterator().asScala.map(_.getFileName.toString).toSet finally st.close()
+  }
+
   test("tables, baskets and sparse retrieval follow an in-place rewrite in one session") {
     val d = sandbox()
     val savedRoot = SilverArtifact.root
@@ -56,6 +63,9 @@ class FreshnessSpec extends AnyFunSuite {
     def pairDocs(df: DataFrame) = df.select("doc_a", "doc_b").collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     def dvTotal(df: DataFrame) = df.agg(sum("n_orders")).head().getLong(0)
+    def lines(df: DataFrame) = df.agg(sum("n_lines")).head().getLong(0)
+    def kept(df: DataFrame) = df.agg(sum("n_kept")).head().getLong(0)
+    def sessionUsers(df: DataFrame) = df.select("user_id").distinct().collect().map(_.getLong(0)).toSet
     val urgent = col("o_orderpriority") === "1-URGENT" && col("o_orderkey") % 10 < 3
     // the PQ codebook seeds on every 31st vector, so those stay
     val droppedVec = odd("vec_id") && col("vec_id") % 31 =!= 0
@@ -69,15 +79,23 @@ class FreshnessSpec extends AnyFunSuite {
       val dv0 = dvTotal(DeletionVectors.deletionVectorRead(s, d))
       val centroids0 = TemporalOps.embeddingCentroids(s, d).collect().toSeq
       val ann0 = Similarity.annIvfPqTopK(s, d)
+      val bucketed0 = lines(ScaleOps.bucketedJoin(s, d))
+      // part-file names carry the write job's id, so a re-bucket renames them
+      val bucketFiles0 = bucketFiles(d)
+      ScaleOps.bucketedJoin(s, d)
+      assert(bucketFiles(d) == bucketFiles0, "an unchanged source must not be re-bucketed")
+      val corpusKept0 = kept(EventsStream.corpusFilterStream(s, d))
+      val appendUsers0 = sessionUsers(EventsStream.sessionWindowAppend(s, d))
       assert(ranked0.exists(_.getAs[Long]("doc_id") % 2 == 1) && lshDocs0.exists(_ % 2 == 1) &&
-        !ann0.where(droppedVec).isEmpty,
-        "the fixture must reach some odd documents and vectors, or the rewrite below proves nothing")
+        !ann0.where(droppedVec).isEmpty && appendUsers0.exists(_ % 2 == 1),
+        "the fixture must reach some odd documents, vectors and users, or the rewrite below proves nothing")
       assert(basketsFrame0.storageLevel != StorageLevel.NONE)
 
       rewrite(d, "lineitem", col("l_orderkey") % 2 === 0)
       rewrite(d, "documents", col("doc_id") % 2 === 0)
       rewrite(d, "orders", col("o_orderkey") % 2 === 0)
       rewrite(d, "embeddings", !droppedVec)
+      rewrite(d, "events", col("user_id") % 2 === 0)
 
       // the CacheManager is shared: a session that looks first after the
       // rewrite must not be served the rows `s` cached before it
@@ -98,6 +116,8 @@ class FreshnessSpec extends AnyFunSuite {
       // all the stale kinds at once
       val fact1 = Medallion.factSales(s, d).count()
       val liveOrders = spark.read.parquet(s"$d/orders.parquet").where(!urgent).count()
+      val liveLines = even.join(spark.read.parquet(s"$d/orders.parquet"),
+        col("l_orderkey") === col("o_orderkey")).count()
       val stale = Seq(
         "(a) dedup_minhash_lsh: stored artifact under a (session, dir) memo" ->
           pairDocs(Dedup.minhashLsh(s, d)).forall(_ % 2 == 0),
@@ -111,7 +131,15 @@ class FreshnessSpec extends AnyFunSuite {
         "(e) superseded baskets entry unpersisted" ->
           (basketsFrame0.storageLevel == StorageLevel.NONE),
         "(f) ann_ivfpq in a second session: another session's superseded cache" ->
-          otherAnnFresh
+          otherAnnFresh,
+        "(g) bucketed_join: bucketed catalog tables" ->
+          (lines(ScaleOps.bucketedJoin(s, d)) == liveLines && liveLines < bucketed0),
+        "(h) stream_corpus_filter: copied-file stream stage" ->
+          (kept(EventsStream.corpusFilterStream(s, d)) < corpusKept0),
+        "(h) stream_session_append: derived-file stream stage" -> {
+          val users = sessionUsers(EventsStream.sessionWindowAppend(s, d))
+          users.nonEmpty && users.forall(_ % 2 == 0)
+        }
       ).collect { case (name, false) => name }
       assert(stale.isEmpty, s"stale after the rewrite: ${stale.mkString("; ")}")
 

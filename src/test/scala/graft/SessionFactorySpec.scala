@@ -11,7 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * optimizer extensions. A second `SparkSession.builder(` in `src/main`
   * would let their physical plans drift apart again; an env knob read
   * outside the two entry points would let a library path change behaviour
-  * with no option, spec or benchmark naming it. */
+  * with no option, spec or benchmark naming it. A fixed `/tmp/graft` root
+  * outside [[graft.util.SilverArtifact]] would put staged state where
+  * `SilverArtifact.root` cannot sandbox it, and a read that writes the
+  * session conf would make one session's behaviour depend on what it
+  * read before. */
 class SessionFactorySpec extends AnyFunSuite {
 
   test("GraftSession.scala is the only src/main file that calls SparkSession.builder(") {
@@ -36,6 +40,26 @@ class SessionFactorySpec extends AnyFunSuite {
         .map(_.getFileName.toString).toSet
       finally st.close()
     assert(readers.subsetOf(Set("Bench.scala", "GraftSession.scala")), readers)
+  }
+
+  test("SilverArtifact.scala is the only src/main file with a \"/tmp/graft literal") {
+    val st = Files.walk(Paths.get("src/main"))
+    val hits =
+      try st.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == "SilverArtifact.scala")
+        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("\"/tmp/graft") => s"${p.getFileName}:${i + 1}"
+        }).toSeq
+      finally st.close()
+    assert(hits.isEmpty, s"${hits.size} fixed roots: ${hits.mkString(", ")}")
+  }
+
+  test("Tables.events on a fresh session leaves its conf unchanged") {
+    val s = TestSpark.spark.newSession()
+    val before = s.conf.getAll
+    Tables.events(s, TestSpark.sf).schema
+    assert(s.conf.getAll == before)
   }
 
   test("the default shuffle partitions follow the N of local[N]") {
