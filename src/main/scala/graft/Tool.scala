@@ -41,21 +41,26 @@ object Tool {
     args.take(n)
   }
 
-  /** Runs the query once to warm plans, memos and the JIT, then times three
-    * passes, each until every result row has reached the `noop` sink.
-    * Returns the pass times in seconds. */
+  /** Produces every result row of `df` into the `noop` sink: end-to-end
+    * execution, where `count()` lets Catalyst prune whatever does not
+    * change the row count. */
+  def materialize(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** Runs the query once cold (warming plans, memos and the JIT), then
+    * times three steady passes, each until every result row has reached the
+    * `noop` sink. Prints all four; returns the steady pass times in seconds. */
   def time(spark: SparkSession, args: Seq[String]): Seq[Double] = {
     val Seq(sfDir, name) = need(args, 2, "time <sfDir> <query>")
     val fn = query(name)
-    def materialize(): Unit = fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    materialize()
-    val times = (1 to 3).map { i =>
+    def timed(label: String): Double = {
       val t0 = System.nanoTime()
-      materialize()
+      materialize(fn(spark, sfDir))
       val t = (System.nanoTime() - t0) / 1e9
-      println(f"[time] $name pass $i: $t%.3f s")
+      println(f"[time] $name $label: $t%.3f s")
       t
     }
+    timed("cold")
+    val times = (1 to 3).map(i => timed(s"pass $i"))
     println(f"[time] $name min: ${times.min}%.3f s")
     times
   }

@@ -15,17 +15,7 @@ import graft.Tables
   * integer threshold arithmetic), so each query has an exact DuckDB oracle.
   */
 object CorpusOps {
-
-  private def ws: Column = split(col("text"), " ")
-
-  /** Adjacent n-gram strings over the token array, empty below n tokens.
-    * (The guard matters: Spark's `sequence(1, 0)` yields the DESCENDING
-    * [1, 0], not an empty array like DuckDB's generate_series.) */
-  private def grams(n: Int): Column = {
-    val mk = transform(sequence(lit(1), size(ws) - (n - 1)),
-      i => concat_ws(" ", (0 until n).map(j => element_at(ws, i + j)): _*))
-    when(size(ws) >= n, mk).otherwise(array().cast("array<string>"))
-  }
+  import TextOps.ws
 
   private def gramsSql(n: Int): String = {
     val parts = (0 until n).map(j => s"ws[i + $j]").mkString(" || ' ' || ")
@@ -45,8 +35,8 @@ object CorpusOps {
       col("doc_id"),
       size(ws).cast("long").as("n_words"),
       dupRatio(ws).as("dup_word_ratio"),
-      dupRatio(grams(2)).as("dup_bigram_ratio"),
-      dupRatio(grams(3)).as("dup_trigram_ratio"))
+      dupRatio(Ngrams.wordNgrams(col("text"), 2)).as("dup_bigram_ratio"),
+      dupRatio(Ngrams.wordNgrams(col("text"), 3)).as("dup_trigram_ratio"))
       .orderBy("doc_id")
   }
 

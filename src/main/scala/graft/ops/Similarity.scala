@@ -733,10 +733,10 @@ ORDER BY vec_a, rnk"""
     * (same commutes-with-top-K argument as [[annTopKFor]]). */
   private def annInt8TopKFor(s: SparkSession, d: String,
       querySample: Option[DataFrame]): DataFrame = {
+    val scale = lit(127.0) / greatest(array_max(transform(col("v"), abs(_))), lit(1e-12))
     val emb = withNorm(s, d)
-      .withColumn("sc", lit(127.0) / greatest(
-        array_max(transform(col("v"), abs(_))), lit(1e-12)))
-      .withColumn("q", transform(col("v"), x => floor(x * col("sc")).cast("long")))
+      .withColumn("q", Ngrams.bind(scale)(sc =>
+        transform(col("v"), x => floor(x * sc).cast("long"))))
       // codegen dot (ArrayDot) over the codes AS DOUBLES: every product
       // and partial sum is an exactly-representable integer (≤ 127²·64 ≪
       // 2⁵³), so the double dot EQUALS the integer dot bit for bit — and

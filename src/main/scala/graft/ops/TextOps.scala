@@ -135,9 +135,8 @@ FROM documents ORDER BY doc_id"""
     Tables.documents(s, d).select(
       col("doc_id"),
       aggregate(
-        transform(sequence(lit(1), size(ws)),
-          i => i.cast("long") *
-            conv(substring(md5(element_at(ws, i)), 1, 8), 16, 10).cast("long")),
+        transform(ws, (w, i) => (i + 1).cast("long") *
+          conv(substring(md5(w), 1, 8), 16, 10).cast("long")),
         lit(0L), _ + _).as("fingerprint"))
       .orderBy("doc_id")
 
