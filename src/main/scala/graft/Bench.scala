@@ -1,6 +1,5 @@
 package graft
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -123,11 +122,11 @@ object Bench {
     // query is then EXCLUDED from the median/total (a time-until-exception
     // would masquerade as fast and understate regressions); it survives
     // only in the 'failed' list
-    def timeAll(run: DataFrame => Unit = Tool.materialize): Map[String, Double] = SparkEntry.queries
+    def timeAll(): Map[String, Double] = SparkEntry.queries
       .filter { case (name, _) => selected(name) }
       .map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) } catch { case e: Throwable =>
+        try { Tool.materialize(fn(spark, sfDir)) } catch { case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
@@ -149,9 +148,6 @@ object Bench {
     graft.util.SessionCaches.clear(spark)
     val coldPass = timeAll()
     val passes = Seq.fill(nPasses)(timeAll())
-    // one steady pass timed through count(), as every run before the noop
-    // sink was, so "count_total_sec" continues that series
-    val countPass = timeAll(_.count())
     val ok = passes.head.keys.filterNot(failed.contains).toSeq
     val spread = ok.map { k =>
       val ts = passes.map(_(k)).sorted
@@ -166,7 +162,6 @@ object Bench {
     val minsPer = spread.map { case (k, (mn, _, _)) => k -> mn }
     val cold = ok.map(k => k -> coldPass(k)).toMap
     val coldTotal = if (cold.nonEmpty) cold.values.sum else 0.0
-    val countTotal = ok.map(countPass).sum
     val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val minTotal = if (minsPer.nonEmpty) minsPer.values.sum else 0.0
@@ -183,7 +178,7 @@ object Bench {
     // prior round's "value"); "min_total_sec" is the noise-robust
     // min-of-passes statistic, and the per-query "spread" carries
     // [min,median,max]
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"count_total_sec":${r3(countTotal)},"passes":$nPasses,"failed":$fl,"queries":${entries(results.toSeq)},"cold":${entries(cold.toSeq)},"spread":${spreadEntries(results.keys.toSeq)},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"passes":$nPasses,"failed":$fl,"queries":${entries(results.toSeq)},"cold":${entries(cold.toSeq)},"spread":${spreadEntries(results.keys.toSeq)},"sf":"$sfDir"}"""
     // The harness that collects this output keeps only a ~2000-char tail of
     // stdout, and the full per-query map overflows it — the JSON line must
     // stay short enough to survive the tail capture INTACT. Print a line
@@ -200,7 +195,7 @@ object Bench {
         var line = json
         while (line.length > budget && kept.nonEmpty) {
           kept = kept.dropRight(math.max(1, kept.size / 8))
-          line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"count_total_sec":${r3(countTotal)},"passes":$nPasses,"failed":$fl,"queries_total":${results.size},"queries_elided":${results.size - kept.size},"queries":${entries(kept)},"cold":${entries(kept.map { case (k, _) => k -> cold(k) })},"spread":${spreadEntries(kept.map(_._1))},"sf":"$sfDir"}"""
+          line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"passes":$nPasses,"failed":$fl,"queries_total":${results.size},"queries_elided":${results.size - kept.size},"queries":${entries(kept)},"cold":${entries(kept.map { case (k, _) => k -> cold(k) })},"spread":${spreadEntries(kept.map(_._1))},"sf":"$sfDir"}"""
         }
         line
       }

@@ -1,13 +1,14 @@
 package graft.ops
 
-import java.nio.ByteBuffer
-
-/** A REAL JPEG (ITU-T T.81) codec in plain Scala — no library exists
-  * in this container for entropy decoding, so it is implemented here:
-  * marker segments (SOI/DQT/SOF/DHT/SOS/DRI/EOI), canonical Huffman
-  * table construction from DHT, the spec's EXTEND/RECEIVE magnitude
-  * coding, DC prediction, run/size AC coding with EOB and ZRL, 0xFF00
-  * byte unstuffing, dequantization, inverse zigzag, and a
+/** A REAL JPEG (ITU-T T.81) codec in plain Scala. The JDK's ImageIO reads
+  * baseline and progressive JPEG, but it cannot read the arithmetic,
+  * lossless or 12-bit modes, and its encoder quantizes pixels it
+  * transforms itself, so it cannot write the coefficient-exact fixtures
+  * the oracle gates need; both directions are therefore implemented
+  * here: marker segments (SOI/DQT/SOF/DHT/SOS/DRI/EOI), canonical
+  * Huffman table construction from DHT, the spec's EXTEND/RECEIVE
+  * magnitude coding, DC prediction, run/size AC coding with EOB and ZRL,
+  * 0xFF00 byte unstuffing, dequantization, inverse zigzag, and a
   * double-precision IDCT with level shift + clamp.
   *
   * Scope: baseline sequential (SOF0), extended sequential (SOF1 —
@@ -15,44 +16,47 @@ import java.nio.ByteBuffer
   * Huffman DICOM-export mode), progressive (SOF2) AND lossless
   * (SOF3, T.81 Annex H — predictors 1..7 at any precision 2..16 with
   * point transform and restarts, the mode old medical/DNG corpora
-  * carry; single-component; after an RSTn the remainder of that sample
-  * line predicts 1-D from Ra per H.1.1, matching external conformant
-  * codecs) Huffman coding, PLUS ARITHMETIC coding (the T.81 Annex D
-  * QM-coder with the full Table D.3 estimation state machine and DAC
-  * conditioning with spec defaults): SOF9 sequential at 8- and 12-bit
-  * grayscale and 8-bit YCbCr, decode AND encode, with per-interval
-  * statistics resets at restarts; SOF10 progressive DECODE covering
-  * all four G.2 scan procedures (DC first/refine, AC band first/
-  * refine with the kex EOB rule). Every arithmetic path is pinned
+  * carry; 1..4 interleaved components; after an RSTn the remainder of
+  * that sample line predicts 1-D from Ra per H.1.1, matching external
+  * conformant codecs) Huffman coding, PLUS ARITHMETIC coding (the T.81
+  * Annex D QM-coder with the full Table D.3 estimation state machine
+  * and DAC conditioning with spec defaults): SOF9 sequential at 8- and
+  * 12-bit grayscale and 8-bit YCbCr, decode AND encode, with
+  * per-interval statistics resets at restarts; SOF10 progressive DECODE
+  * covering all four G.2 scan procedures (DC first/refine, AC band
+  * first/refine with the kex EOB rule). Every arithmetic path is pinned
   * EXACTLY against the system libjpeg via entropy-level transcoding
   * in JpegArithSpec — tools/jpegarith.c regenerates the fixtures —
   * so conformance does not rest on shared-code round-trips (an encoder
   * and decoder sharing a bug agree with each other). For the 8-bit DCT
-  * modes,
-  * grayscale (one component) AND YCbCr color
-  * with the full T.81 sampling-factor range 1..4 — 4:4:4, 4:2:0 (the
-  * dominant real-world encoding), 4:2:2, 4:4:0 and the DV-derived
-  * 4:1:1 / 4:1:0. Progressive decoding covers
-  * the full T.81 G.1.2 surface a real scan script uses: interleaved
-  * and single-component DC scans, spectral selection (AC bands per
-  * component, non-interleaved as the spec requires), successive
-  * approximation (one-bit DC and AC refinement scans with EOB-run
-  * coding and correction bits), tables redefined between scans, and
-  * restart intervals inside any scan. The decoder is multi-scan: every
-  * scan accumulates into per-component coefficient buffers; dequant +
-  * IDCT happen once at assembly, so baseline and progressive share one
-  * reconstruction path and a progressive file decodes EXACTLY the
-  * raster its sequential re-encoding does (JpegCodecSpec pins this bit
-  * for bit). Interleaved MCUs carry hi×vi blocks per component;
-  * subsampled chroma upsamples by sample replication at the BT.601
-  * conversion; arbitrary (non-8-aligned) dims decode via full edge
-  * MCUs clipped on output; per-component quant/Huffman table selectors
-  * honored; restart intervals (DRI/RSTn — ubiquitous in camera output)
-  * decode with byte realignment, modulo-8 marker verification, DC-chain
-  * and EOB-run resets, and a lost or reordered restart marker rejects
-  * loudly instead of desynchronizing every later MCU. Everything else —
-  * 12-bit color, hierarchical, multi-component lossless, scan
-  * component order differing from the frame — is rejected LOUDLY.
+  * modes, grayscale (one component) AND YCbCr color with the full T.81
+  * sampling-factor range 1..4 — 4:4:4, 4:2:0 (the dominant real-world
+  * encoding), 4:2:2, 4:4:0 and the DV-derived 4:1:1 / 4:1:0.
+  * Progressive decoding covers the full T.81 G.1.2 surface a real scan
+  * script uses: interleaved and single-component DC scans, spectral
+  * selection (AC bands per component, non-interleaved as the spec
+  * requires), successive approximation (one-bit DC and AC refinement
+  * scans with EOB-run coding and correction bits), tables redefined
+  * between scans, and restart intervals inside any scan. The decoder is
+  * multi-scan: every scan accumulates into per-component coefficient
+  * buffers; dequant + IDCT happen once at assembly, so baseline and
+  * progressive share one reconstruction path and a progressive file
+  * decodes EXACTLY the raster its sequential re-encoding does
+  * (JpegCodecSpec pins this bit for bit). Subsampled chroma upsamples
+  * by sample replication at the BT.601 conversion; arbitrary
+  * (non-8-aligned) dims decode via full edge MCUs clipped on output;
+  * per-component quant/Huffman table selectors honored; restart
+  * intervals (DRI/RSTn — ubiquitous in camera output) decode with byte
+  * realignment, modulo-8 marker verification, DC-chain and EOB-run
+  * resets, and a lost or reordered restart marker rejects loudly
+  * instead of desynchronizing every later MCU. Everything else — 12-bit
+  * color, hierarchical, scan component order differing from the
+  * frame — is rejected LOUDLY.
+  *
+  * One frame model serves every DCT mode: [[encode]] takes a [[Frame]]
+  * and writes it through one header writer, and every scan — the
+  * Huffman and arithmetic decoders, the sequential and progressive
+  * encoders — visits its blocks through one MCU walk ([[Geometry.walk]]).
   *
   * Determinism note (how a LOSSY format still hash-gates): the oracle
   * fixtures are grids of CONSTANT 8×8 blocks with EVEN sample values
@@ -61,8 +65,9 @@ import java.nio.ByteBuffer
   * EXACT, and the DC-only IDCT is a constant whose float error (~1e-13)
   * vanishes under round-to-int. So the decoded raster provably equals
   * the generator's closed form, and the DuckDB oracle re-derives it —
-  * through a genuinely lossy pipeline. The general AC paths are
-  * exercised in JpegCodecSpec against an independent IDCT reference.
+  * through a genuinely lossy pipeline ([[constantBlocks]] checks both
+  * conditions). The general AC paths are exercised in JpegCodecSpec
+  * against an independent IDCT reference.
   */
 object JpegCodec {
 
@@ -125,6 +130,18 @@ object JpegCodec {
     require(vs.size == 226, s"ac12 symbol count ${vs.size}")
     vs.toArray
   }
+  /** AC Huffman spec for PROGRESSIVE scans: the baseline 162 symbols
+    * plus the EOBn symbols (r<<4, r = 1..14) that successive-
+    * approximation scans emit for EOB runs longer than one block.
+    * 176 nine-bit codes (Kraft: 176 ≤ 511, all-ones unused). */
+  private[graft] val ProgAcBits: Array[Int] = { val b = new Array[Int](17); b(9) = 176; b }
+  private[graft] val ProgAcVals: Array[Int] = {
+    val vs = collection.mutable.ArrayBuffer[Int](0x00, 0xf0)
+    for (r <- 1 to 14) vs += (r << 4)
+    for (run <- 0 to 15; size <- 1 to 10) vs += ((run << 4) | size)
+    require(vs.size == 176, s"prog ac symbol count ${vs.size}")
+    vs.toArray
+  }
 
   /** Canonical code assignment (T.81 Annex C): symbols in `vals` order,
     * lengths from `bits`; returns symbol -> (code, length). */
@@ -159,6 +176,9 @@ object JpegCodec {
         i -= 1
       }
     }
+    /** The `s` low bits of a value of magnitude category `s` (T.81
+      * F.1.2.1: ones' complement for negatives). */
+    def putValue(v: Int, s: Int): Unit = put(if (v >= 0) v else v + (1 << s) - 1, s)
     def finish(): Array[Byte] = {
       flushByte()
       out.toByteArray
@@ -183,17 +203,20 @@ object JpegCodec {
     s
   }
 
+  /** Code a DC-style difference: its magnitude category, then the value
+    * bits. A category the table lacks rejects loudly. */
+  private def putDiff(bits: BitWriter, codes: Map[Int, (Int, Int)], d: Int): Unit = {
+    val s = magnitude(d)
+    require(codes.contains(s), s"DC difference $d too large for the table")
+    val (c, l) = codes(s); bits.put(c, l)
+    if (s > 0) bits.putValue(d, s)
+  }
+
   /** Entropy-encode one quantized block (NATURAL order) and return the
     * block's DC for the caller's per-component predictor chain. */
   private def writeBlock(bits: BitWriter, blk: Array[Int], prevDc: Int,
-      dcC: Map[Int, (Int, Int)], acC: Map[Int, (Int, Int)],
-      maxDcCat: Int = 11, maxAcCat: Int = 10): Int = {
-    require(blk.length == 64)
-    val d = blk(0) - prevDc
-    val s = magnitude(d)
-    require(s <= maxDcCat, s"DC difference $d too large for the table")
-    val (c, l) = dcC(s); bits.put(c, l)
-    if (s > 0) bits.put(if (d >= 0) d else d + (1 << s) - 1, s)
+      dcC: Map[Int, (Int, Int)], acC: Map[Int, (Int, Int)]): Int = {
+    putDiff(bits, dcC, blk(0) - prevDc)
     // AC in zigzag order with run/size coding
     var k = 1; var run = 0
     while (k < 64) {
@@ -202,9 +225,9 @@ object JpegCodec {
       else {
         while (run >= 16) { val (zc, zl) = acC(0xf0); bits.put(zc, zl); run -= 16 }
         val sz = magnitude(v)
-        require(sz <= maxAcCat, s"AC magnitude $v too large for the table")
+        require(acC.contains((run << 4) | sz), s"AC magnitude $v too large for the table")
         val (ac, al) = acC((run << 4) | sz); bits.put(ac, al)
-        bits.put(if (v >= 0) v else v + (1 << sz) - 1, sz)
+        bits.putValue(v, sz)
         run = 0
       }
       k += 1
@@ -213,199 +236,254 @@ object JpegCodec {
     blk(0)
   }
 
-  // marker/segment emission shared by both encoders
+  // ---- marker segments: one header writer for every frame ----
+
   private def marker(out: java.io.ByteArrayOutputStream, m: Int): Unit = {
     out.write(0xff); out.write(m)
   }
-  private def seg(out: java.io.ByteArrayOutputStream, m: Int,
-      body: Array[Byte]): Unit = {
+  private def seg(out: java.io.ByteArrayOutputStream, m: Int, body: Seq[Int]): Unit = {
     marker(out, m)
     out.write((body.length + 2) >> 8); out.write((body.length + 2) & 0xff)
-    out.write(body)
+    body.foreach(b => out.write(b & 0xff))
   }
-  private def dhtSeg(out: java.io.ByteArrayOutputStream, cls: Int, id: Int,
-      bitsA: Array[Int], valsA: Array[Int]): Unit =
-    seg(out, 0xc4, Array[Byte](((cls << 4) | id).toByte) ++
-      (1 to 16).map(l => bitsA(l).toByte).toArray ++ valsA.map(_.toByte))
+  /** One DHT table: class (0 DC, 1 AC), id, code-length counts, symbols. */
+  private def dht(cls: Int, id: Int, bits: Array[Int], vals: Array[Int]): (Int, Seq[Int]) =
+    0xc4 -> (((cls << 4) | id) +: ((1 to 16).map(bits(_)) ++ vals))
 
-  /** Encode quantized COEFFICIENT blocks directly (the fixture
-    * generator's interface — DC-only constant blocks for the oracle,
-    * arbitrary coefficients in specs). `blocks` are row-major per block,
-    * NATURAL (not zigzag) order, already quantized. */
-  def encodeCoefficients(width: Int, height: Int, q: Int,
-      blocks: Array[Array[Int]], restartInterval: Int = 0): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0, s"dims must be 8-aligned: ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    require(blocks.length == bw * bh, s"${blocks.length} blocks for ${bw}x$bh grid")
-    val dcC = canonicalCodes(DcBits, DcVals)
-    val acC = canonicalCodes(AcBits, AcVals)
-    val bits = new BitWriter
-    var prevDc = 0
-    var rst = 0
-    blocks.zipWithIndex.foreach { case (blk, bi) =>
-      if (restartInterval > 0 && bi > 0 && bi % restartInterval == 0) {
-        bits.restart(rst); rst = (rst + 1) % 8
-        prevDc = 0 // restart resets the DC prediction chain
-      }
-      prevDc = writeBlock(bits, blk, prevDc, dcC, acC)
-    }
-    val entropy = bits.finish()
-
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8) // SOI
-    seg(out, 0xdb, Array[Byte](0x00) ++ Array.fill(64)(q.toByte)) // DQT, uniform
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc0, ByteBuffer.allocate(9) // SOF0: precision, dims, 1 component
-      .put(8.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(1.toByte).put(1.toByte).put(0x11.toByte).put(0.toByte).array())
-    dhtSeg(out, 0, 0, DcBits, DcVals)
-    dhtSeg(out, 1, 0, AcBits, AcVals)
-    seg(out, 0xda, Array[Byte](1, 1, 0x00, 0, 63, 0)) // SOS
-    out.write(entropy)
-    marker(out, 0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** Encode a 4:4:4 COLOR JPEG from per-component quantized coefficient
-    * blocks (NATURAL order): one MCU = one Y + one Cb + one Cr block,
-    * luma on quant/Huffman selector 0, both chromas on selector 1 —
-    * the standard JFIF table assignment, so the decoder's selector
-    * plumbing is genuinely exercised even though the table CONTENTS here
-    * are identical specs. */
-  def encodeCoefficientsColor(width: Int, height: Int, qY: Int, qC: Int,
-      y: Array[Array[Int]], cb: Array[Array[Int]], cr: Array[Array[Int]]): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0, s"dims must be 8-aligned: ${width}x$height")
-    val n = (width / 8) * (height / 8)
-    require(y.length == n && cb.length == n && cr.length == n,
-      s"need $n blocks per component, got ${y.length}/${cb.length}/${cr.length}")
-    val dcC = canonicalCodes(DcBits, DcVals)
-    val acC = canonicalCodes(AcBits, AcVals)
-    val bits = new BitWriter
-    val prevDc = new Array[Int](3)
-    var bi = 0
-    while (bi < n) { // interleaved MCUs: Y, Cb, Cr per MCU
-      prevDc(0) = writeBlock(bits, y(bi), prevDc(0), dcC, acC)
-      prevDc(1) = writeBlock(bits, cb(bi), prevDc(1), dcC, acC)
-      prevDc(2) = writeBlock(bits, cr(bi), prevDc(2), dcC, acC)
-      bi += 1
-    }
-    val entropy = bits.finish()
-
-    val out = new java.io.ByteArrayOutputStream()
+  /** Everything a frame carries before its first scan, in one order for
+    * every mode: SOI, DQT (DCT frames: one uniform table per step, 8-bit
+    * entries at precision 8, 16-bit Pq=1 entries otherwise), DRI (when
+    * restarts are on), SOF (component ids 1..n with their sampling byte
+    * and quant selector), then the DHT or DAC segments. */
+  private def writeHeader(out: java.io.ByteArrayOutputStream, sof: Int,
+      precision: Int, width: Int, height: Int, comps: Seq[(Int, Int)],
+      quant: Seq[Int], restartInterval: Int, tables: Seq[(Int, Seq[Int])]): Unit = {
     marker(out, 0xd8)
-    // one DQT segment carrying BOTH tables (tq 0 = luma, tq 1 = chroma)
-    seg(out, 0xdb,
-      (Array[Byte](0x00) ++ Array.fill(64)(qY.toByte)) ++
-        (Array[Byte](0x01) ++ Array.fill(64)(qC.toByte)))
-    seg(out, 0xc0, ByteBuffer.allocate(15) // SOF0: 3 components, all 1x1
-      .put(8.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(3.toByte)
-      .put(1.toByte).put(0x11.toByte).put(0.toByte)  // Y:  tq0
-      .put(2.toByte).put(0x11.toByte).put(1.toByte)  // Cb: tq1
-      .put(3.toByte).put(0x11.toByte).put(1.toByte)  // Cr: tq1
-      .array())
-    dhtSeg(out, 0, 0, DcBits, DcVals); dhtSeg(out, 1, 0, AcBits, AcVals)
-    dhtSeg(out, 0, 1, DcBits, DcVals); dhtSeg(out, 1, 1, AcBits, AcVals)
-    seg(out, 0xda, Array[Byte](3,
-      1, 0x00,  // Y  -> DC0/AC0
-      2, 0x11,  // Cb -> DC1/AC1
-      3, 0x11,  // Cr -> DC1/AC1
-      0, 63, 0))
-    out.write(entropy)
-    marker(out, 0xd9)
-    out.toByteArray
+    if (quant.nonEmpty)
+      seg(out, 0xdb, quant.indices.flatMap { t =>
+        if (precision == 8) t +: Seq.fill(64)(quant(t))
+        else (0x10 | t) +: Seq.fill(64)(Seq(quant(t) >> 8, quant(t))).flatten
+      })
+    if (restartInterval > 0) seg(out, 0xdd, Seq(restartInterval >> 8, restartInterval))
+    seg(out, sof, Seq(precision, height >> 8, height, width >> 8, width, comps.size) ++
+      comps.zipWithIndex.flatMap { case ((hv, tq), ci) => Seq(ci + 1, hv, tq) })
+    tables.foreach { case (m, body) => seg(out, m, body) }
   }
 
-  /** Encode a 4:2:0 COLOR JPEG from quantized coefficient blocks
-    * (NATURAL order): Y at full resolution ((w/8)·(h/8) blocks, raster
-    * order), Cb/Cr at QUARTER resolution ((w/16)·(h/16) blocks each).
-    * Each MCU covers 16×16 pixels and interleaves four raster-ordered Y
-    * blocks then one Cb and one Cr — the dominant encoding of real-world
-    * JPEGs, so the decoder's subsampled-MCU and upsampling paths are
-    * exercised by real bytes. Encoder fixtures stay 16-aligned; the
-    * DECODER accepts arbitrary dims (partial edge MCUs clip). */
-  def encodeCoefficients420(width: Int, height: Int, qY: Int, qC: Int,
-      y: Array[Array[Int]], cb: Array[Array[Int]], cr: Array[Array[Int]],
-      sh: Int = 2, sv: Int = 2, restartInterval: Int = 0): Array[Byte] = {
-    require(sh >= 1 && sh <= 4 && sv >= 1 && sv <= 4 && sh * sv <= 8,
-      s"Y sampling factors must be 1..4 with at most 8 luma blocks per MCU, got ${sh}x$sv")
-    require(width % (8 * sh) == 0 && height % (8 * sv) == 0,
-      s"fixture dims must align to the ${8 * sh}x${8 * sv} MCU: ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    val cw = width / (8 * sh); val chh = height / (8 * sv)
-    require(y.length == bw * bh, s"need ${bw * bh} Y blocks, got ${y.length}")
-    require(cb.length == cw * chh && cr.length == cw * chh,
-      s"need ${cw * chh} chroma blocks, got ${cb.length}/${cr.length}")
-    val dcC = canonicalCodes(DcBits, DcVals)
-    val acC = canonicalCodes(AcBits, AcVals)
-    val bits = new BitWriter
-    val prevDc = new Array[Int](3)
-    var rst = 0; var mcu = 0
-    var my = 0
-    while (my < chh) {
-      var mx = 0
-      while (mx < cw) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          bits.restart(rst); rst = (rst + 1) % 8
-          java.util.Arrays.fill(prevDc, 0)
-        }
-        mcu += 1
-        var dy = 0
-        while (dy < sv) { // sh×sv Y blocks, raster order within the MCU
-          var dx = 0
-          while (dx < sh) {
-            prevDc(0) = writeBlock(bits, y((sv * my + dy) * bw + sh * mx + dx),
-              prevDc(0), dcC, acC)
-            dx += 1
+  /** SOS: (frame component index, table-selector byte) per scan
+    * component, then Ss, Se and Ah<<4|Al (lossless scans carry the
+    * predictor in Ss and the point transform in Al). */
+  private def sos(out: java.io.ByteArrayOutputStream, comps: Seq[(Int, Int)],
+      ss: Int, se: Int, ahal: Int): Unit =
+    seg(out, 0xda, (comps.size +: comps.flatMap { case (ci, sel) => Seq(ci + 1, sel) }) ++
+      Seq(ss, se, ahal))
+
+  // ---- frame geometry and the one MCU walk (T.81 A.2) ----
+
+  /** Block geometry of a frame whose components sample at `h`×`v`
+    * (T.81 A.2.3): the interleaved MCU covers 8·hmax × 8·vmax pixels and
+    * carries hi×vi raster-ordered blocks per component. Component planes
+    * live at reduced resolution and are stored on the full MCU grid
+    * (`padW` × `padH` blocks), so partial edge MCUs decode in full and
+    * clip on output; `trueW` × `trueH` is the component's OWN block grid
+    * (ceil(compW/8) × ceil(compH/8)) — what a non-interleaved scan walks
+    * (A.2.2), NOT the padded grid. */
+  private final class Geometry(width: Int, height: Int,
+      val h: Array[Int], val v: Array[Int]) {
+    val hmax: Int = h.max
+    val vmax: Int = v.max
+    val mcusX: Int = (width + 8 * hmax - 1) / (8 * hmax)
+    val mcusY: Int = (height + 8 * vmax - 1) / (8 * vmax)
+    val padW: Array[Int] = h.map(mcusX * _)
+    val padH: Array[Int] = v.map(mcusY * _)
+    val trueW: Array[Int] = h.map(hi => ((width * hi + hmax - 1) / hmax + 7) / 8)
+    val trueH: Array[Int] = v.map(vi => ((height * vi + vmax - 1) / vmax + 7) / 8)
+
+    /** Visit one scan's blocks in stream order. `scan` lists frame
+      * component indices; `block(si, b)` gets the position `si` in `scan`
+      * and the block's index `b` on that component's padded grid. A
+      * one-component scan is non-interleaved: it walks the component's
+      * own grid, one block per data unit. An interleaved scan visits
+      * hi×vi blocks per component per MCU. `restart(m)` fires before
+      * every `restartInterval`-th data unit after the first, with `m` the
+      * RSTm number (mod 8). */
+    def walk(scan: Array[Int], restartInterval: Int)(restart: Int => Unit)(
+        block: (Int, Int) => Unit): Unit = {
+      val interleaved = scan.length > 1
+      val units = if (interleaved) mcusX * mcusY else trueW(scan(0)) * trueH(scan(0))
+      var u = 0
+      while (u < units) {
+        if (restartInterval > 0 && u > 0 && u % restartInterval == 0)
+          restart((u / restartInterval - 1) & 7)
+        if (interleaved) {
+          val mx = u % mcusX; val my = u / mcusX
+          var si = 0
+          while (si < scan.length) {
+            val ci = scan(si)
+            var b = 0
+            while (b < h(ci) * v(ci)) {
+              block(si, (my * v(ci) + b / h(ci)) * padW(ci) + mx * h(ci) + b % h(ci))
+              b += 1
+            }
+            si += 1
           }
-          dy += 1
+        } else {
+          val ci = scan(0); val bw = trueW(ci)
+          block(0, (u / bw) * padW(ci) + u % bw)
         }
-        prevDc(1) = writeBlock(bits, cb(my * cw + mx), prevDc(1), dcC, acC)
-        prevDc(2) = writeBlock(bits, cr(my * cw + mx), prevDc(2), dcC, acC)
-        mx += 1
+        u += 1
       }
-      my += 1
     }
-    val entropy = bits.finish()
-
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    seg(out, 0xdb,
-      (Array[Byte](0x00) ++ Array.fill(64)(qY.toByte)) ++
-        (Array[Byte](0x01) ++ Array.fill(64)(qC.toByte)))
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc0, ByteBuffer.allocate(15) // SOF0: Y sh×sv, chroma 1x1
-      .put(8.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(3.toByte)
-      .put(1.toByte).put(((sh << 4) | sv).toByte).put(0.toByte) // Y: tq0
-      .put(2.toByte).put(0x11.toByte).put(1.toByte)             // Cb: tq1
-      .put(3.toByte).put(0x11.toByte).put(1.toByte)             // Cr: tq1
-      .array())
-    dhtSeg(out, 0, 0, DcBits, DcVals); dhtSeg(out, 1, 0, AcBits, AcVals)
-    dhtSeg(out, 0, 1, DcBits, DcVals); dhtSeg(out, 1, 1, AcBits, AcVals)
-    seg(out, 0xda, Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0))
-    out.write(entropy)
-    marker(out, 0xd9)
-    out.toByteArray
   }
 
-  // ---- progressive encoder ----
+  // ---- DCT encoder ----
 
-  /** AC Huffman spec for PROGRESSIVE scans: the baseline 162 symbols
-    * plus the EOBn symbols (r<<4, r = 1..14) that successive-
-    * approximation scans emit for EOB runs longer than one block.
-    * 176 nine-bit codes (Kraft: 176 ≤ 511, all-ones unused). */
-  private[graft] val ProgAcBits: Array[Int] = { val b = new Array[Int](17); b(9) = 176; b }
-  private[graft] val ProgAcVals: Array[Int] = {
-    val vs = collection.mutable.ArrayBuffer[Int](0x00, 0xf0)
-    for (r <- 1 to 14) vs += (r << 4)
-    for (run <- 0 to 15; size <- 1 to 10) vs += ((run << 4) | size)
-    require(vs.size == 176, s"prog ac symbol count ${vs.size}")
-    vs.toArray
+  /** One component of a [[Frame]]: quantized coefficient blocks in
+    * NATURAL (row-major, not zigzag) order, in raster order over the
+    * component's own block grid; its sampling factors; and the table
+    * selector its quant step and entropy tables are read from. */
+  final case class Component(blocks: Array[Array[Int]], h: Int, v: Int, table: Int)
+
+  /** A DCT frame for [[encode]]: dims, precision (8 or 12), components,
+    * the uniform quant step of each table selector, the entropy coder
+    * (Huffman, or the arithmetic QM-coder), the scan structure (one
+    * sequential scan, or the canonical progressive script) and the
+    * restart interval in data units. */
+  final case class Frame(width: Int, height: Int, components: Seq[Component],
+      quant: Seq[Int], precision: Int, arithmetic: Boolean, progressive: Boolean,
+      restartInterval: Int)
+
+  object Frame {
+    /** A sequential 8-bit Huffman grayscale frame: one component on table 0. */
+    def gray(width: Int, height: Int, q: Int, blocks: Array[Array[Int]]): Frame =
+      Frame(width, height, Seq(Component(blocks, 1, 1, 0)), Seq(q),
+        precision = 8, arithmetic = false, progressive = false, restartInterval = 0)
+
+    /** A sequential 8-bit Huffman YCbCr frame in the JFIF table
+      * assignment: Y at `sh`×`sv` sampling on table 0 ((w/8)·(h/8)
+      * blocks), both chromas 1×1 SHARING table 1 ((w/8sh)·(h/8sv) blocks
+      * each) — 1×1 is 4:4:4, 2×2 4:2:0, 2×1 4:2:2, 4×1 4:1:1. */
+    def ycc(width: Int, height: Int, qY: Int, qC: Int, y: Array[Array[Int]],
+        cb: Array[Array[Int]], cr: Array[Array[Int]], sh: Int, sv: Int): Frame =
+      Frame(width, height,
+        Seq(Component(y, sh, sv, 0), Component(cb, 1, 1, 1), Component(cr, 1, 1, 1)),
+        Seq(qY, qC), precision = 8, arithmetic = false, progressive = false,
+        restartInterval = 0)
+  }
+
+  // conditioning defaults (T.81 F.1.4.4.1.2 / F.1.4.4.2.1): the encoder
+  // writes them into DAC, the decoder assumes them when DAC is absent
+  private val DacDefaultL = 0
+  private val DacDefaultU = 1
+  private val DacDefaultKx = 5
+
+  /** The canonical progressive script: DC first at Al=1 over every
+    * component (interleaved when there are several), the first
+    * component's AC split into the bands 1..5 and 6..63 around the other
+    * components' whole-band AC, then one-bit refinements of everything
+    * (DC interleaved, AC per component). Each entry is (components, Ss,
+    * Se, Ah, Al). */
+  private def progressiveScript(nc: Int): Seq[(Array[Int], Int, Int, Int, Int)] = {
+    val all = Array.range(0, nc)
+    Seq((all, 0, 0, 0, 1), (Array(0), 1, 5, 0, 1)) ++
+      (1 until nc).map(c => (Array(c), 1, 63, 0, 1)) ++
+      Seq((Array(0), 6, 63, 0, 1), (all, 0, 0, 1, 0)) ++
+      (0 until nc).map(c => (Array(c), 1, 63, 1, 0))
+  }
+
+  /** Encode a DCT frame: sequential Huffman (SOF0; SOF1 at 12-bit),
+    * sequential arithmetic (SOF9, default conditioning spelled out in
+    * DAC; every restart interval flushes the coder and resets the
+    * statistics) or progressive Huffman (SOF2, [[progressiveScript]]). A
+    * spec-correct progressive decoder reconstructs EXACTLY the raster the
+    * sequential encoding of the same blocks produces. Rejects loudly what
+    * the decoder cannot read back (12-bit colour, 12-bit progressive) and
+    * what this encoder does not write (arithmetic progressive, subsampled
+    * chroma, dims off the MCU grid). */
+  def encode(frame: Frame): Array[Byte] = {
+    import frame._
+    val nc = components.size
+    require(precision == 8 || precision == 12, s"DCT precision must be 8 or 12, got $precision")
+    require(nc == 1 || nc == 3, s"1 (gray) or 3 (YCbCr) components, got $nc")
+    require(precision == 8 || nc == 1, "12-bit frames are grayscale only")
+    require(!progressive || (precision == 8 && !arithmetic),
+      "progressive frames are 8-bit Huffman only")
+    val y = components.head
+    require(if (nc == 1) y.h == 1 && y.v == 1
+      else y.h >= 1 && y.h <= 4 && y.v >= 1 && y.v <= 4 && y.h * y.v <= 8 &&
+        components.tail.forall(c => c.h == 1 && c.v == 1),
+      "sampling must be 1x1 for gray; for color, Y 1..4 x 1..4 with at most " +
+        s"8 luma blocks per MCU over 1x1 chroma, got ${components.map(c => s"${c.h}x${c.v}")}")
+    val maxQ = if (precision == 8) 255 else 65535
+    require(quant.size <= 4 && quant.forall(q => q >= 1 && q <= maxQ),
+      s"at most 4 quant steps, each 1..$maxQ, got $quant")
+    require(components.forall(c => quant.indices.contains(c.table)),
+      "every component's table selector needs a quant step")
+    require(restartInterval >= 0 && restartInterval <= 0xffff,
+      s"restart interval $restartInterval out of range")
+    val geo = new Geometry(width, height, components.map(_.h).toArray, components.map(_.v).toArray)
+    require(width > 0 && height > 0 && width <= 0xffff && height <= 0xffff &&
+      width % (8 * geo.hmax) == 0 && height % (8 * geo.vmax) == 0,
+      s"dims must align to the ${8 * geo.hmax}x${8 * geo.vmax} MCU: ${width}x$height")
+    val blocks = components.map(_.blocks).toArray
+    blocks.indices.foreach { ci =>
+      val n = geo.trueW(ci) * geo.trueH(ci)
+      require(blocks(ci).length == n && blocks(ci).forall(_.length == 64),
+        s"component $ci: need $n blocks of 64 coefficients, got ${blocks(ci).length}")
+    }
+    val (dcBits, dcVals, acBits, acVals) =
+      if (precision == 12) (Dc12Bits, Dc12Vals, Ac12Bits, Ac12Vals)
+      else if (progressive) (DcBits, DcVals, ProgAcBits, ProgAcVals)
+      else (DcBits, DcVals, AcBits, AcVals)
+    val dcC = canonicalCodes(dcBits, dcVals)
+    val acC = canonicalCodes(acBits, acVals)
+    val tables =
+      if (arithmetic)
+        Seq(0xcc -> (quant.indices.flatMap(t => Seq(t, (DacDefaultU << 4) | DacDefaultL)) ++
+          quant.indices.flatMap(t => Seq(0x10 | t, DacDefaultKx))))
+      else quant.indices.flatMap(t => Seq(dht(0, t, dcBits, dcVals), dht(1, t, acBits, acVals)))
+    val sof =
+      if (progressive) 0xc2 else if (arithmetic) 0xc9 else if (precision == 12) 0xc1 else 0xc0
+    val out = new java.io.ByteArrayOutputStream()
+    writeHeader(out, sof, precision, width, height,
+      components.map(c => ((c.h << 4) | c.v, c.table)), quant, restartInterval, tables)
+    def sel(ci: Int): (Int, Int) = ci -> ((components(ci).table << 4) | components(ci).table)
+    val all = Array.range(0, nc)
+    if (progressive) {
+      val zig = blocks.map(_.map(blk => Array.tabulate(64)(k => blk(Zigzag(k)))))
+      progressiveScript(nc).foreach { case (scan, ss, se, ah, al) =>
+        sos(out, scan.toSeq.map(sel), ss, se, (ah << 4) | al)
+        out.write(progressiveScan(geo, scan, zig, ss, se, ah, al, restartInterval, dcC, acC))
+      }
+    } else {
+      sos(out, all.toSeq.map(sel), 0, 63, 0)
+      if (arithmetic) {
+        val enc = new ArithEncoder
+        val stats = new ArithStats(nc, Array.fill(4)(DacDefaultL),
+          Array.fill(4)(DacDefaultU), Array.fill(4)(DacDefaultKx))
+        geo.walk(all, restartInterval) { m =>
+          out.write(enc.flush()); marker(out, 0xd0 + m)
+          stats.reset()
+        } { (si, b) =>
+          val blk = blocks(si)(b); val t = components(si).table
+          arithEncodeDc(enc, stats, t, si, blk(0))
+          arithEncodeAc(enc, stats, t, blk, 1, 63)
+        }
+        out.write(enc.flush())
+      } else {
+        val bits = new BitWriter
+        val prevDc = new Array[Int](nc)
+        geo.walk(all, restartInterval) { m =>
+          bits.restart(m)
+          java.util.Arrays.fill(prevDc, 0) // restart resets the DC prediction chains
+        } { (si, b) =>
+          prevDc(si) = writeBlock(bits, blocks(si)(b), prevDc(si), dcC, acC)
+        }
+        out.write(bits.finish())
+      }
+    }
+    marker(out, 0xd9)
+    out.toByteArray
   }
 
   /** One progressive AC SCAN's encoder state (the encoder mirror of the
@@ -449,7 +527,7 @@ object JpegCodec {
           val sz = magnitude(t)
           require(sz <= 10, s"AC magnitude $t too large for the table")
           emitAc((r << 4) | sz)
-          bits.put(if (t >= 0) t else t + (1 << sz) - 1, sz)
+          bits.putValue(t, sz)
           r = 0
         }
         k += 1
@@ -504,262 +582,54 @@ object JpegCodec {
     }
   }
 
-  /** Progressive frame-and-scan assembly shared by the gray and color
-    * encoders. `comps`: per component (zigzag-ordered quantized blocks,
-    * block-grid width/height, sampling h, sampling v, table selector).
-    * `script`: (component indices, Ss, Se, Ah, Al) per scan — DC scans
-    * may interleave all components; AC scans carry one component. */
-  private def writeProgressiveScans(out: java.io.ByteArrayOutputStream,
-      comps: Array[(Array[Array[Int]], Int, Int, Int, Int, Int)],
-      script: Seq[(Seq[Int], Int, Int, Int, Int)],
-      mcusX: Int, mcusY: Int, restartInterval: Int): Unit = {
-    val dcC = canonicalCodes(DcBits, DcVals)
-    val acC = canonicalCodes(ProgAcBits, ProgAcVals)
-    script.foreach { case (compIdx, ss, se, ah, al) =>
-      // SOS header
-      val hdr = new collection.mutable.ArrayBuffer[Byte]
-      hdr += compIdx.size.toByte
-      compIdx.foreach { ci =>
-        val sel = comps(ci)._6
-        hdr += (ci + 1).toByte // component ids are 1-based
-        hdr += ((sel << 4) | sel).toByte
-      }
-      hdr += ss.toByte; hdr += se.toByte; hdr += ((ah << 4) | al).toByte
-      seg(out, 0xda, hdr.toArray)
-      // entropy data
-      val bits = new BitWriter
-      val prog = new ProgAcWriter(bits, acC)
-      val prevDc = new Array[Int](compIdx.size)
-      var rst = 0; var units = 0
-      def maybeRestart(): Unit =
-        if (restartInterval > 0 && units == restartInterval) {
-          prog.flushEob()
-          bits.restart(rst); rst = (rst + 1) % 8
-          java.util.Arrays.fill(prevDc, 0)
-          units = 0
-        }
-      def unit(si: Int, blk: Array[Int]): Unit =
-        if (ss == 0) {
-          if (ah == 0) {
-            val v = blk(0) >> al // DC point transform: arithmetic shift
-            val d = v - prevDc(si); prevDc(si) = v
-            val sz = magnitude(d)
-            require(sz <= 11, s"DC difference $d too large for the table")
-            val (c, l) = dcC(sz); bits.put(c, l)
-            if (sz > 0) bits.put(if (d >= 0) d else d + (1 << sz) - 1, sz)
-          } else bits.put((blk(0) >> al) & 1, 1)
-        } else {
-          if (ah == 0) prog.firstBlock(blk, ss, se, al)
-          else prog.refineBlock(blk, ss, se, al)
-        }
-      if (compIdx.size == 1) {
-        val (blocks, bw, bh, _, _, _) = comps(compIdx.head)
-        var bi = 0
-        while (bi < bw * bh) {
-          maybeRestart()
-          unit(0, blocks(bi))
-          units += 1
-          bi += 1
-        }
-      } else {
-        var mi = 0
-        while (mi < mcusX * mcusY) {
-          maybeRestart()
-          val mx = mi % mcusX; val my = mi / mcusX
-          var si = 0
-          while (si < compIdx.size) {
-            val (blocks, bw, _, ch, cv, _) = comps(compIdx(si))
-            var b = 0
-            while (b < ch * cv) {
-              unit(si, blocks((cv * my + b / ch) * bw + ch * mx + b % ch))
-              b += 1
-            }
-            si += 1
-          }
-          units += 1
-          mi += 1
-        }
-      }
-      prog.flushEob()
-      out.write(bits.finish())
-    }
-  }
-
-  /** Encode a PROGRESSIVE (SOF2) color JPEG from the same quantized
-    * coefficient blocks as [[encodeCoefficients420]] — spectral
-    * selection (a low and a high luma AC band) AND successive
-    * approximation (every scan at Al=1 with a one-bit refinement pass),
-    * the canonical real-world scan script shape. A spec-correct
-    * progressive decoder reconstructs EXACTLY the raster the sequential
-    * encoding of the same blocks produces — the coefficients land
-    * bit-identically once all scans apply. */
-  def encodeCoefficientsProgressive(width: Int, height: Int, qY: Int, qC: Int,
-      y: Array[Array[Int]], cb: Array[Array[Int]], cr: Array[Array[Int]],
-      sh: Int = 2, sv: Int = 2, restartInterval: Int = 0): Array[Byte] = {
-    require(sh >= 1 && sh <= 4 && sv >= 1 && sv <= 4 && sh * sv <= 8,
-      s"Y sampling factors must be 1..4 with at most 8 luma blocks per MCU, got ${sh}x$sv")
-    require(width % (8 * sh) == 0 && height % (8 * sv) == 0,
-      s"fixture dims must align to the ${8 * sh}x${8 * sv} MCU: ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    val cw = width / (8 * sh); val chh = height / (8 * sv)
-    require(y.length == bw * bh, s"need ${bw * bh} Y blocks, got ${y.length}")
-    require(cb.length == cw * chh && cr.length == cw * chh,
-      s"need ${cw * chh} chroma blocks, got ${cb.length}/${cr.length}")
-    def zigOf(blk: Array[Int]): Array[Int] = Array.tabulate(64)(i => blk(Zigzag(i)))
-    val comps = Array(
-      (y.map(zigOf), bw, bh, sh, sv, 0),
-      (cb.map(zigOf), cw, chh, 1, 1, 1),
-      (cr.map(zigOf), cw, chh, 1, 1, 1))
-
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    seg(out, 0xdb,
-      (Array[Byte](0x00) ++ Array.fill(64)(qY.toByte)) ++
-        (Array[Byte](0x01) ++ Array.fill(64)(qC.toByte)))
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc2, ByteBuffer.allocate(15) // SOF2: Y sh×sv, chroma 1x1
-      .put(8.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(3.toByte)
-      .put(1.toByte).put(((sh << 4) | sv).toByte).put(0.toByte) // Y: tq0
-      .put(2.toByte).put(0x11.toByte).put(1.toByte)             // Cb: tq1
-      .put(3.toByte).put(0x11.toByte).put(1.toByte)             // Cr: tq1
-      .array())
-    dhtSeg(out, 0, 0, DcBits, DcVals); dhtSeg(out, 1, 0, ProgAcBits, ProgAcVals)
-    dhtSeg(out, 0, 1, DcBits, DcVals); dhtSeg(out, 1, 1, ProgAcBits, ProgAcVals)
-    // the canonical 9-scan script: interleaved DC first at Al=1; luma AC
-    // split into two spectral bands; chroma AC whole-band; then one-bit
-    // refinements of everything (DC interleaved, AC per component)
-    writeProgressiveScans(out, comps, Seq(
-      (Seq(0, 1, 2), 0, 0, 0, 1),
-      (Seq(0), 1, 5, 0, 1),
-      (Seq(1), 1, 63, 0, 1),
-      (Seq(2), 1, 63, 0, 1),
-      (Seq(0), 6, 63, 0, 1),
-      (Seq(0, 1, 2), 0, 0, 1, 0),
-      (Seq(0), 1, 63, 1, 0),
-      (Seq(1), 1, 63, 1, 0),
-      (Seq(2), 1, 63, 1, 0)),
-      (width + 8 * sh - 1) / (8 * sh), (height + 8 * sv - 1) / (8 * sv),
-      restartInterval)
-    marker(out, 0xd9)
-    out.toByteArray
-  }
-
-  /** Grayscale progressive encoder (one component, non-interleaved DC
-    * scan included on the gate path). */
-  def encodeCoefficientsProgressiveGray(width: Int, height: Int, q: Int,
-      blocks: Array[Array[Int]], restartInterval: Int = 0): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0, s"dims must be 8-aligned: ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    require(blocks.length == bw * bh, s"${blocks.length} blocks for ${bw}x$bh grid")
-    def zigOf(blk: Array[Int]): Array[Int] = Array.tabulate(64)(i => blk(Zigzag(i)))
-    val comps = Array((blocks.map(zigOf), bw, bh, 1, 1, 0))
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    seg(out, 0xdb, Array[Byte](0x00) ++ Array.fill(64)(q.toByte))
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc2, ByteBuffer.allocate(9)
-      .put(8.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(1.toByte).put(1.toByte).put(0x11.toByte).put(0.toByte).array())
-    dhtSeg(out, 0, 0, DcBits, DcVals)
-    dhtSeg(out, 1, 0, ProgAcBits, ProgAcVals)
-    writeProgressiveScans(out, comps, Seq(
-      (Seq(0), 0, 0, 0, 1),
-      (Seq(0), 1, 5, 0, 1),
-      (Seq(0), 6, 63, 0, 1),
-      (Seq(0), 0, 0, 1, 0),
-      (Seq(0), 1, 63, 1, 0)),
-      bw, bh, restartInterval)
-    marker(out, 0xd9)
-    out.toByteArray
-  }
-
-  /** Encode a grayscale raster as DC-only constant blocks — valid ONLY
-    * when every 8×8 block is constant (the oracle fixtures); asserts it. */
-  def encodeConstantBlocks(width: Int, height: Int, pixels: Array[Int],
-      q: Int = 16): Array[Byte] = {
-    require(pixels.length == width * height)
-    val bw = width / 8
-    val blocks = Array.tabulate((width / 8) * (height / 8)) { bi =>
-      val bx = bi % bw; val by = bi / bw
-      val v = pixels(by * 8 * width + bx * 8)
-      for (y <- 0 until 8; x <- 0 until 8)
-        require(pixels((by * 8 + y) * width + bx * 8 + x) == v,
-          s"block ($bx,$by) not constant")
-      val dc = 8 * (v - 128)
-      require(dc % q == 0, s"DC $dc not exactly quantizable by $q (need even v)")
-      val blk = new Array[Int](64); blk(0) = dc / q; blk
-    }
-    encodeCoefficients(width, height, q, blocks)
-  }
-
-  /** Encode quantized coefficient blocks as a 12-BIT EXTENDED-SEQUENTIAL
-    * (SOF1) grayscale JPEG — the Huffman DICOM-export mode. Same entropy
-    * machinery as baseline with the 12-bit reach: DC categories to 15,
-    * AC sizes to 14, a 16-bit (Pq=1) quant table, and a +2048 level
-    * shift applied by the decoder's IDCT. */
-  def encodeCoefficients12(width: Int, height: Int, q: Int,
-      blocks: Array[Array[Int]], restartInterval: Int = 0): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0, s"dims must be 8-aligned: ${width}x$height")
-    require(q >= 1 && q <= 65535, s"quant step $q out of Pq=1 range")
-    val bw = width / 8; val bh = height / 8
-    require(blocks.length == bw * bh, s"${blocks.length} blocks for ${bw}x$bh grid")
-    val dcC = canonicalCodes(Dc12Bits, Dc12Vals)
-    val acC = canonicalCodes(Ac12Bits, Ac12Vals)
+  /** One progressive scan's entropy data over zigzag-ordered blocks: a DC
+    * scan (Ss=0) codes the point-transformed DC difference (first pass)
+    * or one raw bit per block (refinement); an AC scan codes one band of
+    * one component through [[ProgAcWriter]]. Restarts flush the EOB run
+    * and reset the DC chains. */
+  private def progressiveScan(geo: Geometry, scan: Array[Int],
+      zig: Array[Array[Array[Int]]], ss: Int, se: Int, ah: Int, al: Int,
+      restartInterval: Int, dcC: Map[Int, (Int, Int)],
+      acC: Map[Int, (Int, Int)]): Array[Byte] = {
     val bits = new BitWriter
-    var prevDc = 0
-    var rst = 0
-    blocks.zipWithIndex.foreach { case (blk, bi) =>
-      if (restartInterval > 0 && bi > 0 && bi % restartInterval == 0) {
-        bits.restart(rst); rst = (rst + 1) % 8
-        prevDc = 0
-      }
-      prevDc = writeBlock(bits, blk, prevDc, dcC, acC, maxDcCat = 15, maxAcCat = 14)
+    val prog = new ProgAcWriter(bits, acC)
+    val prevDc = new Array[Int](scan.length)
+    geo.walk(scan, restartInterval) { m =>
+      prog.flushEob()
+      bits.restart(m)
+      java.util.Arrays.fill(prevDc, 0)
+    } { (si, b) =>
+      val blk = zig(scan(si))(b)
+      if (ss > 0) {
+        if (ah == 0) prog.firstBlock(blk, ss, se, al) else prog.refineBlock(blk, ss, se, al)
+      } else if (ah == 0) {
+        val v = blk(0) >> al // DC point transform: arithmetic shift
+        putDiff(bits, dcC, v - prevDc(si))
+        prevDc(si) = v
+      } else bits.put((blk(0) >> al) & 1, 1)
     }
-    val entropy = bits.finish()
-
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    // DQT with Pq=1: 16-bit big-endian entries (T.81 B.2.4.1 — the
-    // precision a 12-bit frame's quant values generally need)
-    seg(out, 0xdb, Array[Byte](0x10) ++
-      Array.fill(64)(Array((q >> 8).toByte, (q & 0xff).toByte)).flatten)
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc1, ByteBuffer.allocate(9) // SOF1: precision 12, 1 component
-      .put(12.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(1.toByte).put(1.toByte).put(0x11.toByte).put(0.toByte).array())
-    dhtSeg(out, 0, 0, Dc12Bits, Dc12Vals)
-    dhtSeg(out, 1, 0, Ac12Bits, Ac12Vals)
-    seg(out, 0xda, Array[Byte](1, 1, 0x00, 0, 63, 0)) // SOS, baseline shape
-    out.write(entropy)
-    marker(out, 0xd9)
-    out.toByteArray
+    prog.flushEob()
+    bits.finish()
   }
 
-  /** 12-bit constant-block fixture encoder (DC-only, exact whenever q
-    * divides 8·(v−2048)) — [[encodeConstantBlocks]] at P=12, which is
-    * what lets the lossy 12-bit path hash-gate against a closed form. */
-  def encodeConstantBlocks12(width: Int, height: Int, pixels: Array[Int],
-      q: Int = 512): Array[Byte] = {
-    require(pixels.length == width * height)
+  /** DC-only blocks of a raster built from CONSTANT 8×8 blocks — the
+    * oracle fixtures' shape. `pixel(x, y)` is sampled over every block;
+    * each block must be constant and its DC 8·(v − 2^(P−1)) divisible
+    * by `q`, the two conditions under which the lossy pipeline
+    * reproduces the raster exactly (at P=8 and q=16: even values). */
+  def constantBlocks(width: Int, height: Int, precision: Int, q: Int)(
+      pixel: (Int, Int) => Int): Array[Array[Int]] = {
+    require(width % 8 == 0 && height % 8 == 0, s"dims must be 8-aligned: ${width}x$height")
     val bw = width / 8
-    val blocks = Array.tabulate((width / 8) * (height / 8)) { bi =>
+    Array.tabulate(bw * (height / 8)) { bi =>
       val bx = bi % bw; val by = bi / bw
-      val v = pixels(by * 8 * width + bx * 8)
+      val v = pixel(bx * 8, by * 8)
       for (y <- 0 until 8; x <- 0 until 8)
-        require(pixels((by * 8 + y) * width + bx * 8 + x) == v,
-          s"block ($bx,$by) not constant")
-      val dc = 8 * (v - 2048)
+        require(pixel(bx * 8 + x, by * 8 + y) == v, s"block ($bx,$by) not constant")
+      val dc = 8 * (v - (1 << (precision - 1)))
       require(dc % q == 0, s"DC $dc not exactly quantizable by $q")
       val blk = new Array[Int](64); blk(0) = dc / q; blk
     }
-    encodeCoefficients12(width, height, q, blocks)
   }
 
   // ---- lossless (SOF3, T.81 Annex H) ----
@@ -798,89 +668,28 @@ object JpegCodec {
     }
   }
 
-  /** Encode a LOSSLESS (SOF3) single-component JPEG: Huffman-coded
+  /** Encode a LOSSLESS (SOF3) JPEG over 1..4 planes: Huffman-coded
     * prediction differences, no DCT and no quantization, so decode
     * reproduces the input EXACTLY at any precision 2..16 — the mode old
-    * medical (DICOM) and raw-photo (DNG) corpora carry. `predictor`
-    * selects the T.81 H.1 neighbor formula (1..7, written into the
-    * scan's Ss field); `pointTransform` (Al/Pt) drops that many low
-    * bits before prediction; differences are coded modulo 2^16 with the
-    * bitless SSSS=16 case for +32768; restart intervals (in samples)
-    * byte-align, reset the first post-restart prediction to the
-    * default, and predict the remainder of that sample line 1-D from
-    * Ra — the T.81 H.1.1 rule third-party (DICOM/DNG) codecs apply. */
-  def encodeLossless(width: Int, height: Int, precision: Int, predictor: Int,
-      pixels: Array[Int], pointTransform: Int = 0,
-      restartInterval: Int = 0): Array[Byte] = {
-    require(width > 0 && height > 0, s"bad dims: ${width}x$height")
-    require(precision >= 2 && precision <= 16,
-      s"lossless precision must be 2..16, got $precision")
-    require(predictor >= 1 && predictor <= 7,
-      s"predictor must be 1..7, got $predictor")
-    require(pointTransform >= 0 && pointTransform < precision,
-      s"point transform $pointTransform out of range for precision $precision")
-    require(pixels.length == width * height,
-      s"raster mismatch: ${pixels.length} samples for ${width}x$height")
-    val maxS = (1 << precision) - 1
-    require(pixels.forall(v => v >= 0 && v <= maxS),
-      s"sample out of range for precision $precision")
-    val pt = pointTransform
-    val sp = if (pt == 0) pixels else pixels.map(_ >> pt)
-    val codes = canonicalCodes(LsBits, LsVals)
-    val bits = new BitWriter
-    val defaultPred = 1 << (precision - pt - 1)
-    var fresh = true
-    var restartRow = 0 // row whose remaining samples use 1-D Ra (H.1.1)
-    var since = 0
-    var rst = 0
-    var i = 0
-    while (i < sp.length) {
-      if (restartInterval > 0 && since == restartInterval) {
-        bits.restart(rst); rst = (rst + 1) % 8
-        since = 0; fresh = true; restartRow = i / width
-      }
-      val pred = losslessPredict(sp, width, i % width, i / width,
-        predictor, defaultPred, fresh, restartRow)
-      fresh = false
-      var d = (sp(i) - pred) & 0xffff // difference modulo 2^16 (H.2.1)
-      if (d > 32768) d -= 65536
-      if (d == 32768) { val (c, l) = codes(16); bits.put(c, l) }
-      else {
-        val s = magnitude(d)
-        val (c, l) = codes(s); bits.put(c, l)
-        if (s > 0) bits.put(if (d >= 0) d else d + (1 << s) - 1, s)
-      }
-      since += 1
-      i += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    dhtSeg(out, 0, 0, LsBits, LsVals)
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc3, ByteBuffer.allocate(9) // SOF3: precision, dims, 1 component
-      .put(precision.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(1.toByte).put(1.toByte).put(0x11.toByte).put(0.toByte).array())
-    // SOS: Ss carries the predictor, Se must be 0, Ah=0, Al = Pt (H.2.3)
-    seg(out, 0xda, Array[Byte](1, 1, 0x00, predictor.toByte, 0, pt.toByte))
-    out.write(bits.finish())
-    marker(out, 0xd9)
-    out.toByteArray
-  }
-
-  /** Encode a MULTI-COMPONENT lossless (SOF3) JPEG — the DICOM RGB
-    * export shape: up to 4 planes, all 1×1 sampling, one sample per
+    * medical (DICOM) and raw-photo (DNG) corpora carry. Several planes
+    * are the DICOM RGB export shape: all 1×1 sampling, one sample per
     * component per interleaved MCU, each component predicting within
-    * its own plane. Component 0 codes with Huffman selector 0, the
-    * rest SHARE selector 1 (same table spec, distinct id — the
-    * selector plumbing is load-bearing). Components pass through
-    * UNTRANSFORMED: T.81 lossless has no color transform. */
-  def encodeLosslessColor(width: Int, height: Int, precision: Int,
-      predictor: Int, planes: Array[Array[Int]], pointTransform: Int = 0,
+    * its own plane, component 0 on Huffman selector 0 and the rest
+    * SHARING selector 1; components pass through UNTRANSFORMED (T.81
+    * lossless has no color transform). `predictor` selects the T.81 H.1
+    * neighbor formula (1..7, written into the scan's Ss field);
+    * `pointTransform` (Al/Pt) drops that many low bits before
+    * prediction; differences are coded modulo 2^16 with the bitless
+    * SSSS=16 case for +32768; restart intervals (in samples) byte-align,
+    * reset the first post-restart prediction to the default, and predict
+    * the remainder of that sample line 1-D from Ra — the T.81 H.1.1 rule
+    * third-party (DICOM/DNG) codecs apply. */
+  def encodeLossless(width: Int, height: Int, precision: Int, predictor: Int,
+      planes: Array[Array[Int]], pointTransform: Int = 0,
       restartInterval: Int = 0): Array[Byte] = {
     val nc = planes.length
-    require(nc >= 2 && nc <= 4, s"2..4 components, got $nc (use encodeLossless for 1)")
+    require(nc >= 1 && nc <= 4,
+      s"one plane, or 2..4 interleaved components (T.81 Table B.7), got $nc")
     require(width > 0 && height > 0, s"bad dims: ${width}x$height")
     require(precision >= 2 && precision <= 16,
       s"lossless precision must be 2..16, got $precision")
@@ -890,7 +699,7 @@ object JpegCodec {
     val maxS = (1 << precision) - 1
     planes.zipWithIndex.foreach { case (p, c) =>
       require(p.length == width * height,
-        s"component $c: ${p.length} samples for ${width}x$height")
+        s"raster mismatch: component $c has ${p.length} samples for ${width}x$height")
       require(p.forall(v => v >= 0 && v <= maxS),
         s"component $c sample out of range for precision $precision")
     }
@@ -900,7 +709,7 @@ object JpegCodec {
     val bits = new BitWriter
     val defaultPred = 1 << (precision - pt - 1)
     var fresh = true
-    var restartRow = 0
+    var restartRow = 0 // row whose remaining samples use 1-D Ra (H.1.1)
     var since = 0
     var rst = 0
     var i = 0
@@ -913,14 +722,10 @@ object JpegCodec {
       while (c < nc) {
         val pred = losslessPredict(sp(c), width, i % width, i / width,
           predictor, defaultPred, fresh, restartRow)
-        var d = (sp(c)(i) - pred) & 0xffff
+        var d = (sp(c)(i) - pred) & 0xffff // difference modulo 2^16 (H.2.1)
         if (d > 32768) d -= 65536
         if (d == 32768) { val (cd, l) = codes(16); bits.put(cd, l) }
-        else {
-          val s = magnitude(d)
-          val (cd, l) = codes(s); bits.put(cd, l)
-          if (s > 0) bits.put(if (d >= 0) d else d + (1 << s) - 1, s)
-        }
+        else putDiff(bits, codes, d)
         c += 1
       }
       fresh = false
@@ -928,29 +733,11 @@ object JpegCodec {
       i += 1
     }
     val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    dhtSeg(out, 0, 0, LsBits, LsVals)
-    dhtSeg(out, 0, 1, LsBits, LsVals)
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    val sof = ByteBuffer.allocate(6 + 3 * nc)
-      .put(precision.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(nc.toByte)
-    (0 until nc).foreach { c =>
-      sof.put((c + 1).toByte).put(0x11.toByte).put(0.toByte)
-    }
-    seg(out, 0xc3, sof.array())
-    val sos = new Array[Byte](1 + 2 * nc + 3)
-    sos(0) = nc.toByte
-    (0 until nc).foreach { c =>
-      sos(1 + 2 * c) = (c + 1).toByte
-      sos(2 + 2 * c) = (if (c == 0) 0x00 else 0x10).toByte // Td 0 / 1, Ta unused
-    }
-    sos(1 + 2 * nc) = predictor.toByte
-    sos(2 + 2 * nc) = 0
-    sos(3 + 2 * nc) = pt.toByte
-    seg(out, 0xda, sos)
+    writeHeader(out, 0xc3, precision, width, height, Seq.fill(nc)((0x11, 0)), Nil,
+      restartInterval, (0 until math.min(nc, 2)).map(t => dht(0, t, LsBits, LsVals)))
+    // SOS: Td 0 for component 0, 1 for the rest (Ta unused); Ss carries
+    // the predictor, Se must be 0, Ah=0, Al = Pt (H.2.3)
+    sos(out, (0 until nc).map(c => c -> (math.min(c, 1) << 4)), predictor, 0, pt)
     out.write(bits.finish())
     marker(out, 0xd9)
     out.toByteArray
@@ -1535,162 +1322,6 @@ object JpegCodec {
     if (ke < se) enc.encodeBit(st, 3 * (k - 1), 1) // EOB
   }
 
-  // conditioning defaults (T.81 F.1.4.4.1.2 / F.1.4.4.2.1)
-  private val DacDefaultL = 0
-  private val DacDefaultU = 1
-  private val DacDefaultKx = 5
-
-  /** Encode an arithmetic-coded (SOF9) GRAYSCALE JPEG from quantized
-    * coefficient blocks (NATURAL order), with optional restart
-    * intervals — each interval FLUSHes the coder, emits RSTn, and
-    * resets all statistics, exactly the boundaries the decoder rebuilds.
-    * 12-bit precision writes a Pq=1 quant table like the SOF1 encoder. */
-  def encodeArithGray(width: Int, height: Int, q: Int,
-      blocks: Array[Array[Int]], restartInterval: Int = 0,
-      precision: Int = 8): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0, s"dims must be 8-aligned: ${width}x$height")
-    require(precision == 8 || precision == 12, s"SOF9 precision must be 8 or 12, got $precision")
-    val bw = width / 8; val bh = height / 8
-    require(blocks.length == bw * bh, s"${blocks.length} blocks for ${bw}x$bh grid")
-    val enc = new ArithEncoder
-    val stats = new ArithStats(1, Array.fill(4)(DacDefaultL),
-      Array.fill(4)(DacDefaultU), Array.fill(4)(DacDefaultKx))
-    val entropy = new java.io.ByteArrayOutputStream()
-    var rst = 0
-    blocks.zipWithIndex.foreach { case (blk, bi) =>
-      if (restartInterval > 0 && bi > 0 && bi % restartInterval == 0) {
-        entropy.write(enc.flush())
-        entropy.write(0xff); entropy.write(0xd0 + rst)
-        rst = (rst + 1) % 8
-        stats.reset()
-      }
-      arithEncodeDc(enc, stats, 0, 0, blk(0))
-      arithEncodeAc(enc, stats, 0, blk, 1, 63)
-    }
-    entropy.write(enc.flush())
-
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    if (precision == 8)
-      seg(out, 0xdb, Array[Byte](0x00) ++ Array.fill(64)(q.toByte))
-    else
-      seg(out, 0xdb, Array[Byte](0x10) ++
-        Array.fill(64)(Array((q >> 8).toByte, (q & 0xff).toByte)).flatten)
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc9, ByteBuffer.allocate(9) // SOF9: arithmetic extended sequential
-      .put(precision.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(1.toByte).put(1.toByte).put(0x11.toByte).put(0.toByte).array())
-    // DAC: spell the default conditioning out explicitly
-    seg(out, 0xcc, Array[Byte](0x00, ((DacDefaultU << 4) | DacDefaultL).toByte,
-      0x10, DacDefaultKx.toByte))
-    seg(out, 0xda, Array[Byte](1, 1, 0x00, 0, 63, 0))
-    out.write(entropy.toByteArray)
-    marker(out, 0xd9)
-    out.toByteArray
-  }
-
-  /** Encode an arithmetic-coded (SOF9) COLOR JPEG from per-component
-    * quantized coefficient blocks (NATURAL order): Y at sh×sv sampling
-    * (1×1 = 4:4:4, 2×2 = 4:2:0, 2×1 = 4:2:2), chroma 1×1, luma on
-    * conditioning/quant selector 0, both chromas SHARING selector 1 —
-    * so the shared-statistics-area semantics of T.81 F.1.4.4 are
-    * genuinely exercised. */
-  def encodeArithColor(width: Int, height: Int, qY: Int, qC: Int,
-      y: Array[Array[Int]], cb: Array[Array[Int]], cr: Array[Array[Int]],
-      sh: Int = 1, sv: Int = 1, restartInterval: Int = 0): Array[Byte] = {
-    require(sh >= 1 && sh <= 4 && sv >= 1 && sv <= 4 && sh * sv <= 8,
-      s"Y sampling factors must be 1..4 with at most 8 luma blocks per MCU, got ${sh}x$sv")
-    require(width % (8 * sh) == 0 && height % (8 * sv) == 0,
-      s"fixture dims must align to the ${8 * sh}x${8 * sv} MCU: ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    val cw = width / (8 * sh); val chh = height / (8 * sv)
-    require(y.length == bw * bh, s"need ${bw * bh} Y blocks, got ${y.length}")
-    require(cb.length == cw * chh && cr.length == cw * chh,
-      s"need ${cw * chh} chroma blocks, got ${cb.length}/${cr.length}")
-    val enc = new ArithEncoder
-    val stats = new ArithStats(3, Array.fill(4)(DacDefaultL),
-      Array.fill(4)(DacDefaultU), Array.fill(4)(DacDefaultKx))
-    val entropy = new java.io.ByteArrayOutputStream()
-    var rst = 0; var mcu = 0
-    var my = 0
-    while (my < chh) {
-      var mx = 0
-      while (mx < cw) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          entropy.write(enc.flush())
-          entropy.write(0xff); entropy.write(0xd0 + rst)
-          rst = (rst + 1) % 8
-          stats.reset()
-        }
-        mcu += 1
-        var dy = 0
-        while (dy < sv) {
-          var dx = 0
-          while (dx < sh) {
-            val blk = y((sv * my + dy) * bw + sh * mx + dx)
-            arithEncodeDc(enc, stats, 0, 0, blk(0))
-            arithEncodeAc(enc, stats, 0, blk, 1, 63)
-            dx += 1
-          }
-          dy += 1
-        }
-        val cbB = cb(my * cw + mx); val crB = cr(my * cw + mx)
-        arithEncodeDc(enc, stats, 1, 1, cbB(0))
-        arithEncodeAc(enc, stats, 1, cbB, 1, 63)
-        arithEncodeDc(enc, stats, 1, 2, crB(0))
-        arithEncodeAc(enc, stats, 1, crB, 1, 63)
-        mx += 1
-      }
-      my += 1
-    }
-    entropy.write(enc.flush())
-
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    seg(out, 0xdb,
-      (Array[Byte](0x00) ++ Array.fill(64)(qY.toByte)) ++
-        (Array[Byte](0x01) ++ Array.fill(64)(qC.toByte)))
-    if (restartInterval > 0)
-      seg(out, 0xdd, Array[Byte]((restartInterval >> 8).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(out, 0xc9, ByteBuffer.allocate(15)
-      .put(8.toByte).putShort(height.toShort).putShort(width.toShort)
-      .put(3.toByte)
-      .put(1.toByte).put(((sh << 4) | sv).toByte).put(0.toByte) // Y:  tq0
-      .put(2.toByte).put(0x11.toByte).put(1.toByte)             // Cb: tq1
-      .put(3.toByte).put(0x11.toByte).put(1.toByte)             // Cr: tq1
-      .array())
-    seg(out, 0xcc, Array[Byte](
-      0x00, ((DacDefaultU << 4) | DacDefaultL).toByte,
-      0x01, ((DacDefaultU << 4) | DacDefaultL).toByte,
-      0x10, DacDefaultKx.toByte,
-      0x11, DacDefaultKx.toByte))
-    seg(out, 0xda, Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0))
-    out.write(entropy.toByteArray)
-    marker(out, 0xd9)
-    out.toByteArray
-  }
-
-  /** Arithmetic-coded constant-block grayscale fixture — the SOF9 twin
-    * of [[encodeConstantBlocks]]: even sample values and a uniform
-    * quant step of 16 make the lossy pipeline provably exact, so the
-    * DuckDB oracle can restate the decode in closed form. */
-  def encodeConstantBlocksArith(width: Int, height: Int,
-      pixels: Array[Int], restartInterval: Int = 0): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0, s"dims must be 8-aligned: ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    val blocks = Array.tabulate(bw * bh) { bi =>
-      val px0 = pixels((bi / bw) * 8 * width + (bi % bw) * 8)
-      require(px0 % 2 == 0, s"block $bi value $px0 must be even for exactness")
-      val blk = new Array[Int](64)
-      blk(0) = 8 * (px0 - 128) / 16 // exact: px0 even => DC divisible by 16
-      blk
-    }
-    encodeArithGray(width, height, 16, blocks, restartInterval)
-  }
-
   /** Decode ONE arithmetic-coded scan (T.81 F.2.4 sequential, G.2
     * progressive) into the coefficient buffers: the same MCU walk as
     * the Huffman path, with QM-decoded decisions, per-interval
@@ -1698,28 +1329,17 @@ object JpegCodec {
     * areas are per-scan, like the Huffman tables a progressive file
     * redefines between scans. */
   private def runArithScan(bytes: Array[Byte], from: Int, to: Int,
-      coefs: Array[Array[Int]], padW: Array[Int],
-      trueW: Array[Int], trueH: Array[Int],
-      compH: Array[Int], compV: Array[Int], mcusX: Int, mcusY: Int,
+      coefs: Array[Array[Int]], geo: Geometry,
       scanComp: Array[Int], scanTd: Array[Int], scanTa: Array[Int],
       dcL: Array[Int], dcU: Array[Int], acKx: Array[Int],
       ss: Int, se: Int, ah: Int, al: Int,
       restartInterval: Int, sequential: Boolean): Unit = {
-    val ns = scanComp.length
     val dec = new ArithDecoder(bytes, from, to)
-    val stats = new ArithStats(ns, dcL, dcU, acKx)
-    var rstIdx = 0
-    var units = 0
-
-    def maybeRestart(): Unit =
-      if (restartInterval > 0 && units == restartInterval) {
-        dec.restart(rstIdx)
-        rstIdx = (rstIdx + 1) % 8
-        stats.reset()
-        units = 0
-      }
-
-    def unit(si: Int, blockOff: Int): Unit = {
+    val stats = new ArithStats(scanComp.length, dcL, dcU, acKx)
+    geo.walk(scanComp, restartInterval) { m =>
+      dec.restart(m)
+      stats.reset()
+    } { (si, blockOff) =>
       val off = blockOff * 64
       val coef = coefs(scanComp(si))
       if (sequential) {
@@ -1735,44 +1355,12 @@ object JpegCodec {
         else arithDecodeAcRefine(dec, stats, scanTa(si), coef, off, ss, se, al)
       }
     }
-
-    if (ns == 1) {
-      val ci = scanComp(0)
-      val bw = trueW(ci); val total = bw * trueH(ci)
-      var bi = 0
-      while (bi < total) {
-        maybeRestart()
-        unit(0, (bi / bw) * padW(ci) + bi % bw)
-        units += 1
-        bi += 1
-      }
-    } else {
-      val total = mcusX * mcusY
-      var mi = 0
-      while (mi < total) {
-        maybeRestart()
-        val mx = mi % mcusX; val my = mi / mcusX
-        var si = 0
-        while (si < ns) {
-          val ci = scanComp(si)
-          var b = 0
-          while (b < compH(ci) * compV(ci)) {
-            val bx = mx * compH(ci) + b % compH(ci)
-            val by = my * compV(ci) + b / compH(ci)
-            unit(si, by * padW(ci) + bx)
-            b += 1
-          }
-          si += 1
-        }
-        units += 1
-        mi += 1
-      }
-    }
   }
 
-  /** Parse a baseline-sequential (SOF0) or progressive (SOF2) grayscale
-    * or YCbCr JPEG. Throws IllegalArgumentException with a precise
-    * message on malformed or out-of-scope input. */
+  /** Decode a JPEG of the scope listed above: Huffman SOF0/1/2/3 or
+    * arithmetic SOF9/10, grayscale or YCbCr (1..4 components when
+    * lossless). Throws IllegalArgumentException with a precise message on
+    * malformed or out-of-scope input. */
   def decode(bytes: Array[Byte]): Jpeg = {
     require(bytes.length >= 4, s"truncated: ${bytes.length} bytes")
     require((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8, "missing SOI marker")
@@ -1797,12 +1385,7 @@ object JpegCodec {
     var compH: Array[Int] = null   // sampling factors per component
     var compV: Array[Int] = null
     var restartInterval = 0        // DRI: MCUs between RSTn markers (0 = none)
-    // frame geometry (computed at SOF)
-    var hmax = 0; var vmax = 0; var mcusX = 0; var mcusY = 0
-    var padW: Array[Int] = null    // block columns on the padded MCU grid
-    var padH: Array[Int] = null
-    var trueW: Array[Int] = null   // the component's OWN block grid — what a
-    var trueH: Array[Int] = null   // non-interleaved scan walks (T.81 A.2.2)
+    var geo: Geometry = null       // frame geometry (computed at SOF)
     // per component: all blocks' coefficients, ZIGZAG order, 64 per block
     // on the padded grid — progressive scans accumulate into this across
     // scans; the sequential scan fills it in one pass. Dequant + IDCT
@@ -1917,27 +1500,8 @@ object JpegCodec {
               // is one data unit regardless of declared sampling factors
               compH(0) = 1; compV(0) = 1
             }
-            // Interleaved MCU geometry (T.81 A.2.3): the MCU covers 8·hmax ×
-            // 8·vmax pixels and carries hi×vi raster-ordered blocks per
-            // component; component planes live at REDUCED resolution
-            // (ceil(w·hi/hmax) × ceil(h·vi/vmax)) and are stored on the full
-            // MCU grid so partial edge MCUs decode in full and clip on
-            // output. Non-interleaved scans walk the component's OWN block
-            // grid (ceil(compW/8) × ceil(compH/8)) — NOT the padded grid.
-            hmax = compH.max; vmax = compV.max
-            mcusX = (w + 8 * hmax - 1) / (8 * hmax)
-            mcusY = (h + 8 * vmax - 1) / (8 * vmax)
-            padW = Array.tabulate(ncomp)(ci => mcusX * compH(ci))
-            padH = Array.tabulate(ncomp)(ci => mcusY * compV(ci))
-            trueW = Array.tabulate(ncomp) { ci =>
-              val cw = (w * compH(ci) + hmax - 1) / hmax
-              (cw + 7) / 8
-            }
-            trueH = Array.tabulate(ncomp) { ci =>
-              val ch = (h * compV(ci) + vmax - 1) / vmax
-              (ch + 7) / 8
-            }
-            coefs = Array.tabulate(ncomp)(ci => new Array[Int](padW(ci) * padH(ci) * 64))
+            geo = new Geometry(w, h, compH, compV)
+            coefs = Array.tabulate(ncomp)(ci => new Array[Int](geo.padW(ci) * geo.padH(ci) * 64))
           case 0xc5 | 0xc6 | 0xc7 | 0xc8 | 0xcb | 0xcd | 0xce | 0xcf =>
             throw new IllegalArgumentException(
               f"unsupported SOF marker 0xff$m%02x — only baseline-sequential " +
@@ -2080,13 +1644,12 @@ object JpegCodec {
               losslessPx = runLosslessScan(br, w, h, precision, predictor = ss,
                 pt = al, tabs = scanTd.map(dcT(_)), restartInterval = restartInterval)
             } else if (arith)
-              runArithScan(bytes, entropyStart, scanEnd, coefs, padW,
-                trueW, trueH, compH, compV, mcusX, mcusY,
+              runArithScan(bytes, entropyStart, scanEnd, coefs, geo,
                 scanComp, scanTd, scanTa, dacDcL, dacDcU, dacAcKx,
                 ss, se, ah, al, restartInterval, sequential = !progressive)
             else {
               val br = new BitReader(bytes.slice(entropyStart, scanEnd))
-              runScan(br, coefs, padW, trueW, trueH, compH, compV, mcusX, mcusY,
+              runScan(br, coefs, geo,
                 scanComp, scanTd.map(dcT(_)), scanTa.map(acT(_)),
                 ss, se, ah, al, restartInterval, sequential = !progressive)
             }
@@ -2130,7 +1693,8 @@ object JpegCodec {
       require(quantT(compTq(c)) != null, s"component $c: no DQT table ${compTq(c)}")
       c += 1
     }
-    val planeW = Array.tabulate(ncomp)(ci => padW(ci) * 8)
+    val padW = geo.padW; val padH = geo.padH
+    val planeW = padW.map(_ * 8)
     val planes = Array.tabulate(ncomp)(ci => new Array[Int](planeW(ci) * padH(ci) * 8))
     var ci = 0
     while (ci < ncomp) {
@@ -2179,6 +1743,7 @@ object JpegCodec {
       val rgb = new Array[Int](w * h * 3)
       def clamp(d: Double): Int =
         math.max(0, math.min(255, math.round(d).toInt))
+      val hmax = geo.hmax; val vmax = geo.vmax
       var py = 0
       while (py < h) {
         var px = 0
@@ -2213,26 +1778,12 @@ object JpegCodec {
     * already-nonzero coefficient and placing newly-significant ±1<<Al
     * values (the G.1.2.3 flowchart). Restart markers byte-align, verify
     * the modulo-8 cadence, and reset DC predictions AND the EOB run. */
-  private def runScan(br: BitReader, coefs: Array[Array[Int]],
-      padW: Array[Int], trueW: Array[Int], trueH: Array[Int],
-      compH: Array[Int], compV: Array[Int], mcusX: Int, mcusY: Int,
+  private def runScan(br: BitReader, coefs: Array[Array[Int]], geo: Geometry,
       scanComp: Array[Int], dcTs: Array[HuffTable], acTs: Array[HuffTable],
       ss: Int, se: Int, ah: Int, al: Int, restartInterval: Int,
       sequential: Boolean): Unit = {
-    val ns = scanComp.length
-    val prevDc = new Array[Int](ns)
+    val prevDc = new Array[Int](scanComp.length)
     var eobrun = 0
-    var rstIdx = 0
-    var units = 0
-
-    def maybeRestart(): Unit =
-      if (restartInterval > 0 && units == restartInterval) {
-        br.expectRestart(rstIdx)
-        rstIdx = (rstIdx + 1) % 8
-        java.util.Arrays.fill(prevDc, 0)
-        eobrun = 0
-        units = 0
-      }
 
     def seqBlock(si: Int, off: Int): Unit = {
       val coef = coefs(scanComp(si))
@@ -2332,46 +1883,15 @@ object JpegCodec {
       }
     }
 
-    def unit(si: Int, blockOff: Int): Unit = {
+    geo.walk(scanComp, restartInterval) { m =>
+      br.expectRestart(m)
+      java.util.Arrays.fill(prevDc, 0)
+      eobrun = 0
+    } { (si, blockOff) =>
       val off = blockOff * 64
       if (sequential) seqBlock(si, off)
       else if (ss == 0) { if (ah == 0) dcFirst(si, off) else dcRefine(si, off) }
       else { if (ah == 0) acFirst(off) else acRefine(off) }
-    }
-
-    if (ns == 1) {
-      // non-interleaved: the component's OWN block grid (T.81 A.2.2);
-      // each block is one restart unit
-      val ci = scanComp(0)
-      val bw = trueW(ci); val total = bw * trueH(ci)
-      var bi = 0
-      while (bi < total) {
-        maybeRestart()
-        unit(0, (bi / bw) * padW(ci) + bi % bw)
-        units += 1
-        bi += 1
-      }
-    } else {
-      val total = mcusX * mcusY
-      var mi = 0
-      while (mi < total) {
-        maybeRestart()
-        val mx = mi % mcusX; val my = mi / mcusX
-        var si = 0
-        while (si < ns) {
-          val ci = scanComp(si)
-          var b = 0
-          while (b < compH(ci) * compV(ci)) {
-            val bx = mx * compH(ci) + b % compH(ci)
-            val by = my * compV(ci) + b / compH(ci)
-            unit(si, by * padW(ci) + bx)
-            b += 1
-          }
-          si += 1
-        }
-        units += 1
-        mi += 1
-      }
     }
   }
 }

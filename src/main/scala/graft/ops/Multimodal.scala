@@ -9,15 +9,15 @@ import graft.Tables
   * as opaque `binary` columns with typed metadata, decoded/featurized in
   * batch via `mapPartitions`.
   *
-  * EVERY format now has a REAL decode path — no codec stubs remain:
-  * RIFF/WAVE PCM audio ([[WavCodec]] — byte-level encode +
-  * chunk-walking decode, run by [[decodeWav]]), binary PPM (P6) images
-  * ([[PpmCodec]] — header-tokenizing parse, run by [[decodePpm]]),
-  * COMPRESSED PNG ([[PngCodec]] — zlib inflate via the JDK's built-in
-  * Inflater, chunk CRCs, all five row filters, run by [[decodePng]]),
-  * and baseline JPEG ([[JpegCodec]] — Huffman entropy decoding, DC
-  * prediction, dequant + IDCT, run by [[decodeJpeg]] on fixtures the
-  * lossy pipeline reproduces exactly). The byte-statistics bodies in
+  * Every format has a real decode path: RIFF/WAVE PCM audio
+  * ([[WavCodec]] — byte-level encode + chunk-walking decode, run by
+  * [[decodeWav]]), binary PPM (P6) images ([[PpmCodec]] —
+  * header-tokenizing parse, run by [[decodePpm]]), COMPRESSED PNG
+  * ([[PngCodec]] — zlib inflate via the JDK's built-in Inflater, chunk
+  * CRCs, all five row filters, run by [[decodePng]]), GIF ([[GifCodec]])
+  * and JPEG ([[JpegCodec]] — baseline, progressive, 12-bit, arithmetic
+  * and lossless, run by the `decodeJpeg*` gates on fixtures the lossy
+  * pipeline reproduces exactly). The byte-statistics bodies in
   * [[features]]/[[resize]] below remain marked stand-ins for a GENERIC
   * payload (the synthetic media table's blobs are not real containers);
   * the per-format decode queries above are where real bytes are parsed.
@@ -727,39 +727,40 @@ FROM s GROUP BY doc_id, w, h, ch, interlaced ORDER BY doc_id"""
     * closed form, and any Huffman/DC-prediction/IDCT misparse breaks
     * it. The general AC paths are spec-covered against an independent
     * IDCT reference (JpegCodecSpec). */
-  def decodeJpeg(s: SparkSession, d: String): DataFrame = {
+  def decodeJpeg(s: SparkSession, d: String): DataFrame = grayJpegGate(s, d) { id =>
+    val w = (8 * (1 + id % 3)).toInt
+    val h = (8 * (1 + id % 2)).toInt
+    JpegCodec.Frame.gray(w, h, 16, evenBlocks(w, h)((bx, by) => id * 7 + bx * 3 + by * 5))
+  }
+
+  /** DC-only blocks of the 8-bit gates' constant-block rasters: block
+    * (bx, by) holds the even value 2·(v(bx, by) mod 128), which the
+    * q=16 quantizer reproduces exactly. */
+  private def evenBlocks(w: Int, h: Int)(v: (Int, Int) => Long): Array[Array[Int]] =
+    JpegCodec.constantBlocks(w, h, 8, 16)((x, y) => (2 * (v(x / 8, y / 8) % 128)).toInt)
+
+  /** (sum, peak) of a decoded single-channel raster. */
+  private def grayFold(px: Array[Int]): (Long, Int) = {
+    var sum = 0L; var peak = 0; var i = 0
+    while (i < px.length) {
+      val v = px(i)
+      sum += v; if (v > peak) peak = v
+      i += 1
+    }
+    (sum, peak)
+  }
+
+  /** One 8-bit gray JPEG gate: per doc id (fanned out to full
+    * parallelism), encode `frame(id)`, then decode the BYTES and emit
+    * features computed ONLY from the decoded raster. */
+  private def grayJpegGate(s: SparkSession, d: String)(
+      frame: Long => JpegCodec.Frame): DataFrame = {
     import s.implicits._
     fannedDocIds(s, d)
       .mapPartitions { batch =>
         batch.map { id =>
-          val w = (8 * (1 + id % 3)).toInt
-          val h = (8 * (1 + id % 2)).toInt
-          val bw = w / 8; val bh = h / 8
-          val px = new Array[Int](w * h)
-          var by = 0
-          while (by < bh) {
-            var bx = 0
-            while (bx < bw) {
-              val v = (2 * ((id * 7 + bx * 3 + by * 5) % 128)).toInt
-              var y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) { px((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-                y += 1
-              }
-              bx += 1
-            }
-            by += 1
-          }
-          val bytes = JpegCodec.encodeConstantBlocks(w, h, px)
-          // From here on, ONLY the decoded image is consulted.
-          val img = JpegCodec.decode(bytes)
-          var sum = 0L; var peak = 0; var i = 0
-          while (i < img.pixels.length) {
-            val v = img.pixels(i)
-            sum += v; if (v > peak) peak = v
-            i += 1
-          }
+          val img = JpegCodec.decode(JpegCodec.encode(frame(id)))
+          val (sum, peak) = grayFold(img.pixels)
           JpegFeatures(id, img.width, img.height,
             (img.width / 8) * (img.height / 8), sum, peak)
         }
@@ -805,25 +806,25 @@ FROM v GROUP BY doc_id, w, h ORDER BY doc_id"""
     * the oracle pins it to 0, so a conversion or plane-interleaving bug
     * cannot hide in the sums. Non-neutral chroma is spec-covered
     * (JpegCodecSpec) against BT.601 ground truth. */
-  def decodeJpegColor(s: SparkSession, d: String): DataFrame = {
+  def decodeJpegColor(s: SparkSession, d: String): DataFrame = colorJpegGate(s, d) { id =>
+    val w = (8 * (1 + id % 3)).toInt
+    val h = (8 * (1 + id % 2)).toInt
+    val neutral = JpegCodec.constantBlocks(w, h, 8, 16)((_, _) => 128)
+    JpegCodec.Frame.ycc(w, h, 16, 16,
+      evenBlocks(w, h)((bx, by) => id * 7 + bx * 3 + by * 5), neutral, neutral, 1, 1)
+  }
+
+  /** One YCbCr JPEG gate: per doc id (fanned out to full parallelism),
+    * encode `frame(id)`, decode the BYTES, and fold the decoded RGB
+    * raster into (sum of r+g+b, peak channel value, pixels whose
+    * channels differ). */
+  private def colorJpegGate(s: SparkSession, d: String)(
+      frame: Long => JpegCodec.Frame): DataFrame = {
     import s.implicits._
     fannedDocIds(s, d)
       .mapPartitions { batch =>
         batch.map { id =>
-          val w = (8 * (1 + id % 3)).toInt
-          val h = (8 * (1 + id % 2)).toInt
-          val bw = w / 8; val bh = h / 8
-          def blkOf(v: Int): Array[Int] = {
-            val b = new Array[Int](64); b(0) = 8 * (v - 128) / 16; b
-          }
-          val y = Array.tabulate(bw * bh) { bi =>
-            blkOf((2 * ((id * 7 + (bi % bw) * 3 + (bi / bw) * 5) % 128)).toInt)
-          }
-          val neutral = Array.fill(bw * bh)(blkOf(128))
-          val bytes = JpegCodec.encodeCoefficientsColor(w, h, 16, 16,
-            y, neutral, neutral)
-          // From here on, ONLY the decoded image is consulted.
-          val img = JpegCodec.decode(bytes)
+          val img = JpegCodec.decode(JpegCodec.encode(frame(id)))
           var sum = 0L; var peak = 0; var nongray = 0L; var i = 0
           while (i < img.pixels.length) {
             val r = img.pixels(i); val g = img.pixels(i + 1); val b = img.pixels(i + 2)
@@ -877,50 +878,23 @@ FROM v GROUP BY doc_id, w, h ORDER BY doc_id"""
     * both clamp to 0). `n_nongray` is LIVE here (chroma ≠ 128), so a
     * plane swap, a wrong MCU-to-block mapping, or a dead conversion
     * cannot hide in the sums. */
-  def decodeJpeg420(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    fannedDocIds(s, d)
-      .mapPartitions { batch =>
-        batch.map { id =>
-          val w = (16 * (1 + id % 2)).toInt
-          val h = (16 * (1 + id % 3)).toInt
-          val bw = w / 8; val bh = h / 8
-          val cw = w / 16; val chh = h / 16
-          def blkOf(v: Int): Array[Int] = {
-            val b = new Array[Int](64); b(0) = 8 * (v - 128) / 16; b
-          }
-          def yVal(bx: Int, by: Int): Int =
-            (2 * ((id * 7 + bx * 3 + by * 5) % 128)).toInt
-          def cbVal(mx: Int, my: Int): Int =
-            (2 * ((id * 11 + mx * 5 + my * 3) % 128)).toInt
-          def crVal(mx: Int, my: Int): Int =
-            (2 * ((id * 13 + mx * 3 + my * 7) % 128)).toInt
-          val y = Array.tabulate(bw * bh)(bi => blkOf(yVal(bi % bw, bi / bw)))
-          val cb = Array.tabulate(cw * chh)(mi => blkOf(cbVal(mi % cw, mi / cw)))
-          val cr = Array.tabulate(cw * chh)(mi => blkOf(crVal(mi % cw, mi / cw)))
-          // half the fixtures carry a DRI=1 restart cadence — restarts
-          // change entropy FRAMING, never values, so the oracle is
-          // untouched while byte realignment, the modulo-8 RSTn sequence
-          // and the triple DC-chain resets all sit on the gated path
-          val bytes = JpegCodec.encodeCoefficients420(w, h, 16, 16, y, cb, cr,
-            restartInterval = if (id % 2 == 0) 1 else 0)
-          // From here on, ONLY the decoded image is consulted.
-          val img = JpegCodec.decode(bytes)
-          var sum = 0L; var peak = 0; var nongray = 0L; var i = 0
-          while (i < img.pixels.length) {
-            val r = img.pixels(i); val g = img.pixels(i + 1); val b = img.pixels(i + 2)
-            sum += r + g + b
-            if (r > peak) peak = r
-            if (g > peak) peak = g
-            if (b > peak) peak = b
-            if (r != g || g != b) nongray += 1
-            i += 3
-          }
-          JpegColorFeatures(id, img.width, img.height, img.channels,
-            sum, peak, nongray)
-        }
-      }
-      .toDF().orderBy("doc_id")
+  def decodeJpeg420(s: SparkSession, d: String): DataFrame =
+    colorJpegGate(s, d)(ycc420Fixture)
+
+  /** The 4:2:0 fixture of doc `id`: the closed-form luma grid at full
+    * resolution, chroma constant per 16×16 MCU. Half the fixtures carry
+    * a DRI=1 restart cadence — restarts change entropy FRAMING, never
+    * values, so the oracle is untouched while byte realignment, the
+    * modulo-8 RSTn sequence and the triple DC-chain resets all sit on
+    * the gated path. */
+  private def ycc420Fixture(id: Long): JpegCodec.Frame = {
+    val w = (16 * (1 + id % 2)).toInt
+    val h = (16 * (1 + id % 3)).toInt
+    JpegCodec.Frame.ycc(w, h, 16, 16,
+      evenBlocks(w, h)((bx, by) => id * 7 + bx * 3 + by * 5),
+      evenBlocks(w / 2, h / 2)((mx, my) => id * 11 + mx * 5 + my * 3),
+      evenBlocks(w / 2, h / 2)((mx, my) => id * 13 + mx * 3 + my * 7), 2, 2)
+      .copy(restartInterval = if (id % 2 == 0) 1 else 0)
   }
 
   /** The 4:2:0 generator's closed form per 8×8 block, restated in SQL
@@ -972,47 +946,8 @@ FROM rgb GROUP BY doc_id, w, h ORDER BY doc_id"""
     * q=16 argument. Half the fixtures carry DRI=1 restarts — in
     * progressive files the restart cadence ALSO resets the EOB run, so
     * that reset is gate-covered too. */
-  def decodeJpegProgressive(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    fannedDocIds(s, d)
-      .mapPartitions { batch =>
-        batch.map { id =>
-          val w = (16 * (1 + id % 2)).toInt
-          val h = (16 * (1 + id % 3)).toInt
-          val bw = w / 8; val bh = h / 8
-          val cw = w / 16; val chh = h / 16
-          def blkOf(v: Int): Array[Int] = {
-            val b = new Array[Int](64); b(0) = 8 * (v - 128) / 16; b
-          }
-          def yVal(bx: Int, by: Int): Int =
-            (2 * ((id * 7 + bx * 3 + by * 5) % 128)).toInt
-          def cbVal(mx: Int, my: Int): Int =
-            (2 * ((id * 11 + mx * 5 + my * 3) % 128)).toInt
-          def crVal(mx: Int, my: Int): Int =
-            (2 * ((id * 13 + mx * 3 + my * 7) % 128)).toInt
-          val y = Array.tabulate(bw * bh)(bi => blkOf(yVal(bi % bw, bi / bw)))
-          val cb = Array.tabulate(cw * chh)(mi => blkOf(cbVal(mi % cw, mi / cw)))
-          val cr = Array.tabulate(cw * chh)(mi => blkOf(crVal(mi % cw, mi / cw)))
-          val bytes = JpegCodec.encodeCoefficientsProgressive(w, h, 16, 16,
-            y, cb, cr, restartInterval = if (id % 2 == 0) 1 else 0)
-          // From here on, ONLY the decoded image is consulted.
-          val img = JpegCodec.decode(bytes)
-          var sum = 0L; var peak = 0; var nongray = 0L; var i = 0
-          while (i < img.pixels.length) {
-            val r = img.pixels(i); val g = img.pixels(i + 1); val b = img.pixels(i + 2)
-            sum += r + g + b
-            if (r > peak) peak = r
-            if (g > peak) peak = g
-            if (b > peak) peak = b
-            if (r != g || g != b) nongray += 1
-            i += 3
-          }
-          JpegColorFeatures(id, img.width, img.height, img.channels,
-            sum, peak, nongray)
-        }
-      }
-      .toDF().orderBy("doc_id")
-  }
+  def decodeJpegProgressive(s: SparkSession, d: String): DataFrame =
+    colorJpegGate(s, d)(id => ycc420Fixture(id).copy(progressive = true))
 
   /** Same closed form as [[decodeJpeg420Oracle]] — the progressive
     * re-encoding changes entropy FRAMING only, never reconstructed
@@ -1051,18 +986,13 @@ FROM rgb GROUP BY doc_id, w, h ORDER BY doc_id"""
           val pt = if (id % 5 == 0) 2 else 0
           val m = 1 << precision
           val px = Array.tabulate(w * h)(i => ((id * 13 + i * 29) % m).toInt)
-          val bytes = JpegCodec.encodeLossless(w, h, precision, predictor, px,
+          val bytes = JpegCodec.encodeLossless(w, h, precision, predictor, Array(px),
             pointTransform = pt, restartInterval = ri)
           // From here on, ONLY the decoded image is consulted.
           val img = JpegCodec.decode(bytes)
           require(img.depth == precision && img.channels == 1,
             s"doc $id: expected a $precision-bit single-component decode")
-          var sum = 0L; var peak = 0; var i = 0
-          while (i < img.pixels.length) {
-            val v = img.pixels(i)
-            sum += v; if (v > peak) peak = v
-            i += 1
-          }
+          val (sum, peak) = grayFold(img.pixels)
           JpegLosslessFeatures(id, img.width, img.height, precision,
             predictor, pt > 0, img.width * img.height, sum, peak)
         }
@@ -1121,7 +1051,7 @@ ORDER BY doc_id"""
           val m = 1 << precision
           val planes = Array.tabulate(3)(c =>
             Array.tabulate(w * h)(i => ((id * 17 + c * 7 + i * 31) % m).toInt))
-          val bytes = JpegCodec.encodeLosslessColor(w, h, precision, predictor,
+          val bytes = JpegCodec.encodeLossless(w, h, precision, predictor,
             planes, restartInterval = ri)
           // From here on, ONLY the decoded image is consulted.
           val img = JpegCodec.decode(bytes)
@@ -1190,34 +1120,14 @@ FROM s GROUP BY doc_id, w, h, precision_bits, predictor ORDER BY doc_id"""
         batch.map { id =>
           val w = (8 * (1 + id % 3)).toInt
           val h = (8 * (1 + id % 2)).toInt
-          val bw = w / 8; val bh = h / 8
-          val px = new Array[Int](w * h)
-          var by = 0
-          while (by < bh) {
-            var bx = 0
-            while (bx < bw) {
-              val v = (64 * ((id * 11 + bx * 5 + by * 3) % 64)).toInt
-              var y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) { px((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-                y += 1
-              }
-              bx += 1
-            }
-            by += 1
-          }
-          val bytes = JpegCodec.encodeConstantBlocks12(w, h, px)
+          val blocks = JpegCodec.constantBlocks(w, h, 12, 512)((x, y) =>
+            (64 * ((id * 11 + x / 8 * 5 + y / 8 * 3) % 64)).toInt)
+          val bytes = JpegCodec.encode(JpegCodec.Frame.gray(w, h, 512, blocks).copy(precision = 12))
           // From here on, ONLY the decoded image is consulted.
           val img = JpegCodec.decode(bytes)
           require(img.depth == 12 && img.channels == 1,
             s"doc $id: expected a 12-bit single-component decode")
-          var sum = 0L; var peak = 0; var i = 0
-          while (i < img.pixels.length) {
-            val v = img.pixels(i)
-            sum += v; if (v > peak) peak = v
-            i += 1
-          }
+          val (sum, peak) = grayFold(img.pixels)
           Jpeg12Features(id, img.width, img.height, img.depth,
             (img.width / 8) * (img.height / 8), sum, peak)
         }
@@ -1253,45 +1163,11 @@ FROM v GROUP BY doc_id, w, h ORDER BY doc_id"""
     * resets) under the same exact-reconstruction argument. Restart
     * intervals vary per document (0..3 MCUs) so the flush/RSTn/reset
     * path is ON the gated surface, not just in the spec. */
-  def decodeJpegArith(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    fannedDocIds(s, d)
-      .mapPartitions { batch =>
-        batch.map { id =>
-          val w = (8 * (1 + id % 4)).toInt
-          val h = (8 * (1 + id % 3)).toInt
-          val bw = w / 8; val bh = h / 8
-          val px = new Array[Int](w * h)
-          var by = 0
-          while (by < bh) {
-            var bx = 0
-            while (bx < bw) {
-              val v = (2 * ((id * 13 + bx * 7 + by * 5) % 128)).toInt
-              var y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) { px((by * 8 + y) * w + bx * 8 + x) = v; x += 1 }
-                y += 1
-              }
-              bx += 1
-            }
-            by += 1
-          }
-          val bytes = JpegCodec.encodeConstantBlocksArith(w, h, px,
-            restartInterval = (id % 4).toInt)
-          // From here on, ONLY the decoded image is consulted.
-          val img = JpegCodec.decode(bytes)
-          var sum = 0L; var peak = 0; var i = 0
-          while (i < img.pixels.length) {
-            val v = img.pixels(i)
-            sum += v; if (v > peak) peak = v
-            i += 1
-          }
-          JpegFeatures(id, img.width, img.height,
-            (img.width / 8) * (img.height / 8), sum, peak)
-        }
-      }
-      .toDF().orderBy("doc_id")
+  def decodeJpegArith(s: SparkSession, d: String): DataFrame = grayJpegGate(s, d) { id =>
+    val w = (8 * (1 + id % 4)).toInt
+    val h = (8 * (1 + id % 3)).toInt
+    JpegCodec.Frame.gray(w, h, 16, evenBlocks(w, h)((bx, by) => id * 13 + bx * 7 + by * 5))
+      .copy(arithmetic = true, restartInterval = (id % 4).toInt)
   }
 
   /** The arithmetic generator's closed form, restated in SQL. */
@@ -1446,13 +1322,9 @@ FROM px GROUP BY doc_id, w, h, n_colors ORDER BY doc_id"""
             v
           }
           val w = 72; val h = 64
-          val px = new Array[Int](w * h)
-          var i = 0
-          while (i < px.length) {
-            px(i) = cells((i / w) / 8)((i % w) / 8)
-            i += 1
-          }
-          val bytes = JpegCodec.encodeConstantBlocksArith(w, h, px)
+          val blocks = JpegCodec.constantBlocks(w, h, 8, 16)((x, y) => cells(y / 8)(x / 8))
+          val bytes =
+            JpegCodec.encode(JpegCodec.Frame.gray(w, h, 16, blocks).copy(arithmetic = true))
           // From here on, ONLY the decoded image is consulted.
           val img = JpegCodec.decode(bytes)
           val bands = new Array[Int](4)

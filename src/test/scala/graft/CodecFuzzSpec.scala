@@ -89,7 +89,7 @@ class CodecFuzzSpec extends AnyFunSuite {
     // its own parse paths: SOF3 precision range, predictor-bearing SOS,
     // category-16 differences, restart cadence in sample units
     val ls = JpegCodec.encodeLossless(9, 7, 12, 5,
-      Array.tabulate(9 * 7)(i => i * 131 % 4096), restartInterval = 11)
+      Array(Array.tabulate(9 * 7)(i => i * 131 % 4096)), restartInterval = 11)
     fuzz("jpeg_lossless", ls, 400)(JpegCodec.decode)
     truncations("jpeg_lossless", ls)(JpegCodec.decode)
   }
@@ -114,7 +114,8 @@ class CodecFuzzSpec extends AnyFunSuite {
     val px = new Array[Int](16 * 16)
     for (by <- 0 until 2; bx <- 0 until 2; y <- 0 until 8; x <- 0 until 8)
       px((by * 8 + y) * 16 + bx * 8 + x) = ((bx * 3 + by * 7) % 128) * 2
-    val base = JpegCodec.encodeConstantBlocks(16, 16, px)
+    val base = JpegCodec.encode(JpegCodec.Frame.gray(16, 16, 16,
+      JpegCodec.constantBlocks(16, 16, 8, 16)((x, y) => px(y * 16 + x))))
     fuzz("jpeg", base, 400)(JpegCodec.decode)
     truncations("jpeg", base)(JpegCodec.decode)
   }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.JpegCodec
+import graft.ops.JpegCodec.Frame
 
 /** Tests for the arithmetic-coded (SOF9, T.81 Annex D QM-coder) JPEG
   * mode. Two independent anchors keep the coder honest:
@@ -51,7 +52,8 @@ class JpegArithSpec extends AnyFunSuite {
     // AC-sign state 113 (0x5A1D, self-looping) — via a tiny round-trip
     // that could not succeed under a transposed or truncated table.
     val blk = new Array[Int](64); blk(0) = 1; blk(1) = -1
-    val one = JpegCodec.decode(JpegCodec.encodeArithGray(8, 8, 16, Array(blk)))
+    val one = JpegCodec.decode(
+      JpegCodec.encode(Frame.gray(8, 8, 16, Array(blk)).copy(arithmetic = true)))
     assert(one.width == 8 && one.height == 8)
   }
 
@@ -70,9 +72,10 @@ class JpegArithSpec extends AnyFunSuite {
         blk
       }
       val arith = JpegCodec.decode(
-        JpegCodec.encodeArithGray(bw * 8, bh * 8, 16, blocks, restart))
+        JpegCodec.encode(Frame.gray(bw * 8, bh * 8, 16, blocks)
+          .copy(arithmetic = true, restartInterval = restart)))
       val huff = JpegCodec.decode(
-        JpegCodec.encodeCoefficients(bw * 8, bh * 8, 16, blocks, restart))
+        JpegCodec.encode(Frame.gray(bw * 8, bh * 8, 16, blocks).copy(restartInterval = restart)))
       assertSameImage(arith, huff, s"trial $trial (restart=$restart)")
     }
   }
@@ -89,10 +92,11 @@ class JpegArithSpec extends AnyFunSuite {
       }
       val y = blks((w / 8) * (h / 8)); val cb = blks(cw * chh); val cr = blks(cw * chh)
       val arith = JpegCodec.decode(
-        JpegCodec.encodeArithColor(w, h, 16, 16, y, cb, cr, sh, sv, restart))
+        JpegCodec.encode(Frame.ycc(w, h, 16, 16, y, cb, cr, sh, sv)
+          .copy(arithmetic = true, restartInterval = restart)))
       val huff = JpegCodec.decode(
-        if (sh == 1 && sv == 1) JpegCodec.encodeCoefficientsColor(w, h, 16, 16, y, cb, cr)
-        else JpegCodec.encodeCoefficients420(w, h, 16, 16, y, cb, cr, sh, sv, restart))
+        JpegCodec.encode(Frame.ycc(w, h, 16, 16, y, cb, cr, sh, sv)
+          .copy(restartInterval = restart)))
       assertSameImage(arith, huff, s"${sh}x$sv restart=$restart")
     }
   }
@@ -107,12 +111,12 @@ class JpegArithSpec extends AnyFunSuite {
       blk(JpegCodec.Zigzag(3)) = mag   // k=3 <= Kx
       blk(JpegCodec.Zigzag(9)) = -mag  // k=9 > Kx
       blk(JpegCodec.Zigzag(63)) = 1    // band tail, no EOB
-      val bytes = JpegCodec.encodeArithGray(8, 8, 1, Array(blk))
+      val bytes = JpegCodec.encode(Frame.gray(8, 8, 1, Array(blk)).copy(arithmetic = true))
       // decode straight back through the coefficient plumbing: with q=1
       // dequant is identity, so the raster equals idct(blk) — obtained
       // via the Huffman twin only where its size categories reach
       if (mag <= 1023) {
-        val huff = JpegCodec.decode(JpegCodec.encodeCoefficients(8, 8, 1, Array(blk)))
+        val huff = JpegCodec.decode(JpegCodec.encode(Frame.gray(8, 8, 1, Array(blk))))
         assertSameImage(JpegCodec.decode(bytes), huff, s"mag $mag")
       } else {
         // beyond Huffman's 10-bit AC reach: arithmetic must still
@@ -125,10 +129,12 @@ class JpegArithSpec extends AnyFunSuite {
 
   test("degenerate streams: all-zero image, single block, EOB-only blocks") {
     val zero = Array.fill(6)(new Array[Int](64))
-    val img = JpegCodec.decode(JpegCodec.encodeArithGray(24, 16, 16, zero))
+    val img = JpegCodec.decode(
+      JpegCodec.encode(Frame.gray(24, 16, 16, zero).copy(arithmetic = true)))
     assert(img.pixels.forall(_ == 128), "all-zero coefficients decode to mid-gray")
     val single = Array(Array.tabulate(64)(i => if (i == 0) 64 else 0))
-    val one = JpegCodec.decode(JpegCodec.encodeArithGray(8, 8, 16, single))
+    val one = JpegCodec.decode(
+      JpegCodec.encode(Frame.gray(8, 8, 16, single).copy(arithmetic = true)))
     assert(one.pixels.forall(_ == 255), "DC-only saturating block")
   }
 
@@ -142,9 +148,22 @@ class JpegArithSpec extends AnyFunSuite {
         for (yy <- 0 until 8; xx <- 0 until 8) px((by * 8 + yy) * w + bx * 8 + xx) = v
       }
       val restart = if (trial % 2 == 0) 0 else 2
-      val img = JpegCodec.decode(JpegCodec.encodeConstantBlocksArith(w, h, px, restart))
+      val img = JpegCodec.decode(JpegCodec.encode(Frame.gray(w, h, 16,
+        JpegCodec.constantBlocks(w, h, 8, 16)((x, y) => px(y * w + x)))
+        .copy(arithmetic = true, restartInterval = restart)))
       assert(img.pixels.toSeq == px.toSeq, s"trial $trial exact reconstruction")
     }
+  }
+
+  test("a non-constant raster on the arithmetic constant-block path rejects loudly") {
+    // one pixel of the second block differs by an even step: the raster
+    // is not a grid of constant blocks, so a DC-only encoding would
+    // silently decode to a different image
+    val px = Array.fill(16 * 8)(100)
+    px(3 * 16 + 13) = 102
+    val e = intercept[IllegalArgumentException](JpegCodec.encode(Frame.gray(16, 8, 16,
+      JpegCodec.constantBlocks(16, 8, 8, 16)((x, y) => px(y * 16 + x))).copy(arithmetic = true)))
+    assert(e.getMessage.contains("block (1,0) not constant"), e.getMessage)
   }
 
   test("12-bit grayscale arithmetic matches the 12-bit Huffman twin (SOF1)") {
@@ -155,8 +174,9 @@ class JpegArithSpec extends AnyFunSuite {
       blk
     }
     val arith = JpegCodec.decode(
-      JpegCodec.encodeArithGray(24, 16, 16, blocks, precision = 12))
-    val huff = JpegCodec.decode(JpegCodec.encodeCoefficients12(24, 16, 16, blocks))
+      JpegCodec.encode(Frame.gray(24, 16, 16, blocks).copy(precision = 12, arithmetic = true)))
+    val huff = JpegCodec.decode(
+      JpegCodec.encode(Frame.gray(24, 16, 16, blocks).copy(precision = 12)))
     assert(arith.depth == 12 && huff.depth == 12)
     assertSameImage(arith, huff, "12-bit")
   }
@@ -196,12 +216,14 @@ class JpegArithSpec extends AnyFunSuite {
 
   test("graft-encoded arithmetic streams were accepted and transcoded by libjpeg (encoder conformance)") {
     val mineGray = JpegCodec.decode(
-      JpegCodec.encodeArithGray(48, 32, 1, meGrayBlocks, restartInterval = 2))
+      JpegCodec.encode(Frame.gray(48, 32, 1, meGrayBlocks)
+        .copy(arithmetic = true, restartInterval = 2)))
     assertSameImage(mineGray, JpegCodec.decode(resource("me_g_r2_h.jpg")),
       "gray restart=2 vs libjpeg transcode")
     val mineColor = JpegCodec.decode(
-      JpegCodec.encodeArithColor(64, 32, 1, 1, meColorBlocks(32, 0),
-        meColorBlocks(8, 7), meColorBlocks(8, 13), sh = 2, sv = 2, restartInterval = 3))
+      JpegCodec.encode(Frame.ycc(64, 32, 1, 1, meColorBlocks(32, 0),
+        meColorBlocks(8, 7), meColorBlocks(8, 13), sh = 2, sv = 2)
+        .copy(arithmetic = true, restartInterval = 3)))
     assertSameImage(mineColor, JpegCodec.decode(resource("me_c_420_r3_h.jpg")),
       "4:2:0 restart=3 vs libjpeg transcode")
   }
@@ -227,9 +249,10 @@ class JpegArithSpec extends AnyFunSuite {
       }
       val y = blks((w / 8) * (h / 8)); val cb = blks(4); val cr = blks(4)
       val arith = JpegCodec.decode(
-        JpegCodec.encodeArithColor(w, h, 16, 16, y, cb, cr, sh, sv, restartInterval = 1))
+        JpegCodec.encode(Frame.ycc(w, h, 16, 16, y, cb, cr, sh, sv)
+          .copy(arithmetic = true, restartInterval = 1)))
       val huff = JpegCodec.decode(
-        JpegCodec.encodeCoefficients420(w, h, 16, 16, y, cb, cr, sh, sv))
+        JpegCodec.encode(Frame.ycc(w, h, 16, 16, y, cb, cr, sh, sv)))
       assertSameImage(arith, huff, s"${sh}x$sv")
     }
   }
@@ -290,7 +313,8 @@ class JpegArithSpec extends AnyFunSuite {
   // ---- loud rejects and corruption ----
 
   test("a lost restart marker rejects instead of desynchronizing") {
-    val bytes = JpegCodec.encodeArithGray(48, 32, 1, meGrayBlocks, restartInterval = 2)
+    val bytes = JpegCodec.encode(Frame.gray(48, 32, 1, meGrayBlocks)
+      .copy(arithmetic = true, restartInterval = 2))
     // find the first RST0 (FFD0) in the entropy data and break its index
     var i = 2
     var hit = -1
@@ -341,7 +365,7 @@ class JpegArithSpec extends AnyFunSuite {
       blk(JpegCodec.Zigzag(40)) = 9 + bi
       blk
     }
-    val bytes = JpegCodec.encodeArithGray(64, 8, 1, blocks)
+    val bytes = JpegCodec.encode(Frame.gray(64, 8, 1, blocks).copy(arithmetic = true))
     val reference = JpegCodec.decode(bytes)
     val patched = bytes.clone()
     var i = 2

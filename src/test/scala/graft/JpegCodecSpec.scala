@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.JpegCodec
+import graft.ops.JpegCodec.Frame
 
 /** Tests for the baseline-JPEG codec. DC-only constant blocks must
   * round-trip EXACTLY (the oracle's determinism claim); general
@@ -29,7 +30,8 @@ class JpegCodecSpec extends AnyFunSuite {
         val v = rng.nextInt(128) * 2 // even 0..254
         for (y <- 0 until 8; x <- 0 until 8) px((by * 8 + y) * w + bx * 8 + x) = v
       }
-      val img = JpegCodec.decode(JpegCodec.encodeConstantBlocks(w, h, px))
+      val img = JpegCodec.decode(JpegCodec.encode(Frame.gray(w, h, 16,
+        JpegCodec.constantBlocks(w, h, 8, 16)((x, y) => px(y * w + x)))))
       assert(img.width == w && img.height == h)
       assert(img.pixels.toSeq == px.toSeq, "exact reconstruction of even constant blocks")
     }
@@ -54,7 +56,7 @@ class JpegCodecSpec extends AnyFunSuite {
   test("general AC coefficients decode to the independent IDCT reference") {
     def check(blocks: Array[Array[Int]], bw: Int, bh: Int): Array[Byte] = {
       val q = 16
-      val bytes = JpegCodec.encodeCoefficients(bw * 8, bh * 8, q, blocks)
+      val bytes = JpegCodec.encode(Frame.gray(bw * 8, bh * 8, q, blocks))
       val img = JpegCodec.decode(bytes)
       for (bi <- 0 until bw * bh) {
         val deq = Array.tabulate(64)(i => blocks(bi)(i) * q)
@@ -99,7 +101,8 @@ class JpegCodecSpec extends AnyFunSuite {
     val px = new Array[Int](16 * 16)
     for (y <- 0 until 16; x <- 0 until 16)
       px(y * 16 + x) = (if (x < 8) 100 else 200)
-    val clean = JpegCodec.encodeConstantBlocks(16, 16, px)
+    val clean = JpegCodec.encode(Frame.gray(16, 16, 16,
+      JpegCodec.constantBlocks(16, 16, 8, 16)((x, y) => px(y * 16 + x))))
     val ref = JpegCodec.decode(clean)
     // walk the marker structure of the clean file and re-emit it with a
     // 1-3 byte 0xFF run before each marker (except SOI, which must open
@@ -141,7 +144,8 @@ class JpegCodecSpec extends AnyFunSuite {
   }
 
   test("rejects malformed and out-of-scope input loudly") {
-    val good = JpegCodec.encodeConstantBlocks(8, 8, Array.fill(64)(100))
+    val good = JpegCodec.encode(Frame.gray(8, 8, 16,
+      JpegCodec.constantBlocks(8, 8, 8, 16)((_, _) => 100)))
     assert(intercept[IllegalArgumentException](
       JpegCodec.decode(good.drop(2))).getMessage.contains("SOI"))
     assert(intercept[IllegalArgumentException](
@@ -155,13 +159,14 @@ class JpegCodecSpec extends AnyFunSuite {
       JpegCodec.decode(prog)).getMessage.contains("progressive"))
     // odd constant value is not exactly quantizable — encoder refuses
     assert(intercept[IllegalArgumentException](
-      JpegCodec.encodeConstantBlocks(8, 8, Array.fill(64)(101)))
+      JpegCodec.encode(Frame.gray(8, 8, 16,
+        JpegCodec.constantBlocks(8, 8, 8, 16)((_, _) => 101))))
       .getMessage.contains("quantizable"))
     // DC diff beyond magnitude category 11 must be the codec's loud IAE,
     // not a NoSuchElementException from the Huffman-table Map (r8 ADVICE)
     val big = Array.tabulate(64)(i => if (i == 0) 4096 else 0)
     assert(intercept[IllegalArgumentException](
-      JpegCodec.encodeCoefficients(8, 8, 16, Array(big)))
+      JpegCodec.encode(Frame.gray(8, 8, 16, Array(big))))
       .getMessage.contains("DC difference"))
   }
 
@@ -177,8 +182,8 @@ class JpegCodecSpec extends AnyFunSuite {
     }
     val w = 16; val h = 8
     val yv = Array(120, 136); val cbv = Array(100, 128); val crv = Array(160, 128)
-    val img = JpegCodec.decode(JpegCodec.encodeCoefficientsColor(w, h, 16, 16,
-      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf)))
+    val img = JpegCodec.decode(JpegCodec.encode(Frame.ycc(w, h, 16, 16,
+      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf), 1, 1)))
     assert(img.channels == 3 && img.width == w && img.height == h)
     def expect(y: Int, cb: Int, cr: Int): (Int, Int, Int) = {
       def c(d: Double) = math.max(0, math.min(255, math.round(d).toInt))
@@ -218,8 +223,8 @@ class JpegCodecSpec extends AnyFunSuite {
     val w = 32; val h = 16
     val yv = Array(100, 102, 104, 106, 110, 112, 114, 116) // bw=4, bh=2
     val cbv = Array(100, 150); val crv = Array(160, 90)    // one per MCU
-    val img = JpegCodec.decode(JpegCodec.encodeCoefficients420(w, h, 16, 16,
-      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf)))
+    val img = JpegCodec.decode(JpegCodec.encode(Frame.ycc(w, h, 16, 16,
+      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf), 2, 2)))
     assert(img.channels == 3 && img.width == w && img.height == h)
     for (py <- 0 until h; px <- 0 until w) {
       val bx = px / 8; val by = py / 8; val mcu = px / 16
@@ -245,7 +250,7 @@ class JpegCodecSpec extends AnyFunSuite {
       }
       val neutral = Array.fill(2)(blkOf(128))
       val img = JpegCodec.decode(
-        JpegCodec.encodeCoefficients420(32, 16, q, q, y, neutral, neutral))
+        JpegCodec.encode(Frame.ycc(32, 16, q, q, y, neutral, neutral, 2, 2)))
       for (bi <- 0 until 8) {
         val expect = refIdct(Array.tabulate(64)(i => y(bi)(i) * q))
         val bx = bi % 4; val by = bi / 4
@@ -262,8 +267,8 @@ class JpegCodecSpec extends AnyFunSuite {
     val w = 32; val h = 8 // bw=4; chroma grid 2x1 (MCU = 16x8)
     val yv = Array(100, 102, 104, 106)
     val cbv = Array(100, 150); val crv = Array(160, 90)
-    val img = JpegCodec.decode(JpegCodec.encodeCoefficients420(w, h, 16, 16,
-      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf), sh = 2, sv = 1))
+    val img = JpegCodec.decode(JpegCodec.encode(Frame.ycc(w, h, 16, 16,
+      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf), sh = 2, sv = 1)))
     for (py <- 0 until h; px <- 0 until w) {
       val (r, g, b) = bt601(yv(px / 8), cbv(px / 16), crv(px / 16))
       val p = (py * w + px) * 3
@@ -281,7 +286,8 @@ class JpegCodecSpec extends AnyFunSuite {
       val bx = (i % 16) / 8; val by = (i / 16) / 8
       100 + 2 * (by * 2 + bx)
     }
-    val full = JpegCodec.encodeConstantBlocks(16, 16, px16)
+    val full = JpegCodec.encode(Frame.gray(16, 16, 16,
+      JpegCodec.constantBlocks(16, 16, 8, 16)((x, y) => px16(y * 16 + x))))
     val sofAt = full.indices.find(i =>
       (full(i) & 0xff) == 0xff && (full(i + 1) & 0xff) == 0xc0).get
     val body = sofAt + 4
@@ -308,29 +314,29 @@ class JpegCodecSpec extends AnyFunSuite {
           blk(1 + rng.nextInt(63)) = rng.nextInt(61) - 30)
         blk
       }
-      val plain = JpegCodec.decode(JpegCodec.encodeCoefficients(32, 24, q, blocks))
+      val plain = JpegCodec.decode(JpegCodec.encode(Frame.gray(32, 24, q, blocks)))
       val restarted = JpegCodec.decode(
-        JpegCodec.encodeCoefficients(32, 24, q, blocks, restartInterval = 2))
+        JpegCodec.encode(Frame.gray(32, 24, q, blocks).copy(restartInterval = 2)))
       assert(restarted.pixels.toSeq == plain.pixels.toSeq,
         "restart framing must not change decoded values")
     }
     // more than 8 restarts → the modulo-8 RSTn cycle wraps
     val many = Array.tabulate(24)(i => blkOf(100 + 2 * (i % 20)))
     val wrapped = JpegCodec.decode(
-      JpegCodec.encodeCoefficients(48, 32, q, many, restartInterval = 1))
+      JpegCodec.encode(Frame.gray(48, 32, q, many).copy(restartInterval = 1)))
     assert(wrapped.pixels.length == 48 * 32)
     // 4:2:0 + restarts compose
     val yv = Array(100, 102, 104, 106, 110, 112, 114, 116)
     val cbv = Array(100, 150); val crv = Array(160, 90)
-    val img420 = JpegCodec.decode(JpegCodec.encodeCoefficients420(32, 16, q, q,
-      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf), restartInterval = 1))
-    val img420plain = JpegCodec.decode(JpegCodec.encodeCoefficients420(32, 16, q, q,
-      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf)))
+    val img420 = JpegCodec.decode(JpegCodec.encode(Frame.ycc(32, 16, q, q,
+      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf), 2, 2).copy(restartInterval = 1)))
+    val img420plain = JpegCodec.decode(JpegCodec.encode(Frame.ycc(32, 16, q, q,
+      yv.map(blkOf), cbv.map(blkOf), crv.map(blkOf), 2, 2)))
     assert(img420.pixels.toSeq == img420plain.pixels.toSeq)
     // a MISSING restart marker (DRI says 2, stream has none) rejects
     // loudly instead of silently desynchronizing
-    val noRst = JpegCodec.encodeCoefficients(32, 24, q,
-      Array.fill(12)(blkOf(100)))
+    val noRst = JpegCodec.encode(Frame.gray(32, 24, q,
+      Array.fill(12)(blkOf(100))))
     val sofless = noRst.clone()
     // splice a DRI=2 segment right after SOI (before DQT)
     val dri = Array[Byte](0xff.toByte, 0xdd.toByte, 0, 4, 0, 2)
@@ -342,8 +348,8 @@ class JpegCodecSpec extends AnyFunSuite {
   }
 
   test("out-of-scope sampling and scan order are rejected loudly, not misread") {
-    val good = JpegCodec.encodeCoefficientsColor(8, 8, 16, 16,
-      Array(blkOf(128)), Array(blkOf(128)), Array(blkOf(128)))
+    val good = JpegCodec.encode(Frame.ycc(8, 8, 16, 16,
+      Array(blkOf(128)), Array(blkOf(128)), Array(blkOf(128)), 1, 1))
     // factor 5 is outside the T.81 legal range 1..4 (4:1:1 itself is
     // now supported — JpegArithSpec pins it against libjpeg)
     val sofAt = good.indices.find(i =>
@@ -392,10 +398,10 @@ class JpegCodecSpec extends AnyFunSuite {
       }
       val ri = trial % 3 // 0 = none, 1/2 = restart cadences
       val seqImg = JpegCodec.decode(
-        JpegCodec.encodeCoefficients(bw * 8, bh * 8, 16, blocks, restartInterval = ri))
+        JpegCodec.encode(Frame.gray(bw * 8, bh * 8, 16, blocks).copy(restartInterval = ri)))
       val progImg = JpegCodec.decode(
-        JpegCodec.encodeCoefficientsProgressiveGray(bw * 8, bh * 8, 16, blocks,
-          restartInterval = ri))
+        JpegCodec.encode(Frame.gray(bw * 8, bh * 8, 16, blocks)
+          .copy(progressive = true, restartInterval = ri)))
       assert(progImg.width == seqImg.width && progImg.height == seqImg.height)
       assert(progImg.pixels.toSeq == seqImg.pixels.toSeq,
         s"trial $trial (${bw}x$bh, ri=$ri): progressive != sequential")
@@ -420,10 +426,10 @@ class JpegCodecSpec extends AnyFunSuite {
       val cr = Array.fill(mw * mh)(rblk())
       val ri = trial % 3
       val seqImg = JpegCodec.decode(
-        JpegCodec.encodeCoefficients420(w, h, 16, 16, y, cb, cr, restartInterval = ri))
+        JpegCodec.encode(Frame.ycc(w, h, 16, 16, y, cb, cr, 2, 2).copy(restartInterval = ri)))
       val progImg = JpegCodec.decode(
-        JpegCodec.encodeCoefficientsProgressive(w, h, 16, 16, y, cb, cr,
-          restartInterval = ri))
+        JpegCodec.encode(Frame.ycc(w, h, 16, 16, y, cb, cr, 2, 2)
+          .copy(progressive = true, restartInterval = ri)))
       assert(progImg.pixels.toSeq == seqImg.pixels.toSeq,
         s"trial $trial (${w}x$h, ri=$ri): progressive != sequential")
     }
@@ -443,9 +449,9 @@ class JpegCodecSpec extends AnyFunSuite {
     val cb = Array.fill(cw * chh)(rblk())
     val cr = Array.fill(cw * chh)(rblk())
     val seqImg = JpegCodec.decode(
-      JpegCodec.encodeCoefficients420(w, h, 16, 16, y, cb, cr, sh = 2, sv = 1))
-    val progImg = JpegCodec.decode(
-      JpegCodec.encodeCoefficientsProgressive(w, h, 16, 16, y, cb, cr, sh = 2, sv = 1))
+      JpegCodec.encode(Frame.ycc(w, h, 16, 16, y, cb, cr, sh = 2, sv = 1)))
+    val progImg = JpegCodec.decode(JpegCodec.encode(
+      Frame.ycc(w, h, 16, 16, y, cb, cr, sh = 2, sv = 1).copy(progressive = true)))
     assert(progImg.pixels.toSeq == seqImg.pixels.toSeq)
   }
 
@@ -455,7 +461,7 @@ class JpegCodecSpec extends AnyFunSuite {
     // (identical spec — the entropy bytes stay valid) before the SECOND
     // SOS and require an unchanged decode.
     val blocks = Array.fill(4)(blkOf(100 + 2 * rng.nextInt(20)))
-    val good = JpegCodec.encodeCoefficientsProgressiveGray(16, 16, 16, blocks)
+    val good = JpegCodec.encode(Frame.gray(16, 16, 16, blocks).copy(progressive = true))
     val want = JpegCodec.decode(good).pixels.toSeq
     // locate the second SOS marker
     var sosSeen = 0; var at = -1
@@ -483,7 +489,7 @@ class JpegCodecSpec extends AnyFunSuite {
 
   test("progressive out-of-scope shapes reject loudly") {
     val blocks = Array(blkOf(100))
-    val good = JpegCodec.encodeCoefficientsProgressiveGray(8, 8, 16, blocks)
+    val good = JpegCodec.encode(Frame.gray(8, 8, 16, blocks).copy(progressive = true))
     // 12-bit precision stays rejected (patch SOF2 precision byte)
     val sofAt = good.indices.find(i =>
       (good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == 0xc2).get
@@ -515,7 +521,7 @@ class JpegCodecSpec extends AnyFunSuite {
     for (pred <- 1 to 7; prec <- Seq(8, 12, 16)) {
       val w = 9; val h = 7 // NOT 8-aligned: lossless has no MCU grid
       val px = Array.fill(w * h)(rng.nextInt(1 << prec))
-      val img = JpegCodec.decode(JpegCodec.encodeLossless(w, h, prec, pred, px))
+      val img = JpegCodec.decode(JpegCodec.encodeLossless(w, h, prec, pred, Array(px)))
       assert(img.width == w && img.height == h && img.channels == 1)
       assert(img.depth == prec, s"native precision must survive (pred=$pred)")
       assert(img.pixels.toSeq == px.toSeq, s"pred=$pred prec=$prec")
@@ -527,7 +533,7 @@ class JpegCodecSpec extends AnyFunSuite {
     // mod-2^16 difference exactly 32768 — the one category with no
     // appended magnitude bits. The second sample then swings back.
     val px = Array(0, 32768, 0, 65535)
-    val img = JpegCodec.decode(JpegCodec.encodeLossless(4, 1, 16, 1, px))
+    val img = JpegCodec.decode(JpegCodec.encodeLossless(4, 1, 16, 1, Array(px)))
     assert(img.pixels.toSeq == px.toSeq)
   }
 
@@ -535,7 +541,7 @@ class JpegCodecSpec extends AnyFunSuite {
     val w = 6; val h = 4
     val px = Array.tabulate(w * h)(i => (i * 37) % 4096)
     val img = JpegCodec.decode(
-      JpegCodec.encodeLossless(w, h, 12, 4, px, pointTransform = 2))
+      JpegCodec.encodeLossless(w, h, 12, 4, Array(px), pointTransform = 2))
     // decoded samples are the originals with their 2 low bits zeroed
     assert(img.pixels.toSeq == px.map(v => (v >> 2) << 2).toSeq)
   }
@@ -544,7 +550,7 @@ class JpegCodecSpec extends AnyFunSuite {
     val rng = new scala.util.Random(0x0d51)
     val w = 10; val h = 6
     val px = Array.fill(w * h)(rng.nextInt(4096))
-    val bytes = JpegCodec.encodeLossless(w, h, 12, 7, px, restartInterval = 9)
+    val bytes = JpegCodec.encodeLossless(w, h, 12, 7, Array(px), restartInterval = 9)
     assert(JpegCodec.decode(bytes).pixels.toSeq == px.toSeq)
     // strip the first restart marker: the decoder must reject loudly,
     // not desynchronize every later sample
@@ -621,7 +627,7 @@ class JpegCodecSpec extends AnyFunSuite {
     // and the codec's own encoder emits a stream this decoder (now
     // pinned to the spec) reads back identically — transferring the
     // conformance to the encode side, which shares losslessPredict
-    val own = JpegCodec.encodeLossless(4, 3, 8, 4, pixels, restartInterval = 5)
+    val own = JpegCodec.encodeLossless(4, 3, 8, 4, Array(pixels), restartInterval = 5)
     assert(JpegCodec.decode(own).pixels.toSeq == pixels.toSeq)
   }
 
@@ -631,7 +637,7 @@ class JpegCodecSpec extends AnyFunSuite {
       val w = 7; val h = 5 // no MCU grid in lossless
       val planes = Array.fill(3)(Array.fill(w * h)(rng.nextInt(1 << prec)))
       val restart = if (pred % 2 == 0) 6 else 0
-      val img = JpegCodec.decode(JpegCodec.encodeLosslessColor(
+      val img = JpegCodec.decode(JpegCodec.encodeLossless(
         w, h, prec, pred, planes, restartInterval = restart))
       assert(img.channels == 3 && img.depth == prec)
       for (c <- 0 until 3; i <- 0 until w * h)
@@ -641,7 +647,7 @@ class JpegCodecSpec extends AnyFunSuite {
     // 2 and 4 components, point transform
     for (nc <- Seq(2, 4)) {
       val planes = Array.fill(nc)(Array.fill(12)(rng.nextInt(256)))
-      val img = JpegCodec.decode(JpegCodec.encodeLosslessColor(
+      val img = JpegCodec.decode(JpegCodec.encodeLossless(
         4, 3, 8, 4, planes, pointTransform = 2))
       assert(img.channels == nc)
       for (c <- 0 until nc; i <- 0 until 12)
@@ -716,14 +722,14 @@ class JpegCodecSpec extends AnyFunSuite {
     }
     // the codec's own multi-component encoder reads back identically
     // under the now-pinned decoder
-    val own = JpegCodec.decode(JpegCodec.encodeLosslessColor(
+    val own = JpegCodec.decode(JpegCodec.encodeLossless(
       3, 2, 8, 1, Array(c0, c1), restartInterval = 4))
     for (i <- 0 until 6)
       assert(own.pixels(2 * i) == c0(i) && own.pixels(2 * i + 1) == c1(i))
   }
 
   test("multi-component lossless out-of-scope shapes reject loudly") {
-    val good = JpegCodec.encodeLosslessColor(4, 3, 8, 1,
+    val good = JpegCodec.encodeLossless(4, 3, 8, 1,
       Array(Array.fill(12)(5), Array.fill(12)(9), Array.fill(12)(7)))
     val sofAt = good.indices.find(i =>
       (good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == 0xc3).get
@@ -741,19 +747,19 @@ class JpegCodecSpec extends AnyFunSuite {
       .getMessage.toLowerCase.contains("scan"))
     // 5 components exceed Table B.7
     assert(intercept[IllegalArgumentException](
-      JpegCodec.encodeLosslessColor(2, 2, 8, 1, Array.fill(5)(Array.fill(4)(0))))
+      JpegCodec.encodeLossless(2, 2, 8, 1, Array.fill(5)(Array.fill(4)(0))))
       .getMessage.contains("2..4"))
   }
 
   test("lossless out-of-scope shapes reject loudly") {
     assert(intercept[IllegalArgumentException](
-      JpegCodec.encodeLossless(4, 4, 17, 1, Array.fill(16)(0)))
+      JpegCodec.encodeLossless(4, 4, 17, 1, Array(Array.fill(16)(0))))
       .getMessage.contains("2..16"))
     assert(intercept[IllegalArgumentException](
-      JpegCodec.encodeLossless(4, 4, 8, 8, Array.fill(16)(0)))
+      JpegCodec.encodeLossless(4, 4, 8, 8, Array(Array.fill(16)(0))))
       .getMessage.contains("1..7"))
     // decode-side: a lossless scan with Se != 0 rejects
-    val good = JpegCodec.encodeLossless(4, 4, 8, 3, Array.fill(16)(5))
+    val good = JpegCodec.encodeLossless(4, 4, 8, 3, Array(Array.fill(16)(5)))
     val sosAt = good.indices.find(i =>
       (good(i) & 0xff) == 0xff && (good(i + 1) & 0xff) == 0xda).get
     val bad = good.clone()
@@ -788,7 +794,8 @@ class JpegCodecSpec extends AnyFunSuite {
         val v = 64 * rng.nextInt(64) // multiples of 64: q=512 | 8·(v−2048)
         for (y <- 0 until 8; x <- 0 until 8) px((by * 8 + y) * w + bx * 8 + x) = v
       }
-      val img = JpegCodec.decode(JpegCodec.encodeConstantBlocks12(w, h, px))
+      val img = JpegCodec.decode(JpegCodec.encode(Frame.gray(w, h, 512,
+        JpegCodec.constantBlocks(w, h, 12, 512)((x, y) => px(y * w + x))).copy(precision = 12)))
       assert(img.width == w && img.height == h && img.channels == 1)
       assert(img.depth == 12, "12-bit precision must survive to the caller")
       assert(img.pixels.toSeq == px.toSeq, "exact 12-bit reconstruction")
@@ -814,7 +821,8 @@ class JpegCodecSpec extends AnyFunSuite {
         blk
       }
       val ri = if (rng.nextBoolean()) 2 else 0
-      val bytes = JpegCodec.encodeCoefficients12(bw * 8, bh * 8, q, blocks, ri)
+      val bytes = JpegCodec.encode(
+        Frame.gray(bw * 8, bh * 8, q, blocks).copy(precision = 12, restartInterval = ri))
       val img = JpegCodec.decode(bytes)
       assert(img.depth == 12)
       for (bi <- 0 until bw * bh) {
@@ -835,14 +843,15 @@ class JpegCodecSpec extends AnyFunSuite {
     val px = new Array[Int](16 * 8)
     for (y <- 0 until 8; x <- 0 until 16)
       px(y * 16 + x) = 2 * (((x / 8) * 31 + 7) % 128)
-    val sof0 = JpegCodec.encodeConstantBlocks(16, 8, px)
+    val sof0 = JpegCodec.encode(Frame.gray(16, 8, 16,
+      JpegCodec.constantBlocks(16, 8, 8, 16)((x, y) => px(y * 16 + x))))
     val at = sof0.indices.find(i =>
       (sof0(i) & 0xff) == 0xff && (sof0(i + 1) & 0xff) == 0xc0).get
     val sof1 = sof0.clone(); sof1(at + 1) = 0xc1.toByte
     assert(JpegCodec.decode(sof1).pixels.toSeq == JpegCodec.decode(sof0).pixels.toSeq)
     // 12-bit color: patch a 4:4:4 color file to SOF1/P=12 → grayscale-only
-    val color = JpegCodec.encodeCoefficientsColor(8, 8, 16, 16,
-      Array(Array.fill(64)(0)), Array(Array.fill(64)(0)), Array(Array.fill(64)(0)))
+    val color = JpegCodec.encode(Frame.ycc(8, 8, 16, 16,
+      Array(Array.fill(64)(0)), Array(Array.fill(64)(0)), Array(Array.fill(64)(0)), 1, 1))
     val cAt = color.indices.find(i =>
       (color(i) & 0xff) == 0xff && (color(i + 1) & 0xff) == 0xc0).get
     val bad = color.clone(); bad(cAt + 1) = 0xc1.toByte; bad(cAt + 4) = 12.toByte
@@ -853,7 +862,8 @@ class JpegCodecSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](JpegCodec.decode(p10))
       .getMessage.contains("8 or 12"))
     // DQT Pq=2 is malformed
-    val twelve = JpegCodec.encodeConstantBlocks12(8, 8, Array.fill(64)(1024))
+    val twelve = JpegCodec.encode(Frame.gray(8, 8, 512,
+      JpegCodec.constantBlocks(8, 8, 12, 512)((_, _) => 1024)).copy(precision = 12))
     val qAt = twelve.indices.find(i =>
       (twelve(i) & 0xff) == 0xff && (twelve(i + 1) & 0xff) == 0xdb).get
     val badQ = twelve.clone(); badQ(qAt + 4) = 0x20.toByte
