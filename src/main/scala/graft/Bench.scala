@@ -121,17 +121,19 @@ object Bench {
     // that does not change the row count. A failed pass records NaN — the
     // query is then EXCLUDED from the median/total (a time-until-exception
     // would masquerade as fast and understate regressions); it survives
-    // only in the 'failed' list
-    def timeAll(): Map[String, Double] = SparkEntry.queries
+    // only in the 'failed' list. Each query also reports the classes Spark
+    // compiled for it
+    def timeAll(): Map[String, (Double, Long)] = SparkEntry.queries
       .filter { case (name, _) => selected(name) }
       .map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { Tool.materialize(fn(spark, sfDir)) } catch { case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        }
-        name -> (if (failed.contains(name)) Double.NaN
-                 else (System.nanoTime() - t0) / 1e9)
+        val (_, cg) = Tool.compiling(
+          try { Tool.materialize(fn(spark, sfDir)) } catch { case e: Throwable =>
+            failed += name
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          })
+        name -> ((if (failed.contains(name)) Double.NaN
+                  else (System.nanoTime() - t0) / 1e9), cg.compiles)
       }
     // COLD vs STEADY: several operators memoize session
     // artifacts (gold tables, shingle tables, ANN indexes, CC labels) the
@@ -145,9 +147,23 @@ object Bench {
     // this host's per-query noise reaches 4× (identical-code totals
     // measured 56.9-94.2s back-to-back): robust to a single slow AND a
     // single anomalously fast pass.
+    // Each pass also records the classes Spark compiled during it
+    // (Tool.compiling): a steady pass that compiles pays janino time again
+    // for code an earlier pass already generated, or for code that differs
+    // per call. The queries that compile in a steady pass are listed with
+    // their per-pass counts.
     graft.util.SessionCaches.clear(spark)
-    val coldPass = timeAll()
-    val passes = Seq.fill(nPasses)(timeAll())
+    def times(run: Map[String, (Double, Long)]) = run.map { case (k, (t, _)) => k -> t }
+    val (coldRun, coldCodegen) = Tool.compiling(timeAll())
+    val (steadyRuns, passCodegen) = Seq.fill(nPasses)(Tool.compiling(timeAll())).unzip
+    val coldPass = times(coldRun)
+    val passes = steadyRuns.map(times)
+    val steadyCompiles = steadyRuns.head.keys.toSeq.sorted
+      .map(k => k -> steadyRuns.map(_(k)._2)).filter(_._2.exists(_ > 0))
+    // the metaspace that loaded classes, the cached generated ones
+    // included, hold once every pass has run
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").map(_.getUsage.getUsed / 1048576.0).getOrElse(Double.NaN)
     val ok = passes.head.keys.filterNot(failed.contains).toSeq
     val spread = ok.map { k =>
       val ts = passes.map(_(k)).sorted
@@ -174,11 +190,19 @@ object Bench {
         val (mn, md, mx) = spread(k)
         "\"" + k + "\":[" + r3(mn) + "," + r3(md) + "," + r3(mx) + "]"
       }.mkString("{", ",", "}")
+    val steadyCompileEntries = steadyCompiles
+      .map { case (k, ns) => "\"" + k + "\":" + ns.mkString("[", ",", "]") }.mkString("{", ",", "}")
+    val codegen = {
+      val cgs = coldCodegen +: passCodegen
+      def fields(f: Tool.Codegen => String): String =
+        s"""{"cold":${f(cgs.head)},"passes":${cgs.tail.map(f).mkString("[", ",", "]")}}"""
+      s""""codegen_compiles":${fields(_.compiles.toString)},"codegen_compile_s":${fields(c => r3(c.seconds))},"metaspace_mb":${r3(metaspaceMb)}"""
+    }
     // "value" is the steady MEDIAN-of-passes total (continuous with every
     // prior round's "value"); "min_total_sec" is the noise-robust
     // min-of-passes statistic, and the per-query "spread" carries
     // [min,median,max]
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"passes":$nPasses,"failed":$fl,"queries":${entries(results.toSeq)},"cold":${entries(cold.toSeq)},"spread":${spreadEntries(results.keys.toSeq)},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"passes":$nPasses,$codegen,"codegen_steady_compiles":$steadyCompileEntries,"failed":$fl,"queries":${entries(results.toSeq)},"cold":${entries(cold.toSeq)},"spread":${spreadEntries(results.keys.toSeq)},"sf":"$sfDir"}"""
     // The harness that collects this output keeps only a ~2000-char tail of
     // stdout, and the full per-query map overflows it — the JSON line must
     // stay short enough to survive the tail capture INTACT. Print a line
@@ -195,7 +219,7 @@ object Bench {
         var line = json
         while (line.length > budget && kept.nonEmpty) {
           kept = kept.dropRight(math.max(1, kept.size / 8))
-          line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"passes":$nPasses,"failed":$fl,"queries_total":${results.size},"queries_elided":${results.size - kept.size},"queries":${entries(kept)},"cold":${entries(kept.map { case (k, _) => k -> cold(k) })},"spread":${spreadEntries(kept.map(_._1))},"sf":"$sfDir"}"""
+          line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","stat":"median_of_passes","min_total_sec":${r3(minTotal)},"calibration_sec":${r3(calibration)},"warmup_etl_sec":${r3(warmup)},"cold_total_sec":${r3(coldTotal)},"passes":$nPasses,$codegen,"failed":$fl,"queries_total":${results.size},"queries_elided":${results.size - kept.size},"queries":${entries(kept)},"cold":${entries(kept.map { case (k, _) => k -> cold(k) })},"spread":${spreadEntries(kept.map(_._1))},"sf":"$sfDir"}"""
         }
         line
       }

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
@@ -46,17 +48,31 @@ object Tool {
     * change the row count. */
   def materialize(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
+  /** Classes Spark generated and compiled, and the janino seconds spent on
+    * them. */
+  final case class Codegen(compiles: Long, seconds: Double)
+
+  /** Runs `run` and returns its result with the compiles the JVM made
+    * meanwhile. */
+  def compiling[T](run: => T): (T, Codegen) = {
+    val (n0, t0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val r = run
+    (r, Codegen(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+      (CodeGenerator.compileTime - t0) / 1e9))
+  }
+
   /** Runs the query once cold (warming plans, memos and the JIT), then
     * times three steady passes, each until every result row has reached the
-    * `noop` sink. Prints all four; returns the steady pass times in seconds. */
+    * `noop` sink. Prints all four with the classes each compiled; returns
+    * the steady pass times in seconds. */
   def time(spark: SparkSession, args: Seq[String]): Seq[Double] = {
     val Seq(sfDir, name) = need(args, 2, "time <sfDir> <query>")
     val fn = query(name)
     def timed(label: String): Double = {
       val t0 = System.nanoTime()
-      materialize(fn(spark, sfDir))
+      val (_, cg) = compiling(materialize(fn(spark, sfDir)))
       val t = (System.nanoTime() - t0) / 1e9
-      println(f"[time] $name $label: $t%.3f s")
+      println(f"[time] $name $label: $t%.3f s (codegen: ${cg.compiles} compiles, ${cg.seconds}%.3f s)")
       t
     }
     timed("cold")

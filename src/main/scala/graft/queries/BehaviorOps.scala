@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.GlobalOrder
 import graft.util.SessionCaches.PersistOnce
 
 /** Behavioral / co-occurrence analytics over the fact tables — the
@@ -333,10 +334,8 @@ ORDER BY lift_ppm DESC, conf_ppm DESC, antecedent, consequent LIMIT 100"""
     * are engine-exact; the 125 (r,f,m) cells roll up with a rule-based
     * segment label. Output is the cell grid, not per-customer rows — the
     * hash covers every cell count and the label logic. Scale shape: one
-    * fact-side hash-agg on custkey; the three ntile windows are global
-    * over the customer dim (the [[graft.queries.StatOps.ntileDeciles]]
-    * caveat — swap in percentile-boundary bucketing via
-    * `quantile_buckets` for a customer dim that outgrows one sort). */
+    * fact-side hash-agg on custkey; each global ntile runs over key ranges
+    * of the customers ([[graft.ops.GlobalOrder]]), never in one task. */
   def rfmSegments(s: SparkSession, d: String): DataFrame = {
     val per = Tables.orders(s, d)
       .groupBy(col("o_custkey").as("custkey"))
@@ -345,14 +344,16 @@ ORDER BY lift_ppm DESC, conf_ppm DESC, antecedent, consequent LIMIT 100"""
         count(lit(1)).as("f"),
         sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("cents"))
     val maxDay = per.agg(max("last_day").as("max_day"))
-    val scored = per.crossJoin(broadcast(maxDay))
+    val base = per.crossJoin(broadcast(maxDay))
       .withColumn("days_since", col("max_day") - col("last_day"))
-      .withColumn("r_score", ntile(5).over(
-        Window.orderBy(desc("days_since"), col("custkey"))).cast("long"))
-      .withColumn("f_score", ntile(5).over(
-        Window.orderBy(col("f"), col("custkey"))).cast("long"))
-      .withColumn("m_score", ntile(5).over(
-        Window.orderBy(col("cents"), col("custkey"))).cast("long"))
+    // each score ranks the customers on its own; chaining them would nest
+    // every ranking's inputs inside the next
+    def score(name: String, keys: Column*) =
+      GlobalOrder.ntile(base, 5, keys, name).select("custkey", name)
+    val scored = base
+      .join(score("r_score", -col("days_since"), col("custkey")), "custkey")
+      .join(score("f_score", col("f"), col("custkey")), "custkey")
+      .join(score("m_score", col("cents"), col("custkey")), "custkey")
     scored.groupBy("r_score", "f_score", "m_score")
       .agg(count(lit(1)).as("n_customers"), sum("cents").as("total_cents"))
       .withColumn("segment", expr(
@@ -394,18 +395,17 @@ FROM sc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
     * comparisons (running·100 ≤ total·80 — no percentage division to
     * floor differently), and the running sum orders by (cents DESC,
     * partkey) so ties are engine-identical. Scale shape: one fact
-    * hash-agg on partkey; the cumulative window runs over the part DIM
-    * (swap in `quantile_buckets` boundaries when the dim outgrows one
-    * sort); output is the 3-row class summary. */
+    * hash-agg on partkey; the running sum runs over key ranges of the
+    * parts ([[graft.ops.GlobalOrder]]), never in one task; output is the
+    * 3-row class summary. */
   def abcClassification(s: SparkSession, d: String): DataFrame = {
     val rev = Tables.lineitem(s, d)
       .groupBy(col("l_partkey"))
       .agg(sum(expr("CAST(floor(l_extendedprice * 100) AS BIGINT)")).as("cents"))
     val tot = rev.agg(sum("cents").as("total"))
-    val w = Window.orderBy(desc("cents"), col("l_partkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rev.crossJoin(broadcast(tot))
-      .withColumn("running", sum("cents").over(w))
+    GlobalOrder.positions(rev.crossJoin(broadcast(tot)),
+        Seq(-col("cents"), col("l_partkey")), "pos", "n_rows", running = Seq("cents"))
+      .withColumnRenamed("cents_running", "running")
       .withColumn("abc_class", expr(
         """CASE WHEN running * 100 <= total * 80 THEN 'A'
           |     WHEN running * 100 <= total * 95 THEN 'B'
@@ -444,17 +444,16 @@ FROM c GROUP BY 1 ORDER BY 1"""
     * churn are first-class (bucket 0 = absent that year), and reduced to
     * the (from, to) transition matrix with exact row-share ppm — the
     * customer-lifecycle flow a growth dashboard reads as a Sankey. One
-    * fact hash-agg per year, dim-sized windows, ≤25-cell output. */
+    * fact hash-agg per year, each quartiled over key ranges of its
+    * customers ([[graft.ops.GlobalOrder]]), ≤25-cell output. */
   def segmentMigration(s: SparkSession, d: String): DataFrame = {
-    def yearQ(y: Int) = {
-      val w = Window.orderBy(col("cents"), col("custkey"))
+    def yearQ(y: Int) = GlobalOrder.ntile(
       Tables.orders(s, d)
         .filter(year(col("o_orderdate")) === y)
         .groupBy(col("o_custkey").as("custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("cents"))
-        .withColumn("q", ntile(4).over(w).cast("long"))
-        .select(col("custkey"), col("q"))
-    }
+        .agg(sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("cents")),
+      4, Seq(col("cents"), col("custkey")), "q")
+      .select(col("custkey"), col("q"))
     yearQ(1995).withColumnRenamed("q", "from_q")
       .join(yearQ(1996).withColumnRenamed("q", "to_q"), Seq("custkey"), "full")
       .select(coalesce(col("from_q"), lit(0L)).as("from_q"),

@@ -995,13 +995,13 @@ FROM g CROSS JOIN t ORDER BY isodow"""
     * — the 10 points a dashboard draws, where the Gini is the area. Pure
     * integer arithmetic: cumulative cents over the decile rollup (10
     * rows) against broadcast totals. Scale shape: one fact hash-agg on
-    * custkey, one dim-sized ntile window, a 10-row cumulative window. */
+    * custkey, the ntile over key ranges of the customers
+    * ([[graft.ops.GlobalOrder]]), a 10-row cumulative window. */
   def lorenzCurve(s: SparkSession, d: String): DataFrame = {
     val spend = Tables.orders(s, d)
       .groupBy(col("o_custkey").as("custkey"))
       .agg(sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("cents"))
-    val deciled = spend.withColumn("decile",
-      ntile(10).over(Window.orderBy(col("cents"), col("custkey"))).cast("long"))
+    val deciled = graft.ops.GlobalOrder.ntile(spend, 10, Seq(col("cents"), col("custkey")), "decile")
     val tot = spend.agg(count(lit(1)).as("n_total"), sum("cents").as("c_total"))
     val w = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -8,12 +8,14 @@ import graft.pipeline.Medallion
 import graft.ops.SurrogateKeys
 
 object TestSpark {
-  // not GraftSession: an extension-injected PushAggThroughUniqueJoin would stay on in PushAggRuleSpec's rule-off case
+  // not GraftSession: an extension-injected PushAggThroughUniqueJoin would stay on in PushAggRuleSpec's rule-off case.
+  // GraftSession's JVM-wide confs apply, so specs run under the mains' codegen regime.
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(GraftSession.jvmConfs)
     .getOrCreate()
   val sf = "/root/testdata/sf0.001"
 }
