@@ -122,8 +122,8 @@ object Bench {
     // query is then EXCLUDED from the median/total (a time-until-exception
     // would masquerade as fast and understate regressions); it survives
     // only in the 'failed' list. Each query also reports the classes Spark
-    // compiled for it
-    def timeAll(): Map[String, (Double, Long)] = SparkEntry.queries
+    // compiled for it and their janino seconds
+    def timeAll(): Map[String, (Double, Tool.Codegen)] = SparkEntry.queries
       .filter { case (name, _) => selected(name) }
       .map { case (name, fn) =>
         val t0 = System.nanoTime()
@@ -133,7 +133,7 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           })
         name -> ((if (failed.contains(name)) Double.NaN
-                  else (System.nanoTime() - t0) / 1e9), cg.compiles)
+                  else (System.nanoTime() - t0) / 1e9), cg)
       }
     // COLD vs STEADY: several operators memoize session
     // artifacts (gold tables, shingle tables, ANN indexes, CC labels) the
@@ -147,19 +147,21 @@ object Bench {
     // this host's per-query noise reaches 4× (identical-code totals
     // measured 56.9-94.2s back-to-back): robust to a single slow AND a
     // single anomalously fast pass.
-    // Each pass also records the classes Spark compiled during it
-    // (Tool.compiling): a steady pass that compiles pays janino time again
+    // Each pass also records the classes Spark compiled during it, the sum
+    // of its queries' counts: a steady pass that compiles pays janino time again
     // for code an earlier pass already generated, or for code that differs
     // per call. The queries that compile in a steady pass are listed with
     // their per-pass counts.
     graft.util.SessionCaches.clear(spark)
-    def times(run: Map[String, (Double, Long)]) = run.map { case (k, (t, _)) => k -> t }
-    val (coldRun, coldCodegen) = Tool.compiling(timeAll())
-    val (steadyRuns, passCodegen) = Seq.fill(nPasses)(Tool.compiling(timeAll())).unzip
+    def times(run: Map[String, (Double, Tool.Codegen)]) = run.map { case (k, (t, _)) => k -> t }
+    def codegenOf(run: Map[String, (Double, Tool.Codegen)]) = Tool.Codegen(
+      run.values.map(_._2.compiles).sum, run.values.map(_._2.seconds).sum)
+    val coldRun = timeAll()
+    val steadyRuns = Seq.fill(nPasses)(timeAll())
     val coldPass = times(coldRun)
     val passes = steadyRuns.map(times)
     val steadyCompiles = steadyRuns.head.keys.toSeq.sorted
-      .map(k => k -> steadyRuns.map(_(k)._2)).filter(_._2.exists(_ > 0))
+      .map(k => k -> steadyRuns.map(_(k)._2.compiles)).filter(_._2.exists(_ > 0))
     // the metaspace that loaded classes, the cached generated ones
     // included, hold once every pass has run
     val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
@@ -193,7 +195,7 @@ object Bench {
     val steadyCompileEntries = steadyCompiles
       .map { case (k, ns) => "\"" + k + "\":" + ns.mkString("[", ",", "]") }.mkString("{", ",", "}")
     val codegen = {
-      val cgs = coldCodegen +: passCodegen
+      val cgs = (coldRun +: steadyRuns).map(codegenOf)
       def fields(f: Tool.Codegen => String): String =
         s"""{"cold":${f(cgs.head)},"passes":${cgs.tail.map(f).mkString("[", ",", "]")}}"""
       s""""codegen_compiles":${fields(_.compiles.toString)},"codegen_compile_s":${fields(c => r3(c.seconds))},"metaspace_mb":${r3(metaspaceMb)}"""

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *
   *  - [[scalable]] — sort-free two-pass `zipWithIndex`-style assignment:
   *    per-partition counts are collected (tiny: one Long per partition), then
-  *    each row gets `offset(partition) + local index`. O(1) shuffle, keeps
+  *    each row gets `offset(partition) + local index` ([[Ranks]]' scan). O(1) shuffle, keeps
   *    full parallelism, contiguous; deterministic only up to the incoming
   *    partition order, so pair it with a `repartitionByRange` on the natural
   *    key when determinism matters. This is the 100 TB path.
@@ -38,15 +38,8 @@ object SurrogateKeys {
   /** Contiguous SKs without a global sort — the at-scale variant.
     * Row order (and therefore key assignment) follows the existing
     * partitioning; `sortWithinPartitions` + `repartitionByRange` upstream
-    * makes it fully deterministic without a single-task window. */
-  def scalable(df: DataFrame, skName: String): DataFrame = {
-    val spark = df.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+
-        org.apache.spark.sql.types.StructField(skName, org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (row, idx) =>
-      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (idx + 1L))
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+    * makes it fully deterministic without a single-task window (the scan
+    * [[Ranks.ranked]] runs after exactly that exchange). */
+  def scalable(df: DataFrame, skName: String): DataFrame =
+    Ranks.scan(df, Nil, skName, None, Nil)
 }

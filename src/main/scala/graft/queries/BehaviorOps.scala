@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.GlobalOrder
+import graft.ops.Ranks
 import graft.util.SessionCaches.PersistOnce
 
 /** Behavioral / co-occurrence analytics over the fact tables — the
@@ -334,8 +334,9 @@ ORDER BY lift_ppm DESC, conf_ppm DESC, antecedent, consequent LIMIT 100"""
     * are engine-exact; the 125 (r,f,m) cells roll up with a rule-based
     * segment label. Output is the cell grid, not per-customer rows — the
     * hash covers every cell count and the label logic. Scale shape: one
-    * fact-side hash-agg on custkey; each global ntile runs over key ranges
-    * of the customers ([[graft.ops.GlobalOrder]]), never in one task. */
+    * fact-side hash-agg on custkey; the three rankings run as one
+    * range-exchanged ntile over (score, customer) rows
+    * ([[graft.ops.Ranks]]), never in one task. */
   def rfmSegments(s: SparkSession, d: String): DataFrame = {
     val per = Tables.orders(s, d)
       .groupBy(col("o_custkey").as("custkey"))
@@ -346,14 +347,17 @@ ORDER BY lift_ppm DESC, conf_ppm DESC, antecedent, consequent LIMIT 100"""
     val maxDay = per.agg(max("last_day").as("max_day"))
     val base = per.crossJoin(broadcast(maxDay))
       .withColumn("days_since", col("max_day") - col("last_day"))
-    // each score ranks the customers on its own; chaining them would nest
-    // every ranking's inputs inside the next
-    def score(name: String, keys: Column*) =
-      GlobalOrder.ntile(base, 5, keys, name).select("custkey", name)
-    val scored = base
-      .join(score("r_score", -col("days_since"), col("custkey")), "custkey")
-      .join(score("f_score", col("f"), col("custkey")), "custkey")
-      .join(score("m_score", col("cents"), col("custkey")), "custkey")
+    // one row per (customer, score) ranks all three orders in one pass,
+    // each score its own group; recency ranks the longest absence first
+    def key(score: String, k: Column) = struct(lit(score).as("score"), k.as("key"))
+    val keyed = base
+      .select(col("custkey"), col("cents"), explode(array(
+        key("r", -col("days_since")), key("f", col("f")), key("m", col("cents")))).as("k"))
+      .select(col("custkey"), col("cents"), col("k.score").as("score"), col("k.key").as("key"))
+    def tile(score: String) = max(when(col("score") === score, col("tile"))).as(s"${score}_score")
+    val scored = Ranks.ntile(keyed, 5, Seq("score"), Seq(col("key"), col("custkey")), "tile")
+      .groupBy("custkey")
+      .agg(tile("r"), tile("f"), tile("m"), max("cents").as("cents"))
     scored.groupBy("r_score", "f_score", "m_score")
       .agg(count(lit(1)).as("n_customers"), sum("cents").as("total_cents"))
       .withColumn("segment", expr(
@@ -395,17 +399,16 @@ FROM sc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
     * comparisons (running·100 ≤ total·80 — no percentage division to
     * floor differently), and the running sum orders by (cents DESC,
     * partkey) so ties are engine-identical. Scale shape: one fact
-    * hash-agg on partkey; the running sum runs over key ranges of the
-    * parts ([[graft.ops.GlobalOrder]]), never in one task; output is the
+    * hash-agg on partkey; the running sum runs over range-exchanged parts
+    * ([[graft.ops.Ranks.runningSum]]), never in one task; output is the
     * 3-row class summary. */
   def abcClassification(s: SparkSession, d: String): DataFrame = {
     val rev = Tables.lineitem(s, d)
       .groupBy(col("l_partkey"))
       .agg(sum(expr("CAST(floor(l_extendedprice * 100) AS BIGINT)")).as("cents"))
     val tot = rev.agg(sum("cents").as("total"))
-    GlobalOrder.positions(rev.crossJoin(broadcast(tot)),
-        Seq(-col("cents"), col("l_partkey")), "pos", "n_rows", running = Seq("cents"))
-      .withColumnRenamed("cents_running", "running")
+    Ranks.runningSum(rev.crossJoin(broadcast(tot)),
+        Seq(desc("cents"), col("l_partkey")), "cents", "running")
       .withColumn("abc_class", expr(
         """CASE WHEN running * 100 <= total * 80 THEN 'A'
           |     WHEN running * 100 <= total * 95 THEN 'B'
@@ -440,24 +443,23 @@ FROM c GROUP BY 1 ORDER BY 1"""
 
   /** Year-over-year spend-quartile migration matrix: customers quartiled
     * by 1995 spend and again by 1996 spend (total-tie-break ntile(4), the
-    * engine-exact bucketing), full-outer joined so year-entries and
+    * engine-exact bucketing), paired per customer so year-entries and
     * churn are first-class (bucket 0 = absent that year), and reduced to
     * the (from, to) transition matrix with exact row-share ppm — the
     * customer-lifecycle flow a growth dashboard reads as a Sankey. One
-    * fact hash-agg per year, each quartiled over key ranges of its
-    * customers ([[graft.ops.GlobalOrder]]), ≤25-cell output. */
+    * fact hash-agg on (year, custkey), both years quartiled in one
+    * range-exchanged ntile grouped by year ([[graft.ops.Ranks]]), one
+    * per-customer aggregate pairing them, ≤25-cell output. */
   def segmentMigration(s: SparkSession, d: String): DataFrame = {
-    def yearQ(y: Int) = GlobalOrder.ntile(
-      Tables.orders(s, d)
-        .filter(year(col("o_orderdate")) === y)
-        .groupBy(col("o_custkey").as("custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("cents")),
-      4, Seq(col("cents"), col("custkey")), "q")
-      .select(col("custkey"), col("q"))
-    yearQ(1995).withColumnRenamed("q", "from_q")
-      .join(yearQ(1996).withColumnRenamed("q", "to_q"), Seq("custkey"), "full")
-      .select(coalesce(col("from_q"), lit(0L)).as("from_q"),
-        coalesce(col("to_q"), lit(0L)).as("to_q"))
+    val spend = Tables.orders(s, d)
+      .filter(year(col("o_orderdate")).isin(1995, 1996))
+      .groupBy(year(col("o_orderdate")).as("y"), col("o_custkey").as("custkey"))
+      .agg(sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("cents"))
+    // a customer with no orders in a year has no row for it: bucket 0
+    def bucket(y: Int) = coalesce(max(when(col("y") === y, col("q"))), lit(0L))
+    Ranks.ntile(spend, 4, Seq("y"), Seq(col("cents"), col("custkey")), "q")
+      .groupBy("custkey")
+      .agg(bucket(1995).as("from_q"), bucket(1996).as("to_q"))
       .groupBy("from_q", "to_q")
       .agg(count(lit(1)).as("n_customers"))
       .withColumn("row_share_ppm", expr(

@@ -494,7 +494,7 @@ FROM g ORDER BY seg NULLS FIRST"""
     * The input is range-partitioned + sorted on the UNIQUE
     * (l_orderkey, l_linenumber) key; since range partitions are totally
     * ordered and rows are sorted within each, the partition-ordered
-    * zipWithIndex in [[graft.ops.SurrogateKeys.scalable]] reproduces
+    * numbering in [[graft.ops.SurrogateKeys.scalable]] reproduces
     * exactly `row_number() OVER (ORDER BY l_orderkey, l_linenumber)` —
     * the oracle — while every stage stays parallel (range exchange,
     * per-partition sort, O(#partitions) driver-side offsets). Uniqueness

@@ -65,35 +65,17 @@ FROM o ORDER BY o_custkey, day, o_orderkey"""
     * per-group window. A windowed ntile PARTITION BY o_orderstatus
     * funnels each status through ONE task (3 tasks for the whole fact —
     * 18.5 s at sf10, a parallelism ceiling that only worsens with
-    * scale). Instead: range-exchange on the window's total order, a
-    * zipWithIndex global rank (the [[graft.ops.SurrogateKeys.scalable]]
-    * machinery — per-partition counts only, full parallelism), a
-    * 3-row broadcast of per-status offsets, and ntile's closed form
-    * from the in-status rank r of n rows (the first n mod 10 tiles get
-    * ⌈n/10⌉ rows, the rest ⌊n/10⌋ — T-SQL/Spark/DuckDB all define it
-    * so). The oracle states the true windowed ntile, so the gate IS
-    * the equivalence proof of the closed form. */
+    * scale). Instead [[graft.ops.Ranks.ntile]]: a range exchange on the
+    * window's total order, per-range status counts collected in one
+    * pass, each row's rank within its status from them, and ntile's
+    * closed form. The oracle states the true windowed ntile, so the gate
+    * IS the equivalence proof of the closed form. */
   def ntileDeciles(s: SparkSession, d: String): DataFrame = {
     val base = Tables.orders(s, d)
       .select(col("o_orderstatus"), col("o_orderkey"),
         expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-    val sorted = base
-      .repartitionByRange(s.sparkContext.defaultParallelism,
-        col("o_orderstatus"), col("cents"), col("o_orderkey"))
-      .sortWithinPartitions("o_orderstatus", "cents", "o_orderkey")
-    // global contiguous index in exactly the window's total order
-    // (o_orderkey is unique, so the order is strict and deterministic)
-    val idx = graft.ops.SurrogateKeys.scalable(sorted, "gidx")
-    val offsets = idx.groupBy("o_orderstatus")
-      .agg(min("gidx").as("off"), count(lit(1)).as("n"))
-    val r = col("gidx") - col("off") + 1 // 1-based rank within the status
-    val m = col("n") % 10                // tiles that get the big size
-    val small = floor(col("n") / 10)     // ⌊n/10⌋ (0 when n < 10)
-    val big = small + 1
-    val decile = when(r <= m * big, floor((r - 1) / big) + 1)
-      .otherwise(m + floor((r - m * big - 1) / small) + 1)
-    idx.join(broadcast(offsets), "o_orderstatus")
-      .withColumn("decile", decile.cast("long"))
+    // o_orderkey is unique, so the order is strict and deterministic
+    graft.ops.Ranks.ntile(base, 10, Seq("o_orderstatus"), Seq(col("cents"), col("o_orderkey")), "decile")
       .groupBy("o_orderstatus", "decile")
       .agg(count(lit(1)).as("n"),
         min("cents").as("min_cents"),
@@ -723,7 +705,7 @@ ORDER BY component"""
     * (top ⌈n/5⌉ spenders = ranks above n − ⌈n/5⌉). Scale shape: spend is
     * one fact-side hash-agg on custkey; the ranking window partitions by
     * nation (25 partitions of customer-dim size — at 100 TB swap in
-    * [[graft.ops.SurrogateKeys.scalable]]'s range-exchange ranking); the
+    * [[graft.ops.Ranks.ranked]], a range-exchange ranking); the
     * count table and nation dim broadcast. */
   def giniPareto(s: SparkSession, d: String): DataFrame = {
     val spend = Tables.orders(s, d)
@@ -995,13 +977,13 @@ FROM g CROSS JOIN t ORDER BY isodow"""
     * — the 10 points a dashboard draws, where the Gini is the area. Pure
     * integer arithmetic: cumulative cents over the decile rollup (10
     * rows) against broadcast totals. Scale shape: one fact hash-agg on
-    * custkey, the ntile over key ranges of the customers
-    * ([[graft.ops.GlobalOrder]]), a 10-row cumulative window. */
+    * custkey, the ntile over range-exchanged customers
+    * ([[graft.ops.Ranks]]), a 10-row cumulative window. */
   def lorenzCurve(s: SparkSession, d: String): DataFrame = {
     val spend = Tables.orders(s, d)
       .groupBy(col("o_custkey").as("custkey"))
       .agg(sum(expr("CAST(floor(o_totalprice * 100) AS BIGINT)")).as("cents"))
-    val deciled = graft.ops.GlobalOrder.ntile(spend, 10, Seq(col("cents"), col("custkey")), "decile")
+    val deciled = graft.ops.Ranks.ntile(spend, 10, Nil, Seq(col("cents"), col("custkey")), "decile")
     val tot = spend.agg(count(lit(1)).as("n_total"), sum("cents").as("c_total"))
     val w = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

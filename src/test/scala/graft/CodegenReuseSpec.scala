@@ -29,17 +29,4 @@ class CodegenReuseSpec extends AnyFunSuite {
       assert(again == 0, s"$name compiled $again classes on its second call")
     }
   }
-
-  test("GraftSession.builder carries the JVM-wide codegen confs, and the test session runs under them") {
-    val b = GraftSession.builder()
-    // SparkSessionBuilder.options is package-private to Spark
-    val options = b.getClass.getMethod("options").invoke(b)
-      .asInstanceOf[scala.collection.Map[String, String]]
-    assert(GraftSession.jvmConfs.keySet == Set("spark.sql.codegen.cache.maxEntries",
-      "spark.sql.artifact.isolation.enabled", "spark.sql.codegen.useIdInClassName"))
-    GraftSession.jvmConfs.foreach { case (k, v) =>
-      assert(options.get(k).contains(v), k)
-      assert(spark.conf.get(k) == v, k)
-    }
-  }
 }
