@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   * streaming clones) inherit every entry.
   *
   * Further defaults, [[jvmConfs]], let one compiled class serve every
-  * pass, session and stream start in the JVM (see there).
+  * pass, session and stream start in the JVM, and let local file
+  * operations run without starting a process (see there).
   */
 object GraftSession {
 
@@ -47,7 +48,8 @@ object GraftSession {
     * 100-entry default, which lets evicted classes unload. */
   private val CodegenCacheEntries: Int = 2 * 3420
 
-  /** The settings that make generated code compile once per JVM:
+  /** The settings that take effect once per JVM. Three make generated
+    * code compile once per JVM:
     *  - `spark.sql.codegen.cache.maxEntries`: [[CodegenCacheEntries]];
     *  - `spark.sql.artifact.isolation.enabled=false`. Spark keys its
     *    generated-class cache on (context class loader, code body). With
@@ -65,16 +67,40 @@ object GraftSession {
     *    differ only in that suffix are two cache entries; without it they
     *    are one. The id stays in the plan's explain output.
     *
+    * Two register [[graft.util.LocalFs]] for `file:` paths, under both of
+    * Hadoop's file system APIs: `fs.file.impl` (`FileSystem`: parquet
+    * writes, listings, the `AtomicTable` data files) and
+    * `fs.AbstractFileSystem.file.impl` (FileContext: streaming
+    * checkpoints, state stores and file-sink logs). Without a native
+    * libhadoop, Hadoop's raw local file system starts a `chmod` process
+    * for every file and directory it creates and a `readlink` process for
+    * every link probe of a FileContext rename. A JFR recording
+    * (`jdk.ProcessStart`) of perfbench counted 17 starts per committed
+    * `AtomicTable` append and 172 per `stream_corpus_filter` start (59
+    * `chmod`, 112 `readlink`, and Spark's own `rm -rf` of the session
+    * clone's artifact directory), at 1.3–1.7 ms each. Both entries wrap
+    * it in Hadoop's checksummed classes (`.crc` files, checksum
+    * verification) and keep FileContext's no-overwrite rename, which is
+    * why the checkpoints stay on the FileContext manager. A native
+    * libhadoop would avoid the processes as well, but Spark's binary
+    * distribution ships none.
+    *
     * They take effect only when the JVM's first session is created: they
     * reach every later session and clone through that session's SparkConf,
     * the cache is sized once, when Spark first generates code, and a
-    * session reads the isolation flag once. A session built before
+    * session reads the isolation flag once. Hadoop caches one `FileSystem`
+    * per scheme, authority and user, and its cache key ignores the
+    * configuration, so the first `file:` instance created in the JVM
+    * serves every later one; no code of this library obtains a
+    * `FileSystem` before its first session. A session built before
     * [[builder]] ran, or `getOrCreate` returning an existing session, leaves
     * them unapplied. */
   private[graft] val jvmConfs: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.util.LocalFs.Checksummed].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.util.LocalFs.ChecksummedFs].getName)
 
   /** Cores of the default local master: the `SPARK_GRAFT_CPUS` deployment
     * setting, else every core of the host. */
