@@ -77,7 +77,7 @@ object DeletionVectors {
     * restore/clone/append of a merged table carries its delete/merge
     * state intact instead of silently resurrecting rows. */
   def deleteWhere(s: SparkSession, base: String, pred: Column): Unit = {
-    s.read.parquet(verDir(base))
+    AtomicTable.scanVersion(s, verDir(base))
       .where(pred)
       .select(col("_metadata.file_name").as("fname"),
         col("_metadata.row_index").as("pos"))
@@ -142,7 +142,7 @@ object DeletionVectors {
     * partitioning and never shuffles in either form. */
   def readWithDv(s: SparkSession, base: String): DataFrame = {
     val dataCols = AtomicTable.read(s, base).columns.map(col).toSeq
-    val data = s.read.parquet(verDir(base))
+    val data = AtomicTable.scanVersion(s, verDir(base))
       .withColumn("__file", col("_metadata.file_name"))
       .withColumn("__pos", col("_metadata.row_index"))
     if (!hasDv(base)) data.select(dataCols: _*)

@@ -55,13 +55,11 @@ object MergeOnRead {
     * [[readMergedEvolved]] path; plans differ only in the projection. */
   private def liveWithPos(s: SparkSession, base: String,
       evolveSchema: Boolean = false): DataFrame = {
-    def scan(dir: String, mergeSchema: Boolean): DataFrame = withPos(
-      if (mergeSchema) s.read.option("mergeSchema", "true").parquet(dir)
-      else s.read.parquet(dir))
-    val data = scan(DeletionVectors.verDir(base), evolveSchema)
+    val data = withPos(
+      AtomicTable.scanVersion(s, DeletionVectors.verDir(base), mergeSchema = evolveSchema))
     val all =
       if (hasMor(base))
-        data.unionByName(scan(morPath(base), mergeSchema = true),
+        data.unionByName(withPos(s.read.option("mergeSchema", "true").parquet(morPath(base))),
           allowMissingColumns = true)
       else data
     if (!DeletionVectors.hasDv(base)) all

@@ -2,8 +2,10 @@ package graft.util
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Poor-man's atomic table commit over plain parquet directories — the
   * crash-safe substitute for a transactional table format (no Delta/Iceberg
@@ -15,6 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout under a logical table path `base`:
   * {{{
   *   base/_v<N>/         immutable published versions (ordinary parquet dirs)
+  *   base/_v<N>/_SCHEMA  the version's Spark schema (StructType JSON), present
+  *                       only when every data file of the version carries
+  *                       that same schema in its footer's Spark row metadata
   *   base/_v<N>._claim   heartbeat marker of a version still being staged
   *   base/_CURRENT       the commit record: live version name on line 1,
   *                       then `txn <appId> <version>` watermarks and
@@ -31,6 +36,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   * Records are replaced by writing `<name>.tmp` and renaming it over the
   * record, so a `.tmp` file exists only while a commit is in flight.
+  *
+  * Every read of a version scans it with its `_SCHEMA` ([[scanVersion]]),
+  * so Spark runs no schema-inference job; a version without one (written
+  * before the record existed, or with footers that disagree) is read by
+  * inference, as a plain parquet directory.
   *
   * `publish` writes the new version to a fresh `_v<N>` directory, then
   * replaces `_CURRENT` with an atomic rename (write a tmp file,
@@ -188,7 +198,7 @@ object AtomicTable {
     * `keep >= 2` (retention is the crash-safe answer to read/prune races,
     * exactly as in transactional table formats). */
   def read(s: SparkSession, base: String): DataFrame =
-    s.read.parquet(readPointer(base).liveDir(base))
+    scanVersion(s, readPointer(base).liveDir(base))
 
   private val Log = "_LOG"
 
@@ -209,7 +219,7 @@ object AtomicTable {
   def readVersion(s: SparkSession, base: String, version: String): DataFrame = {
     require(history(base).contains(version),
       s"version $version is not in the published, still-retained history of $base")
-    s.read.parquet(base + "/" + version)
+    scanVersion(s, base + "/" + version)
   }
 
   /** Atomically publish one new version of the table at `base`. `write` is
@@ -234,7 +244,15 @@ object AtomicTable {
     * (`_v<N>`). The claim heartbeat protects the directory from orphan
     * pruning while the write runs; after return it ages out on
     * [[OrphanTtlMs]], so commit promptly. */
-  def stageVersion(base: String)(write: String => Unit): String = {
+  def stageVersion(base: String)(write: String => Unit): String =
+    stageLinked(base) { dir => write(dir); Some(Set.empty) }
+
+  /** [[stageVersion]] for writers that first hard-link files of an earlier
+    * version into the staged directory: `write` returns the top-level names
+    * it linked, or None when staging failed and the directory is about to
+    * be discarded. After `write`, the version's schema record is written
+    * from the footers of the files it added ([[recordSchema]]). */
+  private def stageLinked(base: String)(write: String => Option[Set[String]]): String = {
     val root = Paths.get(base)
     Files.createDirectories(root)
     // optimistic version claim: atomic create-or-fail on the next number;
@@ -267,7 +285,7 @@ object AtomicTable {
     heartbeat.setDaemon(true)
     heartbeat.start()
     // crash before the swap: pointer untouched
-    try write(base + "/" + name)
+    try write(base + "/" + name).foreach(recordSchema(root.resolve(name), _))
     finally { heartbeat.interrupt(); heartbeat.join() }
     name
   }
@@ -579,7 +597,7 @@ object AtomicTable {
     tables.map { t =>
       val v = m.getOrElse(t,
         throw new IllegalStateException(s"table $t is not in snapshot $id at $root"))
-      t -> s.read.parquet(s"$root/$t/$v")
+      t -> scanVersion(s, s"$root/$t/$v")
     }.toMap
   }
 
@@ -613,7 +631,7 @@ object AtomicTable {
     tables.map { t =>
       val v = m.getOrElse(t,
         throw new IllegalStateException(s"table $t is not in the snapshot at $root"))
-      t -> s.read.parquet(s"$root/$t/$v")
+      t -> scanVersion(s, s"$root/$t/$v")
     }.toMap
   }
 
@@ -635,9 +653,11 @@ object AtomicTable {
     * pruned source version loses only its own directory entries; the
     * restored version's links keep the shared inodes alive. */
   def restore(base: String, version: String, keep: Int = 2): Unit = {
+    require(keep >= 1, "must keep at least the current version")
     require(history(base).contains(version),
       s"version $version is not in the published, still-retained history of $base")
-    publish(base, keep)(linkFilesInto(Paths.get(base, version), _))
+    val name = stageLinked(base)(dir => Some(linkFilesInto(Paths.get(base, version), dir)))
+    commitVersion(base, name, keep)
   }
 
   /** Hardlink every regular file of `src` into `dstDir`, RECURSING into
@@ -650,16 +670,18 @@ object AtomicTable {
     * directories are immutable once published, so shared inodes can
     * never see a write; pruning one side deletes only its own directory
     * entries. */
-  private def linkFilesInto(src: Path, dstDir: String): Unit = {
+  private def linkFilesInto(src: Path, dstDir: String): Set[String] = {
     val files = Files.list(src)
     val entries = try files.iterator().asScala.toSeq finally files.close()
-    entries.foreach { p =>
+    entries.flatMap { p =>
       val to = Paths.get(dstDir, p.getFileName.toString)
       if (Files.isDirectory(p)) {
         Files.createDirectories(to)
         linkFilesInto(p, to.toString)
-      } else if (Files.isRegularFile(p)) linkOrCopy(p, to)
-    }
+        Some(p.getFileName.toString)
+      } else if (Files.isRegularFile(p)) { linkOrCopy(p, to); Some(p.getFileName.toString) }
+      else None
+    }.toSet
   }
 
   /** Hardlink `from` at `to`, copying where the filesystem refuses links. */
@@ -686,7 +708,7 @@ object AtomicTable {
     val fromDir = from.dir(src).getOrElse(
       throw new IllegalStateException(s"no published version at $src to clone"))
     require(!exists(dst), s"clone target $dst already has a published version")
-    val name = stageVersion(dst)(linkFilesInto(Paths.get(fromDir), _))
+    val name = stageLinked(dst)(dir => Some(linkFilesInto(Paths.get(fromDir), dir)))
     withCommitLock(Paths.get(dst)) {
       commitVersionLocked(dst, name, keep, cols = from.cols)
     }
@@ -856,11 +878,12 @@ object AtomicTable {
         // partial staged dir, and retry; a persistent IO fault (disk
         // full) still surfaces through the attempt cap.
         var stageFailed: java.io.IOException = null
-        val name = stageVersion(base) { dir =>
+        val name = stageLinked(base) { dir =>
           try {
-            cur.foreach(c => linkFilesInto(Paths.get(c), dir))
+            val linked = cur.fold(Set.empty[String])(c => linkFilesInto(Paths.get(c), dir))
             write(dir)
-          } catch { case e: java.io.IOException => stageFailed = e }
+            Some(linked)
+          } catch { case e: java.io.IOException => stageFailed = e; None }
         }
         withCommitLock(Paths.get(base)) {
           if (stageFailed != null) {
@@ -989,7 +1012,7 @@ object AtomicTable {
       : (PointerRecord, Seq[(String, String)]) = {
     val rec = readPointer(base)
     (rec, rec.cols.getOrElse(
-      s.read.parquet(rec.liveDir(base)).columns.toSeq.map(c => (c, c))))
+      versionSchema(s, rec.liveDir(base)).fieldNames.toSeq.map(c => (c, c))))
   }
 
   /** `ALTER TABLE ... RENAME COLUMN from TO to` — metadata-only: no
@@ -1035,9 +1058,9 @@ object AtomicTable {
   def readMapped(s: SparkSession, base: String): DataFrame = {
     val rec = readPointer(base)
     rec.cols match {
-      case None => s.read.parquet(rec.liveDir(base))
+      case None => scanVersion(s, rec.liveDir(base))
       case Some(m0) =>
-        val df = s.read.option("mergeSchema", "true").parquet(rec.liveDir(base))
+        val df = scanVersion(s, rec.liveDir(base), mergeSchema = true)
         val add = df.columns.filterNot(m0.map(_._1).toSet).toSeq
         val logical = m0.map(_._2).filter(_ != "-").toSet
         add.foreach(c => require(!logical(c), s"evolved physical column '$c' at " +
@@ -1080,7 +1103,7 @@ object AtomicTable {
         val logical = df.columns.toSet
         // dropped slots need their PHYSICAL type (parquet refuses
         // NullType); take it from the live version's schema
-        val phys = df.sparkSession.read.parquet(rec.liveDir(base)).schema
+        val phys = versionSchema(df.sparkSession, rec.liveDir(base))
           .map(f => f.name -> f.dataType).toMap
         val mappedLogical = m.map(_._2).toSet
         val extras = df.columns.filterNot(mappedLogical).toSeq
@@ -1095,6 +1118,142 @@ object AtomicTable {
         } ++ extras.map(org.apache.spark.sql.functions.col): _*)
     }
   }
+
+  // ------------------------------------------------ schema record
+
+  private val SchemaFile = "_SCHEMA"
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Scan of one version directory with its recorded schema: Spark lists
+    * the directory but runs no schema-inference job. Without a record (or
+    * with one that does not parse) the directory is read as plain parquet,
+    * by inference (footer-merged when `mergeSchema`), so missing
+    * directories and stores written before the record existed behave as
+    * they always did. With a record every data file carries that schema,
+    * so a merged read would infer it too. */
+  private[graft] def scanVersion(s: SparkSession, dir: String,
+      mergeSchema: Boolean = false): DataFrame =
+    recordedSchema(Paths.get(dir)) match {
+      case Some(st) => s.read.schema(st).parquet(dir)
+      case None if mergeSchema => s.read.option("mergeSchema", "true").parquet(dir)
+      case None => s.read.parquet(dir)
+    }
+
+  /** The version's columns and types: its record, else Spark's inference. */
+  private def versionSchema(s: SparkSession, dir: String): StructType =
+    recordedSchema(Paths.get(dir)).getOrElse(s.read.parquet(dir).schema)
+
+  private def recordedSchema(dir: Path): Option[StructType] =
+    try parseStruct(Files.readString(dir.resolve(SchemaFile)))
+    catch { case NonFatal(_) => None }
+
+  private def parseStruct(json: String): Option[StructType] =
+    try DataType.fromJson(json) match {
+      case st: StructType => Some(st)
+      case _              => None
+    } catch { case NonFatal(_) => None }
+
+  /** Spark's own rule for the names a directory scan reads
+    * (`InMemoryFileIndex.shouldFilterOutPathName`): a name starting with
+    * `_` or `.` is hidden, except a partition directory (`_k=v`) and the
+    * parquet summary files. */
+  private def scannedName(n: String): Boolean =
+    !(((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")) &&
+      !(n.startsWith("_common_metadata") || n.startsWith("_metadata")))
+
+  /** Write the staged version's `_SCHEMA` before its commit. Only the files
+    * the stage ADDED (not among `linked`) are opened, one footer each. The
+    * record is written when every added file carries Spark row metadata,
+    * all of it agrees up to nullability (which every scan drops), and it
+    * equals the record linked from the base version, or the base linked no
+    * scanned file. An unchanged linked record stays as the link (no bytes
+    * written); a record that no longer holds is removed. A new record replaces the directory ENTRY (tmp +
+    * rename), never the linked inode, which the base version shares. */
+  private def recordSchema(dir: Path, linked: Set[String]): Unit = {
+    val stream = Files.list(dir)
+    val names = try stream.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally stream.close()
+    val added = names.filter(n => !linked(n) && scannedName(n))
+    if (added.nonEmpty) {
+      val inherited =
+        if (linked(SchemaFile)) recordedSchema(dir) else None
+      val baseScanned = names.exists(n => linked(n) && scannedName(n))
+      val own = footersSchema(dir, added).filter(st =>
+        if (inherited.isDefined) inherited.contains(st) else !baseScanned)
+      val record = dir.resolve(SchemaFile)
+      if (own.isEmpty || inherited.isEmpty) Files.deleteIfExists(record)
+      if (inherited.isEmpty) own.foreach { st =>
+        val tmp = dir.resolve(SchemaFile + ".tmp")
+        Files.writeString(tmp, st.json)
+        Files.move(tmp, record, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      }
+    }
+  }
+
+  /** The one schema a scan of `files` (in `dir`) reads: the Spark row
+    * metadata of their footers, made nullable as Spark makes every file
+    * source's schema. None if any file lacks it, is no parquet file, or
+    * disagrees. */
+  private def footersSchema(dir: Path, files: Seq[String]): Option[StructType] = {
+    val jsons = files.map(n => footerRowMetadata(dir.resolve(n)))
+    if (jsons.exists(_.isEmpty)) None
+    else jsons.flatten.distinct.map(parseStruct(_).map(nullable)).distinct match {
+      case Seq(Some(st: StructType)) => Some(st)
+      case _                         => None
+    }
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Hadoop's checksummed local file system, so footer bytes are verified
+    * against the `.crc` files the parquet writer leaves. */
+  private lazy val footerFs: org.apache.hadoop.fs.FileSystem = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.file.impl", classOf[LocalFs.Checksummed].getName)
+    org.apache.hadoop.fs.FileSystem.newInstance(java.net.URI.create("file:///"), conf)
+  }
+
+  /** The Spark row metadata of one parquet file's footer: one read of the
+    * file's last 16 KB (a second one for a larger footer) and a Thrift
+    * decode that skips the row groups. Seek-and-read on one stream, not
+    * positioned reads: the checksummed stream reopens the file and its
+    * `.crc` for every positioned read. None for a directory, a file that
+    * is not plain parquet, or one that carries none. */
+  private def footerRowMetadata(file: Path): Option[String] =
+    try {
+      val len = Files.size(file)
+      val in = footerFs.open(new org.apache.hadoop.fs.Path(file.toUri))
+      try {
+        val tail = new Array[Byte](math.min(len, 16384L).toInt)
+        in.seek(len - tail.length)
+        in.readFully(tail)
+        val n = tail.length
+        val footerLen = if (n < 12) 0 else java.nio.ByteBuffer.wrap(tail, n - 8, 4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        if (footerLen <= 0 || footerLen > len - 12 ||
+            new String(tail, n - 4, 4, java.nio.charset.StandardCharsets.US_ASCII) != "PAR1") None
+        else {
+          val footer =
+            if (footerLen <= n - 8) new java.io.ByteArrayInputStream(tail, n - 8 - footerLen, footerLen)
+            else {
+              val b = new Array[Byte](footerLen)
+              in.seek(len - 8 - footerLen)
+              in.readFully(b)
+              new java.io.ByteArrayInputStream(b)
+            }
+          Option(org.apache.parquet.format.Util.readFileMetaData(footer, true).getKey_value_metadata)
+            .flatMap(_.asScala.find(_.getKey == SparkRowMetadata)).map(_.getValue)
+        }
+      } finally in.close()
+    } catch { case NonFatal(_) => None }
 
   /** Standalone retention maintenance — the `VACUUM` verb: prune
     * published versions beyond the `keep` newest plus crashed-orphan

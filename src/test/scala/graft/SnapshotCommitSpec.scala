@@ -120,13 +120,25 @@ class SnapshotCommitSpec extends AnyFunSuite {
     // legitimately); any failure inside the one-reload window is a pin
     // violation. Successful reads must never see a mixed epoch, and
     // vacuum itself never throws.
+    // The writer is paced on the reader: each reload waits (at most 60 s)
+    // until the reader has finished one attempt since the previous reload.
+    // Unpaced, a reload could outrun a three-table read so that every read
+    // straddled two reloads and none could succeed.
     val root = Files.createTempDirectory("graft-snap").toString
     AtomicTable.commitSnapshot(root, stageEpoch(root, 1))
     @volatile var writerDone = false
     @volatile var err: Throwable = null
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
     val writer = new Thread(() => {
-      try (2 to 5).foreach(e => AtomicTable.commitSnapshot(root, stageEpoch(root, e)))
-      catch { case t: Throwable => err = t }
+      try {
+        var seen = attempts.get()
+        (2 to 5).foreach { e =>
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (attempts.get() <= seen && System.nanoTime() < deadline) Thread.sleep(5)
+          AtomicTable.commitSnapshot(root, stageEpoch(root, e))
+          seen = attempts.get()
+        }
+      } catch { case t: Throwable => err = t }
       finally writerDone = true
     })
     val vacuumer = new Thread(() => {
@@ -149,7 +161,7 @@ class SnapshotCommitSpec extends AnyFunSuite {
             assert(idNow - id0 >= 2,
               s"read failed after only ${idNow - id0} reload(s) since resolution — " +
                 s"a retained manifest's pin was violated: $t")
-        }
+        } finally attempts.incrementAndGet()
       }
     } finally { writer.join(); vacuumer.join() }
     assert(err == null, s"writer/vacuumer failed: $err")

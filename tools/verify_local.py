@@ -13,6 +13,8 @@ import pandas as pd
 
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") else "/root/testdata/sf0.01"
 OUT = "/tmp/graft_verify"
+# sbt runs in the checkout that holds this script, so a copy verifies itself
+REPO = Path(__file__).resolve().parents[1]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -26,7 +28,7 @@ if "--skip-run" not in sys.argv:
     only_arg = f" {ONLY}" if ONLY else ""
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{only_arg}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=REPO, capture_output=True, text=True, timeout=1800)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
     for line in r.stderr.splitlines():
