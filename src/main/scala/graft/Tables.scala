@@ -12,8 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reads the columns/row-groups a query actually touches.
   */
 object Tables {
-  /** Resolution memo: `spark.read.parquet` costs ~100 ms of pure driver
-    * work per call (file listing + footer schema inference), and nearly
+  /** Resolution memo: each `spark.read.parquet` call lists the table's
+    * files and runs a Spark job that infers the schema from a footer (9
+    * such jobs in one star_analytics cold pass of perfbench), and nearly
     * every declared query resolves its source tables 1-4× per execution.
     * Resolving each source table ONCE per session is what `spark.table()`
     * over a catalog does in production: only the analyzed PLAN (schema +
@@ -22,7 +23,9 @@ object Tables {
     * Registered in [[graft.util.SessionCaches]], so the bench's cold pass
     * still measures a cold session's first resolution, and a table
     * rewritten in place resolves afresh instead of serving a stale file
-    * listing. */
+    * listing. Source tables still infer on each resolution; a schema
+    * taken from a per-file record, as `AtomicTable` versions carry, is
+    * ROADMAP item 2(a)'s open bullet for `Tables.table`. */
   private val resolvedCache = graft.util.SessionCaches.memo[String]("tables.resolved")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

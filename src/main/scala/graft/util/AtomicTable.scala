@@ -814,6 +814,11 @@ object AtomicTable {
     * versioned-commit semantics (atomic swap, retention, time travel).
     * On an empty table this is just a first publish. Writers must use
     * `mode("append")` so the pre-linked files survive the Spark write.
+    * In a session with [[graft.functions.GraftExtensions]], driver-held
+    * rows (a `LocalRelation`) land as one file per
+    * `spark.sql.files.maxPartitionBytes` split, not one per core
+    * ([[graft.plans.LocalWrites]]), so a small append adds one file for
+    * every later commit to link and every read to open.
     *
     * Appends are OPTIMISTIC about concurrent writers: the base version is
     * resolved before staging, and the commit re-checks it under the lock —
